@@ -8,25 +8,30 @@ merge expunges them.  This mirrors that exactly:
 
 * ``delete_documents`` appends doc ids to an ``index_dir/deletes``
   parquet table (the commit of a new del generation),
-* ``IndexSearcher`` (when the table exists) loads deleted ids as
-  per-segment pseudo-postings — the same plumbing as point filters —
-  and every compiled query gets an implicit MUST_NOT clause on them,
-  so top-k, counts, matches and facets all exclude deleted docs
-  BEFORE ranking,
+* ``IndexSearcher`` (when the table exists) loads the mask once per
+  del generation with ``load_live_docs`` — each segment's deleted
+  local ids encoded as one pseudo-postings list — and ships it to the
+  kernels as one broadcast.  The per-segment kernel puts its segment's
+  mask into the postings map under ``DELETES_TOKEN``, and every
+  compiled query gets an implicit MUST_NOT clause on that token, so
+  top-k, counts, matches and facets all exclude deleted docs BEFORE
+  ranking, without adding rows to the postings scan,
 * stats/termdict are intentionally untouched (Lucene's docFreq also
   counts deleted docs until merge),
 * ``update_documents`` = delete-by-key + add_documents — the
   IndexWriter.updateDocument analog.
 
-Scale shape: deletes are a tiny table keyed by doc_id; the per-segment
-mask rows are built by one pushed-down scan + groupBy(segment_id),
-identical to the point-filter path.
+Scale shape: deletes are a tiny table keyed by doc_id, read on the
+driver with pyarrow and grouped by ``doc_id // segment_size``; the
+searcher re-reads it only when the generation counter moves.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 DELETES_TOKEN = "\x01deleted"
@@ -59,6 +64,30 @@ def _bump_generation(index_dir: str) -> int:
     with open(_gen_path(index_dir), "w") as f:
         f.write(str(gen))
     return gen
+
+
+def load_live_docs(index_dir: str, segment_size: int) -> dict:
+    """{segment_id: TermPostings of the segment's deleted LOCAL doc
+    ids} from the deletes table — the per-segment live-docs bitset the
+    kernel applies (ids de-duplicated, freqs 1, no positions)."""
+    import pyarrow.parquet as pq
+
+    from ..functions.codec import encode_term_postings
+
+    ids = np.unique(
+        pq.read_table(deletes_path(index_dir), columns=["doc_id"])
+        .column("doc_id").to_numpy()
+    ).astype(np.int64)
+    mask = {}
+    for grp in np.split(ids, np.flatnonzero(np.diff(ids // segment_size)) + 1):
+        if len(grp):
+            seg_id = int(grp[0]) // segment_size
+            mask[seg_id] = encode_term_postings(
+                grp - seg_id * segment_size,
+                np.ones(len(grp), dtype=np.int64),
+                np.zeros(len(grp), dtype=np.int64),
+            )
+    return mask
 
 
 def delete_documents(
@@ -104,9 +133,8 @@ def update_documents(
     delete_documents(spark, index_dir, victims)
     add_documents(spark, index_dir, new_docs, out_dir)
     # carry the deletion mask into the new snapshot (doc ids are global
-    # and stable across merges, so the mask transfers verbatim)
+    # and stable across merges, so the mask transfers verbatim): a file
+    # copy of the table and its _GENERATION counter, no Spark job
     src = deletes_path(index_dir)
     if os.path.exists(src):
-        spark.read.parquet(src).write.mode("append").parquet(deletes_path(out_dir))
-        with open(_gen_path(out_dir), "w") as f:
-            f.write(str(read_generation(index_dir)))
+        shutil.copytree(src, deletes_path(out_dir), dirs_exist_ok=True)

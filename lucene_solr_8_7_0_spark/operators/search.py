@@ -22,7 +22,7 @@ the parquet column simply isn't scanned (the ".pos file" stays cold).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_TOTAL_HITS_THRESHOLD, MAX_CLAUSE_COUNT, EngineConfig  # noqa: F401
 from ..functions.codec import TermPostings
-from ..functions.wand import CompiledQuery, score_segment
+from ..functions.wand import CompiledQuery, ScoringClause, score_segment
+from .deletes import DELETES_TOKEN, load_live_docs, read_generation
 from .segments import SENTINEL_TERM
 from ..plans import planner, rewrite as rw
 from ..plans.queries import (
@@ -97,8 +98,9 @@ def rows_to_posting_map(pdf: pd.DataFrame) -> dict[str, TermPostings]:
 class QueryCache:
     """LRUQueryCache analog (L/search/LRUQueryCache.java +
     UsageTrackingQueryCachingPolicy.java): caches the per-segment
-    docsets of filter-usable clauses (point ranges, the live-docs mask)
-    as PERSISTED pseudo-postings DataFrames.
+    docsets of filter-usable clauses (point ranges) as PERSISTED
+    pseudo-postings DataFrames.  The live-docs mask is not cached here:
+    the searcher loads it per del generation and broadcasts it.
 
     Admission mirrors the usage-tracking policy: a clause key is cached
     only once it has been seen ``min_uses`` times (cheap one-off
@@ -260,6 +262,21 @@ import threading as _threading
 
 _SCAN_CONF_LOCK = _threading.RLock()
 _SCAN_CONF_STATE: dict = {"depth": 0}
+_MPB = "spark.sql.files.maxPartitionBytes"
+_MPN = "spark.sql.files.minPartitionNum"
+
+
+def _release_scan_conf(conf) -> None:
+    """Leave one _scan_conf_guard level; the outermost restores the saved
+    split conf, unsetting a key whose original value could not be read."""
+    with _SCAN_CONF_LOCK:
+        _SCAN_CONF_STATE["depth"] -= 1
+        if _SCAN_CONF_STATE["depth"] == 0:
+            for key, val in _SCAN_CONF_STATE.pop("saved", {}).items():
+                if val is None:
+                    conf.unset(key)
+                else:
+                    conf.set(key, val)
 
 
 def _default_query_cache() -> QueryCache:
@@ -307,6 +324,8 @@ class IndexSearcher:
         self.norms = norms_from_segments(self.segments, self.cfg)
         self.termdict = spark.read.parquet(os.path.join(index_dir, "termdict"))
         self.docmeta_path = os.path.join(index_dir, "docmeta")
+        self._live_docs_cache = None  # (del generation, mask broadcast)
+        self._seg_align_cache = None  # (segments files snapshot, alignment)
         # optimizer statistics (column histograms) for point-query cost
         # estimation; tolerate their absence (older/merged indexes)
         cs = os.path.join(index_dir, "colstats")
@@ -345,11 +364,10 @@ class IndexSearcher:
         reducer's file, the bucketed-table invariant of guide §2.4) and
         VERIFIED here from the files' own segment_id columns, so a
         foreign/merged layout degrades to the shuffle path instead of
-        silently splitting a segment across kernels.  Computed once per
-        searcher (metadata-scale driver work: one dictionary-encoded
-        int32 column per file)."""
-        if getattr(self, "_seg_align_cache", None) is not None:
-            return self._seg_align_cache
+        silently splitting a segment across kernels.  Cached on the
+        (file, size, mtime) snapshot of the table's files and recomputed
+        when it changes (metadata-scale driver work: one dictionary-
+        encoded int32 column per file)."""
         import glob
 
         import pyarrow.parquet as pq
@@ -357,7 +375,11 @@ class IndexSearcher:
         files = sorted(
             glob.glob(os.path.join(self.index_dir, "segments", "*.parquet"))
         )
-        sizes = [os.path.getsize(f) for f in files]
+        stats = [os.stat(f) for f in files]
+        snapshot = [(f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats)]
+        if self._seg_align_cache is not None and self._seg_align_cache[0] == snapshot:
+            return self._seg_align_cache[1]
+        sizes = [st.st_size for st in stats]
         aligned = True
         seen: set = set()
         try:
@@ -370,13 +392,9 @@ class IndexSearcher:
                 seen |= ids
         except Exception:
             aligned = False
-        self._seg_align_cache = (
-            aligned,
-            max(sizes, default=0),
-            sum(sizes),
-            len(files),
-        )
-        return self._seg_align_cache
+        result = (aligned, max(sizes, default=0), sum(sizes), len(files))
+        self._seg_align_cache = (snapshot, result)
+        return result
 
     def _scan_conf_guard(self):
         """Context manager: size the segments scan's splits for QUERY
@@ -410,61 +428,43 @@ class IndexSearcher:
                 return
             with _SCAN_CONF_LOCK:
                 _SCAN_CONF_STATE["depth"] += 1
-                first = _SCAN_CONF_STATE["depth"] == 1
-                if first:
-                    try:
-                        old_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-                    except Exception:
-                        old_mpb = None
-                    try:
-                        old_mpn = conf.get("spark.sql.files.minPartitionNum")
-                    except Exception:
-                        old_mpn = None
-                    _SCAN_CONF_STATE["saved"] = (old_mpb, old_mpn)
-                    P = max(self.spark.sparkContext.defaultParallelism, 1)
-                    try:
-                        ocb = self._bytes_conf(
-                            conf.get("spark.sql.files.openCostInBytes")
-                        )
-                        live_mpb = self._bytes_conf(old_mpb) if old_mpb else 0
-                    except Exception:
-                        ocb, live_mpb = 4 << 20, 0
-                    total_eff = total + ocb * n_files
-                    # floor 16 tasks (dispatch cost ~9 ms/task versus
-                    # kernel parallelism), ramp with table size from
-                    # ~16 MB/task, cap at cluster parallelism
-                    n_tasks = min(max(16, total_eff // (16 << 20)), P)
-                    target = max(
-                        live_mpb, -(-total_eff // max(n_tasks, 1))
-                    )
-                    conf.set(
-                        "spark.sql.files.maxPartitionBytes", str(int(target))
-                    )
-                    conf.set("spark.sql.files.minPartitionNum", "1")
+                try:
+                    if _SCAN_CONF_STATE["depth"] == 1:
+                        saved = {}
+                        for key in (_MPB, _MPN):
+                            try:
+                                saved[key] = conf.get(key)
+                            except Exception:
+                                saved[key] = None  # unreadable: unset on exit
+                        _SCAN_CONF_STATE["saved"] = saved
+                        self._set_query_splits(conf, saved[_MPB], total, n_files)
+                except BaseException:
+                    _release_scan_conf(conf)
+                    raise
             try:
                 yield
             finally:
-                with _SCAN_CONF_LOCK:
-                    _SCAN_CONF_STATE["depth"] -= 1
-                    if _SCAN_CONF_STATE["depth"] == 0:
-                        old_mpb, old_mpn = _SCAN_CONF_STATE.pop(
-                            "saved", (None, None)
-                        )
-                        if old_mpb is not None:
-                            conf.set(
-                                "spark.sql.files.maxPartitionBytes", old_mpb
-                            )
-                        if old_mpn is not None:
-                            conf.set(
-                                "spark.sql.files.minPartitionNum", old_mpn
-                            )
-                        else:
-                            try:
-                                conf.unset("spark.sql.files.minPartitionNum")
-                            except Exception:
-                                pass
+                _release_scan_conf(conf)
 
         return guard()
+
+    def _set_query_splits(self, conf, old_mpb, total: int, n_files: int) -> None:
+        """Raise the scan split size so the task count lands near
+        min(parallelism, max(16, bytes/16MB)) (see _scan_conf_guard)."""
+        P = max(self.spark.sparkContext.defaultParallelism, 1)
+        try:
+            ocb = self._bytes_conf(conf.get("spark.sql.files.openCostInBytes"))
+            live_mpb = self._bytes_conf(old_mpb) if old_mpb else 0
+        except Exception:
+            ocb, live_mpb = 4 << 20, 0
+        total_eff = total + ocb * n_files
+        # floor 16 tasks (dispatch cost ~9 ms/task versus kernel
+        # parallelism), ramp with table size from ~16 MB/task, cap at
+        # cluster parallelism
+        n_tasks = min(max(16, total_eff // (16 << 20)), P)
+        target = max(live_mpb, -(-total_eff // max(n_tasks, 1)))
+        conf.set(_MPB, str(int(target)))
+        conf.set(_MPN, "1")
 
     def _whole_file_tasks(self) -> bool:
         """True iff Spark's split-size formula guarantees that no
@@ -1243,42 +1243,28 @@ class IndexSearcher:
     def _has_deletes(self) -> bool:
         """Live-docs check (cheap, per query — deletes may land after
         this searcher was opened, like reopening a del generation)."""
-        import os as _os
+        return os.path.exists(os.path.join(self.index_dir, "deletes", "_SUCCESS"))
 
-        return _os.path.exists(
-            _os.path.join(self.index_dir, "deletes", "_SUCCESS")
-        )
-
-    def _deleted_clause_and_rows(self, cols):
-        """(MUST_NOT clause, per-segment mask rows) for deleted docs —
-        the live-docs bitset as a pseudo-posting (operators/deletes).
-        The mask is identical for every query on a snapshot, so it is
-        the query cache's best customer (keyed by deletes generation)."""
-        from .deletes import DELETES_TOKEN, deletes_path
-
-        def build():
-            sel = (
-                self.spark.read.parquet(deletes_path(self.index_dir))
-                .select(
-                    (F.col("doc_id") / F.lit(self.cfg.segment_size))
-                    .cast("int")
-                    .alias("segment_id"),
-                    "doc_id",
-                )
-            )
-            return self._docset_rows(sel, DELETES_TOKEN)
-
-        from ..functions.wand import ScoringClause
-
-        clause = ScoringClause((DELETES_TOKEN,), None, const_score=0.0)
-        # key embeds the index identity + session: the cache object may
-        # be SHARED across searchers over different indexes (the
-        # reference keys per segment core), so (index, app-id,
-        # generation) disambiguates
-        rows = self.query_cache.get_or_build(
-            (self._cache_token, "deletes", self._generation()), build
-        )
-        return clause, rows.select(*cols)
+    def _live_docs(self):
+        """Broadcast {segment_id: deleted local ids as pseudo-postings}
+        of the current del generation, or None without deletes
+        (operators/deletes).  Loaded once per generation; the generation
+        is re-read per query, so a delete committed after this searcher
+        opened is seen.  The (generation, broadcast) pair is swapped as
+        one tuple, so concurrent searches never pair one generation with
+        another's mask.  A replaced broadcast is left to Spark's context
+        cleaner, which frees it once no plan built on it remains —
+        destroying it here would break DataFrames already returned by
+        matches_df / score_all_df."""
+        if not self._has_deletes():
+            return None
+        gen = read_generation(self.index_dir)  # before the table: never older
+        cached = self._live_docs_cache
+        if cached is None or cached[0] != gen:
+            mask = load_live_docs(self.index_dir, self.cfg.segment_size)
+            cached = (gen, self.spark.sparkContext.broadcast(mask))
+            self._live_docs_cache = cached
+        return cached[1]
 
     def _estimate_point_cost(self, q) -> int:
         """Estimated match count of a point range from the build-time
@@ -1606,7 +1592,6 @@ class IndexSearcher:
         update_numeric_docvalue, so two commits within one
         filesystem-timestamp tick still invalidate (mtime granularity
         is not trusted)."""
-        from .deletes import read_generation
         from .dvupdates import read_dv_generation
 
         return (read_generation(self.index_dir),
@@ -1628,10 +1613,10 @@ class IndexSearcher:
 
     def _docset_rows(self, sel: DataFrame, token: str) -> DataFrame:
         """(segment_id, doc_id) rows -> one pseudo-postings row per
-        segment under the reserved ``token`` term (shared plumbing for
-        point filters and the deleted-docs mask).  Returns the FULL
-        segment schema so the query cache can persist one canonical
-        plan; callers project the columns their scan needs."""
+        segment under the reserved ``token`` term (the point-filter
+        plumbing).  Returns the FULL segment schema so the query cache
+        can persist one canonical plan; callers project the columns
+        their scan needs."""
         from ..functions.codec import encode_term_postings
         from .segments import SEGMENT_SCHEMA, _SEG_COLS
 
@@ -1706,18 +1691,14 @@ class IndexSearcher:
         for pdf_rows in self._points_rows(point_qs, cols, lead, dv_keys):
             seg_rows = seg_rows.unionByName(pdf_rows)
             pure_scan = False
-        if self._has_deletes():
+        live = self._live_docs()
+        if live is not None:
             # live docs: exclude deleted ids via an implicit MUST_NOT
-            # (postings untouched, stats untouched — Lucene semantics)
-            del_clause, del_rows = self._deleted_clause_and_rows(cols)
-            cq = CompiledQuery(
-                cq.musts, cq.shoulds, cq.filters,
-                cq.must_nots + [del_clause],
-                cq.msm, cq.match_all, cq.match_all_score,
-                cq.combine, cq.tie,
-            )
-            seg_rows = seg_rows.unionByName(del_rows)
-            pure_scan = False
+            # (postings untouched, stats untouched — Lucene semantics);
+            # the kernel supplies each segment's mask from the broadcast
+            cq = replace(cq, must_nots=cq.must_nots + [
+                ScoringClause((DELETES_TOKEN,), None, const_score=0.0)
+            ])
         if only_segment is not None:
             seg_rows = seg_rows.filter(F.col("segment_id") == only_segment)
         if max_segment is not None:
@@ -1732,8 +1713,11 @@ class IndexSearcher:
             seg_id = int(key[0])
             sent = seg_pdf[seg_pdf["term"] == SENTINEL_TERM]
             if len(sent) == 0:
-                return pd.DataFrame(
-                    columns=["segment_id", "doc_id", "score", "hits", "hits_exact"]
+                # the scan always fetches the sentinel with the postings,
+                # so a group without it is a segment split across groups
+                raise ValueError(
+                    f"segment {seg_id}: {len(seg_pdf)} postings rows but "
+                    "no sentinel row (segment split across kernel groups?)"
                 )
             post_rows = seg_pdf[seg_pdf["term"] != SENTINEL_TERM]
             if len(post_rows) == 0 and not cq.match_all:
@@ -1745,6 +1729,8 @@ class IndexSearcher:
             ).astype(np.int64)
             num_docs = int(sent["df"].iloc[0])
             pmap = rows_to_posting_map(post_rows)
+            if live is not None and seg_id in live.value:
+                pmap[DELETES_TOKEN] = live.value[seg_id]
             base = seg_id * seg_size
             # the paging cursor's doc id is global; segment-local
             # arithmetic keeps the (score, doc) comparison exact for
@@ -1785,9 +1771,10 @@ class IndexSearcher:
             # groupBy exchange + AQE stage barrier + second task wave
             # are pure overhead.  Each task groups its own rows and
             # runs the per-segment kernels in place: scan -> kernel ->
-            # collect, one stage, zero shuffle.  Any union input
-            # (point-filter pseudo-postings, the deletes mask) or a
-            # foreign file layout falls back to the shuffle path.
+            # collect, one stage, zero shuffle.  A union input (point-
+            # filter pseudo-postings) or a foreign file layout falls
+            # back to the shuffle path; the deletes mask rides the
+            # kernel's broadcast and keeps this path.
             empty = pd.DataFrame(
                 {
                     "segment_id": pd.Series(dtype=np.int32),
@@ -1820,7 +1807,7 @@ class IndexSearcher:
             return seg_rows.mapInPandas(
                 kernel_partition, schema=RESULT_SCHEMA
             )
-        # ---- shuffle path (pseudo-postings unions / foreign layout) ----
+        # ---- shuffle path (point-filter unions / foreign layout) ----
         # Explicit repartition with a stated partition count: AQE's
         # partition coalescing would otherwise collapse the tiny
         # query-time shuffle to ONE task and serialize every segment

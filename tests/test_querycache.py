@@ -126,6 +126,8 @@ def test_default_cache_is_shared(spark, index_dir):
 
 
 def test_deletes_invalidate_generation(spark, index_dir, tmp_path_factory):
+    """A new del generation reloads the searcher's live-docs mask (not a
+    query-cache entry: the cache holds point-filter docsets only)."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -143,8 +145,18 @@ def test_deletes_invalidate_generation(spark, index_dir, tmp_path_factory):
         .select("doc_id")
     )
     dl.delete_documents(spark, d, victims)
-    # prime + hit the cached deletes mask on the NEW generation
     after1 = set(s.matches_df(q).toPandas()["doc_id"])
+    mask1 = s._live_docs_cache
     after2 = set(s.matches_df(q).toPandas()["doc_id"])
     assert after1 == after2 == {x for x in before if x % 3 != 0}
+    assert mask1[0] == dl.read_generation(d) == 1
+    assert s._live_docs_cache is mask1  # same generation: mask reused
+    dl.delete_documents(
+        spark, d,
+        spark.createDataFrame([(min(after2),)], "doc_id long"),
+    )
+    after3 = set(s.matches_df(q).toPandas()["doc_id"])
+    assert after3 == after2 - {min(after2)}
+    assert s._live_docs_cache[0] == 2
+    assert not s.query_cache._cache and s.query_cache.misses == 0
     s.query_cache.clear()
