@@ -389,6 +389,36 @@ def encode_term_postings(
     )
 
 
+def encode_docsets(doc_ids: np.ndarray, segment_size: int) -> dict[int, TermPostings]:
+    """{segment_id: TermPostings of the segment's LOCAL doc ids} for a
+    set of global doc ids (de-duplicated, freqs 1, no positions): the
+    per-segment doc-id set a kernel applies as a mask — live docs and
+    point-filter docsets alike (the LRUQueryCache per-leaf DocIdSet
+    analog).  Segments without an id get no entry."""
+    ids = np.unique(np.asarray(doc_ids, dtype=np.int64))
+    out = {}
+    for grp in np.split(ids, np.flatnonzero(np.diff(ids // segment_size)) + 1):
+        if len(grp):
+            seg_id = int(grp[0]) // segment_size
+            out[seg_id] = encode_term_postings(
+                grp - seg_id * segment_size,
+                np.ones(len(grp), dtype=np.int64),
+                np.zeros(len(grp), dtype=np.int64),
+            )
+    return out
+
+
+def docsets_nbytes(docsets: dict[int, TermPostings]) -> int:
+    """Exact encoded size of ``encode_docsets`` output: every buffer and
+    array of every segment's postings."""
+    return sum(
+        len(f) if isinstance(f, bytes) else f.nbytes
+        for tp in docsets.values()
+        for f in tp
+        if isinstance(f, (bytes, np.ndarray))
+    )
+
+
 def decode_term_postings(
     tp: TermPostings, with_positions: bool = False
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:

@@ -622,7 +622,7 @@ def _eval_clause(
         # terms by predicate (the Python check is the exact semantics;
         # the JVM scan filter was a superset) and union their postings.
         # Reserved tokens (\x00 sentinel/matchnone, \x01 point/delete
-        # pseudo-postings) are never expansion candidates.
+        # doc-id masks) are never expansion candidates.
         hits = [
             posting_map[t]
             for t in posting_map

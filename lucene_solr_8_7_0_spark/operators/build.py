@@ -17,13 +17,14 @@ records land in ``manifest``):
   norms     per-segment norms view derived from sentinels (merge/explain)
   docmeta   identity + sha256 invariant + exact length + norm byte
   stats     CollectionStatistics (single row)
-  termdict  global term -> (df, ttf), salted aggregation  (operators/stats)
+  termdict  global term -> (df, ttf), partial aggregation (operators/stats)
 
 Parallelism notes (the 100 TB view): every stage is embarrassingly
 parallel except two shuffles — the range partition for doc numbering
 and the segment groupBy for encode.  Both key on doc ranges, which are
 uniform by construction (segment_size docs each), so neither has a
-skewed reducer; the only Zipf-skewed key (term) is aggregated salted.
+skewed reducer; the only Zipf-skewed key (term) is summed with map-side
+partial aggregation, which bounds each term's reducer input.
 """
 
 from __future__ import annotations
@@ -299,15 +300,14 @@ def build_index(
         record("docmeta", time.time() - t0, {"fused_stats": True})
 
     def _termdict_stage() -> None:
-        # salted global term stats
+        # global term stats: a plain partial-aggregate sum (stats.term_dict)
         t0 = time.time()
         td = stats_ops.term_dict(
             segments.filter(F.col("term") != SENTINEL_TERM), cfg
         )
         _write(td.repartitionByRange(8, "term"), index_dir, "termdict",
                sort_cols=["term"])
-        record("termdict", time.time() - t0,
-               {"salt_buckets": cfg.stats_salt_buckets})
+        record("termdict", time.time() - t0, {})
 
     tail_jobs = []
     if stage("docmeta"):

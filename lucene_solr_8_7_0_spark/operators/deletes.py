@@ -10,9 +10,10 @@ merge expunges them.  This mirrors that exactly:
   parquet table (the commit of a new del generation),
 * ``IndexSearcher`` (when the table exists) loads the mask once per
   del generation with ``load_live_docs`` — each segment's deleted
-  local ids encoded as one pseudo-postings list — and ships it to the
-  kernels as one broadcast.  The per-segment kernel puts its segment's
-  mask into the postings map under ``DELETES_TOKEN``, and every
+  local ids encoded by ``codec.encode_docsets``, the one docset
+  encoder point-filter docsets share — and ships it to the kernels as
+  one broadcast.  The per-segment kernel puts its segment's mask into
+  the postings map under ``DELETES_TOKEN``, and every
   compiled query gets an implicit MUST_NOT clause on that token, so
   top-k, counts, matches and facets all exclude deleted docs BEFORE
   ranking, without adding rows to the postings scan,
@@ -31,7 +32,6 @@ from __future__ import annotations
 import os
 import shutil
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 DELETES_TOKEN = "\x01deleted"
@@ -69,25 +69,13 @@ def _bump_generation(index_dir: str) -> int:
 def load_live_docs(index_dir: str, segment_size: int) -> dict:
     """{segment_id: TermPostings of the segment's deleted LOCAL doc
     ids} from the deletes table — the per-segment live-docs bitset the
-    kernel applies (ids de-duplicated, freqs 1, no positions)."""
+    kernel applies (``codec.encode_docsets``)."""
     import pyarrow.parquet as pq
 
-    from ..functions.codec import encode_term_postings
+    from ..functions.codec import encode_docsets
 
-    ids = np.unique(
-        pq.read_table(deletes_path(index_dir), columns=["doc_id"])
-        .column("doc_id").to_numpy()
-    ).astype(np.int64)
-    mask = {}
-    for grp in np.split(ids, np.flatnonzero(np.diff(ids // segment_size)) + 1):
-        if len(grp):
-            seg_id = int(grp[0]) // segment_size
-            mask[seg_id] = encode_term_postings(
-                grp - seg_id * segment_size,
-                np.ones(len(grp), dtype=np.int64),
-                np.zeros(len(grp), dtype=np.int64),
-            )
-    return mask
+    ids = pq.read_table(deletes_path(index_dir), columns=["doc_id"])
+    return encode_docsets(ids.column("doc_id").to_numpy(), segment_size)
 
 
 def delete_documents(

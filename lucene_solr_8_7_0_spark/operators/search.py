@@ -69,6 +69,22 @@ class TopDocs:
         )
 
 
+@dataclass(frozen=True)
+class PreparedQuery:
+    """A query made ready for the segment kernels (the Weight-creation
+    phase): rewritten, compiled against its term stats (``cq`` is None
+    when it can match nothing), its point clauses and multi-term
+    predicates collected and the IndexOrDocValues access plan chosen."""
+
+    query: Query
+    terms: set
+    cq: CompiledQuery | None
+    point_qs: set
+    mt_qs: tuple
+    lead: tuple | None
+    dv_keys: frozenset
+
+
 def rows_to_posting_map(pdf: pd.DataFrame) -> dict[str, TermPostings]:
     out: dict[str, TermPostings] = {}
     has_pos = "pos_blocks" in pdf.columns
@@ -98,25 +114,28 @@ def rows_to_posting_map(pdf: pd.DataFrame) -> dict[str, TermPostings]:
 class QueryCache:
     """LRUQueryCache analog (L/search/LRUQueryCache.java +
     UsageTrackingQueryCachingPolicy.java): caches the per-segment
-    docsets of filter-usable clauses (point ranges) as PERSISTED
-    pseudo-postings DataFrames.  The live-docs mask is not cached here:
-    the searcher loads it per del generation and broadcasts it.
+    docsets of filter-usable clauses (point ranges) as BROADCASTS of
+    their encoded ``{segment_id: TermPostings}`` (codec.encode_docsets)
+    — the kernel applies them as masks, like the reference intersects
+    its cached per-leaf DocIdSet inside the scorer.  The live-docs mask
+    is not cached here: the searcher loads it per del generation.
 
     Admission mirrors the usage-tracking policy: a clause key is cached
-    only once it has been seen ``min_uses`` times (cheap one-off
-    filters never pay the persist).  Eviction is LRU over distinct
-    clause keys, bounded by BOTH ``max_queries`` (the reference's
-    maxSize=1000) and ``max_bytes`` (the maxRamBytesUsed analog:
-    admitted entries are materialized and measured from Spark's block-
-    manager storage stats; entries larger than the whole budget are
-    never admitted, like the reference's per-query size gate).  Keys
-    embed the index identity + generation (deletes epoch) + the Spark
-    application id (searchers stamp it in), so ONE cache can safely be
-    shared across searchers (the reference shares its cache across
-    readers of a segment core), a reopened snapshot never serves stale
-    docsets, and a restarted SparkSession never serves DataFrames bound
-    to the stopped one.  All mutation happens under a lock (the
-    reference's LRUQueryCache synchronizes on itself the same way)."""
+    only once it has been seen ``min_uses`` times.  Eviction is LRU over
+    distinct clause keys, bounded by BOTH ``max_queries`` (the
+    reference's maxSize=1000) and ``max_bytes`` (the maxRamBytesUsed
+    analog: an entry's size is its exact encoded byte count; entries
+    larger than the whole budget are never admitted, like the
+    reference's per-query size gate).  An evicted broadcast is left to
+    Spark's context cleaner: lazy matches_df / score_all_df plans may
+    still hold it.  Keys embed the index identity + generation (deletes
+    epoch) + the Spark application id (searchers stamp it in), so ONE
+    cache can safely be shared across searchers (the reference shares
+    its cache across readers of a segment core), a reopened snapshot
+    never serves stale docsets, and a restarted SparkSession never
+    serves broadcasts bound to the stopped one.  All mutation happens
+    under a lock (the reference's LRUQueryCache synchronizes on itself
+    the same way)."""
 
     def __init__(self, max_queries: int = 32, min_uses: int = 2,
                  history_size: int = 256,
@@ -151,46 +170,13 @@ class QueryCache:
         self._history.append(key)
         self._uses[key] += 1
 
-    @staticmethod
-    def _storage_sizes(spark) -> dict:
-        """Persisted-RDD sizes from the block manager (mem + disk)."""
-        return {
-            info.id(): info.memSize() + info.diskSize()
-            for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        }
-
-    @staticmethod
-    def _cached_rdd_id(df) -> int | None:
-        """RDD id of THIS DataFrame's InMemoryRelation buffers, looked
-        up from the session's cache manager — so byte accounting
-        attributes only the entry's own storage, not whatever else got
-        persisted concurrently.  Returns None when the internal lookup
-        isn't available (older/other runtimes) — callers then fall back
-        to the before/after storage diff."""
-        try:
-            spark = df.sparkSession
-            cd = (
-                spark._jsparkSession.sharedState().cacheManager()
-                .lookupCachedData(df._jdf)
-            )
-            if cd.isDefined():
-                return int(
-                    cd.get().cachedRepresentation().cacheBuilder()
-                    .cachedColumnBuffers().id()
-                )
-        except Exception:
-            pass
-        return None
-
     def _evict_lru(self) -> None:
-        key, old = self._cache.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # entry's session already stopped: nothing to release
+        key, _ = self._cache.popitem(last=False)
         self.total_bytes -= self._sizes.pop(key, 0)
 
     def get_or_build(self, key, build_fn):
+        """The cached value of ``key``; on a miss ``build_fn()`` ->
+        (value, nbytes) builds it, admitted per the policy above."""
         with self._lock:
             if key in self._cache:
                 self._cache.move_to_end(key)
@@ -199,53 +185,27 @@ class QueryCache:
             self.misses += 1
             self._observe(key)
             admit = self._uses[key] >= self.min_uses
-        df = build_fn()
-        if not admit:
-            return df  # below the admission threshold: run uncached
-        from pyspark.storagelevel import StorageLevel
-
-        spark = df.sparkSession
-        before = set(self._storage_sizes(spark))
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        n_rows = df.count()  # materialize so the size is real, not a plan guess
-        after = self._storage_sizes(spark)
-        own_id = self._cached_rdd_id(df)
-        if own_id is not None and own_id in after:
-            size = after[own_id]  # exact: this entry's own buffers only
-        else:
-            size = sum(v for k, v in after.items() if k not in before)
-        if size <= 0:
-            size = max(n_rows, 1) * 1024  # storage info raced: coarse floor
-        if size > self.max_bytes:
-            # a single oversized docset would evict everything else and
-            # still not fit — run it uncached (the reference likewise
-            # refuses to cache segments over its size bound)
-            df.unpersist()
-            return df
+        value, size = build_fn()
+        if not admit or size > self.max_bytes:
+            # below the admission threshold, or a single oversized
+            # docset that would evict everything else and still not fit
+            return value
         with self._lock:
             if key in self._cache:  # another thread admitted it first
-                df.unpersist()
                 self._cache.move_to_end(key)
                 return self._cache[key]
-            self._cache[key] = df
+            self._cache[key] = value
             self._sizes[key] = size
             self.total_bytes += size
-            while self._cache and (
+            while len(self._cache) > 1 and (
                 len(self._cache) > self.max_queries
                 or self.total_bytes > self.max_bytes
             ):
-                if len(self._cache) == 1:
-                    break  # the newest entry itself fits (checked above)
-                self._evict_lru()
-        return df
+                self._evict_lru()  # the newest entry itself fits
+        return value
 
     def clear(self) -> None:
         with self._lock:
-            for df in self._cache.values():
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
             self._cache.clear()
             self._uses.clear()
             self._history.clear()
@@ -832,6 +792,33 @@ class IndexSearcher:
 
     # ---- search ----
 
+    def _prepare(self, query: Query, score_mode: str = "top_scores",
+                 similarity: str | None = None) -> PreparedQuery:
+        """rewrite -> term stats -> compile -> point / multi-term clauses
+        -> access plan: the driver work every search runs before its
+        kernels (``similarity`` as in search())."""
+        q = self._rewrite(query)
+        terms = planner.collect_terms(q)
+        ts = self._term_stats(terms)
+        cq = planner.compile_query(
+            q, self.stats.with_similarity(similarity), ts, score_mode
+        )
+        lead, dv_keys = self._dv_plan(cq, ts) if cq is not None else (None, frozenset())
+        return PreparedQuery(
+            q, terms, cq, planner.collect_point_queries(q),
+            tuple(planner.collect_multi_term_preds(q)), lead, dv_keys,
+        )
+
+    def _run_prepared(self, p: PreparedQuery, k: int | None, score_mode: str,
+                      threshold: int, **kw) -> DataFrame:
+        """_run_segments over a prepared query (``kw``: min_competitive,
+        only_segment, after, max_segment)."""
+        return self._run_segments(
+            p.cq, p.terms, planner.has_phrase(p.query), k, score_mode,
+            threshold, p.point_qs, lead=p.lead, dv_keys=p.dv_keys,
+            mt_qs=p.mt_qs, **kw,
+        )
+
     def search(
         self,
         query: Query,
@@ -853,34 +840,23 @@ class IndexSearcher:
         the shared floor prunes strictly-below only — at the cost of
         one extra (tiny) Spark job; it pays off when segments are many
         and k is small."""
-        q = self._rewrite(query)
-        terms = planner.collect_terms(q)
-        ts = self._term_stats(terms)
-        stats = self.stats.with_similarity(similarity)
-        cq = planner.compile_query(q, stats, ts, score_mode)
-        if cq is None:
-            return TopDocs(0, "EQ", np.empty(0, np.int64), np.empty(0, np.float32))
-        pqs = planner.collect_point_queries(q)
-        mt_qs = tuple(planner.collect_multi_term_preds(q))
-        lead, dv_keys = self._dv_plan(cq, ts)
+        p = self._prepare(query, score_mode, similarity)
+        if p.cq is None:
+            return self._merge(pd.DataFrame(), k)
         min_comp = 0.0
         with self._scan_conf_guard():
             if two_pass_threshold and score_mode == "top_scores":
-                seed = self._run_segments(
-                    cq, terms, planner.has_phrase(q), k, score_mode,
-                    total_hits_threshold, pqs, only_segment=0,
-                    lead=lead, dv_keys=dv_keys, mt_qs=mt_qs,
+                seed = self._run_prepared(
+                    p, k, score_mode, total_hits_threshold, only_segment=0
                 ).toPandas()
                 seed = seed[seed["doc_id"] >= 0]
                 if len(seed) >= k:
                     min_comp = float(
                         np.sort(seed["score"].to_numpy(dtype=np.float32))[-k]
                     )
-            pdf = self._run_segments(cq, terms, planner.has_phrase(q), k,
-                                     score_mode, total_hits_threshold, pqs,
-                                     min_competitive=min_comp,
-                                     lead=lead, dv_keys=dv_keys,
-                                     mt_qs=mt_qs).toPandas()
+            pdf = self._run_prepared(
+                p, k, score_mode, total_hits_threshold, min_competitive=min_comp
+            ).toPandas()
         return self._merge(pdf, k)
 
     def search_after(
@@ -901,20 +877,13 @@ class IndexSearcher:
         the unpaged ranking.  total_hits still counts every match."""
         if after is None:
             return self.search(query, k, total_hits_threshold=total_hits_threshold)
-        q = self._rewrite(query)
-        terms = planner.collect_terms(q)
-        ts = self._term_stats(terms)
-        cq = planner.compile_query(q, self.stats, ts, "top_scores")
-        if cq is None:
-            return TopDocs(0, "EQ", np.empty(0, np.int64), np.empty(0, np.float32))
-        lead, dv_keys = self._dv_plan(cq, ts)
+        p = self._prepare(query)
+        if p.cq is None:
+            return self._merge(pd.DataFrame(), k)
         with self._scan_conf_guard():
-            pdf = self._run_segments(
-                cq, terms, planner.has_phrase(q), k, "top_scores",
-                total_hits_threshold, planner.collect_point_queries(q),
-                lead=lead, dv_keys=dv_keys,
+            pdf = self._run_prepared(
+                p, k, "top_scores", total_hits_threshold,
                 after=(float(after[0]), int(after[1])),
-                mt_qs=tuple(planner.collect_multi_term_preds(q)),
             ).toPandas()
         return self._merge(pdf, k)
 
@@ -934,23 +903,10 @@ class IndexSearcher:
     def _bulk_df(self, query: Query, score_mode: str,
                  similarity: str | None = None,
                  max_segment: int | None = None) -> DataFrame:
-        q = self._rewrite(query)
-        terms = planner.collect_terms(q)
-        ts = self._term_stats(terms)
-        cq = planner.compile_query(
-            q, self.stats.with_similarity(similarity), ts, score_mode
-        )
-        if cq is None:
-            return self.spark.createDataFrame([], schema=RESULT_SCHEMA).filter(
-                F.col("doc_id") >= 0
-            )
-        lead, dv_keys = self._dv_plan(cq, ts)
-        out = self._run_segments(cq, terms, planner.has_phrase(q), None,
-                                 score_mode, 0,
-                                 planner.collect_point_queries(q),
-                                 lead=lead, dv_keys=dv_keys,
-                                 mt_qs=tuple(planner.collect_multi_term_preds(q)),
-                                 max_segment=max_segment)
+        p = self._prepare(query, score_mode, similarity)
+        if p.cq is None:
+            return self.spark.createDataFrame([], schema=RESULT_SCHEMA)
+        out = self._run_prepared(p, None, score_mode, 0, max_segment=max_segment)
         return out.filter(F.col("doc_id") >= 0)
 
     def search_df(self, query: Query, k: int = 10, with_meta: bool = True, **kw) -> DataFrame:
@@ -1129,19 +1085,16 @@ class IndexSearcher:
         model exactly like search(similarity=...)."""
         import numpy as np
 
-        from ..functions.codec import decode_term_postings
+        from ..functions.codec import decode_term_postings, encode_docsets
 
-        q = self._rewrite(query)
-        terms = planner.collect_terms(q)
-        cq = planner.compile_query(
-            q, self.stats.with_similarity(similarity), self._term_stats(terms)
-        )
+        p = self._prepare(query, similarity=similarity)
+        q, cq = p.query, p.cq
         if cq is None:
             return {"doc_id": doc_id, "matches": False, "description": str(q)}
         seg_id = doc_id // self.cfg.segment_size
         local = doc_id - seg_id * self.cfg.segment_size
-        term_cond = F.col("term").isin(list(terms))
-        for mq in planner.collect_multi_term_preds(q):
+        term_cond = F.col("term").isin(list(p.terms))
+        for mq in p.mt_qs:
             term_cond = term_cond | self._mt_cond(mq.orig)
         seg_rows = self.segments.filter(
             (F.col("segment_id") == seg_id) & term_cond
@@ -1152,22 +1105,16 @@ class IndexSearcher:
         norms = np.frombuffer(norm_row[0]["norms"], dtype=np.uint8).astype(np.int64)
         pmap = rows_to_posting_map(seg_rows)
         # point clauses: materialize this segment's matching doc set
-        for pq in planner.collect_point_queries(q):
-            from ..functions.codec import encode_term_postings
-
+        for pq in p.point_qs:
             meta_df = self._docmeta()
             sel = meta_df.filter(
                 (F.col("segment_id") == seg_id)
                 & self._dv_cond(pq, meta_df.schema)
             )
-            ld = np.sort(
-                np.asarray([r["doc_id"] for r in sel.select("doc_id").collect()],
-                           dtype=np.int64)
-            ) - seg_id * self.cfg.segment_size
-            if len(ld):
-                pmap[pq.token_key()] = encode_term_postings(
-                    ld, np.ones(len(ld), np.int64), np.zeros(len(ld), np.int64)
-                )
+            ids = sel.select("doc_id").toArrow().column("doc_id").to_numpy()
+            docset = encode_docsets(ids, self.cfg.segment_size)
+            if seg_id in docset:
+                pmap[pq.token_key()] = docset[seg_id]
         details, total = [], 0.0
         if cq.match_all and not (cq.musts or cq.filters):
             total += float(np.float32(cq.match_all_score))
@@ -1246,7 +1193,7 @@ class IndexSearcher:
         return os.path.exists(os.path.join(self.index_dir, "deletes", "_SUCCESS"))
 
     def _live_docs(self):
-        """Broadcast {segment_id: deleted local ids as pseudo-postings}
+        """Broadcast {segment_id: encoded deleted local ids}
         of the current del generation, or None without deletes
         (operators/deletes).  Loaded once per generation; the generation
         is re-read per query, so a delete committed after this searcher
@@ -1379,13 +1326,16 @@ class IndexSearcher:
 
         return rows.mapInPandas(decode, schema="segment_id int, doc_id bigint")
 
-    def _points_rows(self, point_qs, cols, lead=None, dv_keys=frozenset()) -> list[DataFrame]:
-        """PointRangeQuery doc sets as per-segment constant pseudo-
-        postings rows.  Access-path choice per clause
+    def _point_masks(self, point_qs, lead=None, dv_keys=frozenset()) -> list[tuple]:
+        """(token, broadcast {segment_id: TermPostings}) per point
+        clause: its doc set, selected by a Spark job, encoded on the
+        driver (codec.encode_docsets) and applied by the kernel as a
+        per-segment mask.  Access-path choice per clause
         (IndexOrDocValuesQuery.java:105-131):
 
         * index side (default): one pushed-down docmeta scan per clause
           (parquet min/max stats prune row groups — the BKD analog),
+          cached in the query cache,
         * doc-values side: when the clause is dv-eligible, required,
           and the conjunction's lead term is >8x cheaper than the
           histogram-estimated range cardinality, verify the range per
@@ -1396,7 +1346,7 @@ class IndexSearcher:
         Either path yields the same doc set for required clauses, so
         results are identical; only the materialized volume differs.
         """
-        outs = []
+        masks = []
         self._last_access_paths = {}  # token_key -> "index" | "dv" (debug/tests)
         for q in sorted(point_qs, key=lambda x: x.token_key()):
             use_dv = (
@@ -1409,19 +1359,23 @@ class IndexSearcher:
             if use_dv:
                 # dv docsets depend on the lead term, so they bypass the
                 # query cache (Lucene likewise only caches the index side)
-                rows = self._docset_rows(
-                    self._point_sel(q, lead), q.token_key()
-                )
+                bc, _ = self._broadcast_docset(self._point_sel(q, lead))
             else:
                 key = (self._cache_token, "pts", self._generation(), q.token_key())
-                rows = self.query_cache.get_or_build(
-                    key,
-                    lambda q=q: self._docset_rows(
-                        self._point_sel(q, None), q.token_key()
-                    ),
+                bc = self.query_cache.get_or_build(
+                    key, lambda q=q: self._broadcast_docset(self._point_sel(q, None))
                 )
-            outs.append(rows.select(*cols))
-        return outs
+            masks.append((q.token_key(), bc))
+        return masks
+
+    def _broadcast_docset(self, sel: DataFrame) -> tuple:
+        """(broadcast of the encoded docset, its exact byte count) of a
+        ``doc_id`` selection."""
+        from ..functions.codec import docsets_nbytes, encode_docsets
+
+        ids = sel.toArrow().column("doc_id").to_numpy()
+        docset = encode_docsets(ids, self.cfg.segment_size)
+        return self.spark.sparkContext.broadcast(docset), docsets_nbytes(docset)
 
     @staticmethod
     def _dv_cond(q, schema=None):
@@ -1575,14 +1529,12 @@ class IndexSearcher:
         return cond
 
     def _point_sel(self, q, lead) -> DataFrame:
-        """(segment_id, doc_id) selection of one point clause, either
-        path (lead=None -> index side; lead -> dv verify-per-candidate)."""
+        """``doc_id`` selection of one point clause, either path
+        (lead=None -> index side; lead -> dv verify-per-candidate)."""
         sel = self._docmeta()
         if lead is not None:
             sel = sel.join(self._term_docs_df(lead[0]).select("doc_id"), "doc_id")
-        return sel.filter(self._dv_cond(q, sel.schema)).select(
-            "segment_id", "doc_id"
-        )
+        return sel.filter(self._dv_cond(q, sel.schema)).select("doc_id")
 
     def _generation(self) -> tuple[int, int]:
         """Snapshot generation: the (deletes epoch, doc-values-updates
@@ -1611,49 +1563,6 @@ class IndexSearcher:
             self.index_dir,
         )
 
-    def _docset_rows(self, sel: DataFrame, token: str) -> DataFrame:
-        """(segment_id, doc_id) rows -> one pseudo-postings row per
-        segment under the reserved ``token`` term (the point-filter
-        plumbing).  Returns the FULL segment schema so the query cache
-        can persist one canonical plan; callers project the columns
-        their scan needs."""
-        from ..functions.codec import encode_term_postings
-        from .segments import SEGMENT_SCHEMA, _SEG_COLS
-
-        seg_size = self.cfg.segment_size
-
-        def make_pack(key):
-            def pack(kv, pdf: pd.DataFrame) -> pd.DataFrame:
-                seg_id = int(kv[0])
-                local = (
-                    np.unique(pdf["doc_id"].to_numpy(dtype=np.int64))
-                    - seg_id * seg_size
-                )
-                tp = encode_term_postings(
-                    local,
-                    np.ones(len(local), dtype=np.int64),
-                    np.zeros(len(local), dtype=np.int64),
-                )
-                return pd.DataFrame(
-                    [(
-                        seg_id, key, tp.df, tp.ttf,
-                        tp.singleton_doc, tp.singleton_freq,
-                        tp.doc_blocks, tp.doc_block_offsets.tolist(),
-                        tp.freq_blocks, tp.freq_block_offsets.tolist(),
-                        b"", [],
-                        tp.block_last_docs.tolist(),
-                        tp.impacts_flat.tolist(), tp.impacts_offsets.tolist(),
-                    )],
-                    columns=_SEG_COLS,
-                )
-
-            return pack
-
-        return (
-            sel.groupby("segment_id")
-            .applyInPandas(make_pack(token), schema=SEGMENT_SCHEMA)
-        )
-
     def _run_segments(
         self, cq: CompiledQuery, terms: set[str], need_pos: bool, k: int | None,
         score_mode: str, threshold: int, point_qs: set | frozenset = frozenset(),
@@ -1673,29 +1582,24 @@ class IndexSearcher:
             cols += ["pos_blocks", "pos_block_offsets"]
         # ONE pushed-down scan fetches the query terms' postings AND the
         # per-segment sentinel norms row — a segment is self-contained,
-        # so a query is: scan -> groupBy(segment) -> kernel -> merge.
-        # Multi-term union predicates OR their JVM conditions into the
-        # same scan (distributed expansion — no driver-side term list).
+        # so a query is: scan -> kernel per segment -> merge.  Multi-term
+        # union predicates OR their JVM conditions into the same scan
+        # (distributed expansion — no driver-side term list).
         if cq.match_all or terms or point_qs or mt_qs:
-            want = list(terms) + [SENTINEL_TERM]
-        else:
-            want = []
-        pure_scan = bool(want)
-        if not want:
-            seg_rows = self.segments.filter(F.lit(False)).select(*cols)
-        else:
-            cond = F.col("term").isin(want)
+            cond = F.col("term").isin(list(terms) + [SENTINEL_TERM])
             for mq in mt_qs:
                 cond = cond | self._mt_cond(mq.orig)
-            seg_rows = self.segments.filter(cond).select(*cols)
-        for pdf_rows in self._points_rows(point_qs, cols, lead, dv_keys):
-            seg_rows = seg_rows.unionByName(pdf_rows)
-            pure_scan = False
+        else:
+            cond = F.lit(False)
+        seg_rows = self.segments.filter(cond).select(*cols)
+        # per-segment doc-id masks, one broadcast each, put into the
+        # kernel's postings map under their reserved token: point-filter
+        # docsets, and live docs as an implicit MUST_NOT (postings and
+        # stats untouched — Lucene semantics)
+        masks = self._point_masks(point_qs, lead, dv_keys)
         live = self._live_docs()
         if live is not None:
-            # live docs: exclude deleted ids via an implicit MUST_NOT
-            # (postings untouched, stats untouched — Lucene semantics);
-            # the kernel supplies each segment's mask from the broadcast
+            masks.append((DELETES_TOKEN, live))
             cq = replace(cq, must_nots=cq.must_nots + [
                 ScoringClause((DELETES_TOKEN,), None, const_score=0.0)
             ])
@@ -1719,8 +1623,12 @@ class IndexSearcher:
                     f"segment {seg_id}: {len(seg_pdf)} postings rows but "
                     "no sentinel row (segment split across kernel groups?)"
                 )
-            post_rows = seg_pdf[seg_pdf["term"] != SENTINEL_TERM]
-            if len(post_rows) == 0 and not cq.match_all:
+            pmap = rows_to_posting_map(seg_pdf[seg_pdf["term"] != SENTINEL_TERM])
+            for token, bc in masks:
+                if seg_id in bc.value:
+                    pmap[token] = bc.value[seg_id]
+            if pmap.keys() <= {DELETES_TOKEN} and not cq.match_all:
+                # nothing here can match: no postings, no filter docset
                 return pd.DataFrame(
                     columns=["segment_id", "doc_id", "score", "hits", "hits_exact"]
                 )
@@ -1728,9 +1636,6 @@ class IndexSearcher:
                 sent["doc_blocks"].iloc[0], dtype=np.uint8
             ).astype(np.int64)
             num_docs = int(sent["df"].iloc[0])
-            pmap = rows_to_posting_map(post_rows)
-            if live is not None and seg_id in live.value:
-                pmap[DELETES_TOKEN] = live.value[seg_id]
             base = seg_id * seg_size
             # the paging cursor's doc id is global; segment-local
             # arithmetic keeps the (score, doc) comparison exact for
@@ -1760,7 +1665,7 @@ class IndexSearcher:
                 }
             )
 
-        if pure_scan and self._whole_file_tasks():
+        if self._whole_file_tasks():
             # ---- one-stage kernel (shuffle elision, guide §2.4) ----
             # The segments table is bucketed by segment_id at write
             # time (the encode shuffle keys on segment_id, so each
@@ -1771,10 +1676,11 @@ class IndexSearcher:
             # groupBy exchange + AQE stage barrier + second task wave
             # are pure overhead.  Each task groups its own rows and
             # runs the per-segment kernels in place: scan -> kernel ->
-            # collect, one stage, zero shuffle.  A union input (point-
-            # filter pseudo-postings) or a foreign file layout falls
-            # back to the shuffle path; the deletes mask rides the
-            # kernel's broadcast and keeps this path.
+            # collect, one stage, zero shuffle.  Every mask (point
+            # filters, live docs) rides a broadcast into the kernel, so
+            # only the file layout decides the path: a foreign layout,
+            # or a lazy plan run under a conf that splits files, takes
+            # the shuffle path below with the same kernel.
             empty = pd.DataFrame(
                 {
                     "segment_id": pd.Series(dtype=np.int32),
@@ -1807,7 +1713,7 @@ class IndexSearcher:
             return seg_rows.mapInPandas(
                 kernel_partition, schema=RESULT_SCHEMA
             )
-        # ---- shuffle path (point-filter unions / foreign layout) ----
+        # ---- shuffle path (file layout not provably whole-file) ----
         # Explicit repartition with a stated partition count: AQE's
         # partition coalescing would otherwise collapse the tiny
         # query-time shuffle to ONE task and serialize every segment

@@ -253,9 +253,10 @@ def collect_multi_term_preds(q: Query) -> list[MultiTermUnionQuery]:
 
 def collect_point_queries(q: Query) -> set:
     """All doc-value filter leaves (PointRangeQuery + keyword
-    FieldTermQuery) — their doc sets are materialized from the docmeta
-    point index and fed to the kernel as constant pseudo-postings (see
-    IndexSearcher._points_rows)."""
+    FieldTermQuery) — each one's doc set is selected from the docmeta
+    point index, encoded per segment and applied by the kernel as a
+    doc-id mask under the clause's token (see
+    IndexSearcher._point_masks)."""
     if isinstance(q, (PointRangeQuery, MultiDimPointRangeQuery,
                       LatLonDistanceQuery, LatLonPolygonQuery,
                       FunctionRangeQuery, FieldTermQuery,

@@ -738,8 +738,8 @@ class LatLonDistanceQuery(Query):
     columns play the BKD role — a latitude-band range predicate pushes
     into the parquet scan (row-group pruning), ANDed with the exact
     haversine distance evaluated JVM-side in the same scan stage.  The
-    matching docs surface as constant pseudo-postings like every other
-    point clause."""
+    matching docs reach the kernel as a per-segment doc-id mask like
+    every other point clause."""
 
     lat_field: str
     lon_field: str
@@ -820,8 +820,8 @@ class FunctionRangeQuery(Query):
     ValueSource dialect parser (plans/funcparser.py) into ONE codegen'd
     Column over the docmeta scan — the range test runs per row in the
     same stage, exactly where the reference evaluates per-doc
-    FunctionValues.  Rides the pseudo-postings plumbing like every
-    other doc-value clause."""
+    FunctionValues.  Reaches the kernel as a per-segment doc-id mask
+    like every other doc-value clause."""
 
     func: str
     lower: float = None
@@ -862,8 +862,8 @@ class FieldTermQuery(Query):
     L/document/StringField.java:29: the whole value is ONE token,
     un-analyzed, scored constant.  Spark-first analog: the docmeta
     table's string columns are the keyword fields; the matching docs
-    surface as a constant-score per-segment posting list through the
-    same pseudo-postings plumbing as PointRangeQuery (parquet
+    surface as a constant-score per-segment doc-id mask, the same
+    plumbing as PointRangeQuery (parquet
     dictionary/min-max stats prune row groups on the equality)."""
 
     field: str

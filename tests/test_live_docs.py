@@ -1,6 +1,7 @@
-"""Live docs as a per-segment kernel mask (operators/deletes): searches
-on a snapshot with deletes run scan -> kernel -> collect in one stage,
-answer bitwise like the shuffle path, and see every del generation."""
+"""Per-segment kernel masks — live docs (operators/deletes) and point-
+filter docsets: searches on a snapshot with deletes and filters run
+scan -> kernel -> collect in one stage, answer bitwise like the shuffle
+path, and see every del generation."""
 
 import shutil
 
@@ -23,7 +24,14 @@ CFG = EngineConfig(segment_size=64)  # 300 docs -> 5 segments
 @pytest.fixture(scope="module")
 def base_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("livebase"))
-    build_index(spark, corpus_df(spark, N, seed=11), d, CFG)
+    # lat/lon point fields derived from the path, for the geo filter
+    h = F.crc32("path")
+    docs = (
+        corpus_df(spark, N, seed=11)
+        .withColumn("lat", (h % 1800) / 10.0 - 90.0)
+        .withColumn("lon", (F.floor(h / 1800) % 3600) / 10.0 - 180.0)
+    )
+    build_index(spark, docs, d, CFG)
     return d
 
 
@@ -42,17 +50,37 @@ def del_dir(spark, base_dir, tmp_path_factory):
 
 
 def _queries():
-    b = Q.Builder()
-    b.add(Q.term_or(["public", "import"], 1), Q.Occur.MUST)
-    b.add(Q.TermQuery("return"), Q.Occur.MUST_NOT)
+    def boolean(*clauses):
+        b = Q.Builder()
+        for q, occur in clauses:
+            b.add(q, occur)
+        return b.build()
+
+    must, should = Q.Occur.MUST, Q.Occur.SHOULD
+    flt, must_not = Q.Occur.FILTER, Q.Occur.MUST_NOT
+    public = Q.TermQuery("public")
     return {
-        "term": Q.TermQuery("public"),
+        "term": public,
         "and": Q.term_and(["public", "return"]),
         "or_msm": Q.term_or(["public", "return", "import", "static"], 2),
         "phrase": Q.PhraseQuery(("public", "return")),
         "prefix": Q.PrefixQuery("get"),
-        "must_not": b.build(),
+        "must_not": boolean((Q.term_or(["public", "import"], 1), must),
+                            (Q.TermQuery("return"), must_not)),
         "match_all": Q.MatchAllDocsQuery(),
+        "range_filter": boolean((public, must),
+                                (Q.PointRangeQuery("length", 20, 150), flt)),
+        "keyword_must": boolean((Q.FieldTermQuery("lang", "java"), must),
+                                (Q.TermQuery("import"), should)),
+        "geo_filter": boolean(
+            (public, must),
+            (Q.LatLonDistanceQuery("lat", "lon", 10.0, 20.0, 5e6), flt)),
+        "range_should": boolean((public, should),
+                                (Q.PointRangeQuery("length", 120, None), should)),
+        "range_must_not": boolean((public, must),
+                                  (Q.PointRangeQuery("length", None, 60), must_not)),
+        "all_range": boolean((Q.MatchAllDocsQuery(), must),
+                             (Q.PointRangeQuery("length", 40, 160), flt)),
     }
 
 
@@ -106,9 +134,10 @@ def test_update_snapshot_plan_is_one_stage(spark, base_dir, tmp_path_factory):
     shutil.copytree(base_dir, base, dirs_exist_ok=True)
     meta = spark.read.parquet(f"{base}/docmeta").orderBy("doc_id").limit(3).toPandas()
     new_docs = spark.createDataFrame(pd.DataFrame(
-        [(r["repo"], r["path"], "c2", "java", "public zzqqx replacement")
+        [(r["repo"], r["path"], "c2", "java", "public zzqqx replacement",
+          r["lat"], r["lon"])
          for _, r in meta.iterrows()],
-        columns=["repo", "path", "commit", "lang", "content"],
+        columns=["repo", "path", "commit", "lang", "content", "lat", "lon"],
     ))
     out = str(tmp_path_factory.mktemp("liveupdout"))
     dl.update_documents(spark, base, new_docs, out)
@@ -250,3 +279,53 @@ def test_scan_conf_guard_exception_safe(spark, base_dir, monkeypatch):
     finally:
         monkeypatch.undo()
         conf.set(mpb, saved)
+
+
+@pytest.mark.parametrize("path", ["index", "dv"])
+def test_filtered_search_plan_is_one_stage(spark, del_dir, path):
+    """A range-filtered search on a snapshot with deletes: the docset is
+    a kernel mask, so scan -> kernel -> collect is one stage, whichever
+    access path selected it (a rare lead term forces the dv side)."""
+    s = IndexSearcher(spark, del_dir, query_cache=QueryCache())
+    td = s.termdict.toPandas().sort_values(["df", "term"])
+    lead = td[td["df"] >= 2].iloc[0]["term"]
+    rng = Q.PointRangeQuery("length", 10, 10_000)
+    b = Q.Builder()
+    b.add(Q.TermQuery(lead), Q.Occur.MUST)
+    b.add(Q.IndexOrDocValuesQuery(rng) if path == "dv" else rng, Q.Occur.FILTER)
+    with s._scan_conf_guard():
+        df = s._run_prepared(s._prepare(b.build()), 10, "top_scores", 1000)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        hits = df.toPandas()
+    assert set(s._last_access_paths.values()) == {path}
+    assert "MapInPandas" in plan
+    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan
+    assert (hits["doc_id"] >= 0).any()
+
+
+def test_term_stats_pyarrow_matches_spark(spark, base_dir, monkeypatch):
+    """The driver-side pyarrow term-stats read returns exactly what the
+    Spark termdict scan returns, for present, absent and mixed terms."""
+    import pyarrow.dataset as pads
+
+    s = IndexSearcher(spark, base_dir, query_cache=QueryCache())
+    td = s.termdict.toPandas().sort_values(["df", "term"])["term"].tolist()
+    rare, mid, hot = td[0], td[len(td) // 2], td[-1]
+    sets = [
+        {rare, mid, hot, "public"},
+        {"zzqqx_absent", "qqzz_absent"},
+        {"public", rare, "zzqqx_absent"},
+    ]
+    termdict, s.termdict = s.termdict, None  # a Spark fallback would raise
+    arrow = [s._term_stats(t) for t in sets]
+    s.termdict = termdict
+
+    def no_pyarrow(*a, **kw):
+        raise OSError("pyarrow read unavailable")
+
+    monkeypatch.setattr(pads, "dataset", no_pyarrow)
+    assert [s._term_stats(t) for t in sets] == arrow
+    present, absent, mixed = arrow
+    assert set(present) == sets[0] and absent == {}
+    assert set(mixed) == {"public", rare} and mixed["public"] == present["public"]
+    assert all(df >= 1 and ttf >= df for df, ttf in present.values())

@@ -32,7 +32,7 @@ def test_admission_and_hits(spark, index_dir):
     r1 = s.matches_df(q).toPandas()["doc_id"].sort_values().tolist()
     assert (s.query_cache.hits, len(s.query_cache._cache)) == (0, 0)
     r2 = s.matches_df(q).toPandas()["doc_id"].sort_values().tolist()
-    # second sighting reaches min_uses -> persisted
+    # second sighting reaches min_uses -> cached
     assert len(s.query_cache._cache) == 1 and s.query_cache.hits == 0
     r3 = s.matches_df(q).toPandas()["doc_id"].sort_values().tolist()
     assert s.query_cache.hits == 1
@@ -55,8 +55,9 @@ def test_lru_eviction(spark, index_dir):
 
 
 def test_byte_aware_eviction(spark, index_dir):
-    """maxRamBytesUsed analog: admitted entries are measured from the
-    block manager and the LRU is trimmed by total bytes, not count."""
+    """maxRamBytesUsed analog: admitted entries are sized by their exact
+    encoded docset bytes and the LRU is trimmed by total bytes, not
+    count."""
     s = IndexSearcher(
         spark, index_dir,
         query_cache=QueryCache(max_queries=100, min_uses=1, max_bytes=1),
@@ -102,7 +103,7 @@ def test_cross_searcher_sharing(spark, index_dir, tmp_path_factory):
     r1 = s1.matches_df(q).toPandas()["doc_id"].sort_values().tolist()
     assert shared.hits == 0 and len(shared._cache) == 1
     r2 = s2.matches_df(q).toPandas()["doc_id"].sort_values().tolist()
-    assert shared.hits == 1  # s2 reused s1's persisted docset
+    assert shared.hits == 1  # s2 reused s1's cached docset
     assert r1 == r2
     # different index, same shared cache: no cross-index serving
     d2 = str(tmp_path_factory.mktemp("qcidx2"))

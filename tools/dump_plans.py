@@ -11,10 +11,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from lucene_solr_8_7_0_spark.operators.search import IndexSearcher  # noqa: E402
-from lucene_solr_8_7_0_spark.plans import planner, queries as Q  # noqa: E402
+from lucene_solr_8_7_0_spark.plans import queries as Q  # noqa: E402
 from lucene_solr_8_7_0_spark.session import get_spark  # noqa: E402
 
 TAG = sys.argv[1]
@@ -42,21 +40,15 @@ def main():
     qs = headline_queries(s)
 
     def run_df(q, k=10):
-        qq = s._rewrite(q)
-        terms = planner.collect_terms(qq)
-        ts = s._term_stats(terms)
-        cq = planner.compile_query(qq, s.stats, ts, "top_scores")
-        lead, dv_keys = s._dv_plan(cq, ts)
-        return s._run_segments(
-            cq, terms, planner.has_phrase(qq), k, "top_scores", 1000,
-            planner.collect_point_queries(qq), lead=lead, dv_keys=dv_keys,
-            mt_qs=tuple(planner.collect_multi_term_preds(qq)),
-        )
+        # the path is chosen at plan time: build it under the searcher's
+        # own scan-split conf, as search() does
+        with s._scan_conf_guard():
+            return s._run_prepared(s._prepare(q), k, "top_scores", 1000)
 
     for name in ["q1_term_hot", "q4_and_mid", "q5_or_hot_wand", "q9_phrase",
                  "q10_prefix"]:
         dump(name, run_df(qs[name]))
-    # a pseudo-postings union shape (point filter): the shuffle path
+    # a point filter: its docset is a kernel mask, still one stage
     b = Q.Builder()
     b.add(Q.TermQuery("data"), Q.Occur.MUST)
     b.add(Q.PointRangeQuery("length", None, 100), Q.Occur.FILTER)

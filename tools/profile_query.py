@@ -3,10 +3,10 @@
 Builds (or resumes) a bench-identical index from the cached bench
 corpus, then breaks each headline query's wall into driver phases:
 
-  rewrite   _rewrite (may probe the termdict for multi-term queries)
-  stats     _term_stats collect (one pushed-down termdict scan + job)
-  compile   planner.compile_query (pure Python)
-  plan      _run_segments DataFrame construction (Catalyst analysis)
+  prepare   IndexSearcher._prepare: rewrite (may probe the termdict for
+            multi-term queries), term stats, compile, access plan
+  plan      _run_prepared DataFrame construction (Catalyst analysis,
+            plus one docset job per uncached point clause)
   exec      .toPandas() (the main scan -> kernel -> collect job)
   merge     driver-side TopDocs.merge
 
@@ -17,14 +17,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import numpy as np  # noqa: E402
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lucene_solr_8_7_0_spark.config import EngineConfig  # noqa: E402
 from lucene_solr_8_7_0_spark.operators.build import build_index  # noqa: E402
 from lucene_solr_8_7_0_spark.operators.search import IndexSearcher  # noqa: E402
-from lucene_solr_8_7_0_spark.plans import planner, queries as Q  # noqa: E402
+from lucene_solr_8_7_0_spark.plans import queries as Q  # noqa: E402
 from lucene_solr_8_7_0_spark.session import get_spark  # noqa: E402
 from lucene_solr_8_7_0_spark.sources.corpus import corpus_df  # noqa: E402
 
@@ -36,27 +34,15 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def phases(searcher, query, k=10):
     t = {}
     t0 = time.time()
-    q = searcher._rewrite(query)
-    t["rewrite"] = time.time() - t0
-    t0 = time.time()
-    terms = planner.collect_terms(q)
-    ts = searcher._term_stats(terms)
-    t["stats"] = time.time() - t0
-    t0 = time.time()
-    cq = planner.compile_query(q, searcher.stats, ts, "top_scores")
-    pqs = planner.collect_point_queries(q)
-    mt_qs = tuple(planner.collect_multi_term_preds(q))
-    lead, dv_keys = searcher._dv_plan(cq, ts)
-    t["compile"] = time.time() - t0
-    t0 = time.time()
-    df = searcher._run_segments(
-        cq, terms, planner.has_phrase(q), k, "top_scores", 1000, pqs,
-        lead=lead, dv_keys=dv_keys, mt_qs=mt_qs,
-    )
-    t["plan"] = time.time() - t0
-    t0 = time.time()
-    pdf = df.toPandas()
-    t["exec"] = time.time() - t0
+    p = searcher._prepare(query)
+    t["prepare"] = time.time() - t0
+    with searcher._scan_conf_guard():  # the split conf search() runs under
+        t0 = time.time()
+        df = searcher._run_prepared(p, k, "top_scores", 1000)
+        t["plan"] = time.time() - t0
+        t0 = time.time()
+        pdf = df.toPandas()
+        t["exec"] = time.time() - t0
     t0 = time.time()
     searcher._merge(pdf, k)
     t["merge"] = time.time() - t0
