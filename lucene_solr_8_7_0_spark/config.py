@@ -4,8 +4,8 @@ Mirrors the knobs of the reference engine's IndexWriterConfig /
 Lucene84PostingsFormat (see SURVEY.md §2) re-expressed for a Spark
 deployment.  All values that influence *results* (analyzer, BM25
 params, norm encoding) are fixed to the reference defaults; values
-that influence only *physical layout* (segment size, shuffle width,
-salt buckets) are free and must never change query results.
+that influence only *physical layout* (segment size, shuffle width)
+are free and must never change query results.
 """
 
 from __future__ import annotations
@@ -121,8 +121,6 @@ class EngineConfig:
     # global doc id (segment_id = doc_id // segment_size), so the index
     # contents are identical at any cluster size.
     segment_size: int = 1 << 16
-    # Salt buckets for the skew-safe two-level term-stats aggregation.
-    stats_salt_buckets: int = 16
     # Target rows per parquet file on index write.
     write_max_records_per_file: int = 2_000_000
 

@@ -343,6 +343,20 @@ def build_index(
     stats_row = stats_ops.read_stats_row(_path(index_dir, "stats"))
     num_terms = stats_ops.parquet_row_count(_path(index_dir, "termdict"))
     # persist the config used (query side must match analyzer etc.)
+    write_config(index_dir, cfg)
+    return BuildResult(
+        index_dir=index_dir,
+        num_docs=stats_row["num_docs"],
+        num_terms=num_terms,
+        stages_run=run,
+        stages_skipped=skipped,
+    )
+
+
+def write_config(index_dir: str, cfg: EngineConfig) -> None:
+    """Persist every result-affecting setting of ``cfg`` as
+    ``engine_config.json`` — the one writer for builds and merges, so a
+    merged snapshot analyzes its next delta exactly like the base."""
     with open(os.path.join(index_dir, "engine_config.json"), "w") as f:
         json.dump(
             {
@@ -363,13 +377,6 @@ def build_index(
             },
             f,
         )
-    return BuildResult(
-        index_dir=index_dir,
-        num_docs=stats_row["num_docs"],
-        num_terms=num_terms,
-        stages_run=run,
-        stages_skipped=skipped,
-    )
 
 
 def load_config(index_dir: str) -> EngineConfig:

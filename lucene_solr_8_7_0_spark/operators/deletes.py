@@ -7,7 +7,9 @@ bitset, while collection/term statistics still count them until a
 merge expunges them.  This mirrors that exactly:
 
 * ``delete_documents`` appends doc ids to an ``index_dir/deletes``
-  parquet table (the commit of a new del generation),
+  parquet table (the commit of a new del generation): one Spark action
+  collects the ids as Arrow, and the driver writes them as one parquet
+  file, marks the table with ``_SUCCESS`` and bumps the generation,
 * ``IndexSearcher`` (when the table exists) loads the mask once per
   del generation with ``load_live_docs`` — each segment's deleted
   local ids encoded by ``codec.encode_docsets``, the one docset
@@ -84,13 +86,19 @@ def delete_documents(
     """Mark docs deleted (by global doc_id).  Appends a new del
     generation; idempotent at read time (ids are de-duplicated when
     the mask is built).  Returns the number of ids written."""
-    n = doc_ids.count()
-    if n:
-        doc_ids.select(F.col("doc_id").cast("long")).write.mode("append").parquet(
-            deletes_path(index_dir)
-        )
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    ids = doc_ids.select(F.col("doc_id").cast("long")).toArrow()
+    if ids.num_rows:
+        d = deletes_path(index_dir)
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(ids, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+        # the searcher keys "this snapshot has deletes" on the marker
+        open(os.path.join(d, "_SUCCESS"), "w").close()
         _bump_generation(index_dir)
-    return n
+    return ids.num_rows
 
 
 def delete_by_query(spark: SparkSession, index_dir: str, searcher, query) -> int:

@@ -3,16 +3,23 @@
 The reference merges segments by viewing N segments as one doc-id
 remapped stream and re-writing postings (SegmentMerger.merge ->
 FieldsConsumer.merge / MappedMultiFields, SURVEY.md §2.5).  Our global
-doc ids make the Spark analog direct:
+doc ids make the Spark analog direct, and a merge does work in
+proportion to what the inputs share:
 
-* indexes over disjoint doc-id ranges union trivially — different
-  segments never overlap, so segment rows pass through untouched,
-* only *boundary* segments — where two inputs contribute docs to the
-  same ``doc_id // segment_size`` range — need real merging: decode
-  both runs, concatenate (doc ranges are disjoint and ordered), and
-  re-encode blocks + impacts; sentinel norms/lengths rows overlay by
-  local doc id.  This is the k-way MultiTermsEnum merge, done per
-  (segment, term) group, skew-bounded by segment_size.
+* indexes over disjoint doc-id ranges union trivially — a segment that
+  only one input covers is copied as-is by a JVM-only job; which
+  segment ids two inputs share is read from the parquet footers'
+  ``segment_id`` min/max, no data,
+* only *shared* segments — where two inputs contribute docs to the
+  same ``doc_id // segment_size`` range — enter ``merge_segment_rows``:
+  decode both runs, concatenate (doc ranges are disjoint and ordered),
+  and re-encode blocks + impacts; sentinel norms/lengths rows overlay
+  by local doc id.  This is the k-way MultiTermsEnum merge, done per
+  (segment, term) group, skew-bounded by segment_size,
+* statistics are sums of per-index numbers, so they merge from the
+  inputs' own tables: the stats row and length histogram on the driver
+  (``stats.merge_stats_tables``), the termdict as ``stats.term_dict``
+  over the union of the inputs' termdicts — no postings re-aggregated.
 
 ``add_documents`` is the IndexWriter.addDocuments + commit analog:
 number the new docs after the existing maximum, build a delta index,
@@ -22,6 +29,7 @@ merge, and swap in a new snapshot directory (commit point).
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -147,6 +155,59 @@ def merge_segment_rows(seg_union: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
+def _segment_ranges(index_dir: str) -> list[tuple[int, int]]:
+    """(min, max) ``segment_id`` of every row group of an index's
+    segments files, from the parquet footers (no data read).  A row
+    group without statistics covers every id."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    ranges = []
+    for f in sorted(glob.glob(os.path.join(index_dir, "segments", "*.parquet"))):
+        md = pq.read_metadata(f)
+        col = [md.schema.column(i).path for i in range(md.num_columns)].index(
+            "segment_id"
+        )
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(col).statistics
+            if st is None or not st.has_min_max:
+                ranges.append((-(1 << 31), (1 << 31) - 1))
+            else:
+                ranges.append((int(st.min), int(st.max)))
+    return ranges
+
+
+def shared_segment_ranges(index_dirs: list[str]) -> list[tuple[int, int]]:
+    """Disjoint, sorted ``segment_id`` intervals that rows of two or
+    more inputs cover — the only segments a merge must re-encode.
+    Conservative by construction: an id inside a footer range counts
+    as present, so a truly shared segment is never missed."""
+    per_input = [_segment_ranges(d) for d in index_dirs]
+    hits = []
+    for i, ra in enumerate(per_input):
+        for rb in per_input[i + 1:]:
+            for alo, ahi in ra:
+                for blo, bhi in rb:
+                    lo, hi = max(alo, blo), min(ahi, bhi)
+                    if lo <= hi:
+                        hits.append((lo, hi))
+    out: list[tuple[int, int]] = []
+    for lo, hi in sorted(hits):
+        if out and lo <= out[-1][1] + 1:
+            out[-1] = (out[-1][0], max(out[-1][1], hi))
+        else:
+            out.append((lo, hi))
+    return out
+
+
+def _union(spark: SparkSession, index_dirs: list[str], name: str) -> DataFrame:
+    return reduce(DataFrame.union, [_read(spark, d, name) for d in index_dirs])
+
+
 def merge_indexes(
     spark: SparkSession,
     index_dirs: list[str],
@@ -155,80 +216,52 @@ def merge_indexes(
 ) -> None:
     """Merge N indexes over DISJOINT doc-id ranges into one snapshot.
 
-    Table unions + boundary-segment re-encode + stats/termdict re-agg.
-    ``out_dir`` becomes a complete, self-contained index directory —
-    the new commit point."""
-    from .build import load_config
-    from .stats import salted_agg
+    Shared segments are re-encoded by ``merge_segment_rows``; every other
+    segment row is copied by the JVM.  Stats, colstats and the termdict
+    are sums of the inputs' own tables.  ``out_dir`` becomes a complete,
+    self-contained index directory — the new commit point."""
+    from .build import load_config, write_config
+    from .stats import merge_stats_tables, term_dict
 
     cfg = cfg or load_config(index_dirs[0])
     os.makedirs(out_dir, exist_ok=True)
 
-    docmeta = None
-    segs = None
-    for d in index_dirs:
-        dm = _read(spark, d, "docmeta")
-        sg = _read(spark, d, "segments")
-        docmeta = dm if docmeta is None else docmeta.union(dm)
-        segs = sg if segs is None else segs.union(sg)
-
-    merged_segs = merge_segment_rows(segs, cfg)
-    merged_segs.sortWithinPartitions("segment_id", "term").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "segments"))
-    segs_final = _read(spark, out_dir, "segments")
+    segs = _union(spark, index_dirs, "segments")
+    shared = shared_segment_ranges(index_dirs)
+    if shared:
+        seg_id = F.col("segment_id")
+        in_shared = reduce(
+            lambda a, b: a | b, [seg_id.between(lo, hi) for lo, hi in shared]
+        )
+        segs = merge_segment_rows(segs.filter(in_shared), cfg).unionByName(
+            segs.filter(~in_shared)
+        )
+    # one shuffle on segment_id keeps every segment wholly in one file
+    # (the searcher's one-stage invariant); AQE coalesces the partitions
+    segs.repartition("segment_id").sortWithinPartitions(
+        "segment_id", "term"
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "segments"))
     # norms stay a read-time view over the merged sentinels — no write
 
-    docmeta.sortWithinPartitions("doc_id").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "docmeta")
-    )
+    _union(spark, index_dirs, "docmeta").sortWithinPartitions(
+        "doc_id"
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "docmeta"))
     # offsets tier: doc ids are globally disjoint across inputs, so the
     # doc-major termvectors tables union with no re-encode; present in
     # the merged snapshot only when EVERY input carries it
     tv_dirs = [os.path.join(d, "termvectors") for d in index_dirs]
     if all(os.path.exists(os.path.join(t, "_SUCCESS")) for t in tv_dirs):
-        tv = None
-        for d in index_dirs:
-            t = _read(spark, d, "termvectors")
-            tv = t if tv is None else tv.union(t)
-        tv.sortWithinPartitions("doc_id", "term").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "termvectors"))
-    docmeta = _read(spark, out_dir, "docmeta")
-    docmeta.agg(
-        F.count("*").alias("num_docs"),
-        F.sum(F.when(F.col("length") > 0, 1).otherwise(0)).alias("doc_count"),
-        F.sum("length").alias("sum_ttf"),
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
+        _union(spark, index_dirs, "termvectors").sortWithinPartitions(
+            "doc_id", "term"
+        ).write.mode("overwrite").parquet(os.path.join(out_dir, "termvectors"))
 
-    td = salted_agg(
-        segs_final.filter(F.col("term") != SENTINEL_TERM).select(
-            "term", "df", "ttf", "segment_id"
-        ),
-        key="term",
-        sums={"df": "df", "ttf": "ttf"},
-        buckets=cfg.stats_salt_buckets,
-        salt_src="segment_id",
+    merge_stats_tables(index_dirs, out_dir)
+    term_dict(_union(spark, index_dirs, "termdict"), cfg).repartitionByRange(
+        8, "term"
+    ).sortWithinPartitions("term").write.mode("overwrite").parquet(
+        os.path.join(out_dir, "termdict")
     )
-    td.repartitionByRange(8, "term").sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "termdict"))
-
-    import json
-
-    with open(os.path.join(out_dir, "engine_config.json"), "w") as f:
-        json.dump(
-            {
-                "k1": cfg.k1, "b": cfg.b, "analyzer": cfg.analyzer,
-                "max_token_length": cfg.max_token_length,
-                "index_positions": cfg.index_positions,
-                "index_offsets": cfg.index_offsets,
-                "similarity": cfg.similarity,
-                "segment_size": cfg.segment_size,
-                "stopwords": list(cfg.stopwords),
-            },
-            f,
-        )
+    write_config(out_dir, cfg)
 
 
 def merge_indexes_tiered(
@@ -255,6 +288,7 @@ def merge_indexes_tiered(
     import tempfile
 
     from .build import load_config
+    from .stats import read_stats_row
 
     cfg = cfg or load_config(index_dirs[0])
     work_dir = work_dir or tempfile.mkdtemp(prefix="tiered_merge_")
@@ -265,7 +299,7 @@ def merge_indexes_tiered(
         # size-sorted consecutive batches = similar-sized merges
         sized = sorted(
             current,
-            key=lambda d: _read(spark, d, "stats").collect()[0]["num_docs"],
+            key=lambda d: read_stats_row(os.path.join(d, "stats"))["num_docs"],
         )
         nxt: list[str] = []
         for i in range(0, len(sized), max_fan_in):
@@ -293,24 +327,32 @@ def add_documents(
     delta_dir: str | None = None,
 ) -> None:
     """IndexWriter.addDocuments + commit: number new docs after the
-    current maximum, build a delta index, merge into ``out_dir``."""
+    current maximum, build a delta index, merge into ``out_dir``.  A
+    delta directory this call creates is removed when it returns."""
+    import shutil
     import tempfile
 
     from .build import build_index, load_config
     from .docids import assign_doc_ids
+    from .stats import read_stats_row
 
     cfg = cfg or load_config(index_dir)
-    base = _read(spark, index_dir, "stats").collect()[0]["num_docs"]
+    base = read_stats_row(os.path.join(index_dir, "stats"))["num_docs"]
+    own_delta = delta_dir is None
     delta_dir = delta_dir or tempfile.mkdtemp(prefix="delta_idx_")
-    with_ids = assign_doc_ids(new_docs, ["repo", "path"]).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(int(base))
-    )
-    build_index(
-        spark,
-        with_ids,
-        delta_dir,
-        cfg,
-        resume=False,
-        precomputed_ids=True,
-    )
-    merge_indexes(spark, [index_dir, delta_dir], out_dir, cfg)
+    try:
+        with_ids = assign_doc_ids(new_docs, ["repo", "path"]).withColumn(
+            "doc_id", F.col("doc_id") + F.lit(int(base))
+        )
+        build_index(
+            spark,
+            with_ids,
+            delta_dir,
+            cfg,
+            resume=False,
+            precomputed_ids=True,
+        )
+        merge_indexes(spark, [index_dir, delta_dir], out_dir, cfg)
+    finally:
+        if own_delta:
+            shutil.rmtree(delta_dir, ignore_errors=True)

@@ -250,7 +250,10 @@ class IndexSearcher:
     def __init__(self, spark: SparkSession, index_dir: str,
                  cfg: EngineConfig | None = None,
                  query_cache: QueryCache | None = None):
+        import pyarrow.parquet as pq
+
         from .build import load_config
+        from .stats import read_stats_row
 
         self.spark = spark
         self.index_dir = index_dir
@@ -267,7 +270,9 @@ class IndexSearcher:
         # serves DataFrames bound to a stopped SparkContext (stale
         # entries age out through normal LRU eviction)
         self._cache_token = (index_dir, spark.sparkContext.applicationId)
-        row = spark.read.parquet(os.path.join(index_dir, "stats")).collect()[0]
+        # the one-row stats and few-row colstats tables are read on the
+        # driver (no Spark job per reopen)
+        row = read_stats_row(os.path.join(index_dir, "stats"))
         # an EMPTY index has NULL aggregate sums — normalize to zeros
         # so every query path degrades to empty results, not errors
         self.stats = planner.CollectionStats(
@@ -287,10 +292,11 @@ class IndexSearcher:
         self._live_docs_cache = None  # (del generation, mask broadcast)
         self._seg_align_cache = None  # (segments files snapshot, alignment)
         # optimizer statistics (column histograms) for point-query cost
-        # estimation; tolerate their absence (older/merged indexes)
+        # estimation; tolerate their absence (older indexes, or merges
+        # of an input without them)
         cs = os.path.join(index_dir, "colstats")
         self._colstats = (
-            spark.read.parquet(cs).toPandas()
+            pq.read_table(cs).to_pandas()
             if os.path.exists(os.path.join(cs, "_SUCCESS"))
             else None
         )

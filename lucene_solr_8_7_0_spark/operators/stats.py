@@ -1,11 +1,12 @@
 """Collection + term statistics (CollectionStatistics / TermStatistics).
 
-Term stats aggregate per-segment (df, ttf) rows into global values.
-Hot stopword-like terms make the ``term`` key Zipf-skewed, so the
-aggregation is **salted two-level** (north-rule skew requirement):
-first group by (term, salt) — spreading each hot term over
-``stats_salt_buckets`` reducers — then combine the partials by term.
-Sums are associative, so the result is exact.
+Term stats sum per-segment (df, ttf) rows into global values with a
+plain partial aggregate (``term_dict``): Spark's map-side partial SUM
+already bounds a Zipf-hot term's reducer input.  Collection stats and
+the length histogram are per-index sums too, so a merge adds up its
+inputs' own tables (``merge_stats_tables``) instead of re-aggregating
+docmeta.  ``salted_agg`` keeps the two-level salted sum for callers
+whose shape defeats partial aggregation.
 """
 
 from __future__ import annotations
@@ -157,34 +158,40 @@ def log_histogram_exprs(field: str) -> list:
     return exprs
 
 
-def write_stats_tables(index_dir: str, field: str, vals: dict) -> None:
-    """Flush the observed aggregates as the ``stats`` (single row) and
-    ``colstats`` (histogram) parquet tables, driver-side — tiny tables
-    never justify their own Spark jobs.  ``_SUCCESS`` markers keep the
-    resume logic's stage contract."""
-    import os
-
-    import pyarrow as pa
+def _write_small_table(index_dir: str, name: str, table) -> None:
+    """One driver-side parquet file plus the ``_SUCCESS`` marker the
+    resume logic and the searcher key on — tiny tables never justify
+    their own Spark jobs."""
     import pyarrow.parquet as pq
 
-    sdir = os.path.join(index_dir, "stats")
-    os.makedirs(sdir, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "num_docs": pa.array([int(vals["num_docs"])], pa.int64()),
-                "doc_count": pa.array(
-                    [int(vals["doc_count"] or 0)], pa.int64()
-                ),
-                "sum_ttf": pa.array([int(vals["sum_ttf"] or 0)], pa.int64()),
-            }
-        ),
-        os.path.join(sdir, "part-0.parquet"),
-    )
-    open(os.path.join(sdir, "_SUCCESS"), "w").close()
+    d = os.path.join(index_dir, name)
+    os.makedirs(d, exist_ok=True)
+    pq.write_table(table, os.path.join(d, "part-0.parquet"))
+    open(os.path.join(d, "_SUCCESS"), "w").close()
 
-    cdir = os.path.join(index_dir, "colstats")
-    os.makedirs(cdir, exist_ok=True)
+
+def _write_stats_row(index_dir: str, vals: dict) -> None:
+    import pyarrow as pa
+
+    _write_small_table(index_dir, "stats", pa.table({
+        c: pa.array([int(vals[c] or 0)], pa.int64()) for c in STATS_COLS
+    }))
+
+
+def _write_colstats(index_dir: str, fields, los, his, counts) -> None:
+    import pyarrow as pa
+
+    _write_small_table(index_dir, "colstats", pa.table({
+        "field": pa.array(list(fields), pa.string()),
+        "lo": pa.array(list(los), pa.float64()),
+        "hi": pa.array(list(his), pa.float64()),
+        "count": pa.array(list(counts), pa.int64()),
+    }))
+
+
+def write_stats_tables(index_dir: str, field: str, vals: dict) -> None:
+    """Flush the observed aggregates as the ``stats`` (single row) and
+    ``colstats`` (histogram) parquet tables, driver-side."""
     fields, los, his, counts = [], [], [], []
     for i in range(LOG_BUCKETS):
         cnt = int(vals.get(f"hb{i}") or 0)
@@ -196,18 +203,35 @@ def write_stats_tables(index_dir: str, field: str, vals: dict) -> None:
         los.append(lo)
         his.append(hi)
         counts.append(cnt)
-    pq.write_table(
-        pa.table(
-            {
-                "field": pa.array(fields, pa.string()),
-                "lo": pa.array(los, pa.float64()),
-                "hi": pa.array(his, pa.float64()),
-                "count": pa.array(counts, pa.int64()),
-            }
-        ),
-        os.path.join(cdir, "part-0.parquet"),
+    _write_stats_row(index_dir, vals)
+    _write_colstats(index_dir, fields, los, his, counts)
+
+
+def merge_stats_tables(index_dirs: list[str], out_dir: str) -> None:
+    """Stats of a merge over disjoint doc-id ranges, from the inputs'
+    own tables on the driver: the CollectionStatistics row is the sum
+    of the inputs' rows, and the histogram the per-bucket sum of their
+    ``colstats`` rows (equal ``(field, lo, hi)``).  Exact, because every
+    doc counts in exactly one input.  The merged snapshot carries
+    ``colstats`` only when every input does."""
+    import pyarrow.parquet as pq
+
+    rows = [read_stats_row(os.path.join(d, "stats")) for d in index_dirs]
+    _write_stats_row(
+        out_dir, {c: sum(int(r[c] or 0) for r in rows) for c in STATS_COLS}
     )
-    open(os.path.join(cdir, "_SUCCESS"), "w").close()
+    cs_dirs = [os.path.join(d, "colstats") for d in index_dirs]
+    if not all(os.path.exists(os.path.join(c, "_SUCCESS")) for c in cs_dirs):
+        return
+    import pandas as pd
+
+    hist = (
+        pd.concat([pq.read_table(c).to_pandas() for c in cs_dirs])
+        .groupby(["field", "lo", "hi"], as_index=False)["count"].sum()
+    )
+    _write_colstats(
+        out_dir, hist["field"], hist["lo"], hist["hi"], hist["count"]
+    )
 
 
 def read_stats_row(stats_dir: str) -> dict:

@@ -28,8 +28,8 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         # AQE: runtime coalescing + skew-split — the safety net the
-        # north rule's skew requirement leans on in addition to our
-        # explicit salting (operators/stats.py).
+        # north rule's skew requirement leans on in addition to the
+        # map-side partial sums of the term stats (operators/stats.py).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

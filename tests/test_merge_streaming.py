@@ -5,15 +5,22 @@ Structured Streaming micro-batches) answers every query identically to
 an index built over the full corpus at once.
 """
 
+import glob
 import os
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from lucene_solr_8_7_0_spark.config import EngineConfig
-from lucene_solr_8_7_0_spark.operators.build import build_index
+from lucene_solr_8_7_0_spark.operators import merge as merge_mod
+from lucene_solr_8_7_0_spark.operators.build import build_index, load_config
 from lucene_solr_8_7_0_spark.operators.merge import add_documents, merge_indexes
+from lucene_solr_8_7_0_spark.operators.segments import SENTINEL_TERM
+from lucene_solr_8_7_0_spark.operators.stats import (
+    collection_stats, read_stats_row, term_dict,
+)
 from lucene_solr_8_7_0_spark.operators.search import IndexSearcher
 from lucene_solr_8_7_0_spark.plans import queries as Q
 from lucene_solr_8_7_0_spark.sources.corpus import corpus_df
@@ -35,6 +42,34 @@ def _queries():
 def _results(searcher, q):
     td = searcher.search(q, k=10, score_mode="complete")
     return td.doc_ids.tolist(), td.scores.tolist(), td.total_hits
+
+
+def _assert_stats_match_tables(spark, index_dir):
+    """Differential: a merge sums its inputs' stats/termdict tables;
+    the result must equal re-aggregating the merged segments and
+    docmeta from scratch, exactly."""
+    segs = spark.read.parquet(f"{index_dir}/segments")
+    want_td = (
+        term_dict(segs.filter(F.col("term") != SENTINEL_TERM), CFG)
+        .toPandas().sort_values("term", ignore_index=True)
+    )
+    got_td = (
+        pq.read_table(f"{index_dir}/termdict").to_pandas()[["term", "df", "ttf"]]
+        .sort_values("term", ignore_index=True)
+    )
+    assert got_td.equals(want_td)
+    want_stats = collection_stats(
+        spark.read.parquet(f"{index_dir}/docmeta")
+    ).collect()[0].asDict()
+    assert read_stats_row(f"{index_dir}/stats") == want_stats
+
+
+def _assert_segments_whole_per_file(index_dir):
+    seen = set()
+    for f in sorted(glob.glob(f"{index_dir}/segments/*.parquet")):
+        ids = set(pq.read_table(f, columns=["segment_id"]).column(0).to_pylist())
+        assert not ids & seen, f"segments {sorted(ids & seen)} straddle files"
+        seen |= ids
 
 
 @pytest.fixture(scope="module")
@@ -75,6 +110,8 @@ def test_tiered_merge_rounds_equal_full_build(spark, full_and_split):
     assert s_tiered.stats.num_docs == N
     for q in _queries():
         assert _results(s_full, q) == _results(s_tiered, q), str(q)
+    _assert_stats_match_tables(spark, out)
+    _assert_segments_whole_per_file(out)
 
 
 def test_two_pass_shared_threshold_identical(spark, full_and_split):
@@ -283,6 +320,7 @@ def test_merge_mixed_position_availability(spark, tmp_path_factory):
     c = mini([(i, "delta zeta") for i in range(20, 30)], "c", positions=False)
     merged = str(root / "merged")
     merge_indexes(spark, [a, b, c], merged)
+    _assert_stats_match_tables(spark, merged)
     s = IndexSearcher(spark, merged)
     # alpha+beta merged from positions-bearing sources only: phrase works
     got = sorted(
@@ -292,3 +330,102 @@ def test_merge_mixed_position_availability(spark, tmp_path_factory):
     # delta touched the positions-less source: per Lucene, loud failure
     with pytest.raises(Exception, match="requires positions"):
         s.matches_df(Q.PhraseQuery(("delta", "zeta"))).toPandas()
+
+
+@pytest.mark.parametrize("cut", [128, 150], ids=["segment_boundary", "mid_segment"])
+def test_merge_stats_equal_reaggregation(spark, full_and_split, cut):
+    """A merge's stats, termdict and colstats come from its inputs' own
+    tables; they equal the re-aggregation of the merged snapshot (and
+    the one-shot build) exactly, whether or not a segment is shared."""
+    root, corpus, full_dir = full_and_split
+    a_dir, b_dir, m_dir = (str(root / f"{x}_cut{cut}") for x in ("a", "b", "m"))
+    build_index(spark, corpus.filter(F.col("doc_id") < cut), a_dir, CFG,
+                resume=False, precomputed_ids=True)
+    build_index(spark, corpus.filter(F.col("doc_id") >= cut), b_dir, CFG,
+                resume=False, precomputed_ids=True)
+    shared = merge_mod.shared_segment_ranges([a_dir, b_dir])
+    assert (shared == []) == (cut % CFG.segment_size == 0)
+    merge_indexes(spark, [a_dir, b_dir], m_dir, CFG)
+    _assert_stats_match_tables(spark, m_dir)
+    _assert_segments_whole_per_file(m_dir)
+    assert read_stats_row(f"{m_dir}/stats") == read_stats_row(f"{full_dir}/stats")
+    # colstats: the log2-bucket length histogram of the merged docmeta
+    lengths = pq.read_table(f"{m_dir}/docmeta", columns=["length"]).column(0)
+    lengths = lengths.to_numpy()
+    buckets = np.where(
+        lengths <= 0, 0, np.floor(np.log2(np.maximum(lengths, 1))).astype(int) + 1
+    )
+    ids, counts = np.unique(buckets, return_counts=True)
+    want = [
+        ("length", 0.0 if i == 0 else float(1 << (i - 1)),
+         1.0 if i == 0 else float(1 << i), int(c))
+        for i, c in zip(ids, counts)
+    ]
+    got = pq.read_table(f"{m_dir}/colstats").to_pandas()
+    assert list(got.itertuples(index=False, name=None)) == want
+    s = IndexSearcher(spark, m_dir)
+    assert s._segments_alignment()[0]  # one-stage path still holds
+    s_full = IndexSearcher(spark, full_dir)
+    for q in _queries():
+        assert _results(s_full, q) == _results(s, q), str(q)
+
+
+def test_boundary_commit_skips_python_merge(spark, full_and_split,
+                                            tmp_path_factory, monkeypatch):
+    """A delta that starts on a segment boundary shares no segment with
+    the base, so the commit never reaches merge_segment_rows (the
+    Python stage): every segment row is copied by the JVM."""
+    root, corpus, full_dir = full_and_split
+    base = str(root / "base_boundary")
+    build_index(spark, corpus.filter(F.col("doc_id") < 128), base, CFG,
+                resume=False, precomputed_ids=True)
+
+    def boom(*a, **k):
+        raise AssertionError("merge_segment_rows called on a boundary merge")
+
+    monkeypatch.setattr(merge_mod, "merge_segment_rows", boom)
+    out = str(tmp_path_factory.mktemp("boundary") / "out")
+    delta = corpus.filter(F.col("doc_id") >= 128).drop("doc_id")
+    add_documents(spark, base, delta, out)
+    _assert_stats_match_tables(spark, out)
+    _assert_segments_whole_per_file(out)
+    s_full, s = IndexSearcher(spark, full_dir), IndexSearcher(spark, out)
+    for q in _queries():
+        assert _results(s_full, q) == _results(s, q), str(q)
+
+
+def test_updates_keep_config_and_clean_up(spark, tmp_path, monkeypatch):
+    """Every merged snapshot carries the base's full engine config, so a
+    SECOND update analyzes its delta like the base did (html_strip,
+    index_sort, ...); and add_documents removes the delta index it
+    created."""
+    import tempfile
+
+    import pandas as pd
+    from lucene_solr_8_7_0_spark.operators import deletes as dl
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    cfg = EngineConfig(segment_size=16, html_strip=True,
+                       index_sort=(("lang", True),))
+    rows = [("r", f"p{i:03d}", "c", ("en", "de")[i % 2],
+             f"<b>alpha</b> doc{i} words") for i in range(40)]
+    cols = ["repo", "path", "commit", "lang", "content"]
+    base = str(tmp_path / "base")
+    build_index(spark, spark.createDataFrame(pd.DataFrame(rows, columns=cols)),
+                base, cfg)
+    snaps = [base]
+    for n, (i, tag) in enumerate([(3, "zqone"), (7, "zqtwo")]):
+        new = pd.DataFrame(
+            [("r", f"p{i:03d}", "c2", "en", f"<{tag}>bravo{n}</{tag}>")],
+            columns=cols,
+        )
+        out = str(tmp_path / f"snap{n}")
+        dl.update_documents(spark, snaps[-1], spark.createDataFrame(new), out)
+        snaps.append(out)
+    assert load_config(snaps[2]) == load_config(base) == cfg
+    s = IndexSearcher(spark, snaps[2])
+    assert s.count(Q.TermQuery("bravo1")) == 1
+    assert s.count(Q.TermQuery("zqtwo")) == 0
+    assert not glob.glob(str(scratch / "delta_idx_*"))
