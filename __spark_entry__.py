@@ -144,6 +144,21 @@ def _orig_ids(searcher: IndexSearcher, df: DataFrame) -> DataFrame:
     )
 
 
+def _term_fingerprint(docs: DataFrame, cfg: EngineConfig,
+                      variant: str) -> DataFrame:
+    """(variant, doc_id, val): md5 of each doc's sorted distinct terms
+    under ``cfg``'s Python analysis chain (operators/invert.invert);
+    a doc with no surviving term has no row."""
+    from lucene_solr_8_7_0_spark.operators.invert import invert
+
+    return invert(docs, cfg).filter(F.size("terms") > 0).select(
+        F.lit(variant).alias("variant"), "doc_id",
+        F.md5(
+            F.concat_ws(" ", F.array_sort(F.array_distinct("terms")))
+        ).alias("val"),
+    )
+
+
 # ---------------------------------------------------------------- entry
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -165,11 +180,16 @@ def _q_term_freqs(spark, sf_dir):
     "significant" is SignificantTermsQParserPlugin (:103-232) — top-20
     terms over-represented in the 'vector' hit set by
     ln(tf) x (ln((N+1)/(df+1)) + 1), df >= 5, term length >= 3."""
-    from lucene_solr_8_7_0_spark.operators.invert import invert, split_postings
+    from lucene_solr_8_7_0_spark.operators.invert import invert
 
     cfg = EngineConfig(analyzer="simple", index_positions=False)
     docs = _docs(spark, sf_dir).select("doc_id", F.col("text").alias("content"))
-    postings, _ = split_postings(invert(docs, cfg))
+    postings = (
+        invert(docs, cfg)
+        .select("doc_id", F.explode("terms").alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").alias("freq"))
+    )
     tf = postings.filter(F.col("freq") >= 2).select(
         F.lit("tf").alias("variant"), "doc_id", "term",
         F.col("freq").cast("long").alias("v1"),
@@ -289,8 +309,6 @@ def _q_std_bool_and(spark, sf_dir):
       std_fingerprint row) — md5 of each doc's sorted distinct
       standard-analyzer terms; ANY token difference vs the DuckDB
       regex replay flips the hash."""
-    from lucene_solr_8_7_0_spark.operators.invert import invert, split_postings
-
     s = _searcher_std(spark, sf_dir)
     hits = _orig_ids(
         s, s.matches_df(Q.term_and(["o'reilly", "data"]))
@@ -300,13 +318,7 @@ def _q_std_bool_and(spark, sf_dir):
     )
     cfg = EngineConfig(analyzer="standard", index_positions=False)
     docs = _aug_docs(spark, sf_dir).select("doc_id", F.col("text").alias("content"))
-    postings, _ = split_postings(invert(docs, cfg))
-    fp = postings.groupBy("doc_id").agg(
-        F.md5(
-            F.concat_ws(" ", F.array_sort(F.collect_set("term")))
-        ).alias("val")
-    ).select(F.lit("fingerprint").alias("variant"), "doc_id", "val")
-    return hits.unionByName(fp)
+    return hits.unionByName(_term_fingerprint(docs, cfg, "fingerprint"))
 
 
 def _q_bool_family(spark, sf_dir):
@@ -870,8 +882,6 @@ def _q_analysis_chain(spark, sf_dir):
     - gram_fp: EdgeNGramTokenFilter parity (ngram/
       EdgeNGramTokenFilter.java) — the edge_ngram:2:4 chain's distinct
       gram set per doc, replayed by DuckDB substr() prefixes."""
-    from lucene_solr_8_7_0_spark.operators.invert import invert, split_postings
-
     sh = _searcher_shingle(spark, sf_dir)
     shingle = _orig_ids(sh, sh.matches_df(Q.TermQuery("big data"))).select(
         F.lit("shingle").alias("variant"), "doc_id",
@@ -886,34 +896,19 @@ def _q_analysis_chain(spark, sf_dir):
     docs = _eng_docs(spark, sf_dir).select(
         "doc_id", F.col("text").alias("content")
     )
-    postings, _ = split_postings(invert(docs, cfg))
-    fp = postings.groupBy("doc_id").agg(
-        F.md5(
-            F.concat_ws(" ", F.array_sort(F.collect_set("term")))
-        ).alias("val")
-    ).select(F.lit("porter_fp").alias("variant"), "doc_id", "val")
+    fp = _term_fingerprint(docs, cfg, "porter_fp")
     fold_cfg = EngineConfig(analyzer="whitespace", ascii_folding=True,
                             index_positions=False)
     fold_docs = _docs(spark, sf_dir).select(
         "doc_id",
         F.concat(F.col("text"), F.lit(" Café naïve jalapeño")).alias("content"),
     )
-    fold_postings, _ = split_postings(invert(fold_docs, fold_cfg))
-    fold = fold_postings.groupBy("doc_id").agg(
-        F.md5(
-            F.concat_ws(" ", F.array_sort(F.collect_set("term")))
-        ).alias("val")
-    ).select(F.lit("fold_fp").alias("variant"), "doc_id", "val")
+    fold = _term_fingerprint(fold_docs, fold_cfg, "fold_fp")
     gram_cfg = EngineConfig(analyzer="edge_ngram:2:4", index_positions=False)
     gram_docs = _docs(spark, sf_dir).select(
         "doc_id", F.col("text").alias("content")
     )
-    gram_postings, _ = split_postings(invert(gram_docs, gram_cfg))
-    gram = gram_postings.groupBy("doc_id").agg(
-        F.md5(
-            F.concat_ws(" ", F.array_sort(F.collect_set("term")))
-        ).alias("val")
-    ).select(F.lit("gram_fp").alias("variant"), "doc_id", "val")
+    gram = _term_fingerprint(gram_docs, gram_cfg, "gram_fp")
     # html_fp: HTMLStripCharFilter parity — docs wrapped in markup
     # (tags, comment, script/style blocks, entities), stripped by the
     # engine's char-filter pipeline, replayed by an independent DuckDB
@@ -924,12 +919,7 @@ def _q_analysis_chain(spark, sf_dir):
     html_docs = _docs(spark, sf_dir).select(
         "doc_id", F.concat(F.col("text"), F.lit(_HTML_AUG)).alias("content")
     )
-    html_postings, _ = split_postings(invert(html_docs, html_cfg))
-    html = html_postings.groupBy("doc_id").agg(
-        F.md5(
-            F.concat_ws(" ", F.array_sort(F.collect_set("term")))
-        ).alias("val")
-    ).select(F.lit("html_fp").alias("variant"), "doc_id", "val")
+    html = _term_fingerprint(html_docs, html_cfg, "html_fp")
     # wdgf_fp: WordDelimiterGraphFilter parity — camel/alnum compounds
     # appended, split by the engine's boundary-insertion chain,
     # replayed by an independent RE2 capture-replace chain in DuckDB
@@ -937,12 +927,7 @@ def _q_analysis_chain(spark, sf_dir):
     wd_docs = _docs(spark, sf_dir).select(
         "doc_id", F.concat(F.col("text"), F.lit(_WD_AUG)).alias("content")
     )
-    wd_postings, _ = split_postings(invert(wd_docs, wd_cfg))
-    wd = wd_postings.groupBy("doc_id").agg(
-        F.md5(
-            F.concat_ws(" ", F.array_sort(F.collect_set("term")))
-        ).alias("val")
-    ).select(F.lit("wdgf_fp").alias("variant"), "doc_id", "val")
+    wd = _term_fingerprint(wd_docs, wd_cfg, "wdgf_fp")
     # syn_fp: index-time SynonymGraphFilter parity — every 'data'
     # occurrence also emits 'datum' at the same position; the
     # fingerprint flips if injection is missing or leaks elsewhere
@@ -951,12 +936,7 @@ def _q_analysis_chain(spark, sf_dir):
     syn_docs = _docs(spark, sf_dir).select(
         "doc_id", F.col("text").alias("content")
     )
-    syn_postings, _ = split_postings(invert(syn_docs, syn_cfg))
-    syn = syn_postings.groupBy("doc_id").agg(
-        F.md5(
-            F.concat_ws(" ", F.array_sort(F.collect_set("term")))
-        ).alias("val")
-    ).select(F.lit("syn_fp").alias("variant"), "doc_id", "val")
+    syn = _term_fingerprint(syn_docs, syn_cfg, "syn_fp")
     return (shingle.unionByName(pm).unionByName(fp).unionByName(fold)
             .unionByName(gram).unionByName(html).unionByName(wd)
             .unionByName(syn))

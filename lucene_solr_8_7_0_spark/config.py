@@ -55,21 +55,21 @@ class EngineConfig:
     analyzer: str = "standard"
     # ASCIIFoldingFilter analog (analysis/common/.../miscellaneous/
     # ASCIIFoldingFilter.java): fold accented Latin to ASCII after the
-    # analyzer's own case handling.  Python tokenize backend only.
+    # analyzer's own case handling.  Runs the Python tokenizer.
     ascii_folding: bool = False
     # HTMLStripCharFilter analog (analysis/common/.../charfilter/
     # HTMLStripCharFilter.java): strip tags/comments/script/style and
     # decode named entities BEFORE tokenization (a CharFilter sits
     # under the tokenizer).  Supported by both the JVM and the Python
-    # tokenize backends (functions/analysis.HTML_STRIP_STEPS).
+    # tokenizers (functions/analysis.HTML_STRIP_STEPS).
     html_strip: bool = False
     # index-time synonyms (analysis/common/.../synonym/
     # SynonymGraphFilter.java applied at INDEX time, single-token
     # rules): tuple of (term, (synonym, ...)) pairs; each occurrence
     # of ``term`` additionally emits the synonyms at the SAME position
     # (posIncrement 0), which do not count toward the field length
-    # (discountOverlaps norms, BM25Similarity.java:116).  Python
-    # tokenize backend only (like ascii_folding); applied after the
+    # (discountOverlaps norms, BM25Similarity.java:116).  Runs the
+    # Python tokenizer (like ascii_folding); applied after the
     # analyzer's own filters.
     index_synonyms: tuple = ()
     # LimitTokenCountFilter / LimitTokenCountAnalyzer analog
@@ -105,18 +105,12 @@ class EngineConfig:
     index_sort: tuple = ()
 
     # --- physical layout (never affects results) ---
-    # Tokenizer execution backend: "jvm" runs the analyzer regex inside
-    # whole-stage codegen (scales with executor threads, no Python
-    # allocation); "python" is the Arrow-UDF path.  Token-identical by
-    # construction (tests assert full-index equality) — a physical
-    # knob, not a semantic one.
-    tokenize_backend: str = "jvm"
-    # Segment-encode kernel backend: "arrow" feeds the kernel a
-    # pyarrow Table (applyInArrow) and dictionary-encodes the token
-    # stream in Arrow C++ — zero per-token Python string objects, which
-    # is what saturates allocation-throttled hosts; "pandas" is the
-    # Arrow->pandas path.  Output is row-identical (tests assert it).
-    encode_backend: str = "arrow"
+    # How a build runs is not configurable: the tokenizer front-end is
+    # chosen from the analysis settings above (the JVM expression when
+    # the whole chain allows it, else the Python chain —
+    # operators/invert.use_jvm_tokenizer), and both feed the one Arrow
+    # segment-encode kernel (operators/segments.encode_segment), so
+    # segments are byte-identical either way.
     # Docs per segment.  Segment boundaries are a pure function of the
     # global doc id (segment_id = doc_id // segment_size), so the index
     # contents are identical at any cluster size.

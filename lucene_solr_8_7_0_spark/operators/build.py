@@ -9,15 +9,21 @@ records land in ``manifest``):
             table stays the stored-fields store, addressed through this
             mapping (a 100 TB corpus is not copied; Lucene's .fdt
             stored-fields copy becomes source ⨝ mapping)  (operators/docids)
-  segments  ONE fused pass: tokenize+invert (Arrow UDF) -> shuffle on
-            segment_id -> per-term block encode + in-group norms; each
-            segment is self-contained (postings + sentinel norms row),
-            exactly one tokenization of the corpus and exactly one
-            shuffle of the token stream                   (operators/segments)
-  norms     per-segment norms view derived from sentinels (merge/explain)
-  docmeta   identity + sha256 invariant + exact length + norm byte
-  stats     CollectionStatistics (single row)
+  segments  ONE fused pass: tokenize to one row per doc (the JVM
+            expression, or the Python chain in an Arrow UDF when a
+            filter needs it; operators/invert) -> shuffle on
+            segment_id -> one Arrow kernel: per-term block encode +
+            in-group norms; each segment is self-contained (postings +
+            sentinel norms row), exactly one tokenization of the corpus
+            and exactly one shuffle of the token stream
+                                                          (operators/segments)
+  docmeta   identity + sha256 invariant + exact length + norm byte; the
+            stats (CollectionStatistics, one row) and colstats tables
+            ride its write as observed aggregates
   termdict  global term -> (df, ttf), partial aggregation (operators/stats)
+
+Norms are not a stage: searcher and merge read them as a view over the
+segment sentinel rows (``segments.norms_from_segments``).
 
 Parallelism notes (the 100 TB view): every stage is embarrassingly
 parallel except two shuffles — the range partition for doc numbering
@@ -39,9 +45,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..config import EngineConfig
 from . import docids, invert, stats as stats_ops
 from .segments import (
+    SEGMENT_SCHEMA,
     SENTINEL_TERM,
-    encode_segments_fused,
-    encode_segments_fused_docarrays,
+    encode_segments,
     lengths_from_segments,
 )
 
@@ -50,6 +56,23 @@ MANIFEST_SCHEMA = "stage string, rows bigint, wall_s double, detail string, ts d
 
 def _path(index_dir: str, name: str) -> str:
     return os.path.join(index_dir, name)
+
+
+# tables with a fixed schema are read with it: parquet schema inference
+# costs one Spark job per read (docmeta's extra columns vary, so it
+# keeps inference)
+_TABLE_SCHEMAS = {
+    "segments": SEGMENT_SCHEMA,
+    "termdict": stats_ops.TERMDICT_SCHEMA,
+}
+
+
+def read_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
+    """One index table as a DataFrame."""
+    reader = spark.read
+    if name in _TABLE_SCHEMAS:
+        reader = reader.schema(_TABLE_SCHEMAS[name])
+    return reader.parquet(_path(index_dir, name))
 
 
 def _done(index_dir: str, name: str) -> bool:
@@ -184,28 +207,16 @@ def build_index(
         seg_input = docs.select("repo", "path", content_col).join(
             seg_mapping, ["repo", "path"]
         )
-        from ..functions.analysis import JVM_ANALYZERS, analyzer_base
-
-        if (cfg.tokenize_backend == "jvm"
-                and analyzer_base(cfg.analyzer) in JVM_ANALYZERS
-                and not cfg.ascii_folding
-                and not cfg.index_synonyms
-                and not cfg.max_doc_tokens):
-            # hot path: whole chain as a JVM Column expression
-            doc_tokens = invert.invert_doc_arrays(seg_input, cfg, content_col)
-            encoded = encode_segments_fused_docarrays(doc_tokens, cfg)
-        else:
-            # chains with Python-only filters (e.g. "english" stemming)
-            # run the Arrow-batch inversion
-            inverted = invert.invert(seg_input, cfg, content_col)
-            encoded = encode_segments_fused(inverted, cfg)
+        front = (invert.invert_doc_arrays if invert.use_jvm_tokenizer(cfg)
+                 else invert.invert)
+        encoded = encode_segments(front(seg_input, cfg, content_col), cfg)
         _write(encoded, index_dir, "segments", sort_cols=["segment_id", "term"])
         record(
             "segments", time.time() - t0,
             {"segment_size": cfg.segment_size, "analyzer": cfg.analyzer,
              "positions": cfg.index_positions},
         )
-    segments = spark.read.parquet(_path(index_dir, "segments"))
+    segments = read_table(spark, index_dir, "segments")
 
     # (norms are NOT materialized: searcher/merge derive the per-segment
     # norms view from the sentinel rows at read time — one fewer stage)

@@ -216,10 +216,14 @@ def naive_bayes_classify(
         [(str(r[class_field]), int(r["df_c"])) for _, r in classes.iterrows()],
         "cls string, df_c bigint",
     )
-    # grid: (input, term, tf) x classes, left-joined with the hit counts
+    # grid: (input, term, tf) x classes, left-joined with the hit
+    # counts; only a literal vocabulary bounds them small enough to
+    # broadcast — the semi-join path's counts scale with the corpus
+    if isinstance(vocab, list):
+        wc = F.broadcast(wc)
     grid = (
         tf.crossJoin(F.broadcast(cls_df))
-        .join(F.broadcast(wc), ["term", "cls"], "left")
+        .join(wc, ["term", "cls"], "left")
         .fillna({"hits": 0})
     )
     den = F.lit(avg_unique) * F.col("df_c") + F.lit(float(docs_with_class))

@@ -21,8 +21,9 @@ merge expunges them.  This mirrors that exactly:
   ranking, without adding rows to the postings scan,
 * stats/termdict are intentionally untouched (Lucene's docFreq also
   counts deleted docs until merge),
-* ``update_documents`` = delete-by-key + add_documents — the
-  IndexWriter.updateDocument analog.
+* ``update_documents`` = add_documents + delete-by-key in the new
+  snapshot — the IndexWriter.updateDocument analog; the old snapshot
+  is left untouched.
 
 Scale shape: deletes are a tiny table keyed by doc_id, read on the
 driver with pyarrow and grouped by ``doc_id // segment_size``; the
@@ -115,10 +116,11 @@ def update_documents(
     out_dir: str,
     key_cols: list[str] | None = None,
 ) -> None:
-    """IndexWriter.updateDocument analog: delete existing docs with the
-    same (repo, path) keys, then add_documents the replacements into a
-    new snapshot.  The old index dir (with its deletes table) stays a
-    valid commit point."""
+    """IndexWriter.updateDocument analog: add_documents the
+    replacements into a new snapshot ``out_dir``, then mark deleted, in
+    ``out_dir`` only, the old docs with the same (repo, path) keys.
+    ``index_dir`` is never written, so it stays the commit point it
+    was: a reader on it keeps seeing the replaced docs."""
     from .merge import add_documents
 
     key_cols = key_cols or ["repo", "path"]
@@ -126,11 +128,12 @@ def update_documents(
     victims = meta.join(
         new_docs.select(*key_cols).distinct(), key_cols, "left_semi"
     ).select("doc_id")
-    delete_documents(spark, index_dir, victims)
     add_documents(spark, index_dir, new_docs, out_dir)
-    # carry the deletion mask into the new snapshot (doc ids are global
-    # and stable across merges, so the mask transfers verbatim): a file
-    # copy of the table and its _GENERATION counter, no Spark job
+    # the new snapshot starts from the old deletion mask (doc ids are
+    # global and stable across merges, so it transfers verbatim): a
+    # file copy of the table and its _GENERATION counter, no Spark
+    # job; the victims then commit the next generation in out_dir only
     src = deletes_path(index_dir)
     if os.path.exists(src):
         shutil.copytree(src, deletes_path(out_dir), dirs_exist_ok=True)
+    delete_documents(spark, out_dir, victims)

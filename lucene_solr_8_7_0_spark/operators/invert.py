@@ -1,39 +1,58 @@
-"""Inversion: documents -> (term, doc, freq, positions) postings rows.
+"""Inversion front-ends: documents -> ONE ROW PER DOCUMENT of analyzed
+tokens, the wire the segment encoder (operators/segments.py) consumes.
 
 The Spark analog of the reference's in-memory inversion chain
-(DefaultIndexingChain.processField/invert -> TermsHashPerField.add ->
-FreqProxTermsWriterPerField, SURVEY.md §2.3): one Arrow UDF pass that
-tokenizes a batch of documents and performs the within-partition hash
-group-by (doc, term) — the DocumentsWriterPerThread "partial
-aggregation" — emitting one row per (doc, term) plus one summary row
-per document.
+(DefaultIndexingChain.processField/invert -> TermsHashPerField.add,
+SURVEY.md §2.3).  Two front-ends produce it, and the build picks one
+with ``use_jvm_tokenizer``:
 
-The per-document summary (term = '' marker rows, carrying the kept
-token count) rides along in the same output so the doc-length /
-norm computation costs **zero extra shuffle and zero second
-tokenization pass** — it is split off with a cheap filter.
+* ``invert_doc_arrays`` — the whole analysis chain as a JVM Column
+  expression: ``(doc_id, terms[], holes[])``, where ``holes`` lists
+  the positions the max-length / stop filters dropped,
+* ``invert`` — the Python chain (``analyze_batch``) in an Arrow UDF,
+  for chains with Python-only filters (stemming, folding, synonyms,
+  token limits): ``(doc_id, terms[], positions[], length)`` — explicit
+  positions because synonyms share one, an explicit length because
+  synonyms do not count toward the norm.
+
+Every document keeps its row (empty arrays when nothing survives), so
+the encoder sees every doc for norms and MatchAllDocs.  The (doc, term)
+aggregation happens in the encoder, inside the group the segment
+shuffle already built.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import EngineConfig
-from ..functions.analysis import analyze_batch
+from ..functions.analysis import JVM_ANALYZERS, analyze_batch, analyzer_base
 
-# marker value in `term` for per-doc summary rows
-DOC_MARKER = ""
+INVERTED_SCHEMA = (
+    "doc_id bigint, terms array<string>, positions array<int>, length int"
+)
 
-POSTINGS_SCHEMA = "doc_id bigint, term string, freq int, positions array<int>"
+
+def use_jvm_tokenizer(cfg: EngineConfig) -> bool:
+    """True when the whole analysis chain of ``cfg`` runs as a JVM
+    expression (``invert_doc_arrays``); chains with Python-only filters
+    take ``invert``.  Both produce token-identical segments."""
+    return (analyzer_base(cfg.analyzer) in JVM_ANALYZERS
+            and not cfg.ascii_folding
+            and not cfg.index_synonyms
+            and not cfg.max_doc_tokens)
 
 
-def invert(docs: DataFrame, cfg: EngineConfig, content_col: str = "content") -> DataFrame:
-    """docs(doc_id, content, ...) -> postings rows + doc-marker rows."""
+def invert(
+    docs: DataFrame, cfg: EngineConfig, content_col: str = "content"
+) -> DataFrame:
+    """docs(doc_id, content, ...) -> (doc_id, terms[], positions[],
+    length) through the Python analysis chain, one row per document."""
+    import pyarrow as pa
+
     analyzer = cfg.analyzer
     max_len = cfg.max_token_length
-    index_positions = cfg.index_positions
     stopwords = tuple(cfg.stopwords)
     folding = cfg.ascii_folding
     strip_html = cfg.html_strip
@@ -41,56 +60,33 @@ def invert(docs: DataFrame, cfg: EngineConfig, content_col: str = "content") -> 
     max_doc = cfg.max_doc_tokens
 
     def run(batches):
-        for pdf in batches:
-            tb = analyze_batch(pdf[content_col], analyzer, max_len,
+        for rb in batches:
+            tb = analyze_batch(rb.column(1).to_pandas(), analyzer, max_len,
                                stopwords, folding, strip_html, synonyms,
                                max_doc)
-            doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            if len(tb.terms) == 0:
-                agg = pd.DataFrame(
-                    {"doc_id": [], "term": [], "freq": [], "positions": []}
-                )
-            else:
-                # vectorized hash-agg replacement: lexsort by (doc, term,
-                # pos) then split at group boundaries — ~6x faster than
-                # pandas groupby + agg(list) at this group cardinality
-                tok_docs = doc_ids[tb.doc_idx]
-                terms_np = tb.terms.to_numpy()
-                order = np.lexsort((tb.positions, terms_np, tok_docs))
-                d_s = tok_docs[order]
-                t_s = terms_np[order]
-                p_s = tb.positions[order]
-                change = np.empty(len(d_s), dtype=bool)
-                change[0] = True
-                change[1:] = (d_s[1:] != d_s[:-1]) | (t_s[1:] != t_s[:-1])
-                starts = np.flatnonzero(change)
-                counts = np.diff(np.append(starts, len(d_s)))
-                agg = pd.DataFrame(
-                    {
-                        "doc_id": d_s[starts],
-                        "term": t_s[starts],
-                        "freq": counts,
-                        "positions": (
-                            np.split(p_s, starts[1:]) if index_positions else None
-                        ),
-                    }
-                )
-            markers = pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "term": DOC_MARKER,
-                    "freq": tb.doc_lengths,
-                    "positions": None,
-                }
+            # synonyms are appended after the primary tokens, out of doc
+            # order: a stable sort regroups each doc's tokens
+            order = np.argsort(tb.doc_idx, kind="stable")
+            offsets = pa.array(np.concatenate(([0], np.cumsum(
+                np.bincount(tb.doc_idx, minlength=rb.num_rows)
+            ))).astype(np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0),
+                    pa.ListArray.from_arrays(offsets, pa.array(
+                        tb.terms.to_numpy()[order], type=pa.string()
+                    )),
+                    pa.ListArray.from_arrays(offsets, pa.array(
+                        tb.positions[order], type=pa.int32()
+                    )),
+                    pa.array(tb.doc_lengths, type=pa.int32()),
+                ],
+                names=["doc_id", "terms", "positions", "length"],
             )
-            out = pd.concat([agg, markers], ignore_index=True)
-            out["freq"] = out["freq"].astype(np.int32)
-            yield out
 
-    return docs.select("doc_id", content_col).mapInPandas(run, schema=POSTINGS_SCHEMA)
-
-
-TOKENS_SCHEMA = "doc_id bigint, pos int, term string"
+    return docs.select("doc_id", content_col).mapInArrow(
+        run, schema=INVERTED_SCHEMA
+    )
 
 
 def invert_doc_arrays(
@@ -99,8 +95,8 @@ def invert_doc_arrays(
     """JVM-side inversion input, ONE ROW PER DOCUMENT:
     (doc_id, terms array<string>, holes array<int>).
 
-    Same single shuffle as the per-token variant but ~20 bytes of row
-    overhead per TOKEN cheaper — at 10^8+ tokens the per-token rows
+    One row per document rather than per token: ~20 bytes of row
+    overhead per TOKEN cheaper — at 10^8+ tokens per-token rows
     dominated shuffle volume and spilled.  Positions are the pre-filter
     token indices (holes where the max-length/stop filters dropped a
     token), chain order identical to analyze_batch: tokenize ->
@@ -161,57 +157,3 @@ def invert_doc_arrays(
     return docs.select(
         "doc_id", terms.alias("terms"), holes.alias("holes")
     )
-
-
-def invert_tokens(
-    docs: DataFrame, cfg: EngineConfig, content_col: str = "content"
-) -> DataFrame:
-    """JVM-side inversion input: one row per token (doc_id, pos, term)
-    plus one DOC_MARKER row per document — produced WITHOUT any Python.
-
-    This replaces the Arrow-UDF tokenize for the build hot path: the
-    regex + posexplode run inside whole-stage codegen and scale with
-    JVM threads (the Python tokenizer showed NEGATIVE core scaling on
-    allocation-throttled hosts).  The (doc, term) aggregation that
-    invert() did map-side moves into the segment-encode kernel, which
-    already sorts the group — so the plan stays ONE tokenize and ONE
-    shuffle, with the shuffle carrying per-token rows.
-
-    The marker is appended to each doc's token array before the
-    explode, so empty docs still surface (their segment must know they
-    exist for norms and MatchAllDocs) and the corpus is scanned once.
-    Filters mirror the Python chain order exactly: max_token_length on
-    the RAW token, then lowercase, then the stop set."""
-    from ..functions.analysis import jvm_token_array
-
-    toks = F.coalesce(
-        jvm_token_array(content_col, cfg.analyzer,
-                        html_strip=cfg.html_strip),
-        F.array(),
-    )
-    exploded = docs.select(
-        "doc_id",
-        F.posexplode(F.concat(toks, F.array(F.lit(DOC_MARKER)))).alias(
-            "pos", "term"
-        ),
-    )
-    is_marker = F.col("term") == DOC_MARKER
-    out = exploded.filter(
-        is_marker | (F.length("term") <= cfg.max_token_length)
-    )
-    if cfg.analyzer == "standard":
-        out = out.withColumn("term", F.lower(F.col("term")))
-    if cfg.stopwords:
-        out = out.filter(
-            is_marker | ~F.col("term").isin(list(cfg.stopwords))
-        )
-    return out
-
-
-def split_postings(inverted: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split the combined stream into (postings, doc_lengths)."""
-    postings = inverted.filter(F.col("term") != DOC_MARKER)
-    lengths = inverted.filter(F.col("term") == DOC_MARKER).select(
-        "doc_id", F.col("freq").cast("long").alias("length")
-    )
-    return postings, lengths

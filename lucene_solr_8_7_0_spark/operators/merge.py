@@ -38,12 +38,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..config import EngineConfig
 from ..functions.codec import decode_term_postings
 from ..functions.smallfloat import int_to_byte4_np
+from .build import read_table
 from .search import rows_to_posting_map
-from .segments import SENTINEL_TERM, SEGMENT_SCHEMA, _SEG_COLS
-
-
-def _read(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_dir, name))
+from .segments import (
+    SEGMENT_SCHEMA,
+    SENTINEL_TERM,
+    _SEG_COLS,
+    _encode_all_terms,
+    sentinel_row,
+)
 
 
 def merge_segment_rows(seg_union: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -66,14 +69,6 @@ def merge_segment_rows(seg_union: DataFrame, cfg: EngineConfig) -> DataFrame:
         for a in arrays:
             lengths[: len(a)] = np.maximum(lengths[: len(a)], a)
         norms_full = int_to_byte4_np(lengths)
-        sentinel_row = (
-            seg_id, SENTINEL_TERM, size, int(lengths[:size].sum()) if size else 0,
-            -1, 0,
-            norms_full[:size].astype(np.uint8).tobytes(), [],
-            lengths[:size].astype("<i8").tobytes(), [],
-            b"", [],
-            [], [], [],
-        )
         # --- postings: pass-through singles, re-encode multi-source.
         # Decode stays per source row (each decode is itself a
         # vectorized pass over that row's blocks), but the RE-ENCODE of
@@ -85,10 +80,8 @@ def merge_segment_rows(seg_union: DataFrame, cfg: EngineConfig) -> DataFrame:
         singles = counts[counts == 1].index
         out_single = others[others["term"].isin(singles)]
         multi_terms = counts[counts > 1].index
-        rows = [sentinel_row]
+        rows = [sentinel_row(seg_id, lengths[:size])]
         if len(multi_terms):
-            from .segments import _encode_all_terms
-
             multi = others[others["term"].isin(multi_terms)]
             with_pos = "pos_blocks" in multi.columns
             # position availability is tracked PER TERM: terms whose
@@ -141,7 +134,6 @@ def merge_segment_rows(seg_union: DataFrame, cfg: EngineConfig) -> DataFrame:
                         np.concatenate(docs_b),
                         np.concatenate(freqs_b),
                         norms_full,
-                        pos_col=None,
                         pos_flat=(
                             np.concatenate(pos_b) if has_pos else None
                         ),
@@ -205,7 +197,9 @@ def shared_segment_ranges(index_dirs: list[str]) -> list[tuple[int, int]]:
 
 
 def _union(spark: SparkSession, index_dirs: list[str], name: str) -> DataFrame:
-    return reduce(DataFrame.union, [_read(spark, d, name) for d in index_dirs])
+    return reduce(
+        DataFrame.union, [read_table(spark, d, name) for d in index_dirs]
+    )
 
 
 def merge_indexes(

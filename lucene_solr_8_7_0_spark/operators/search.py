@@ -252,7 +252,7 @@ class IndexSearcher:
                  query_cache: QueryCache | None = None):
         import pyarrow.parquet as pq
 
-        from .build import load_config
+        from .build import load_config, read_table
         from .stats import read_stats_row
 
         self.spark = spark
@@ -280,14 +280,14 @@ class IndexSearcher:
             int(row["sum_ttf"] or 0), self.cfg.k1, self.cfg.b,
             similarity=self.cfg.similarity,
         )
-        self.segments = spark.read.parquet(os.path.join(index_dir, "segments"))
+        self.segments = read_table(spark, index_dir, "segments")
         # norms are a VIEW over the segment sentinels, never a separate
         # table on disk — one fewer build stage/write; the plan prunes
         # to the sentinel rows via the term predicate
         from .segments import norms_from_segments
 
         self.norms = norms_from_segments(self.segments, self.cfg)
-        self.termdict = spark.read.parquet(os.path.join(index_dir, "termdict"))
+        self.termdict = read_table(spark, index_dir, "termdict")
         self.docmeta_path = os.path.join(index_dir, "docmeta")
         self._live_docs_cache = None  # (del generation, mask broadcast)
         self._seg_align_cache = None  # (segments files snapshot, alignment)

@@ -1,4 +1,5 @@
-"""Segment encode: postings rows -> compressed per-(segment, term) index rows.
+"""Segment encode: per-document token rows -> compressed per-(segment,
+term) index rows.
 
 The Spark analog of segment flush (FreqProxTermsWriter.flush ->
 Lucene84PostingsWriter, SURVEY.md §2.3-2.4).  A segment is a fixed
@@ -8,19 +9,22 @@ cluster size, and a segment's postings are bounded (skew-safe: even a
 term present in *every* doc has at most segment_size postings per
 group).
 
-FUSED FLUSH (the default build path): the inverted stream — postings
-rows plus one per-doc length marker row, produced by ONE tokenization
-pass (operators/invert.py) — shuffles once on segment_id; the encode
-kernel computes norms from the marker rows in-group (SmallFloat port)
-and emits, per segment:
+ONE FLUSH PATH, like Lucene's: either tokenizer front-end
+(operators/invert.py) emits one row per document, the stream shuffles
+once on segment_id, and one Arrow kernel (``encode_segment``, run by
+``groupBy("segment_id").applyInArrow``) decodes the group's wire to
+flat (doc, term code, position) arrays plus per-doc lengths, then
+lexsorts, run-length aggregates (doc, term) freqs and batch-encodes
+every term.  It emits, per segment:
 
 * one row per term: block-encoded postings + skip offsets + impacts,
-* one SENTINEL row (term = "\\x00meta") holding the segment's packed
-  norm bytes and exact int32 lengths — the ``.nvd`` payload embedded
-  in the segment, making every segment a self-contained unit exactly
-  like a Lucene segment's file set.  The sentinel term sorts before
-  every real token, so parquet row-group pruning keeps working, and
-  queries fetch norms in the same pushed-down scan as the postings.
+* one SENTINEL row (term = "\\x00meta", written by ``sentinel_row``)
+  holding the segment's packed norm bytes and exact int64 lengths — the
+  ``.nvd`` payload embedded in the segment, making every segment a
+  self-contained unit exactly like a Lucene segment's file set.  The
+  sentinel term sorts before every real token, so parquet row-group
+  pruning keeps working, and queries fetch norms in the same
+  pushed-down scan as the postings.
 
 There is no intermediate "freqprox" materialization and no
 norms-table cogroup — one tokenize, one shuffle, one write.
@@ -34,7 +38,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import EngineConfig
 from ..functions.smallfloat import int_to_byte4_np
-from .invert import DOC_MARKER
 
 SENTINEL_TERM = "\x00meta"
 
@@ -47,8 +50,6 @@ SEGMENT_SCHEMA = (
     "block_last_docs array<int>, "
     "impacts_flat array<int>, impacts_offsets array<int>"
 )
-
-NORMS_SCHEMA = "segment_id int, base_doc bigint, num_docs int, norms binary"
 
 _SEG_COLS = [
     "segment_id", "term", "df", "ttf",
@@ -67,9 +68,7 @@ def _encode_all_terms(
     docs_all: np.ndarray,
     freqs_all: np.ndarray,
     norm_arr: np.ndarray,
-    pos_col,
     pos_flat: np.ndarray | None = None,
-    as_numpy: bool = False,
 ) -> list[tuple]:
     """Encode EVERY term of a segment in one batched pass.
 
@@ -79,16 +78,13 @@ def _encode_all_terms(
     single whole-segment numpy pass (functions/codec.py
     encode_blocks_batched, functions/impacts.py block_impacts_batched)
     — format-identical to the scalar path, which remains the oracle in
-    tests/test_codec.py.  Per-term work is reduced to tuple assembly.
+    tests/test_codec.py.  Per-term work is reduced to tuple assembly;
+    list-typed cells stay numpy arrays, which Arrow converts straight
+    from their buffers (``.tolist()`` per term was ~10% of the encode
+    kernel).
     """
     from ..functions.codec import BLOCK_SIZE, _grouped_arange, encode_blocks_batched
     from ..functions.impacts import block_impacts_batched
-
-    # as_numpy: keep list-typed cells as numpy arrays (the Arrow output
-    # path converts them straight from their buffers; .tolist() per
-    # term was ~10% of the encode kernel)
-    def _l(a):
-        return a if as_numpy else a.tolist()
 
     T = len(uniques)
     if T == 0:
@@ -96,7 +92,7 @@ def _encode_all_terms(
     df_t = np.diff(boundaries)
     norms_all = norm_arr[docs_all]
     ttf_t = np.add.reduceat(freqs_all, boundaries[:-1])
-    has_pos = pos_col is not None or pos_flat is not None
+    has_pos = pos_flat is not None
     # singleton pulsing (Lucene84PostingsWriter singletonDocID) applies
     # only to builds without positions, mirroring the scalar encoder
     singleton = (df_t == 1) & (not has_pos)
@@ -125,15 +121,7 @@ def _encode_all_terms(
     )
     last_docs = m_docs[last_idx].astype(np.int32)
     if has_pos:
-        if pos_flat is not None:
-            pos_all = np.ascontiguousarray(pos_flat, dtype=np.int64)
-        else:
-            pv = pos_col.to_numpy()
-            pos_all = (
-                np.concatenate(pv).astype(np.int64, copy=False)
-                if len(pv)
-                else np.empty(0, np.int64)
-            )
+        pos_all = np.ascontiguousarray(pos_flat, dtype=np.int64)
         # per-doc delta encoding: reset at every posting's first position
         pdelta = pos_all.copy()
         pdelta[1:] -= pos_all[:-1]
@@ -160,121 +148,33 @@ def _encode_all_terms(
             (
                 seg_id, uniques[t], int(df_t[t]), int(ttf_t[t]),
                 -1, 0,
-                doc_pay[mi], _l(doc_offs[mi]),
-                freq_pay[mi], _l(freq_offs[mi]),
+                doc_pay[mi], doc_offs[mi],
+                freq_pay[mi], freq_offs[mi],
                 pos_pay[mi] if has_pos else b"",
-                _l(pos_offs[mi]) if has_pos else [],
-                _l(last_docs[blk_first[mi] : blk_first[mi + 1]]),
-                _l(flats[mi]), _l(imp_offs[mi]),
+                pos_offs[mi] if has_pos else [],
+                last_docs[blk_first[mi] : blk_first[mi + 1]],
+                flats[mi], imp_offs[mi],
             )
         )
         mi += 1
     return rows
 
 
-def encode_segment_group(
-    seg_id: int,
-    pdf: pd.DataFrame,
-    seg_size: int,
-    index_positions: bool,
-) -> pd.DataFrame:
-    """Encode one segment's inverted rows (incl. marker rows) into
-    term rows + the sentinel norms/lengths row."""
-    base = seg_id * seg_size
-    markers = pdf[pdf["term"] == DOC_MARKER]
-    # size by the max local id so delta builds whose doc range starts
-    # mid-segment stay addressable (leading zeros = docs owned by the
-    # base index; the merge overlays them)
-    local = markers["doc_id"].to_numpy(dtype=np.int64) - base
-    n = int(local.max()) + 1 if len(local) else 0
-    lengths = np.zeros(max(n, 1), dtype=np.int64)
-    if n:
-        lengths[local] = markers["freq"].to_numpy(dtype=np.int64)
-    norm_arr = int_to_byte4_np(lengths)
-
-    posts = pdf[pdf["term"] != DOC_MARKER]
-    posts = posts.sort_values(["term", "doc_id"], kind="stable", ignore_index=True)
-    docs_all = posts["doc_id"].to_numpy(dtype=np.int64) - base
-    freqs_all = posts["freq"].to_numpy(dtype=np.int64)
-    pos_col = posts["positions"] if index_positions and "positions" in posts else None
-    codes, uniques = pd.factorize(posts["term"], sort=False)
-    boundaries = np.searchsorted(codes, np.arange(len(uniques) + 1)).astype(np.int64)
-    rows = _encode_all_terms(
-        seg_id, uniques, boundaries, docs_all, freqs_all, norm_arr, pos_col
+def sentinel_row(seg_id: int, lengths: np.ndarray) -> tuple:
+    """The segment's SENTINEL row (``_SEG_COLS`` order) — the one
+    writer of its format, shared by the build kernel and the merge:
+    doc count in ``df``, summed length in ``ttf``, the SmallFloat norm
+    bytes in ``doc_blocks`` and the exact int64 lengths in
+    ``freq_blocks``, one entry per local doc id."""
+    lengths = np.asarray(lengths, dtype=np.int64)
+    return (
+        seg_id, SENTINEL_TERM, len(lengths), int(lengths.sum()),
+        -1, 0,
+        int_to_byte4_np(lengths).astype(np.uint8).tobytes(), [],
+        lengths.astype("<i8").tobytes(), [],
+        b"", [],
+        [], [], [],
     )
-    # sentinel: norms in doc_blocks, exact lengths in freq_blocks
-    rows.append(
-        (
-            seg_id, SENTINEL_TERM, n, int(lengths[:n].sum()) if n else 0,
-            -1, 0,
-            norm_arr[:n].astype(np.uint8).tobytes(), [],
-            lengths[:n].astype("<i8").tobytes(), [],
-            b"", [],
-            [], [], [],
-        )
-    )
-    return pd.DataFrame(rows, columns=_SEG_COLS)
-
-
-def encode_segment_group_tokens(
-    seg_id: int,
-    pdf: pd.DataFrame,
-    seg_size: int,
-    index_positions: bool,
-) -> pd.DataFrame:
-    """Encode one segment directly from the per-token stream produced
-    by invert_tokens: the (doc, term) aggregation happens HERE, inside
-    the group the shuffle already built, via one lexsort + run-length
-    pass — the map-side Python aggregation is gone entirely."""
-    base = seg_id * seg_size
-    term_np = pdf["term"].to_numpy()
-    docs_np = pdf["doc_id"].to_numpy(dtype=np.int64) - base
-    is_marker = term_np == DOC_MARKER
-    mdocs = docs_np[is_marker]
-    n = int(mdocs.max()) + 1 if len(mdocs) else 0
-    kept_docs = docs_np[~is_marker]
-    lengths = np.bincount(kept_docs, minlength=max(n, 1)).astype(np.int64)
-    norm_arr = int_to_byte4_np(lengths)
-    rows: list[tuple] = []
-    if len(kept_docs):
-        kept_terms = term_np[~is_marker]
-        kept_pos = pdf["pos"].to_numpy(dtype=np.int64)[~is_marker]
-        codes, uniques = pd.factorize(kept_terms, sort=False)
-        order = np.lexsort((kept_pos, kept_docs, codes))
-        c_s, d_s, p_s = codes[order], kept_docs[order], kept_pos[order]
-        change = np.empty(len(c_s), dtype=bool)
-        change[0] = True
-        change[1:] = (c_s[1:] != c_s[:-1]) | (d_s[1:] != d_s[:-1])
-        starts = np.flatnonzero(change)
-        freqs_all = np.diff(np.append(starts, len(c_s)))
-        docs_all = d_s[starts]
-        pcodes = c_s[starts]
-        tchange = np.empty(len(starts), dtype=bool)
-        tchange[0] = True
-        tchange[1:] = pcodes[1:] != pcodes[:-1]
-        tstarts = np.flatnonzero(tchange)
-        boundaries = np.append(tstarts, len(starts)).astype(np.int64)
-        rows = _encode_all_terms(
-            seg_id,
-            uniques[pcodes[tstarts]],
-            boundaries,
-            docs_all,
-            freqs_all,
-            norm_arr,
-            pos_col=None,
-            pos_flat=(p_s if index_positions else None),
-        )
-    rows.append(
-        (
-            seg_id, SENTINEL_TERM, n, int(lengths[:n].sum()) if n else 0,
-            -1, 0,
-            norm_arr[:n].astype(np.uint8).tobytes(), [],
-            lengths[:n].astype("<i8").tobytes(), [],
-            b"", [],
-            [], [], [],
-        )
-    )
-    return pd.DataFrame(rows, columns=_SEG_COLS)
 
 
 def _positions_from_holes(
@@ -298,76 +198,6 @@ def _positions_from_holes(
     return flat_raw[mask]
 
 
-def encode_segment_group_docarrays(
-    seg_id: int,
-    pdf: pd.DataFrame,
-    seg_size: int,
-    index_positions: bool,
-) -> pd.DataFrame:
-    """Encode one segment from per-DOC (terms[], holes[]) rows: flatten
-    the arrays (cheap — one concatenate per group), reconstruct kept
-    positions from the hole compression, then the same lexsort +
-    run-length aggregation as the per-token kernel."""
-    base = seg_id * seg_size
-    doc_ids_np = pdf["doc_id"].to_numpy(dtype=np.int64) - base
-    tlists = pdf["terms"].to_numpy()
-    lens = np.fromiter((len(x) for x in tlists), np.int64, count=len(tlists))
-    n = int(doc_ids_np.max()) + 1 if len(doc_ids_np) else 0
-    lengths = np.zeros(max(n, 1), dtype=np.int64)
-    lengths[doc_ids_np] = lens
-    norm_arr = int_to_byte4_np(lengths)
-    rows: list[tuple] = []
-    total = int(lens.sum())
-    if total:
-        kept_terms = np.concatenate(tlists)
-        hlists = pdf["holes"].to_numpy()
-        hlens = np.fromiter((len(x) for x in hlists), np.int64, count=len(hlists))
-        hole_vals = (
-            np.concatenate([np.asarray(h, dtype=np.int64) for h in hlists])
-            .astype(np.int64)
-            if hlens.sum()
-            else np.empty(0, np.int64)
-        )
-        kept_pos = _positions_from_holes(lens, hlens, hole_vals)
-        kept_docs = np.repeat(doc_ids_np, lens)
-        codes, uniques = pd.factorize(kept_terms, sort=False)
-        order = np.lexsort((kept_pos, kept_docs, codes))
-        c_s, d_s, p_s = codes[order], kept_docs[order], kept_pos[order]
-        change = np.empty(len(c_s), dtype=bool)
-        change[0] = True
-        change[1:] = (c_s[1:] != c_s[:-1]) | (d_s[1:] != d_s[:-1])
-        starts = np.flatnonzero(change)
-        freqs_all = np.diff(np.append(starts, len(c_s)))
-        docs_all = d_s[starts]
-        pcodes = c_s[starts]
-        tchange = np.empty(len(starts), dtype=bool)
-        tchange[0] = True
-        tchange[1:] = pcodes[1:] != pcodes[:-1]
-        tstarts = np.flatnonzero(tchange)
-        boundaries = np.append(tstarts, len(starts)).astype(np.int64)
-        rows = _encode_all_terms(
-            seg_id,
-            uniques[pcodes[tstarts]],
-            boundaries,
-            docs_all,
-            freqs_all,
-            norm_arr,
-            pos_col=None,
-            pos_flat=(p_s if index_positions else None),
-        )
-    rows.append(
-        (
-            seg_id, SENTINEL_TERM, n, int(lengths[:n].sum()) if n else 0,
-            -1, 0,
-            norm_arr[:n].astype(np.uint8).tobytes(), [],
-            lengths[:n].astype("<i8").tobytes(), [],
-            b"", [],
-            [], [], [],
-        )
-    )
-    return pd.DataFrame(rows, columns=_SEG_COLS)
-
-
 def _rows_to_arrow(rows: list[tuple]):
     """Segment rows (tuples in _SEG_COLS order) -> pa.Table matching
     SEGMENT_SCHEMA.  One C++ conversion per column — no pandas object
@@ -388,101 +218,85 @@ def _rows_to_arrow(rows: list[tuple]):
     return pa.Table.from_arrays(arrays, names=_SEG_COLS)
 
 
-def encode_segment_group_docarrays_arrow(
-    seg_id: int,
-    tbl,
-    seg_size: int,
-    index_positions: bool,
-):
-    """Arrow-native variant of encode_segment_group_docarrays: the
-    token stream stays in Arrow buffers end-to-end.  ``pc.list_flatten``
-    + ``dictionary_encode`` replace the Python-object concatenate +
-    factorize — the per-token Python string allocations (the measured
-    scaling limiter on allocation-throttled hosts, BENCH.md) drop to
-    zero; only the per-segment VOCABULARY (a few thousand uniques)
-    materializes as Python strings for row assembly."""
-    import pyarrow as pa  # noqa: F401
+def _int64(arr) -> np.ndarray:
+    return arr.to_numpy(zero_copy_only=False).astype(np.int64)
+
+
+def encode_segment(seg_id: int, tbl, seg_size: int, index_positions: bool):
+    """One segment's per-document rows -> its term rows + sentinel row,
+    as a pa.Table matching SEGMENT_SCHEMA.
+
+    Both wires carry ``(doc_id, terms[])``.  The JVM wire
+    (invert_doc_arrays) adds ``holes[]``: kept positions are rebuilt
+    from the dropped slots and a doc's length is its term count.  The
+    Python wire (invert) adds explicit ``positions[]`` and ``length``,
+    because index-time synonyms share a position and do not count
+    toward the norm.  The token stream stays in Arrow buffers:
+    ``list_flatten`` + ``dictionary_encode`` replace per-token Python
+    strings, so only the segment's vocabulary materializes as Python
+    objects (the measured scaling limiter on allocation-throttled
+    hosts, BENCH.md)."""
     import pyarrow.compute as pc
 
-    base = seg_id * seg_size
-    doc_ids_np = (
-        tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64) - base
-    )
-    terms_list = tbl.column("terms").combine_chunks()
-    lens = (
-        pc.list_value_length(terms_list)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    n = int(doc_ids_np.max()) + 1 if len(doc_ids_np) else 0
-    lengths = np.zeros(max(n, 1), dtype=np.int64)
-    lengths[doc_ids_np] = lens
-    norm_arr = int_to_byte4_np(lengths)
+    docs = _int64(tbl.column("doc_id")) - seg_id * seg_size
+    terms = tbl.column("terms").combine_chunks()
+    lens = _int64(pc.list_value_length(terms))
+    if "holes" in tbl.column_names:
+        holes = tbl.column("holes").combine_chunks()
+        positions = _positions_from_holes(
+            lens, _int64(pc.list_value_length(holes)),
+            _int64(pc.list_flatten(holes)),
+        )
+        doc_lengths = lens
+    else:
+        positions = _int64(
+            pc.list_flatten(tbl.column("positions").combine_chunks())
+        )
+        doc_lengths = _int64(tbl.column("length"))
+    # size by the max local id so delta builds whose doc range starts
+    # mid-segment stay addressable (leading zeros = docs owned by the
+    # base index; the merge overlays them)
+    lengths = np.zeros(int(docs.max()) + 1 if len(docs) else 0, np.int64)
+    lengths[docs] = doc_lengths
     rows: list[tuple] = []
-    total = int(lens.sum())
-    if total:
-        flat_terms = pc.list_flatten(terms_list)
-        de = flat_terms.dictionary_encode()
-        codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    if int(lens.sum()):
+        de = pc.list_flatten(terms).dictionary_encode()
+        codes = _int64(de.indices)
         uniques = de.dictionary.to_numpy(zero_copy_only=False)
-        holes_col = tbl.column("holes").combine_chunks()
-        hlens = (
-            pc.list_value_length(holes_col)
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-        )
-        hole_vals = (
-            pc.list_flatten(holes_col)
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-        )
-        kept_pos = _positions_from_holes(lens, hlens, hole_vals)
-        kept_docs = np.repeat(doc_ids_np, lens)
-        order = np.lexsort((kept_pos, kept_docs, codes))
-        c_s, d_s, p_s = codes[order], kept_docs[order], kept_pos[order]
+        tok_docs = np.repeat(docs, lens)
+        # (doc, term) aggregation inside the group the shuffle built:
+        # one lexsort, then run-length boundaries per (term, doc) and
+        # per term
+        order = np.lexsort((positions, tok_docs, codes))
+        c_s, d_s, p_s = codes[order], tok_docs[order], positions[order]
         change = np.empty(len(c_s), dtype=bool)
         change[0] = True
         change[1:] = (c_s[1:] != c_s[:-1]) | (d_s[1:] != d_s[:-1])
         starts = np.flatnonzero(change)
-        freqs_all = np.diff(np.append(starts, len(c_s)))
-        docs_all = d_s[starts]
         pcodes = c_s[starts]
         tchange = np.empty(len(starts), dtype=bool)
         tchange[0] = True
         tchange[1:] = pcodes[1:] != pcodes[:-1]
         tstarts = np.flatnonzero(tchange)
-        boundaries = np.append(tstarts, len(starts)).astype(np.int64)
         rows = _encode_all_terms(
             seg_id,
             uniques[pcodes[tstarts]],
-            boundaries,
-            docs_all,
-            freqs_all,
-            norm_arr,
-            pos_col=None,
+            np.append(tstarts, len(starts)).astype(np.int64),
+            d_s[starts],
+            np.diff(np.append(starts, len(c_s))),
+            int_to_byte4_np(lengths),
             pos_flat=(p_s if index_positions else None),
-            as_numpy=True,
         )
-    rows.append(
-        (
-            seg_id, SENTINEL_TERM, n, int(lengths[:n].sum()) if n else 0,
-            -1, 0,
-            norm_arr[:n].astype(np.uint8).tobytes(), [],
-            lengths[:n].astype("<i8").tobytes(), [],
-            b"", [],
-            [], [], [],
-        )
-    )
+    rows.append(sentinel_row(seg_id, lengths))
     return _rows_to_arrow(rows)
 
 
-def encode_segments_fused_docarrays(
-    doc_tokens: DataFrame, cfg: EngineConfig
-) -> DataFrame:
-    """Per-doc array stream (invert_doc_arrays) -> segment rows."""
+def encode_segments(doc_rows: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Per-document token rows (either invert front-end) -> segment
+    rows: one shuffle on segment_id, one Arrow kernel per group."""
     seg_size = cfg.segment_size
     index_positions = cfg.index_positions
-    p = doc_tokens.withColumn(
+    p = doc_rows.withColumn(
         "segment_id", (F.col("doc_id") / F.lit(seg_size)).cast("int")
     )
     # Explicit partition count for the encode shuffle: AQE's advisory-
@@ -493,55 +307,14 @@ def encode_segments_fused_docarrays(
     # partitioning, so there is still exactly one exchange, and the
     # count scales with the cluster, not a local constant.
     n_enc = max(
-        2 * doc_tokens.sparkSession.sparkContext.defaultParallelism, 1
+        2 * doc_rows.sparkSession.sparkContext.defaultParallelism, 1
     )
     p = p.repartition(n_enc, "segment_id")
 
-    if cfg.encode_backend == "arrow":
+    def encode(key, tbl):
+        return encode_segment(key[0].as_py(), tbl, seg_size, index_positions)
 
-        def encode_arrow(key, tbl):
-            return encode_segment_group_docarrays_arrow(
-                key[0].as_py(), tbl, seg_size, index_positions
-            )
-
-        return p.groupby("segment_id").applyInArrow(
-            encode_arrow, schema=SEGMENT_SCHEMA
-        )
-
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return encode_segment_group_docarrays(
-            int(key[0]), pdf, seg_size, index_positions
-        )
-
-    return p.groupby("segment_id").applyInPandas(encode, schema=SEGMENT_SCHEMA)
-
-
-def encode_segments_fused_tokens(tokens: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Per-token stream (invert_tokens) -> complete segment rows."""
-    seg_size = cfg.segment_size
-    index_positions = cfg.index_positions
-    p = tokens.withColumn(
-        "segment_id", (F.col("doc_id") / F.lit(seg_size)).cast("int")
-    )
-
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return encode_segment_group_tokens(int(key[0]), pdf, seg_size, index_positions)
-
-    return p.groupby("segment_id").applyInPandas(encode, schema=SEGMENT_SCHEMA)
-
-
-def encode_segments_fused(inverted: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """inverted rows (postings + doc markers) -> complete segment rows."""
-    seg_size = cfg.segment_size
-    index_positions = cfg.index_positions
-    p = inverted.withColumn(
-        "segment_id", (F.col("doc_id") / F.lit(seg_size)).cast("int")
-    )
-
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return encode_segment_group(int(key[0]), pdf, seg_size, index_positions)
-
-    return p.groupby("segment_id").applyInPandas(encode, schema=SEGMENT_SCHEMA)
+    return p.groupby("segment_id").applyInArrow(encode, schema=SEGMENT_SCHEMA)
 
 
 def norms_from_segments(segments: DataFrame, cfg: EngineConfig) -> DataFrame:

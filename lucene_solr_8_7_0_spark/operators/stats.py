@@ -45,6 +45,9 @@ def salted_agg(
     )
 
 
+TERMDICT_SCHEMA = "term string, df bigint, ttf bigint"
+
+
 def term_dict(segments: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Global term dictionary: term -> (df, ttf) over all segments.
 

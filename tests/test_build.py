@@ -200,12 +200,17 @@ def test_jvm_tokenizer_parity_with_python(spark):
             assert jvm == py, (analyzer, s, jvm[:5], py[:5])
 
 
-def test_jvm_build_equals_python_build(spark, tmp_path_factory):
-    """Full-index equality: the JVM tokenize backend produces a
-    byte-identical segments table to the Python Arrow-UDF backend
-    (same postings, norms, impacts, positions), for both analyzers and
-    with stopwords."""
-    import pandas as pd
+def test_jvm_build_equals_python_build(spark, tmp_path_factory, monkeypatch):
+    """Full-index equality: the JVM tokenizer front-end produces
+    byte-identical segments, docmeta, stats and termdict tables to the
+    Python Arrow-UDF front-end (same postings, norms, impacts,
+    positions) — for both analyzers, with stopwords, and with
+    ``max_token_length=4`` so the JVM wire carries non-empty holes and
+    one document loses every token.  The Python side is forced by
+    substituting the build's tokenizer-selection predicate."""
+    from pyspark.sql import functions as F
+
+    from lucene_solr_8_7_0_spark.operators import invert
 
     texts = [
         "The quick brown fox jumps over the lazy dog",
@@ -213,66 +218,52 @@ def test_jvm_build_equals_python_build(spark, tmp_path_factory):
         "a.b.c 1.2.3 O'Reilly foo_bar",
         "", "the the the",
         "repeat repeat repeat token stream " * 8,
+        "overlong tokens everywhere",
     ]
     rows = [("r", f"{i:03d}", "c", "t", t) for i, t in enumerate(texts)]
     docs = spark.createDataFrame(
         pd.DataFrame(rows, columns=["repo", "path", "commit", "lang", "content"])
     )
-    for analyzer in ("standard", "simple"):
-        for stop in ((), ("the",)):
-            dirs = {}
-            for backend in ("jvm", "python"):
-                d = str(tmp_path_factory.mktemp(f"be_{backend}_{analyzer}"))
-                cfg = EngineConfig(
-                    analyzer=analyzer, segment_size=4, stopwords=stop,
-                    tokenize_backend=backend,
-                )
-                build_index(spark, docs, d, cfg, resume=False)
-                dirs[backend] = d
-            for table in ("segments", "docmeta", "stats", "termdict"):
-                a = (
-                    spark.read.parquet(f"{dirs['jvm']}/{table}")
-                    .toPandas()
-                    .sort_values(
-                        [c for c in ("segment_id", "term", "doc_id")
-                         if c in spark.read.parquet(f"{dirs['jvm']}/{table}").columns],
-                        ignore_index=True,
-                    )
-                )
-                b = (
-                    spark.read.parquet(f"{dirs['python']}/{table}")
-                    .toPandas()
-                    .sort_values(
-                        [c for c in ("segment_id", "term", "doc_id")
-                         if c in spark.read.parquet(f"{dirs['python']}/{table}").columns],
-                        ignore_index=True,
-                    )
-                )
-                pd.testing.assert_frame_equal(a, b), (analyzer, stop, table)
-
-
-def test_encode_backend_equivalence(spark, tmp_path_factory):
-    """Arrow-native encode kernel (applyInArrow + C++ dictionary_encode)
-    is row-identical to the pandas kernel across every index table."""
-    docs = corpus_df(spark, 150, seed=11)
-    dirs = {}
-    for backend in ("arrow", "pandas"):
-        d = str(tmp_path_factory.mktemp(f"enc_{backend}"))
-        cfg = EngineConfig(segment_size=32, encode_backend=backend)
-        build_index(spark, docs, d, cfg, resume=False)
-        dirs[backend] = d
-    for table in ("segments", "docmeta", "stats", "termdict"):
-        cols = spark.read.parquet(f"{dirs['arrow']}/{table}").columns
-        keys = [c for c in ("segment_id", "term", "doc_id") if c in cols]
-        a = (
-            spark.read.parquet(f"{dirs['arrow']}/{table}")
-            .toPandas().sort_values(keys, ignore_index=True)
+    use_jvm = invert.use_jvm_tokenizer
+    cases = [
+        (analyzer, stop, 255)
+        for analyzer in ("standard", "simple")
+        for stop in ((), ("the",))
+    ] + [("standard", (), 4), ("simple", ("the",), 4)]
+    for analyzer, stop, max_len in cases:
+        cfg = EngineConfig(
+            analyzer=analyzer, segment_size=4, stopwords=stop,
+            max_token_length=max_len,
         )
-        b = (
-            spark.read.parquet(f"{dirs['pandas']}/{table}")
-            .toPandas().sort_values(keys, ignore_index=True)
-        )
-        pd.testing.assert_frame_equal(a, b)
+        assert use_jvm(cfg)
+        if max_len == 4:
+            holes = (
+                invert.invert_doc_arrays(docs.withColumn("doc_id", F.lit(0)), cfg)
+                .filter(F.size("holes") > 0).count()
+            )
+            assert holes > 0
+        dirs = {}
+        for front in ("jvm", "python"):
+            monkeypatch.setattr(
+                invert, "use_jvm_tokenizer",
+                use_jvm if front == "jvm" else (lambda cfg: False),
+            )
+            d = str(tmp_path_factory.mktemp(f"be_{front}_{analyzer}"))
+            build_index(spark, docs, d, cfg, resume=False)
+            dirs[front] = d
+        if max_len == 4:
+            # "overlong tokens everywhere": every token is dropped
+            meta = spark.read.parquet(f"{dirs['jvm']}/docmeta").toPandas()
+            assert meta.loc[meta.path == "006", "length"].tolist() == [0]
+        for table in ("segments", "docmeta", "stats", "termdict"):
+            cols = spark.read.parquet(f"{dirs['jvm']}/{table}").columns
+            keys = [c for c in ("segment_id", "term", "doc_id") if c in cols]
+            a, b = (
+                spark.read.parquet(f"{dirs[front]}/{table}")
+                .toPandas().sort_values(keys, ignore_index=True)
+                for front in ("jvm", "python")
+            )
+            pd.testing.assert_frame_equal(a, b, obj=str((analyzer, stop, max_len, table)))
 
 
 def test_empty_corpus_build_and_search(spark, tmpdir_path):

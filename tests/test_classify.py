@@ -139,6 +139,27 @@ def test_naive_bayes_semi_join_vocab_path(engine, spark):
     assert "LeftSemi" in plan
 
 
+def test_nb_broadcasts_hit_counts_only_for_literal_vocab(engine, spark):
+    """The class-conditional hit counts are broadcast only when the
+    vocabulary resolved to a literal list; on the semi-join path they
+    scale with the corpus and join without a hint (the class table
+    keeps its broadcast either way)."""
+    searcher, corpus = engine
+    ids = {int(corpus.doc_id.iloc[i]) for i in (3, 17)}
+
+    def hints(limit):
+        df = naive_bayes_classify(
+            searcher, _inputs_df(spark, corpus, ids), "lang",
+            vocab_pushdown_limit=limit,
+        )
+        return df._jdf.queryExecution().logical().toString().count(
+            "strategy=broadcast"
+        )
+
+    assert hints(4096) == 2  # literal vocab: classes + hit counts
+    assert hints(0) == 1  # semi-join vocab: classes only
+
+
 def test_nb_scores_are_normalized(engine, spark):
     searcher, corpus = engine
     ids = {int(corpus.doc_id.iloc[0])}

@@ -188,18 +188,10 @@ def test_batched_segment_encode_matches_scalar():
     boundaries = np.concatenate(
         ([0], np.cumsum([len(d) for d in all_docs]))
     ).astype(np.int64)
-    import pandas as pd
-
-    pos_lists = []
-    for freqs, positions in zip(all_freqs, all_pos):
-        bounds = np.concatenate(([0], np.cumsum(freqs)))
-        pos_lists.extend(
-            positions[bounds[i] : bounds[i + 1]] for i in range(len(freqs))
-        )
-    pos_col = pd.Series(pos_lists)
     rows = _encode_all_terms(
         0, np.array(terms), boundaries,
-        np.concatenate(all_docs), np.concatenate(all_freqs), norm_arr, pos_col,
+        np.concatenate(all_docs), np.concatenate(all_freqs), norm_arr,
+        np.concatenate(all_pos),
     )
     from lucene_solr_8_7_0_spark.functions.codec import TermPostings
 

@@ -141,7 +141,8 @@ def test_update_snapshot_plan_is_one_stage(spark, base_dir, tmp_path_factory):
     ))
     out = str(tmp_path_factory.mktemp("liveupdout"))
     dl.update_documents(spark, base, new_docs, out)
-    assert dl.read_generation(out) == dl.read_generation(base) == 1
+    # the victims commit a generation in the new snapshot only
+    assert dl.read_generation(base) == 0 and dl.read_generation(out) == 1
     s = IndexSearcher(spark, out, query_cache=QueryCache())
     q = s._rewrite(Q.TermQuery("public"))
     terms = planner.collect_terms(q)
@@ -153,6 +154,53 @@ def test_update_snapshot_plan_is_one_stage(spark, base_dir, tmp_path_factory):
     assert "MapInPandas" in plan and "Exchange" not in plan
     assert not set(meta["doc_id"]) & set(hits["doc_id"])
     assert s.count(Q.TermQuery("zzqqx")) == 3
+
+
+def test_update_leaves_old_snapshot_untouched(spark, del_dir, tmp_path_factory):
+    """A commit never writes the previous commit point: a searcher
+    pinned to the old snapshot answers bitwise the same (ids, float32
+    score bits, total_hits) before and after ``update_documents``
+    replaces some of its top hits."""
+    import pandas as pd
+
+    old = str(tmp_path_factory.mktemp("liveold"))
+    shutil.copytree(del_dir, old, dirs_exist_ok=True)
+    gen = dl.read_generation(old)
+    s = IndexSearcher(spark, old, query_cache=QueryCache())
+    qs = [Q.TermQuery("public"), Q.MatchAllDocsQuery(),
+          Q.term_or(["public", "return", "import"], 1)]
+
+    def answers():
+        return [_bits(s.search(q, k=10)) for q in qs] + [s.count(q) for q in qs]
+
+    before = answers()
+    top = before[0][0][:3]
+    meta = spark.read.parquet(f"{old}/docmeta").toPandas()
+    meta = meta[meta.doc_id.isin(top)]
+    new_docs = spark.createDataFrame(pd.DataFrame(
+        [(r["repo"], r["path"], "c2", "java", "zzqqx replacement",
+          r["lat"], r["lon"])
+         for _, r in meta.iterrows()],
+        columns=["repo", "path", "commit", "lang", "content", "lat", "lon"],
+    ))
+    out = str(tmp_path_factory.mktemp("liveoldout"))
+    dl.update_documents(spark, old, new_docs, out)
+    assert answers() == before
+    assert dl.read_generation(old) == gen and dl.read_generation(out) == gen + 1
+    fresh = IndexSearcher(spark, out, query_cache=QueryCache())
+    assert not set(top) & set(fresh.search(qs[0], k=10).doc_ids.tolist())
+
+
+def test_searcher_open_reads_no_schema(spark, base_dir):
+    """Opening a searcher launches no Spark job: segments and termdict
+    have fixed schemas, so their reads skip parquet schema inference."""
+    sc = spark.sparkContext
+    sc.setJobGroup("searcher_open", "open")
+    try:
+        IndexSearcher(spark, base_dir, query_cache=QueryCache())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("searcher_open")) == []
 
 
 def test_searcher_sees_later_generation(spark, base_dir, tmp_path_factory):

@@ -10,7 +10,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lucene_solr_8_7_0_spark.config import EngineConfig  # noqa: E402
 from lucene_solr_8_7_0_spark.operators.build import build_index  # noqa: E402
