@@ -73,7 +73,7 @@ class ScoringClause:
     alts: tuple[tuple[str, ...], ...] | None = None
     # union_pred (distributed multi-term union): str -> bool predicate
     # selecting this clause's terms among the segment's LOCAL terms;
-    # the postings scan is pre-filtered by the equivalent JVM condition
+    # the postings read is pre-filtered by a superset pyarrow condition
     pred: object | None = None
     # span_near: require query order (SpanNearQuery.inOrder)
     in_order: bool = True
@@ -620,7 +620,8 @@ def _eval_clause(
     if clause.kind == "union_pred":
         # distributed multi-term union: select this segment's matching
         # terms by predicate (the Python check is the exact semantics;
-        # the JVM scan filter was a superset) and union their postings.
+        # the read's pyarrow filter was a superset) and union their
+        # postings.
         # Reserved tokens (\x00 sentinel/matchnone, \x01 point/delete
         # doc-id masks) are never expansion candidates.
         hits = [

@@ -22,8 +22,8 @@ records land in ``manifest``):
             ride its write as observed aggregates
   termdict  global term -> (df, ttf), partial aggregation (operators/stats)
 
-Norms are not a stage: searcher and merge read them as a view over the
-segment sentinel rows (``segments.norms_from_segments``).
+Norms are not a stage: every segment's norms ride its sentinel row,
+which the search kernel and merge read with the postings.
 
 Parallelism notes (the 100 TB view): every stage is embarrassingly
 parallel except two shuffles — the range partition for doc numbering

@@ -230,12 +230,12 @@ def merge_indexes(
         segs = merge_segment_rows(segs.filter(in_shared), cfg).unionByName(
             segs.filter(~in_shared)
         )
-    # one shuffle on segment_id keeps every segment wholly in one file
-    # (the searcher's one-stage invariant); AQE coalesces the partitions
+    # one shuffle on segment_id keeps every segment wholly in one file;
+    # AQE coalesces the partitions
     segs.repartition("segment_id").sortWithinPartitions(
         "segment_id", "term"
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "segments"))
-    # norms stay a read-time view over the merged sentinels — no write
+    # norms ride the merged sentinel rows — no write
 
     _union(spark, index_dirs, "docmeta").sortWithinPartitions(
         "doc_id"

@@ -1,32 +1,50 @@
-"""Distributed IndexSearcher: per-segment kernels + driver top-k merge.
+"""IndexSearcher: one per-segment kernel, placed on the driver or in
+Spark, + driver top-k merge.
 
 Execution model (mirrors IndexSearcher leaf slices,
-IndexSearcher.java:571-668, re-expressed Spark-first):
+IndexSearcher.java:571-668):
 
 1. driver: rewrite query (plans/rewrite), fetch global term stats from
-   the termdict (a tiny pushed-down scan), bind BM25 weights
-   (plans/planner) — the Weight-creation phase,
-2. executors: scan the segments table with ``term IN (...)`` pushed
-   into parquet (row-group pruning on the sorted term column = the FST
-   term-index analog), cogroup with per-segment norms, run the numpy
-   scoring kernel (functions/wand) per segment — the leaf-slice
-   collection phase,
+   the termdict (a pyarrow read with row-group pruning on the sorted
+   term column), bind BM25 weights (plans/planner) — the
+   Weight-creation phase,
+2. ``score_files`` — the one kernel entry point: a ``pyarrow.dataset``
+   read of the segments files with ``term IN (terms, sentinel)``
+   pushed into parquet (row-group pruning = the FST term-index
+   analog), grouped by segment; each segment's sentinel row carries
+   its norms, and the numpy kernel (functions/wand) scores it under
+   the per-segment masks (live docs, point filters) — the leaf-slice
+   collection phase.  It runs in one of two placements:
+
+   * driver: in-process over every segments file — no Spark job, no
+     Python worker.  Top-k searches take it unless their postings
+     volume pays for a Spark stage (``IndexSearcher._choose_placement``),
+   * spark: a small DataFrame of segment-id windows (one task wave)
+     feeds ``mapInArrow``; each task calls ``score_files`` on its
+     window of every segments file.  The lazy DataFrame APIs
+     (matches_df, score_all_df) always take it,
+
 3. driver: heap-merge the per-segment top-k by (score desc, doc asc)
    — TopDocs.merge (TopDocs.java:188-246), trivially cheap because
    its input is ``num_segments × k`` rows.
 
 Column pruning: queries without phrases never read ``pos_blocks`` —
-the parquet column simply isn't scanned (the ".pos file" stays cold).
+the parquet column simply isn't read (the ".pos file" stays cold).
 """
 
 from __future__ import annotations
 
 import os
+import time
 from dataclasses import dataclass, replace
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import DEFAULT_TOTAL_HITS_THRESHOLD, MAX_CLAUSE_COUNT, EngineConfig  # noqa: F401
 from ..functions.codec import TermPostings
@@ -45,9 +63,34 @@ from ..plans.queries import (
     WildcardQuery,
 )
 
-RESULT_SCHEMA = (
-    "segment_id int, doc_id bigint, score float, hits bigint, hits_exact boolean"
-)
+_RESULT_ARROW = pa.schema([
+    ("segment_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float32()),
+    ("hits", pa.int64()), ("hits_exact", pa.bool_()),
+])
+RESULT_SCHEMA = from_arrow_schema(_RESULT_ARROW)
+_POSTINGS_COLS = [
+    "segment_id", "term", "df", "ttf", "singleton_doc", "singleton_freq",
+    "doc_blocks", "doc_block_offsets", "freq_blocks", "freq_block_offsets",
+    "block_last_docs", "impacts_flat", "impacts_offsets",
+]
+_POS_COLS = ["pos_blocks", "pos_block_offsets"]
+
+# Placement rule (IndexSearcher._choose_placement).  A query's kernel
+# work, in postings: the df sum of its terms (num_docs for match-all)
+# plus, when it reads positions, _POS_WORK per position (the ttf sum).
+# A Spark stage splits that work over min(parallelism, segments) tasks
+# but costs ~140-210 ms to place; the driver runs it serially at about
+# 0.3 us per posting.  So the Spark placement is taken when the work it
+# saves, work * (1 - 1/min(parallelism, segments)), exceeds
+# _SPARK_MIN_SAVED (~190 ms of driver kernel time).  Calibrated with the
+# same kernel in both placements, bitwise-equal results, warm, Spark
+# local[2] on a 4-core host, 16 segments in 4 files, median of 5
+# (ms, driver -> spark):
+#      docs  term_hot    or_3        msm         prefix      phrase      phrase_mid
+#    20,000  28 -> 160   55 -> 165   31 -> 156   71 -> 169   117 -> 204  64 -> 174
+#   200,000  51 -> 184   213 -> 282  157 -> 272  151 -> 245  952 -> 647  430 -> 420
+_POS_WORK = 0.27
+_SPARK_MIN_SAVED = 600_000
 
 
 @dataclass
@@ -83,6 +126,25 @@ class PreparedQuery:
     mt_qs: tuple
     lead: tuple | None
     dv_keys: frozenset
+    term_stats: dict
+
+
+@dataclass(frozen=True)
+class KernelSpec:
+    """One search as the segment kernels see it: the compiled query (live
+    docs already an implicit MUST_NOT), what to read and how to collect.
+    Picklable: the Spark placement ships it to its tasks."""
+
+    cq: CompiledQuery
+    terms: tuple
+    mt_qs: tuple  # multi-term queries of distributed unions
+    need_pos: bool
+    k: int | None
+    score_mode: str
+    threshold: int
+    segment_size: int
+    min_competitive: float = 0.0
+    after: tuple | None = None
 
 
 def rows_to_posting_map(pdf: pd.DataFrame) -> dict[str, TermPostings]:
@@ -111,14 +173,120 @@ def rows_to_posting_map(pdf: pd.DataFrame) -> dict[str, TermPostings]:
     return out
 
 
+def postings_read(spec: KernelSpec, segments: tuple | None = None
+                  ) -> tuple[list, object]:
+    """(columns, filter) of the kernel's parquet read: the query terms'
+    postings plus every segment's sentinel (norms) row, ORed with the
+    distributed unions' term conditions, within the ``segments`` window
+    ``(lo, hi)`` (``lo <= segment_id < hi``, None = open; row groups
+    outside it are pruned by their footer statistics)."""
+    cond = pads.field("term").isin(list(spec.terms) + [SENTINEL_TERM])
+    for q in spec.mt_qs:
+        cond = cond | rw.term_read_filter(q)
+    lo, hi = segments or (None, None)
+    if lo is not None:
+        cond = cond & (pads.field("segment_id") >= lo)
+    if hi is not None:
+        cond = cond & (pads.field("segment_id") < hi)
+    return _POSTINGS_COLS + (_POS_COLS if spec.need_pos else []), cond
+
+
+def _empty_result() -> pd.DataFrame:
+    return _RESULT_ARROW.empty_table().to_pandas()
+
+
+def _segment_postings(masks: list, seg_id: int,
+                      seg_pdf: pd.DataFrame) -> tuple[dict, np.ndarray, int]:
+    """(postings map with the masks put in, norms, num_docs) of one
+    segment's rows: sentinel check -> postings map -> masks."""
+    sent = seg_pdf[seg_pdf["term"] == SENTINEL_TERM]
+    if len(sent) == 0:
+        # the read always fetches the sentinel with the postings: a
+        # segment without it has rows outside the files read, or is corrupt
+        raise ValueError(
+            f"segment {seg_id}: {len(seg_pdf)} postings rows but "
+            "no sentinel row (segment split across files?)"
+        )
+    pmap = rows_to_posting_map(seg_pdf[seg_pdf["term"] != SENTINEL_TERM])
+    for token, docsets in masks:
+        if seg_id in docsets:
+            pmap[token] = docsets[seg_id]
+    norms = np.frombuffer(sent["doc_blocks"].iloc[0], dtype=np.uint8).astype(np.int64)
+    return pmap, norms, int(sent["df"].iloc[0])
+
+
+def _score_segment_rows(spec: KernelSpec, masks: list, seg_id: int,
+                        seg_pdf: pd.DataFrame) -> pd.DataFrame:
+    """One segment's kernel: _segment_postings -> score_segment.  A
+    segment without hits still reports its hit count in a
+    ``doc_id = -1`` row."""
+    cq = spec.cq
+    pmap, norms, num_docs = _segment_postings(masks, seg_id, seg_pdf)
+    if pmap.keys() <= {DELETES_TOKEN} and not cq.match_all:
+        return _empty_result()  # no postings, no filter docset: no match
+    base = seg_id * spec.segment_size
+    # the paging cursor's doc id is global; segment-local arithmetic
+    # keeps the (score, doc) comparison exact for every segment
+    # (earlier segments: local <= cursor; later: cursor negative, all
+    # locals after it)
+    after = None if spec.after is None else (spec.after[0], spec.after[1] - base)
+    res = score_segment(
+        pmap, norms, cq, spec.k, total_hits_threshold=spec.threshold,
+        prune=spec.score_mode == "top_scores", num_docs=num_docs,
+        min_competitive=spec.min_competitive, after=after,
+    )
+    hit = len(res.doc_ids) > 0
+    return pd.DataFrame({
+        "segment_id": seg_id,
+        "doc_id": res.doc_ids + base if hit else [-1],
+        "score": res.scores if hit else [np.float32(0)],
+        "hits": int(res.hits),
+        "hits_exact": bool(res.hits_exact),
+    })
+
+
+def score_files(spec: KernelSpec, masks: list, files: list[str],
+                segments: tuple | None = None,
+                timings: dict | None = None) -> pd.DataFrame:
+    """THE segment kernel entry point, for both placements: read the
+    query's postings and sentinel rows of ``files`` within the
+    ``segments`` window (postings_read), group them by segment and score
+    each (_score_segment_rows) under ``masks`` —
+    ``[(token, {segment_id: TermPostings})]``.  Returns RESULT_SCHEMA
+    rows.  ``timings`` (optional) accumulates the read and
+    decode+kernel seconds."""
+    cq = spec.cq
+    if not files or not (
+        cq.match_all or spec.terms or spec.mt_qs
+        or any(token != DELETES_TOKEN for token, _ in masks)
+    ):
+        return _empty_result()
+    t0 = time.perf_counter()
+    cols, cond = postings_read(spec, segments)
+    rows = pads.dataset(files, format="parquet").to_table(
+        columns=cols, filter=cond
+    ).to_pandas()
+    t1 = time.perf_counter()
+    outs = [
+        _score_segment_rows(spec, masks, int(seg_id), g)
+        for seg_id, g in rows.groupby("segment_id", sort=False)
+    ]
+    outs = [o for o in outs if len(o)]
+    out = pd.concat(outs, ignore_index=True) if outs else _empty_result()
+    if timings is not None:
+        timings["read"] = timings.get("read", 0.0) + t1 - t0
+        timings["kernel"] = timings.get("kernel", 0.0) + time.perf_counter() - t1
+    return out
+
+
 class QueryCache:
     """LRUQueryCache analog (L/search/LRUQueryCache.java +
     UsageTrackingQueryCachingPolicy.java): caches the per-segment
-    docsets of filter-usable clauses (point ranges) as BROADCASTS of
-    their encoded ``{segment_id: TermPostings}`` (codec.encode_docsets)
-    — the kernel applies them as masks, like the reference intersects
-    its cached per-leaf DocIdSet inside the scorer.  The live-docs mask
-    is not cached here: the searcher loads it per del generation.
+    docsets of filter-usable clauses (point ranges), encoded as
+    ``{segment_id: TermPostings}`` (codec.encode_docsets) — the kernel
+    applies them as masks, like the reference intersects its cached
+    per-leaf DocIdSet inside the scorer.  The live-docs mask is not
+    cached here: the searcher loads it per del generation.
 
     Admission mirrors the usage-tracking policy: a clause key is cached
     only once it has been seen ``min_uses`` times.  Eviction is LRU over
@@ -126,16 +294,12 @@ class QueryCache:
     reference's maxSize=1000) and ``max_bytes`` (the maxRamBytesUsed
     analog: an entry's size is its exact encoded byte count; entries
     larger than the whole budget are never admitted, like the
-    reference's per-query size gate).  An evicted broadcast is left to
-    Spark's context cleaner: lazy matches_df / score_all_df plans may
-    still hold it.  Keys embed the index identity + generation (deletes
-    epoch) + the Spark application id (searchers stamp it in), so ONE
-    cache can safely be shared across searchers (the reference shares
-    its cache across readers of a segment core), a reopened snapshot
-    never serves stale docsets, and a restarted SparkSession never
-    serves broadcasts bound to the stopped one.  All mutation happens
-    under a lock (the reference's LRUQueryCache synchronizes on itself
-    the same way)."""
+    reference's per-query size gate).  Keys embed the index identity +
+    generation (deletes epoch), so ONE cache can safely be shared
+    across searchers (the reference shares its cache across readers of
+    a segment core) and a reopened snapshot never serves stale
+    docsets.  All mutation happens under a lock (the reference's
+    LRUQueryCache synchronizes on itself the same way)."""
 
     def __init__(self, max_queries: int = 32, min_uses: int = 2,
                  history_size: int = 256,
@@ -215,35 +379,28 @@ class QueryCache:
 
 _SHARED_QUERY_CACHE: QueryCache | None = None
 
-# process-wide state for the query-time scan-split guard (see
-# IndexSearcher._scan_conf_guard): session conf is global, so nested /
-# concurrent guarded actions must share one save/restore
-import threading as _threading
-
-_SCAN_CONF_LOCK = _threading.RLock()
-_SCAN_CONF_STATE: dict = {"depth": 0}
-_MPB = "spark.sql.files.maxPartitionBytes"
-_MPN = "spark.sql.files.minPartitionNum"
-
-
-def _release_scan_conf(conf) -> None:
-    """Leave one _scan_conf_guard level; the outermost restores the saved
-    split conf, unsetting a key whose original value could not be read."""
-    with _SCAN_CONF_LOCK:
-        _SCAN_CONF_STATE["depth"] -= 1
-        if _SCAN_CONF_STATE["depth"] == 0:
-            for key, val in _SCAN_CONF_STATE.pop("saved", {}).items():
-                if val is None:
-                    conf.unset(key)
-                else:
-                    conf.set(key, val)
-
 
 def _default_query_cache() -> QueryCache:
     global _SHARED_QUERY_CACHE
     if _SHARED_QUERY_CACHE is None:
         _SHARED_QUERY_CACHE = QueryCache()
     return _SHARED_QUERY_CACHE
+
+
+def _local_index_dir(index_dir: str) -> str:
+    """The local path of an index location: a plain path as is, a
+    ``file://`` URI as its path.  The searcher's driver-side reads
+    (config, stats, pyarrow postings and termdict reads) need a local
+    or mounted filesystem, so any other scheme is rejected up front."""
+    u = urlparse(index_dir)
+    if len(u.scheme) <= 1:  # no scheme (a one-letter one is a drive)
+        return index_dir
+    if u.scheme != "file" or u.netloc not in ("", "localhost"):
+        raise ValueError(
+            f"unsupported index location {index_dir!r} (scheme {u.scheme!r}): "
+            "IndexSearcher reads local paths and file:// URIs of this host only"
+        )
+    return unquote(u.path)
 
 
 class IndexSearcher:
@@ -255,6 +412,7 @@ class IndexSearcher:
         from .build import load_config, read_table
         from .stats import read_stats_row
 
+        index_dir = _local_index_dir(index_dir)
         self.spark = spark
         self.index_dir = index_dir
         self.cfg = cfg or load_config(index_dir)
@@ -265,10 +423,8 @@ class IndexSearcher:
         self.query_cache = (
             _default_query_cache() if query_cache is None else query_cache
         )
-        # cache-key prefix: index identity + Spark application id — a
-        # restarted session gets fresh keys, so the shared cache never
-        # serves DataFrames bound to a stopped SparkContext (stale
-        # entries age out through normal LRU eviction)
+        # cache-key prefix: index identity + Spark application id (an
+        # index rebuilt in place between sessions gets fresh keys)
         self._cache_token = (index_dir, spark.sparkContext.applicationId)
         # the one-row stats and few-row colstats tables are read on the
         # driver (no Spark job per reopen)
@@ -281,16 +437,11 @@ class IndexSearcher:
             similarity=self.cfg.similarity,
         )
         self.segments = read_table(spark, index_dir, "segments")
-        # norms are a VIEW over the segment sentinels, never a separate
-        # table on disk — one fewer build stage/write; the plan prunes
-        # to the sentinel rows via the term predicate
-        from .segments import norms_from_segments
-
-        self.norms = norms_from_segments(self.segments, self.cfg)
         self.termdict = read_table(spark, index_dir, "termdict")
         self.docmeta_path = os.path.join(index_dir, "docmeta")
-        self._live_docs_cache = None  # (del generation, mask broadcast)
-        self._seg_align_cache = None  # (segments files snapshot, alignment)
+        self._live_docs_cache = None  # (del generation, mask dict)
+        # (placement, reason) of the last kernel run: "driver" | "spark"
+        self._last_placement = None
         # optimizer statistics (column histograms) for point-query cost
         # estimation; tolerate their absence (older indexes, or merges
         # of an input without them)
@@ -301,176 +452,26 @@ class IndexSearcher:
             else None
         )
 
-    # ---- segment/file alignment (bucketed-layout shuffle elision) ----
-
-    @staticmethod
-    def _bytes_conf(val: str) -> int:
-        """Parse a Spark byte-size conf string ("4m", "128k", "1g",
-        plain digits = bytes)."""
-        s = str(val).strip().lower()
-        mult = 1
-        for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                       ("t", 1 << 40)):
-            if s.endswith(suf + "b"):
-                s, mult = s[: -len(suf) - 1], m
-                break
-            if s.endswith(suf):
-                s, mult = s[:-1], m
-                break
-        else:
-            if s.endswith("b"):
-                s = s[:-1]
-        return int(float(s) * mult)
-
-    def _segments_alignment(self) -> tuple[bool, int, int, int]:
-        """(aligned, max_file_bytes, total_bytes, n_files) of the
-        segments table.  ``aligned`` is True when NO segment's rows
-        straddle two parquet files — guaranteed by the build's
-        shuffle-on-segment_id write (every segment lands wholly in one
-        reducer's file, the bucketed-table invariant of guide §2.4) and
-        VERIFIED here from the files' own segment_id columns, so a
-        foreign/merged layout degrades to the shuffle path instead of
-        silently splitting a segment across kernels.  Cached on the
-        (file, size, mtime) snapshot of the table's files and recomputed
-        when it changes (metadata-scale driver work: one dictionary-
-        encoded int32 column per file)."""
+    def _table_files(self, name: str) -> list[str]:
+        """The parquet files of one index table, sorted."""
         import glob
 
-        import pyarrow.parquet as pq
+        return sorted(glob.glob(os.path.join(self.index_dir, name, "*.parquet")))
 
-        files = sorted(
-            glob.glob(os.path.join(self.index_dir, "segments", "*.parquet"))
-        )
-        stats = [os.stat(f) for f in files]
-        snapshot = [(f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats)]
-        if self._seg_align_cache is not None and self._seg_align_cache[0] == snapshot:
-            return self._seg_align_cache[1]
-        sizes = [st.st_size for st in stats]
-        aligned = True
-        seen: set = set()
-        try:
-            for f in files:
-                col = pq.ParquetFile(f).read(columns=["segment_id"])
-                ids = set(col.column("segment_id").to_pylist())
-                if ids & seen:
-                    aligned = False
-                    break
-                seen |= ids
-        except Exception:
-            aligned = False
-        result = (aligned, max(sizes, default=0), sum(sizes), len(files))
-        self._seg_align_cache = (snapshot, result)
-        return result
-
-    def _scan_conf_guard(self):
-        """Context manager: size the segments scan's splits for QUERY
-        work while one of this searcher's own collect actions runs.
-
-        The session default (files.maxPartitionBytes=4m) is tuned for
-        the BUILD's tokenize stage, where small splits keep every core
-        busy; at query time the same setting makes the pushed-down
-        postings scan launch one tiny Python task per file, and local-
-        mode task dispatch (~8-10 ms each, serialized on the driver
-        event loop) dominates the sub-second wall (measured: trivial
-        kernel over 41 tasks 0.585 s vs 11 tasks 0.321 s).  Here the
-        split size is derived from the table's ACTUAL size so the task
-        count lands near min(parallelism, max(16, bytes/16MB)) — scale-adaptive,
-        not a local[32] constant: a 100x bigger segments table gets
-        proportionally more tasks, capped by cluster parallelism.
-
-        Only RAISES the split size (never below the live value), holds
-        a process-wide reentrant guard so concurrent searches see a
-        stable conf, and restores on exit.  Raising can never break the
-        whole-file-task invariant (_whole_file_tasks: a larger split
-        still never splits a file it previously kept whole)."""
-        import contextlib
-
-        @contextlib.contextmanager
-        def guard():
-            aligned, max_file, total, n_files = self._segments_alignment()
-            conf = self.spark.conf
-            if n_files == 0:
-                yield
-                return
-            with _SCAN_CONF_LOCK:
-                _SCAN_CONF_STATE["depth"] += 1
-                try:
-                    if _SCAN_CONF_STATE["depth"] == 1:
-                        saved = {}
-                        for key in (_MPB, _MPN):
-                            try:
-                                saved[key] = conf.get(key)
-                            except Exception:
-                                saved[key] = None  # unreadable: unset on exit
-                        _SCAN_CONF_STATE["saved"] = saved
-                        self._set_query_splits(conf, saved[_MPB], total, n_files)
-                except BaseException:
-                    _release_scan_conf(conf)
-                    raise
-            try:
-                yield
-            finally:
-                _release_scan_conf(conf)
-
-        return guard()
-
-    def _set_query_splits(self, conf, old_mpb, total: int, n_files: int) -> None:
-        """Raise the scan split size so the task count lands near
-        min(parallelism, max(16, bytes/16MB)) (see _scan_conf_guard)."""
-        P = max(self.spark.sparkContext.defaultParallelism, 1)
-        try:
-            ocb = self._bytes_conf(conf.get("spark.sql.files.openCostInBytes"))
-            live_mpb = self._bytes_conf(old_mpb) if old_mpb else 0
-        except Exception:
-            ocb, live_mpb = 4 << 20, 0
-        total_eff = total + ocb * n_files
-        # floor 16 tasks (dispatch cost ~9 ms/task versus kernel
-        # parallelism), ramp with table size from ~16 MB/task, cap at
-        # cluster parallelism
-        n_tasks = min(max(16, total_eff // (16 << 20)), P)
-        target = max(live_mpb, -(-total_eff // max(n_tasks, 1)))
-        conf.set(_MPB, str(int(target)))
-        conf.set(_MPN, "1")
-
-    def _whole_file_tasks(self) -> bool:
-        """True iff Spark's split-size formula guarantees that no
-        segments-table parquet file is split across scan tasks under
-        the CURRENT session conf (FilePartition.maxSplitBytes:
-        min(maxPartitionBytes, max(openCostInBytes, totalBytes /
-        minPartitionNum)) with totalBytes counting openCost per file).
-        Re-checked per query so a conf change can only ever force the
-        safe fallback."""
-        aligned, max_file, total, n_files = self._segments_alignment()
-        if not aligned or n_files == 0:
-            return False
-        conf = self.spark.conf
-        try:
-            mpb = self._bytes_conf(conf.get("spark.sql.files.maxPartitionBytes"))
-            ocb = self._bytes_conf(conf.get("spark.sql.files.openCostInBytes"))
-        except Exception:
-            return False
-        try:
-            min_pn = int(conf.get("spark.sql.files.minPartitionNum"))
-        except Exception:
-            try:
-                min_pn = int(conf.get("spark.sql.leafNodeDefaultParallelism"))
-            except Exception:
-                min_pn = self.spark.sparkContext.defaultParallelism
-        min_pn = max(min_pn, 1)
-        bytes_per_core = (total + ocb * n_files) // min_pn
-        max_split = min(mpb, max(ocb, bytes_per_core))
-        return max_file <= max_split
+    def _dataset(self, name: str):
+        """One index table as a pyarrow dataset (driver-side reads)."""
+        return pads.dataset(self._table_files(name), format="parquet")
 
     # ---- term dictionary services (FST/automaton analog) ----
 
     @staticmethod
     def _mt_cond(q: Query):
         """The multi-term query's match condition as a JVM Column over
-        ``term`` — pushed into the parquet scan (row-group pruning on
-        the sorted term column = the FST term-index analog).  For
-        regexp this is a SUPERSET of the Python semantics (Java regex
-        dialect); the kernel's predicate re-check is the authority, so
-        a superset here is always safe, a subset never is."""
+        ``term``, for the Spark termdict scans of phrase-wildcard and
+        complex-phrase expansion and fuzzylikethis; rw.term_read_filter
+        is its pyarrow twin.  For regexp this is a SUPERSET of the Python
+        semantics (Java regex dialect); the exact re-check is the
+        authority, so a superset here is always safe, a subset never is."""
         c = F.col("term")
         if isinstance(q, PrefixQuery):
             return c.startswith(q.prefix)
@@ -691,70 +692,50 @@ class IndexSearcher:
         small enough to enumerate (0/1 matches -> MatchNoDocs/TermQuery
         unwrap; fuzzy's scored expansion up to maxClauseCount); returns
         None for "many", telling the rewrite to take the DISTRIBUTED
-        constant-score union — the predicate then ships to the scan and
-        kernels and no term list ever reaches the driver (this replaces
-        the old 65k-term collect + literal IN list)."""
-        probe = (
-            MAX_CLAUSE_COUNT if isinstance(q, FuzzyQuery)
-            # regexp: Java rlike may accept a superset of Python's
-            # semantics, so seeing N rows proves nothing about the
-            # Python match count — probe enough to make the 0/1-match
-            # unwrap almost always decidable, else go distributed
-            else 64
-        )
-        rows = (
-            self.termdict.filter(self._mt_cond(q))
-            .select("term").limit(probe + 1).collect()
-        )
-        terms = sorted(r["term"] for r in rows)
-        if len(terms) > probe:
+        constant-score union — the predicate then ships to the postings
+        read and kernels and no term list ever reaches the driver.  A
+        pyarrow read of the termdict (rw.term_read_filter: prefixes and
+        ranges prune row groups), never a Spark job."""
+        td = self._dataset("termdict")
+        if isinstance(q, FuzzyQuery):
+            # the read keeps only the prefix and length band: the exact
+            # edit-distance check bounds the scored expansion
+            rows = td.to_table(columns=["term"], filter=rw.term_read_filter(q))
+            terms = rw.expand_terms(q, sorted(rows.column("term").to_pylist()))
+            return None if len(terms) > MAX_CLAUSE_COUNT else terms
+        # regexp/wildcard: the read may be a superset of the Python
+        # semantics, so seeing N rows proves nothing about the exact
+        # match count — probe enough to make the 0/1-match unwrap
+        # almost always decidable, else go distributed
+        probe = 64
+        rows = td.head(probe + 1, columns=["term"], filter=rw.term_read_filter(q))
+        if rows.num_rows > probe:
             return None  # many -> distributed union
-        # exact Python-semantics re-check (regexp dialect, fuzzy edits)
-        terms = rw.expand_terms(q, terms)
-        if len(terms) >= 2 and not isinstance(q, FuzzyQuery):
+        # exact Python-semantics re-check (regexp dialect)
+        terms = rw.expand_terms(q, sorted(rows.column("term").to_pylist()))
+        if len(terms) >= 2:
             return None  # constant-score union handles 2+ terms
         return terms
 
     def _term_stats(self, terms: set[str]) -> dict[str, tuple[int, int]]:
-        """Global TermStatistics for a query's terms.  Read driver-side
+        """Global TermStatistics for a query's terms, read driver-side
         with pyarrow (row-group pruning on the term-sorted termdict
-        files — the FST seek analog): the values are identical to the
-        old pushed-down Spark collect, but a whole Spark job (~50 ms of
-        scheduling for a handful of rows) leaves the per-query critical
-        path.  The reference likewise resolves term stats in-process at
-        Weight creation.  Falls back to the Spark scan for non-local
-        layouts pyarrow cannot reach."""
+        files — the FST seek analog), without a Spark job on the
+        per-query critical path.  The reference likewise resolves term
+        stats in-process at Weight creation."""
         if not terms:
             return {}
-        try:
-            import glob
-
-            import pyarrow.dataset as pads
-
-            files = sorted(
-                glob.glob(
-                    os.path.join(self.index_dir, "termdict", "*.parquet")
-                )
+        tbl = self._dataset("termdict").to_table(
+            columns=["term", "df", "ttf"], filter=pads.field("term").isin(list(terms)),
+        )
+        return {
+            t: (int(d), int(f))
+            for t, d, f in zip(
+                tbl.column("term").to_pylist(),
+                tbl.column("df").to_pylist(),
+                tbl.column("ttf").to_pylist(),
             )
-            if not files:
-                raise FileNotFoundError(self.index_dir)
-            tbl = pads.dataset(files, format="parquet").to_table(
-                columns=["term", "df", "ttf"],
-                filter=pads.field("term").isin(list(terms)),
-            )
-            return {
-                t: (int(d), int(f))
-                for t, d, f in zip(
-                    tbl.column("term").to_pylist(),
-                    tbl.column("df").to_pylist(),
-                    tbl.column("ttf").to_pylist(),
-                )
-            }
-        except Exception:
-            rows = self.termdict.filter(
-                F.col("term").isin(list(terms))
-            ).collect()
-            return {r["term"]: (r["df"], r["ttf"]) for r in rows}
+        }
 
     def _dv_plan(self, cq: CompiledQuery, term_stats) -> tuple:
         """(lead, dv_keys) for the IndexOrDocValuesQuery access-path
@@ -812,18 +793,76 @@ class IndexSearcher:
         lead, dv_keys = self._dv_plan(cq, ts) if cq is not None else (None, frozenset())
         return PreparedQuery(
             q, terms, cq, planner.collect_point_queries(q),
-            tuple(planner.collect_multi_term_preds(q)), lead, dv_keys,
+            tuple(planner.collect_multi_term_preds(q)), lead, dv_keys, ts,
         )
 
-    def _run_prepared(self, p: PreparedQuery, k: int | None, score_mode: str,
-                      threshold: int, **kw) -> DataFrame:
-        """_run_segments over a prepared query (``kw``: min_competitive,
-        only_segment, after, max_segment)."""
-        return self._run_segments(
-            p.cq, p.terms, planner.has_phrase(p.query), k, score_mode,
-            threshold, p.point_qs, lead=p.lead, dv_keys=p.dv_keys,
-            mt_qs=p.mt_qs, **kw,
+    def _kernel_inputs(self, p: PreparedQuery, k: int | None, score_mode: str,
+                       threshold: int, after: tuple | None = None,
+                       ) -> tuple[KernelSpec, list]:
+        """(KernelSpec, masks) of a prepared query.  Masks are
+        ``(token, {segment_id: TermPostings})`` pairs put into each
+        segment's postings map under their reserved token: point-filter
+        docsets, and live docs as an implicit MUST_NOT (postings and
+        stats untouched — Lucene semantics)."""
+        cq = p.cq
+        masks = self._point_masks(p.point_qs, p.lead, p.dv_keys)
+        live = self._live_docs()
+        if live is not None:
+            masks.append((DELETES_TOKEN, live))
+            cq = replace(cq, must_nots=cq.must_nots + [
+                ScoringClause((DELETES_TOKEN,), None, const_score=0.0)
+            ])
+        spec = KernelSpec(
+            cq, tuple(sorted(p.terms)), tuple(mq.orig for mq in p.mt_qs),
+            planner.has_phrase(p.query), k, score_mode, threshold,
+            self.cfg.segment_size, after=after,
         )
+        return spec, masks
+
+    def _choose_placement(self, p: PreparedQuery) -> tuple[str, str]:
+        """(placement, reason) of a top-k search: "spark" when the
+        kernel work a Spark stage parallelizes away pays for placing it
+        (see _SPARK_MIN_SAVED), else "driver"."""
+        df = sum(p.term_stats.get(t, (0, 0))[0] for t in p.terms)
+        ttf = sum(p.term_stats.get(t, (0, 0))[1] for t in p.terms)
+        for mq in p.mt_qs:  # a distributed union reads its superset's rows
+            tbl = self._dataset("termdict").to_table(
+                columns=["df", "ttf"], filter=rw.term_read_filter(mq.orig)
+            )
+            df += int(tbl["df"].to_numpy().sum())
+            ttf += int(tbl["ttf"].to_numpy().sum())
+        if p.cq.match_all:
+            df += self.stats.num_docs
+        if not planner.has_phrase(p.query):
+            ttf = 0  # positions are not read
+        work = df + _POS_WORK * ttf
+        par = len(self._spark_tasks())
+        saved = work * (1.0 - 1.0 / par)
+        return ("spark" if saved > _SPARK_MIN_SAVED else "driver",
+                f"work={work:.0f} (df={df}, ttf={ttf}) over {par} tasks "
+                f"saves {saved:.0f} vs {_SPARK_MIN_SAVED}")
+
+    def _top_docs(self, query: Query, k: int, score_mode: str,
+                  threshold: int, similarity: str | None = None,
+                  after: tuple | None = None,
+                  two_pass: bool = False) -> TopDocs:
+        """A top-k search, run in the chosen placement (search())."""
+        p = self._prepare(query, score_mode, similarity)
+        if p.cq is None:
+            return self._merge(pd.DataFrame(), k)
+        spec, masks = self._kernel_inputs(p, k, score_mode, threshold, after)
+        files = self._table_files("segments")
+        if two_pass and score_mode == "top_scores":
+            seed = score_files(spec, masks, files, segments=(0, 1))
+            seed = seed[seed["doc_id"] >= 0]
+            if len(seed) >= k:
+                spec = replace(spec, min_competitive=float(
+                    np.sort(seed["score"].to_numpy(dtype=np.float32))[-k]
+                ))
+        self._last_placement = self._choose_placement(p)
+        if self._last_placement[0] == "driver":
+            return self._merge(score_files(spec, masks, files), k)
+        return self._merge(self._spark_rows(spec, masks).toPandas(), k)
 
     def search(
         self,
@@ -844,26 +883,10 @@ class IndexSearcher:
         against from its first window (cross-slice threshold sharing,
         TopScoreDocCollector.java:303-318).  Results are identical —
         the shared floor prunes strictly-below only — at the cost of
-        one extra (tiny) Spark job; it pays off when segments are many
-        and k is small."""
-        p = self._prepare(query, score_mode, similarity)
-        if p.cq is None:
-            return self._merge(pd.DataFrame(), k)
-        min_comp = 0.0
-        with self._scan_conf_guard():
-            if two_pass_threshold and score_mode == "top_scores":
-                seed = self._run_prepared(
-                    p, k, score_mode, total_hits_threshold, only_segment=0
-                ).toPandas()
-                seed = seed[seed["doc_id"] >= 0]
-                if len(seed) >= k:
-                    min_comp = float(
-                        np.sort(seed["score"].to_numpy(dtype=np.float32))[-k]
-                    )
-            pdf = self._run_prepared(
-                p, k, score_mode, total_hits_threshold, min_competitive=min_comp
-            ).toPandas()
-        return self._merge(pdf, k)
+        one extra segment read on the driver; it pays off when
+        segments are many and k is small."""
+        return self._top_docs(query, k, score_mode, total_hits_threshold,
+                              similarity, two_pass=two_pass_threshold)
 
     def search_after(
         self,
@@ -881,17 +904,10 @@ class IndexSearcher:
         ``after`` is the previous page's last (score, doc_id); the
         cursor compares exact float32 scores, so pages concatenate to
         the unpaged ranking.  total_hits still counts every match."""
-        if after is None:
-            return self.search(query, k, total_hits_threshold=total_hits_threshold)
-        p = self._prepare(query)
-        if p.cq is None:
-            return self._merge(pd.DataFrame(), k)
-        with self._scan_conf_guard():
-            pdf = self._run_prepared(
-                p, k, "top_scores", total_hits_threshold,
-                after=(float(after[0]), int(after[1])),
-            ).toPandas()
-        return self._merge(pdf, k)
+        if after is not None:
+            after = (float(after[0]), int(after[1]))
+        return self._top_docs(query, k, "top_scores", total_hits_threshold,
+                              after=after)
 
     def matches_df(self, query: Query) -> DataFrame:
         """ALL matching doc ids as a distributed DataFrame (filter /
@@ -912,7 +928,9 @@ class IndexSearcher:
         p = self._prepare(query, score_mode, similarity)
         if p.cq is None:
             return self.spark.createDataFrame([], schema=RESULT_SCHEMA)
-        out = self._run_prepared(p, None, score_mode, 0, max_segment=max_segment)
+        spec, masks = self._kernel_inputs(p, None, score_mode, 0)
+        self._last_placement = ("spark", "lazy DataFrame API")
+        out = self._spark_rows(spec, masks, max_segment=max_segment)
         return out.filter(F.col("doc_id") >= 0)
 
     def search_df(self, query: Query, k: int = 10, with_meta: bool = True, **kw) -> DataFrame:
@@ -1046,15 +1064,14 @@ class IndexSearcher:
         n_segs = max(1, _math.ceil(self.stats.num_docs / seg_size))
         fields = [s.field for s in sort]
         window = min(n_segs, max(1, _math.ceil(4 * k / seg_size)))
-        with self._scan_conf_guard():
-            while True:
-                pdf = (
-                    self._bulk_df(query, "filter", max_segment=window)
-                    .select("doc_id").orderBy("doc_id").limit(k).toPandas()
-                )
-                if len(pdf) >= k or window >= n_segs:
-                    break
-                window = min(n_segs, window * 8)
+        while True:
+            pdf = (
+                self._bulk_df(query, "filter", max_segment=window)
+                .select("doc_id").orderBy("doc_id").limit(k).toPandas()
+            )
+            if len(pdf) >= k or window >= n_segs:
+                break
+            window = min(n_segs, window * 8)
         self.last_sorted_probe = {
             "segments_scanned": int(window),
             "total_segments": int(n_segs),
@@ -1085,13 +1102,13 @@ class IndexSearcher:
     def explain(self, query: Query, doc_id: int,
                 similarity: str | None = None) -> dict:
         """IndexSearcher.explain analog: per-clause score breakdown for
-        one document.  Pulls only the doc's segment (pushdown on
-        segment_id + term) and recomputes each leaf contribution with
-        the same float32 kernels.  ``similarity`` overrides the scoring
-        model exactly like search(similarity=...)."""
-        import numpy as np
-
-        from ..functions.codec import decode_term_postings, encode_docsets
+        one document.  Reads only the doc's segment (the kernel's
+        postings read, narrowed to its segment_id) and recomputes each
+        leaf contribution with the same float32 kernels.
+        ``similarity`` overrides the scoring model exactly like
+        search(similarity=...)."""
+        from ..functions.codec import decode_term_postings
+        from ..functions.wand import _eval_clause
 
         p = self._prepare(query, similarity=similarity)
         q, cq = p.query, p.cq
@@ -1099,28 +1116,20 @@ class IndexSearcher:
             return {"doc_id": doc_id, "matches": False, "description": str(q)}
         seg_id = doc_id // self.cfg.segment_size
         local = doc_id - seg_id * self.cfg.segment_size
-        term_cond = F.col("term").isin(list(p.terms))
-        for mq in p.mt_qs:
-            term_cond = term_cond | self._mt_cond(mq.orig)
-        seg_rows = self.segments.filter(
-            (F.col("segment_id") == seg_id) & term_cond
-        ).toPandas()
-        norm_row = self.norms.filter(F.col("segment_id") == seg_id).collect()
-        if not norm_row:
+        spec = KernelSpec(
+            cq, tuple(p.terms), tuple(mq.orig for mq in p.mt_qs),
+            planner.has_phrase(q), None, "complete", 0, self.cfg.segment_size,
+        )
+        cols, cond = postings_read(spec, (seg_id, seg_id + 1))
+        rows = self._dataset("segments").to_table(
+            columns=cols, filter=cond
+        ).to_pandas()
+        if not len(rows):  # no such segment
             return {"doc_id": doc_id, "matches": False, "description": str(q)}
-        norms = np.frombuffer(norm_row[0]["norms"], dtype=np.uint8).astype(np.int64)
-        pmap = rows_to_posting_map(seg_rows)
-        # point clauses: materialize this segment's matching doc set
-        for pq in p.point_qs:
-            meta_df = self._docmeta()
-            sel = meta_df.filter(
-                (F.col("segment_id") == seg_id)
-                & self._dv_cond(pq, meta_df.schema)
-            )
-            ids = sel.select("doc_id").toArrow().column("doc_id").to_numpy()
-            docset = encode_docsets(ids, self.cfg.segment_size)
-            if seg_id in docset:
-                pmap[pq.token_key()] = docset[seg_id]
+        # point clauses: the segment's docset, as the kernel's mask
+        pmap, norms, _ = _segment_postings(
+            self._point_masks(p.point_qs), seg_id, rows
+        )
         details, total = [], 0.0
         if cq.match_all and not (cq.musts or cq.filters):
             total += float(np.float32(cq.match_all_score))
@@ -1131,8 +1140,6 @@ class IndexSearcher:
             ("FILTER", cq.filters), ("MUST_NOT", cq.must_nots),
         ):
             for c in clauses:
-                from ..functions.wand import _eval_clause
-
                 docs, scores = _eval_clause(pmap, norms, c)
                 idx = np.searchsorted(docs, local)
                 hit = idx < len(docs) and docs[idx] == local
@@ -1193,29 +1200,19 @@ class IndexSearcher:
 
     # ---- internals ----
 
-    def _has_deletes(self) -> bool:
-        """Live-docs check (cheap, per query — deletes may land after
-        this searcher was opened, like reopening a del generation)."""
-        return os.path.exists(os.path.join(self.index_dir, "deletes", "_SUCCESS"))
-
-    def _live_docs(self):
-        """Broadcast {segment_id: encoded deleted local ids}
-        of the current del generation, or None without deletes
-        (operators/deletes).  Loaded once per generation; the generation
-        is re-read per query, so a delete committed after this searcher
-        opened is seen.  The (generation, broadcast) pair is swapped as
-        one tuple, so concurrent searches never pair one generation with
-        another's mask.  A replaced broadcast is left to Spark's context
-        cleaner, which frees it once no plan built on it remains —
-        destroying it here would break DataFrames already returned by
-        matches_df / score_all_df."""
-        if not self._has_deletes():
+    def _live_docs(self) -> dict | None:
+        """{segment_id: encoded deleted local ids} of the current del
+        generation, or None without deletes (operators/deletes).  Loaded
+        once per generation; the generation is re-read per query, so a
+        delete committed after this searcher opened is seen.  The
+        (generation, mask) pair is swapped as one tuple, so concurrent
+        searches never pair one generation with another's mask."""
+        if not os.path.exists(os.path.join(self.index_dir, "deletes", "_SUCCESS")):
             return None
         gen = read_generation(self.index_dir)  # before the table: never older
         cached = self._live_docs_cache
         if cached is None or cached[0] != gen:
-            mask = load_live_docs(self.index_dir, self.cfg.segment_size)
-            cached = (gen, self.spark.sparkContext.broadcast(mask))
+            cached = (gen, load_live_docs(self.index_dir, self.cfg.segment_size))
             self._live_docs_cache = cached
         return cached[1]
 
@@ -1293,49 +1290,28 @@ class IndexSearcher:
         return int(np.ceil((cnt * overlap).sum()))
 
     def _term_docs_df(self, term: str) -> DataFrame:
-        """(segment_id, doc_id) of one term's postings, decoded
-        distributed — the lead iterator the dv path verifies against."""
+        """``doc_id`` of one term's postings — the lead iterator the dv
+        path verifies against; read and decoded on the driver (the lead
+        is the cheap side by construction)."""
+        from ..functions.codec import decode_term_postings
+
+        rows = self._dataset("segments").to_table(
+            columns=_POSTINGS_COLS, filter=pads.field("term") == term
+        ).to_pandas()
         seg_size = self.cfg.segment_size
-        rows = self.segments.filter(F.col("term") == term).select(
-            "segment_id", "df", "singleton_doc", "singleton_freq",
-            "doc_blocks", "doc_block_offsets", "freq_blocks",
-            "freq_block_offsets", "block_last_docs",
-            "impacts_flat", "impacts_offsets",
+        ids = [np.empty(0, np.int64)] + [
+            decode_term_postings(tp)[0].astype(np.int64) + int(seg) * seg_size
+            for seg, g in rows.groupby("segment_id")
+            for tp in rows_to_posting_map(g).values()
+        ]
+        return self.spark.createDataFrame(
+            pd.DataFrame({"doc_id": np.concatenate(ids)}), schema="doc_id bigint"
         )
 
-        def decode(batches):
-            from ..functions.codec import decode_term_postings
-
-            for pdf in batches:
-                for r in pdf.itertuples(index=False):
-                    tp = TermPostings(
-                        df=int(r.df), ttf=0,
-                        singleton_doc=int(r.singleton_doc),
-                        singleton_freq=int(r.singleton_freq),
-                        doc_blocks=bytes(r.doc_blocks),
-                        doc_block_offsets=np.asarray(r.doc_block_offsets, np.int32),
-                        freq_blocks=bytes(r.freq_blocks),
-                        freq_block_offsets=np.asarray(r.freq_block_offsets, np.int32),
-                        pos_blocks=b"",
-                        pos_block_offsets=np.empty(0, np.int32),
-                        block_last_docs=np.asarray(r.block_last_docs, np.int32),
-                        impacts_flat=np.asarray(r.impacts_flat, np.int32),
-                        impacts_offsets=np.asarray(r.impacts_offsets, np.int32),
-                    )
-                    docs, _, _ = decode_term_postings(tp)
-                    yield pd.DataFrame(
-                        {
-                            "segment_id": np.int32(r.segment_id),
-                            "doc_id": docs + int(r.segment_id) * seg_size,
-                        }
-                    )
-
-        return rows.mapInPandas(decode, schema="segment_id int, doc_id bigint")
-
     def _point_masks(self, point_qs, lead=None, dv_keys=frozenset()) -> list[tuple]:
-        """(token, broadcast {segment_id: TermPostings}) per point
-        clause: its doc set, selected by a Spark job, encoded on the
-        driver (codec.encode_docsets) and applied by the kernel as a
+        """(token, {segment_id: TermPostings}) per point clause: its doc
+        set, selected by a Spark job, encoded on the driver
+        (codec.encode_docsets) and applied by the kernel as a
         per-segment mask.  Access-path choice per clause
         (IndexOrDocValuesQuery.java:105-131):
 
@@ -1365,23 +1341,23 @@ class IndexSearcher:
             if use_dv:
                 # dv docsets depend on the lead term, so they bypass the
                 # query cache (Lucene likewise only caches the index side)
-                bc, _ = self._broadcast_docset(self._point_sel(q, lead))
+                docset, _ = self._docset(self._point_sel(q, lead))
             else:
                 key = (self._cache_token, "pts", self._generation(), q.token_key())
-                bc = self.query_cache.get_or_build(
-                    key, lambda q=q: self._broadcast_docset(self._point_sel(q, None))
+                docset = self.query_cache.get_or_build(
+                    key, lambda q=q: self._docset(self._point_sel(q, None))
                 )
-            masks.append((q.token_key(), bc))
+            masks.append((q.token_key(), docset))
         return masks
 
-    def _broadcast_docset(self, sel: DataFrame) -> tuple:
-        """(broadcast of the encoded docset, its exact byte count) of a
-        ``doc_id`` selection."""
+    def _docset(self, sel: DataFrame) -> tuple:
+        """(encoded docset, its exact byte count) of a ``doc_id``
+        selection."""
         from ..functions.codec import docsets_nbytes, encode_docsets
 
         ids = sel.toArrow().column("doc_id").to_numpy()
         docset = encode_docsets(ids, self.cfg.segment_size)
-        return self.spark.sparkContext.broadcast(docset), docsets_nbytes(docset)
+        return docset, docsets_nbytes(docset)
 
     @staticmethod
     def _dv_cond(q, schema=None):
@@ -1569,169 +1545,43 @@ class IndexSearcher:
             self.index_dir,
         )
 
-    def _run_segments(
-        self, cq: CompiledQuery, terms: set[str], need_pos: bool, k: int | None,
-        score_mode: str, threshold: int, point_qs: set | frozenset = frozenset(),
-        min_competitive: float = 0.0, only_segment: int | None = None,
-        lead: tuple | None = None, dv_keys: frozenset = frozenset(),
-        after: tuple | None = None, mt_qs: tuple = (),
-        max_segment: int | None = None,
-    ) -> DataFrame:
-        seg_size = self.cfg.segment_size
-        prune = score_mode == "top_scores"
-        cols = [
-            "segment_id", "term", "df", "ttf", "singleton_doc", "singleton_freq",
-            "doc_blocks", "doc_block_offsets", "freq_blocks", "freq_block_offsets",
-            "block_last_docs", "impacts_flat", "impacts_offsets",
-        ]
-        if need_pos:
-            cols += ["pos_blocks", "pos_block_offsets"]
-        # ONE pushed-down scan fetches the query terms' postings AND the
-        # per-segment sentinel norms row — a segment is self-contained,
-        # so a query is: scan -> kernel per segment -> merge.  Multi-term
-        # union predicates OR their JVM conditions into the same scan
-        # (distributed expansion — no driver-side term list).
-        if cq.match_all or terms or point_qs or mt_qs:
-            cond = F.col("term").isin(list(terms) + [SENTINEL_TERM])
-            for mq in mt_qs:
-                cond = cond | self._mt_cond(mq.orig)
-        else:
-            cond = F.lit(False)
-        seg_rows = self.segments.filter(cond).select(*cols)
-        # per-segment doc-id masks, one broadcast each, put into the
-        # kernel's postings map under their reserved token: point-filter
-        # docsets, and live docs as an implicit MUST_NOT (postings and
-        # stats untouched — Lucene semantics)
-        masks = self._point_masks(point_qs, lead, dv_keys)
-        live = self._live_docs()
-        if live is not None:
-            masks.append((DELETES_TOKEN, live))
-            cq = replace(cq, must_nots=cq.must_nots + [
-                ScoringClause((DELETES_TOKEN,), None, const_score=0.0)
-            ])
-        if only_segment is not None:
-            seg_rows = seg_rows.filter(F.col("segment_id") == only_segment)
+    def _spark_tasks(self, max_segment: int | None = None) -> list[tuple]:
+        """The Spark placement's tasks: the segment ids cut into at most
+        one task wave (defaultParallelism) of ``(lo, hi)`` windows, the
+        first and last open-ended so every id has exactly one owner.
+        Each task reads its window from every segments file (parquet
+        footer statistics prune the row groups outside it), so a
+        segment is scored whole by one task whatever the file layout:
+        the build hash-partitions segments over files, and a foreign
+        layout may split one segment across files."""
+        n_segs = max(1, -(-self.stats.num_docs // self.cfg.segment_size))
         if max_segment is not None:
-            # early-terminated sorted search: restrict the scan to the
-            # leading segment-id prefix.  The predicate reaches the
-            # parquet scan (segments are written sorted by segment_id),
-            # so row groups past the window are PRUNED, not read — the
-            # distributed analog of CollectionTerminatedException.
-            seg_rows = seg_rows.filter(F.col("segment_id") < max_segment)
+            n_segs = min(n_segs, max_segment)
+        n = max(1, min(n_segs, self.spark.sparkContext.defaultParallelism))
+        cuts = [None] + [n_segs * i // n for i in range(1, n)] + [max_segment]
+        return list(zip(cuts, cuts[1:]))
 
-        def kernel(key, seg_pdf: pd.DataFrame) -> pd.DataFrame:
-            seg_id = int(key[0])
-            sent = seg_pdf[seg_pdf["term"] == SENTINEL_TERM]
-            if len(sent) == 0:
-                # the scan always fetches the sentinel with the postings,
-                # so a group without it is a segment split across groups
-                raise ValueError(
-                    f"segment {seg_id}: {len(seg_pdf)} postings rows but "
-                    "no sentinel row (segment split across kernel groups?)"
-                )
-            pmap = rows_to_posting_map(seg_pdf[seg_pdf["term"] != SENTINEL_TERM])
-            for token, bc in masks:
-                if seg_id in bc.value:
-                    pmap[token] = bc.value[seg_id]
-            if pmap.keys() <= {DELETES_TOKEN} and not cq.match_all:
-                # nothing here can match: no postings, no filter docset
-                return pd.DataFrame(
-                    columns=["segment_id", "doc_id", "score", "hits", "hits_exact"]
-                )
-            norms = np.frombuffer(
-                sent["doc_blocks"].iloc[0], dtype=np.uint8
-            ).astype(np.int64)
-            num_docs = int(sent["df"].iloc[0])
-            base = seg_id * seg_size
-            # the paging cursor's doc id is global; segment-local
-            # arithmetic keeps the (score, doc) comparison exact for
-            # every segment (earlier segments: local <= cursor; later:
-            # cursor negative, all locals after it)
-            after_local = (after[0], after[1] - base) if after is not None else None
-            res = score_segment(
-                pmap, norms, cq, k, total_hits_threshold=threshold,
-                prune=prune, num_docs=num_docs, min_competitive=min_competitive,
-                after=after_local,
-            )
-            return pd.DataFrame(
-                {
-                    "segment_id": seg_id,
-                    "doc_id": res.doc_ids + base,
-                    "score": res.scores,
-                    "hits": int(res.hits),
-                    "hits_exact": bool(res.hits_exact),
-                }
-            ) if len(res.doc_ids) else pd.DataFrame(
-                {
-                    "segment_id": [seg_id],
-                    "doc_id": [-1],
-                    "score": [np.float32(0)],
-                    "hits": [int(res.hits)],
-                    "hits_exact": [bool(res.hits_exact)],
-                }
-            )
+    def _spark_rows(self, spec: KernelSpec, masks: list,
+                    max_segment: int | None = None) -> DataFrame:
+        """The Spark placement: one ``mapInArrow`` task per segment
+        window (_spark_tasks), each calling score_files on every
+        segments file within its window; the masks travel as one
+        broadcast.  Lazy — RESULT_SCHEMA rows."""
+        tasks = self._spark_tasks(max_segment)
+        files = self._table_files("segments")
+        bc = self.spark.sparkContext.broadcast(masks) if masks else None
 
-        if self._whole_file_tasks():
-            # ---- one-stage kernel (shuffle elision, guide §2.4) ----
-            # The segments table is bucketed by segment_id at write
-            # time (the encode shuffle keys on segment_id, so each
-            # segment's rows land wholly inside ONE reducer's parquet
-            # file) and _whole_file_tasks() proves the scan cannot
-            # split a file across tasks under the live conf — so every
-            # scan task already holds complete segments and the
-            # groupBy exchange + AQE stage barrier + second task wave
-            # are pure overhead.  Each task groups its own rows and
-            # runs the per-segment kernels in place: scan -> kernel ->
-            # collect, one stage, zero shuffle.  Every mask (point
-            # filters, live docs) rides a broadcast into the kernel, so
-            # only the file layout decides the path: a foreign layout,
-            # or a lazy plan run under a conf that splits files, takes
-            # the shuffle path below with the same kernel.
-            empty = pd.DataFrame(
-                {
-                    "segment_id": pd.Series(dtype=np.int32),
-                    "doc_id": pd.Series(dtype=np.int64),
-                    "score": pd.Series(dtype=np.float32),
-                    "hits": pd.Series(dtype=np.int64),
-                    "hits_exact": pd.Series(dtype=bool),
-                }
-            )
+        def run(batches):
+            task_masks = bc.value if bc is not None else []
+            for batch in batches:
+                for i in batch.column(0).to_pylist():
+                    pdf = score_files(spec, task_masks, files, tasks[i])
+                    yield pa.RecordBatch.from_pandas(
+                        pdf, schema=_RESULT_ARROW, preserve_index=False
+                    )
 
-            def kernel_partition(batches):
-                parts = [pdf for pdf in batches if len(pdf)]
-                if not parts:
-                    yield empty
-                    return
-                allp = (
-                    pd.concat(parts, ignore_index=True)
-                    if len(parts) > 1
-                    else parts[0]
-                )
-                outs = [
-                    kernel((seg_id,), g)
-                    for seg_id, g in allp.groupby("segment_id", sort=False)
-                ]
-                outs = [o for o in outs if len(o)]
-                yield (
-                    pd.concat(outs, ignore_index=True) if outs else empty
-                )
-
-            return seg_rows.mapInPandas(
-                kernel_partition, schema=RESULT_SCHEMA
-            )
-        # ---- shuffle path (file layout not provably whole-file) ----
-        # Explicit repartition with a stated partition count: AQE's
-        # partition coalescing would otherwise collapse the tiny
-        # query-time shuffle to ONE task and serialize every segment
-        # kernel on a single core (measured: q4_and_mid 1.31s -> 0.81s
-        # from this alone).  The groupBy reuses this hash partitioning,
-        # so there is still exactly one exchange.
-        n_kernel = max(2 * self.spark.sparkContext.defaultParallelism, 1)
-        return (
-            seg_rows.repartition(n_kernel, "segment_id")
-            .groupby("segment_id")
-            .applyInPandas(kernel, schema=RESULT_SCHEMA)
-        )
+        n = len(tasks)
+        return self.spark.range(0, n, 1, n).mapInArrow(run, RESULT_SCHEMA)
 
     def _merge(self, pdf: pd.DataFrame, k: int) -> TopDocs:
         """TopDocs.merge: (score desc, doc asc) across segments."""

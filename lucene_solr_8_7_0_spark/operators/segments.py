@@ -317,17 +317,6 @@ def encode_segments(doc_rows: DataFrame, cfg: EngineConfig) -> DataFrame:
     return p.groupby("segment_id").applyInArrow(encode, schema=SEGMENT_SCHEMA)
 
 
-def norms_from_segments(segments: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Per-segment norms view (the standalone .nvd analog), derived
-    from the sentinel rows — used by merge and explain."""
-    return segments.filter(F.col("term") == SENTINEL_TERM).select(
-        "segment_id",
-        (F.col("segment_id").cast("long") * F.lit(cfg.segment_size)).alias("base_doc"),
-        F.col("df").alias("num_docs"),
-        F.col("doc_blocks").alias("norms"),
-    )
-
-
 def lengths_from_segments(segments: DataFrame, cfg: EngineConfig) -> DataFrame:
     """(doc_id, length) exploded from the sentinel rows."""
     seg_size = cfg.segment_size

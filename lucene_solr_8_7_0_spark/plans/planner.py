@@ -208,11 +208,11 @@ def collect_terms(q: Query) -> set[str]:
 
 def collect_multi_term_preds(q: Query) -> list[MultiTermUnionQuery]:
     """All MultiTermUnionQuery leaves, in deterministic order — the
-    searcher ORs their JVM term conditions into the postings scan so
-    the matching rows reach the kernels without a driver-side term
-    list.  IMultiTerm interval sources contribute their inner
-    multi-term queries the same way (their expansion is likewise
-    segment-local)."""
+    searcher ORs their term filters (rewrite.term_read_filter) into the
+    kernel's postings read, so the matching rows reach the kernels
+    without a driver-side term list.  IMultiTerm interval sources
+    contribute their inner multi-term queries the same way (their
+    expansion is likewise segment-local)."""
     if isinstance(q, MultiTermUnionQuery):
         return [q]
     if isinstance(q, IntervalQuery):

@@ -414,7 +414,7 @@ class IMultiTerm:
     the cap).  ``query`` is any multi-term Query (PrefixQuery,
     WildcardQuery, RegexpQuery, TermRangeQuery, ...) — its exact match
     predicate expands against segment-local terms at evaluation time,
-    with the scan predicate pushed down like MultiTermUnionQuery."""
+    with the read predicate pushed down like MultiTermUnionQuery."""
 
     query: object
     max_expansions: int = 128
@@ -635,7 +635,7 @@ class MultiTermUnionQuery(Query):
     MultiTermQuery.java CONSTANT_SCORE_REWRITE): instead of collecting
     the matching terms to the driver and re-emitting them as a literal
     ``IN`` list, the term predicate itself ships both to the postings
-    scan (JVM-side pushdown over the sorted term column — the
+    read (a pyarrow superset filter over the sorted term column — the
     automaton-intersection analog) and to the segment kernel, which
     unions the postings of every LOCAL term the predicate accepts.
     Scores are constant (the wrapper builds one bitset and scores

@@ -3,8 +3,7 @@
 Reference: lucene/core/src/java/org/apache/lucene/search/
 BooleanQuery.java:235-460 plus the rewrite fixpoint in
 IndexSearcher.java:674-683.  These rewrite OUR IR on the driver (plain
-Python — they are above Catalyst, which only ever plans the postings
-scan).
+Python, above the segment kernels' postings read).
 
 Multi-term queries (prefix/wildcard/regexp/fuzzy/range/set) rewrite to
 term disjunctions by consulting the term dictionary, the analog of
@@ -14,6 +13,10 @@ MultiTermQuery's SCORING_BOOLEAN_REWRITE.
 from __future__ import annotations
 
 import re
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 
 from .queries import (
     BooleanClause,
@@ -312,6 +315,11 @@ def _dedup_sum_boosts(qs: list[Query]) -> list[Query]:
 # ---------------- multi-term expansion ----------------
 
 
+def _wildcard_regex(pattern: str) -> str:
+    """A wildcard pattern (``*`` any run, ``?`` any one char) as regex."""
+    return re.escape(pattern).replace(r"\*", ".*").replace(r"\?", ".")
+
+
 def term_predicate(q: Query):
     """The multi-term query's match predicate as a picklable
     ``str -> bool`` callable — the automaton shipped to the segment
@@ -322,7 +330,7 @@ def term_predicate(q: Query):
         p = q.prefix
         return lambda t: t.startswith(p)
     if isinstance(q, WildcardQuery):
-        pat = re.escape(q.pattern).replace(r"\*", ".*").replace(r"\?", ".")
+        pat = _wildcard_regex(q.pattern)
         rx = re.compile(f"^{pat}$")
         return lambda t: rx.match(t) is not None
     if isinstance(q, RegexpQuery):
@@ -350,12 +358,73 @@ def term_predicate(q: Query):
     raise TypeError(type(q))
 
 
+def _prefix_expr(prefix: str):
+    """``term`` starts with ``prefix``, as a pyarrow expression whose
+    [prefix, successor) range prunes row groups by their min/max."""
+    if not prefix:
+        return pads.scalar(True)
+    t = pads.field("term")
+    cond = (t >= prefix) & pc.starts_with(t, pattern=prefix)
+    last = ord(prefix[-1])
+    if last < 0x10FFFF:
+        nxt = 0xE000 if last + 1 == 0xD800 else last + 1  # skip surrogates
+        cond = cond & (t < prefix[:-1] + chr(nxt))
+    return cond
+
+
+def _regex_expr(pattern: str):
+    """``term`` fully matches ``pattern``, by RE2; True (no narrowing)
+    when RE2 rejects the pattern (backreferences, lookarounds)."""
+    rx = f"^(?:{pattern})$"
+    try:
+        pc.match_substring_regex(pa.array([""]), pattern=rx)
+    except pa.ArrowInvalid:
+        return pads.scalar(True)
+    return pc.match_substring_regex(pads.field("term"), pattern=rx)
+
+
+def term_read_filter(q: Query):
+    """The multi-term query's match condition as a pyarrow expression
+    over ``term``, for parquet reads of the termdict and segments
+    (prefixes and ranges prune row groups on the sorted term column =
+    the FST term-index analog).  A SUPERSET of term_predicate: fuzzy
+    keeps only its prefix and length band, regexp/wildcard match by RE2
+    (or not at all when RE2 rejects the pattern); expand_terms and
+    term_predicate stay the authority."""
+    t = pads.field("term")
+    if isinstance(q, PrefixQuery):
+        return _prefix_expr(q.prefix)
+    if isinstance(q, TermRangeQuery):
+        cond = pads.scalar(True)
+        if q.lower is not None:
+            cond = cond & (t >= q.lower if q.include_lower else t > q.lower)
+        if q.upper is not None:
+            cond = cond & (t <= q.upper if q.include_upper else t < q.upper)
+        return cond
+    if isinstance(q, TermInSetQuery):
+        return t.isin(list(q.terms))
+    if isinstance(q, WildcardQuery):
+        prefix = q.pattern.split("*")[0].split("?")[0]
+        pat = _wildcard_regex(q.pattern)
+        return _prefix_expr(prefix) & _regex_expr(pat)
+    if isinstance(q, FuzzyQuery):
+        n = pc.utf8_length(t)
+        return (
+            _prefix_expr(q.term[: q.prefix_length])
+            & (n >= len(q.term) - q.max_edits)
+            & (n <= len(q.term) + q.max_edits)
+        )
+    if isinstance(q, RegexpQuery):
+        return _regex_expr(q.pattern)
+    raise TypeError(type(q))
+
+
 def expand_terms(q: Query, all_terms: list[str]) -> list[str]:
     """Resolve a multi-term query against a sorted term list."""
     if isinstance(q, PrefixQuery):
         return [t for t in all_terms if t.startswith(q.prefix)]
     if isinstance(q, WildcardQuery):
-        pat = re.escape(q.pattern).replace(r"\*", ".*").replace(r"\?", ".")
+        pat = _wildcard_regex(q.pattern)
         rx = re.compile(f"^{pat}$")
         return [t for t in all_terms if rx.match(t)]
     if isinstance(q, RegexpQuery):

@@ -1,10 +1,11 @@
+import os
 import shutil
 import sys
 import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lucene_solr_8_7_0_spark.session import get_spark
 

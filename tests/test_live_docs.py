@@ -1,7 +1,8 @@
 """Per-segment kernel masks — live docs (operators/deletes) and point-
-filter docsets: searches on a snapshot with deletes and filters run
-scan -> kernel -> collect in one stage, answer bitwise like the shuffle
-path, and see every del generation."""
+filter docsets — and the kernel's two placements: searches on a
+snapshot with deletes and filters answer bitwise the same on the driver
+and in Spark (one MapInArrow stage, no exchange), and see every del
+generation."""
 
 import shutil
 
@@ -14,7 +15,7 @@ from lucene_solr_8_7_0_spark.operators import deletes as dl
 from lucene_solr_8_7_0_spark.operators import search as srch
 from lucene_solr_8_7_0_spark.operators.build import build_index
 from lucene_solr_8_7_0_spark.operators.search import IndexSearcher, QueryCache
-from lucene_solr_8_7_0_spark.plans import planner, queries as Q
+from lucene_solr_8_7_0_spark.plans import queries as Q
 from lucene_solr_8_7_0_spark.sources.corpus import corpus_df
 
 N = 300
@@ -98,20 +99,34 @@ def _answers(s):
         if len(first.doc_ids):
             cur = (float(first.scores[-1]), int(first.doc_ids[-1]))
             out[name, "after"] = _bits(s.search_after(q, cur, k=10))
+        out[name, "two_pass"] = _bits(s.search(q, k=3, two_pass_threshold=True))
         out[name, "count"] = s.count(q)
+        out[name, "all"] = sorted(
+            s.search(q, k=N, score_mode="complete").doc_ids.tolist()
+        )
         out[name, "matches"] = sorted(s.matches_df(q).toPandas()["doc_id"])
     return out
 
 
-def test_one_stage_matches_shuffle_path_bitwise(spark, del_dir, monkeypatch):
+def test_driver_matches_spark_placement_bitwise(spark, del_dir, monkeypatch):
+    """The one kernel, placed on the driver and in Spark, answers
+    bitwise the same (ids, float32 score bits, total_hits, relation)
+    with deletes and point-filter masks, for search, search_after,
+    two_pass_threshold and count; matches_df (always Spark) returns
+    the driver's exhaustive hit set."""
     s = IndexSearcher(spark, del_dir, query_cache=QueryCache())
-    with s._scan_conf_guard():
-        assert s._whole_file_tasks()  # the default run takes one stage
-    one_stage = _answers(s)
-    monkeypatch.setattr(s, "_whole_file_tasks", lambda: False)
-    shuffled = _answers(s)
-    assert one_stage == shuffled
-    assert any(one_stage[n, "count"] for n in _queries())
+    choose, placed = s._choose_placement, []
+    monkeypatch.setattr(
+        s, "_choose_placement", lambda p: placed.append(choose(p)) or placed[-1]
+    )
+    driver = _answers(s)
+    assert {pl for pl, _ in placed} == {"driver"}
+    monkeypatch.setattr(s, "_choose_placement", lambda p: ("spark", "forced"))
+    in_spark = _answers(s)
+    assert driver == in_spark
+    assert any(driver[n, "count"] for n in _queries())
+    for n in _queries():
+        assert driver[n, "all"] == driver[n, "matches"], n
 
 
 def test_deleted_docs_excluded(spark, base_dir, del_dir):
@@ -144,14 +159,11 @@ def test_update_snapshot_plan_is_one_stage(spark, base_dir, tmp_path_factory):
     # the victims commit a generation in the new snapshot only
     assert dl.read_generation(base) == 0 and dl.read_generation(out) == 1
     s = IndexSearcher(spark, out, query_cache=QueryCache())
-    q = s._rewrite(Q.TermQuery("public"))
-    terms = planner.collect_terms(q)
-    cq = planner.compile_query(q, s.stats, s._term_stats(terms), "top_scores")
-    with s._scan_conf_guard():
-        df = s._run_segments(cq, terms, False, 10, "top_scores", 1000)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        hits = df.toPandas()
-    assert "MapInPandas" in plan and "Exchange" not in plan
+    p = s._prepare(Q.TermQuery("public"))
+    df = s._spark_rows(*s._kernel_inputs(p, 10, "top_scores", 1000))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    hits = df.toPandas()
+    assert "MapInArrow" in plan and "Exchange" not in plan
     assert not set(meta["doc_id"]) & set(hits["doc_id"])
     assert s.count(Q.TermQuery("zzqqx")) == 3
 
@@ -217,7 +229,7 @@ def test_searcher_sees_later_generation(spark, base_dir, tmp_path_factory):
     dl.delete_documents(spark, d, ids.filter(F.col("doc_id") >= N - 5))
     assert s.count(q) == N - 15
     assert s._live_docs_cache[0] == 2 and s._live_docs_cache[1] is not first[1]
-    assert sorted(s._live_docs().value) == [0, N // CFG.segment_size]
+    assert sorted(s._live_docs()) == [0, N // CFG.segment_size]
 
 
 def test_live_docs_cache_under_threads(spark, base_dir, tmp_path_factory):
@@ -236,7 +248,7 @@ def test_live_docs_cache_under_threads(spark, base_dir, tmp_path_factory):
     def reader():
         for _ in range(20):
             gen = dl.read_generation(d)
-            mask = s._live_docs().value
+            mask = s._live_docs()
             n = sum(tp.df for tp in mask.values())
             if n < gen:  # generation g deletes exactly ids 0..g-1
                 errors.append((gen, n))
@@ -257,82 +269,138 @@ def test_live_docs_cache_under_threads(spark, base_dir, tmp_path_factory):
     assert not errors
 
 
-def test_kernel_rejects_segment_without_sentinel(spark, base_dir):
+def test_kernel_rejects_segment_without_sentinel(spark, base_dir, tmp_path):
+    """score_files raises on a segment whose postings it reads without
+    the segment's sentinel (norms) row."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
     s = IndexSearcher(spark, base_dir, query_cache=QueryCache())
-    q = s._rewrite(Q.TermQuery("public"))
-    terms = planner.collect_terms(q)
-    cq = planner.compile_query(q, s.stats, s._term_stats(terms), "top_scores")
-    # simulate a split segment: the group that lost its sentinel row
-    s.segments = s.segments.filter(
-        ~((F.col("segment_id") == 1) & (F.col("term") == srch.SENTINEL_TERM))
+    spec, masks = s._kernel_inputs(
+        s._prepare(Q.TermQuery("public")), 10, "top_scores", 1000
     )
-    with pytest.raises(Exception, match="segment 1: .* no sentinel row"):
-        with s._scan_conf_guard():
-            s._run_segments(cq, terms, False, 10, "top_scores", 1000).toPandas()
+    rows = pads.dataset(s._table_files("segments"), format="parquet").to_table()
+    # simulate a split segment: the file that lost its sentinel row
+    sent1 = pc.and_(pc.equal(rows["segment_id"], 1),
+                    pc.equal(rows["term"], srch.SENTINEL_TERM))
+    f = str(tmp_path / "part-00000.parquet")
+    pq.write_table(rows.filter(pc.invert(sent1)), f)
+    with pytest.raises(ValueError, match="segment 1: .* no sentinel row"):
+        srch.score_files(spec, masks, [f])
 
 
-def test_alignment_cache_follows_files(spark, base_dir, tmp_path_factory):
+def _foreign_layout(src: str, dst: str) -> None:
+    """Copy ``src`` to ``dst`` and rewrite its segments table as three
+    files where segment 2's rows straddle two of them: A holds segments
+    0-1 and part of segment 2's postings, B the rest of segment 2 with
+    its sentinel, C segments 3-4."""
     import glob
     import os
 
-    d = str(tmp_path_factory.mktemp("livealign"))
-    shutil.copytree(base_dir, d, dirs_exist_ok=True)
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    shutil.copytree(src, dst, dirs_exist_ok=True)
+    old = sorted(glob.glob(os.path.join(dst, "segments", "*.parquet")))
+    rows = pads.dataset(old, format="parquet").to_table().sort_by(
+        [("segment_id", "ascending"), ("term", "ascending")]
+    )
+    for f in old:
+        os.remove(f)
+    seg = rows["segment_id"]
+    two = rows.filter(pc.equal(seg, 2))
+    half = two.num_rows // 2  # the sentinel ("\x00...") sorts first: B
+    assert two["term"][0].as_py() == srch.SENTINEL_TERM
+    parts = {
+        "A": pa.concat_tables([rows.filter(pc.less(seg, 2)), two.slice(half)]),
+        "B": two.slice(0, half),
+        "C": rows.filter(pc.greater(seg, 2)),
+    }
+    for name, tbl in parts.items():
+        pq.write_table(tbl, os.path.join(dst, "segments", f"part-{name}.parquet"))
+
+
+def test_foreign_layout_keeps_placements_bitwise(spark, del_dir,
+                                                 tmp_path_factory, monkeypatch):
+    """One segment's rows split across two files: every Spark task
+    reads its segment window from all files, so the segment is still
+    scored whole, and both placements answer bitwise like the original
+    layout."""
+    d = str(tmp_path_factory.mktemp("liveforeign"))
+    _foreign_layout(del_dir, d)
     s = IndexSearcher(spark, d, query_cache=QueryCache())
-    first = s._segments_alignment()
-    aligned, _, total, n_files = first
-    assert aligned and s._segments_alignment() == first
-    biggest = max(glob.glob(os.path.join(d, "segments", "*.parquet")),
-                  key=os.path.getsize)
-    # a foreign layout: the same file twice -> its segments straddle
-    shutil.copy(biggest, os.path.join(d, "segments", "part-99999-copy.parquet"))
-    aligned2, _, total2, n_files2 = s._segments_alignment()
-    assert (aligned2, n_files2) == (False, n_files + 1) and total2 > total
+    tasks = s._spark_tasks()
+    assert len(tasks) > 1 and tasks[0][0] is None and tasks[-1][1] is None
+    assert all(x[1] == y[0] for x, y in zip(tasks, tasks[1:]))
+    want = _answers(IndexSearcher(spark, del_dir, query_cache=QueryCache()))
+    assert _answers(s) == want
+    monkeypatch.setattr(s, "_choose_placement", lambda p: ("spark", "forced"))
+    assert _answers(s) == want
 
 
-def test_scan_conf_guard_exception_safe(spark, base_dir, monkeypatch):
-    mpb = srch._MPB
+def test_search_leaves_split_conf_untouched(spark, del_dir, monkeypatch):
+    """No placement writes the session's scan-split conf."""
     conf = spark.conf
-    saved = conf.get(mpb)
-    s = IndexSearcher(spark, base_dir, query_cache=QueryCache())
-
-    def boom(*a):
-        raise RuntimeError("conf write failed")
-
-    monkeypatch.setattr(s, "_set_query_splits", boom)
-    with pytest.raises(RuntimeError, match="conf write failed"):
-        with s._scan_conf_guard():
-            pass
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.minPartitionNum")
+    before = [conf.get(k, None) for k in keys]
+    writes = []
+    monkeypatch.setattr(conf, "set", lambda *a: writes.append(a))
+    monkeypatch.setattr(conf, "unset", lambda *a: writes.append(a))
+    s = IndexSearcher(spark, del_dir, query_cache=QueryCache())
+    q = _queries()["range_filter"]
+    s.search(q, k=10)
+    s.matches_df(q).count()
+    monkeypatch.setattr(s, "_choose_placement", lambda p: ("spark", "forced"))
+    s.search(q, k=10)
     monkeypatch.undo()
-    assert srch._SCAN_CONF_STATE == {"depth": 0} and conf.get(mpb) == saved
+    assert writes == [] and [conf.get(k, None) for k in keys] == before
 
-    # an original value that cannot be read is unset on exit, not left
-    # at the query-time split size
-    conf.unset(mpb)
-    default = conf.get(mpb)
-    conf.set(mpb, "3m")
-    real_get = conf.get
 
-    def get(key, *a):
-        if key == mpb:
-            raise RuntimeError("unreadable")
-        return real_get(key, *a)
-
+def test_driver_placement_launches_no_jobs(spark, del_dir):
+    """Top-k searches on the snapshot with deletes run in-process on
+    the driver: no Spark job, from the first search on."""
+    s = IndexSearcher(spark, del_dir, query_cache=QueryCache())
+    qs = _queries()
+    sc = spark.sparkContext
+    sc.setJobGroup("driver_placement", "searches")
     try:
-        monkeypatch.setattr(conf, "get", get)
-        with s._scan_conf_guard():
-            assert real_get(mpb) not in ("3m", default)
-        monkeypatch.undo()
-        assert conf.get(mpb) == default
-        assert srch._SCAN_CONF_STATE == {"depth": 0}
+        for name in ("term", "and", "or_msm", "phrase", "must_not", "prefix"):
+            td = s.search(qs[name], k=10)
+            assert s._last_placement[0] == "driver", (name, s._last_placement)
+            cur = (float(td.scores[-1]), int(td.doc_ids[-1]))
+            s.search_after(qs[name], cur, k=10)
+            s.search(qs[name], k=5, two_pass_threshold=True)
+            assert s.count(qs[name]) >= td.total_hits > 0
     finally:
-        monkeypatch.undo()
-        conf.set(mpb, saved)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("driver_placement")) == []
+
+
+def test_file_uri_index_runs_both_placements(spark, del_dir, monkeypatch):
+    s = IndexSearcher(spark, "file://" + del_dir, query_cache=QueryCache())
+    assert s.index_dir == del_dir
+    q = _queries()["range_filter"]
+    want = _bits(IndexSearcher(spark, del_dir, query_cache=QueryCache()).search(q))
+    assert _bits(s.search(q)) == want and s._last_placement[0] == "driver"
+    monkeypatch.setattr(s, "_choose_placement", lambda p: ("spark", "forced"))
+    assert _bits(s.search(q)) == want
+
+
+def test_unsupported_index_scheme_rejected(spark):
+    for uri, scheme in (("hdfs://namenode/idx", "hdfs"), ("s3a://bucket/idx", "s3a"),
+                        ("file://otherhost/idx", "file")):
+        with pytest.raises(ValueError, match=f"unsupported .*scheme '{scheme}'"):
+            IndexSearcher(spark, uri, query_cache=QueryCache())
 
 
 @pytest.mark.parametrize("path", ["index", "dv"])
 def test_filtered_search_plan_is_one_stage(spark, del_dir, path):
-    """A range-filtered search on a snapshot with deletes: the docset is
-    a kernel mask, so scan -> kernel -> collect is one stage, whichever
+    """A range-filtered search on a snapshot with deletes in the Spark
+    placement: the docset is a kernel mask, so segment windows -> kernel ->
+    collect is one MapInArrow stage without an exchange, whichever
     access path selected it (a rare lead term forces the dv side)."""
     s = IndexSearcher(spark, del_dir, query_cache=QueryCache())
     td = s.termdict.toPandas().sort_values(["df", "term"])
@@ -341,21 +409,18 @@ def test_filtered_search_plan_is_one_stage(spark, del_dir, path):
     b = Q.Builder()
     b.add(Q.TermQuery(lead), Q.Occur.MUST)
     b.add(Q.IndexOrDocValuesQuery(rng) if path == "dv" else rng, Q.Occur.FILTER)
-    with s._scan_conf_guard():
-        df = s._run_prepared(s._prepare(b.build()), 10, "top_scores", 1000)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        hits = df.toPandas()
+    df = s._spark_rows(*s._kernel_inputs(s._prepare(b.build()), 10,
+                                         "top_scores", 1000))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    hits = df.toPandas()
     assert set(s._last_access_paths.values()) == {path}
-    assert "MapInPandas" in plan
-    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan
+    assert "MapInArrow" in plan and "Exchange" not in plan
     assert (hits["doc_id"] >= 0).any()
 
 
-def test_term_stats_pyarrow_matches_spark(spark, base_dir, monkeypatch):
-    """The driver-side pyarrow term-stats read returns exactly what the
+def test_term_stats_pyarrow_matches_spark(spark, base_dir):
+    """The driver-side pyarrow term-stats read returns exactly what a
     Spark termdict scan returns, for present, absent and mixed terms."""
-    import pyarrow.dataset as pads
-
     s = IndexSearcher(spark, base_dir, query_cache=QueryCache())
     td = s.termdict.toPandas().sort_values(["df", "term"])["term"].tolist()
     rare, mid, hot = td[0], td[len(td) // 2], td[-1]
@@ -364,15 +429,15 @@ def test_term_stats_pyarrow_matches_spark(spark, base_dir, monkeypatch):
         {"zzqqx_absent", "qqzz_absent"},
         {"public", rare, "zzqqx_absent"},
     ]
-    termdict, s.termdict = s.termdict, None  # a Spark fallback would raise
+    termdict, s.termdict = s.termdict, None  # no Spark read may happen
     arrow = [s._term_stats(t) for t in sets]
     s.termdict = termdict
-
-    def no_pyarrow(*a, **kw):
-        raise OSError("pyarrow read unavailable")
-
-    monkeypatch.setattr(pads, "dataset", no_pyarrow)
-    assert [s._term_stats(t) for t in sets] == arrow
+    scans = [
+        {r["term"]: (r["df"], r["ttf"])
+         for r in termdict.filter(F.col("term").isin(list(t))).collect()}
+        for t in sets
+    ]
+    assert arrow == scans
     present, absent, mixed = arrow
     assert set(present) == sets[0] and absent == {}
     assert set(mixed) == {"public", rare} and mixed["public"] == present["public"]

@@ -364,7 +364,14 @@ def test_merge_stats_equal_reaggregation(spark, full_and_split, cut):
     got = pq.read_table(f"{m_dir}/colstats").to_pandas()
     assert list(got.itertuples(index=False, name=None)) == want
     s = IndexSearcher(spark, m_dir)
-    assert s._segments_alignment()[0]  # one-stage path still holds
+    # the Spark placement's segment windows give every merged segment
+    # exactly one owning task
+    tasks = s._spark_tasks()
+    segs = pq.read_table(f"{m_dir}/segments", columns=["segment_id"]).column(0)
+    for seg in set(segs.to_pylist()):
+        owners = [(lo, hi) for lo, hi in tasks
+                  if (lo is None or lo <= seg) and (hi is None or seg < hi)]
+        assert len(owners) == 1, (seg, tasks)
     s_full = IndexSearcher(spark, full_dir)
     for q in _queries():
         assert _results(s_full, q) == _results(s, q), str(q)

@@ -1,10 +1,12 @@
-"""Physical plan quality: the things `.explain("formatted")` must show.
+"""Physical plan quality: the things the postings read and
+`.explain("formatted")` must show.
 
-* term predicates reach the parquet scan (PushedFilters) — the FST
-  term-index analog is parquet row-group pruning on the sorted term
-  column,
+* term predicates reach the kernel's parquet read (pyarrow filter
+  pushdown) — the FST term-index analog is parquet row-group pruning on
+  the sorted term column,
 * non-phrase queries never read pos_blocks (column pruning = the .pos
   file staying cold),
+* the Spark placement is one MapInArrow stage over segment windows,
 * the rewrite fixpoint produces the shapes Lucene's
   TestBooleanRewrites pins.
 """
@@ -37,18 +39,34 @@ def _explain(df) -> str:
     return buf.getvalue()
 
 
+def _read(engine, q):
+    from lucene_solr_8_7_0_spark.operators.search import postings_read
+
+    spec, _ = engine._kernel_inputs(engine._prepare(q), 10, "top_scores", 0)
+    return postings_read(spec)
+
+
 def test_term_filter_pushed_to_parquet_scan(engine):
+    import pyarrow.dataset as pads
+
+    from lucene_solr_8_7_0_spark.operators.segments import SENTINEL_TERM
+
+    cols, cond = _read(engine, Q.term_and(["public", "return"]))
+    # the IN (public, return, sentinel) predicate is the read's filter
+    assert "is_in(term" in str(cond), str(cond)
+    rows = pads.dataset(engine._table_files("segments"), format="parquet").to_table(
+        columns=["term"], filter=cond
+    )
+    assert set(rows.column("term").to_pylist()) == {"public", "return", SENTINEL_TERM}
     plan = _explain(engine.matches_df(Q.term_and(["public", "return"])))
-    assert "PushedFilters" in plan
-    # the IN (public, return) predicate must reach the scan
-    assert "In(term" in plan or "term IN" in plan, plan[:2000]
+    assert "MapInArrow" in plan and "Exchange" not in plan, plan[:2000]
 
 
 def test_pos_blocks_pruned_for_non_phrase(engine):
-    plan = _explain(engine.matches_df(Q.TermQuery("public")))
-    assert "pos_blocks" not in plan
-    plan_phrase = _explain(engine.matches_df(Q.PhraseQuery(("public", "return"))))
-    assert "pos_blocks" in plan_phrase
+    cols, _ = _read(engine, Q.TermQuery("public"))
+    assert "pos_blocks" not in cols
+    cols_phrase, _ = _read(engine, Q.PhraseQuery(("public", "return")))
+    assert "pos_blocks" in cols_phrase
 
 
 def test_rewrite_shapes():
@@ -100,3 +118,36 @@ def test_too_many_clauses():
         b.add(Q.TermQuery(f"t{i}"), Q.Occur.SHOULD)
     with pytest.raises(ValueError):
         b.build()
+
+
+def test_term_read_filter_superset_of_predicate():
+    """The pyarrow read filter of every multi-term query keeps at least
+    the terms its exact predicate accepts (exactly those for prefixes,
+    ranges and sets), including prefixes ending next to the surrogate
+    block or at the last code point."""
+    import pyarrow as pa
+
+    from lucene_solr_8_7_0_spark.plans.rewrite import expand_terms, term_read_filter
+
+    vocab = sorted({
+        "get", "getx", "geu", "ge", "g", "gf", "t0100", "t0999", "t1999",
+        "ab", "abc", "abd", "ae", "\u00e9t\u00e9", "\u00e9tu",
+        "g\ud7ffx", "g\ud7ff", "g\ue000", "a\U0010ffff", "a\U0010ffffz", "b",
+    })
+    tbl = pa.table({"term": vocab})
+    cases = [
+        (Q.PrefixQuery("ge"), True), (Q.PrefixQuery("g\ud7ff"), True),
+        (Q.PrefixQuery("a\U0010ffff"), True), (Q.PrefixQuery("\u00e9t"), True),
+        (Q.TermRangeQuery("ab", "ae", True, False), True),
+        (Q.TermInSetQuery(("abc", "zz", "get")), True),
+        (Q.WildcardQuery("g*t?"), False), (Q.WildcardQuery("*999"), False),
+        (Q.RegexpQuery("t0[1]00"), False), (Q.RegexpQuery("(a)\\1b?"), False),
+        (Q.FuzzyQuery("abd", max_edits=1), False),
+        (Q.FuzzyQuery("getx", max_edits=1, prefix_length=2), False),
+    ]
+    for q, exact in cases:
+        kept = set(tbl.filter(term_read_filter(q)).column("term").to_pylist())
+        want = set(expand_terms(q, vocab))
+        assert want <= kept, (q, want - kept)
+        if exact:
+            assert kept == want, (q, kept ^ want)

@@ -8,11 +8,12 @@ Usage: python tools/bench_sorted.py [n_files] [k] [term]
 """
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -2,10 +2,11 @@
 queries() entry and its oracle_sql() side-by-side on sf0.01 and
 compare row counts + order-insensitive values (column-name-sorted)."""
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import numpy as np

@@ -6,10 +6,11 @@ claims stay tied to actual `.explain("formatted")` output.
 Usage: python tools/explain_audit.py [sf_dir]
 """
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -20,7 +21,7 @@ from lucene_solr_8_7_0_spark.session import get_spark  # noqa: E402
 INTERESTING = re.compile(
     r"PushedFilters: \[[^\]]*[a-z][^\]]*\]|ReadSchema:|"
     r"WholeStageCodegen|BroadcastHashJoin|SortMergeJoin|"
-    r"TakeOrderedAndProject|HashAggregate|Exchange "
+    r"TakeOrderedAndProject|HashAggregate|Exchange |MapInArrow"
 )
 
 
@@ -47,7 +48,8 @@ def main():
     spark = get_spark(cores=4, shuffle_partitions=8, app_name="explain_audit")
     s = e._searcher(spark, sf)
 
-    audit("term scan (bulk filter)", s.matches_df(Q.TermQuery("data")))
+    audit("term matches (Spark placement: segment windows -> MapInArrow)",
+          s.matches_df(Q.TermQuery("data")))
     audit("bm25 topk (per-segment kernel)",
           s.search_df(Q.term_or(["data", "join"], 1), k=10))
     from lucene_solr_8_7_0_spark.operators.components import (

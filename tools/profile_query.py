@@ -3,25 +3,36 @@
 Builds (or resumes) a bench-identical index from the cached bench
 corpus, then breaks each headline query's wall into driver phases:
 
-  prepare   IndexSearcher._prepare: rewrite (may probe the termdict for
-            multi-term queries), term stats, compile, access plan
-  plan      _run_prepared DataFrame construction (Catalyst analysis,
-            plus one docset job per uncached point clause)
-  exec      .toPandas() (the main scan -> kernel -> collect job)
+  prepare   IndexSearcher._prepare: rewrite (prefix/wildcard queries
+            probe the termdict with pyarrow), term stats, compile,
+            access plan
+  masks     IndexSearcher._kernel_inputs: point-filter docsets (a Spark
+            job per uncached clause) and the live-docs mask
+  place     IndexSearcher._choose_placement (printed with its reason)
+  read      driver placement: the pyarrow postings read (score_files)
+  kernel    driver placement: decode + score per segment (score_files)
+  exec      spark placement: the MapInArrow job over segment windows,
+            collected
   merge     driver-side TopDocs.merge
+
+read and kernel come from score_files' in-process timestamps.
 
 Usage: python tools/profile_query.py [n_files] [reps]
 """
 
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lucene_solr_8_7_0_spark.config import EngineConfig  # noqa: E402
 from lucene_solr_8_7_0_spark.operators.build import build_index  # noqa: E402
-from lucene_solr_8_7_0_spark.operators.search import IndexSearcher  # noqa: E402
+from lucene_solr_8_7_0_spark.operators.search import (  # noqa: E402
+    IndexSearcher,
+    score_files,
+)
 from lucene_solr_8_7_0_spark.plans import queries as Q  # noqa: E402
 from lucene_solr_8_7_0_spark.session import get_spark  # noqa: E402
 from lucene_solr_8_7_0_spark.sources.corpus import corpus_df  # noqa: E402
@@ -29,38 +40,45 @@ from lucene_solr_8_7_0_spark.sources.corpus import corpus_df  # noqa: E402
 N_FILES = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
 REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+TMP = tempfile.gettempdir()
 
 
 def phases(searcher, query, k=10):
+    """({phase: seconds}, (placement, reason)) of one top-k search."""
     t = {}
-    t0 = time.time()
+    t0 = time.perf_counter()
     p = searcher._prepare(query)
-    t["prepare"] = time.time() - t0
-    with searcher._scan_conf_guard():  # the split conf search() runs under
-        t0 = time.time()
-        df = searcher._run_prepared(p, k, "top_scores", 1000)
-        t["plan"] = time.time() - t0
-        t0 = time.time()
-        pdf = df.toPandas()
-        t["exec"] = time.time() - t0
-    t0 = time.time()
+    t["prepare"] = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    spec, masks = searcher._kernel_inputs(p, k, "top_scores", 1000)
+    t["masks"] = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    placement = searcher._choose_placement(p)
+    t["place"] = time.perf_counter() - t0
+    if placement[0] == "driver":
+        pdf = score_files(spec, masks, searcher._table_files("segments"), timings=t)
+    else:
+        t0 = time.perf_counter()
+        pdf = searcher._spark_rows(spec, masks).toPandas()
+        t["exec"] = time.perf_counter() - t0
+    t0 = time.perf_counter()
     searcher._merge(pdf, k)
-    t["merge"] = time.time() - t0
+    t["merge"] = time.perf_counter() - t0
     t["total"] = sum(t.values())
-    return t
+    return t, placement
 
 
 def main():
     spark = get_spark(cores=CPUS, shuffle_partitions=4 * CPUS,
                       app_name="profile_query")
     spark.sparkContext.setLogLevel("ERROR")
-    corpus_dir = os.path.join("/tmp", f"bench_corpus_{N_FILES}")
+    corpus_dir = os.path.join(TMP, f"bench_corpus_{N_FILES}")
     if not os.path.exists(os.path.join(corpus_dir, "_SUCCESS")):
         corpus_df(spark, N_FILES, seed=42).write.mode("overwrite").parquet(
             corpus_dir
         )
     docs = spark.read.parquet(corpus_dir)
-    idx_dir = f"/tmp/prof_idx_{N_FILES}"
+    idx_dir = os.path.join(TMP, f"prof_idx_{N_FILES}")
     cfg = EngineConfig(segment_size=max(1024, N_FILES // (4 * CPUS)))
     t0 = time.time()
     res = build_index(spark, docs, idx_dir, cfg, resume=True)
@@ -82,12 +100,13 @@ def main():
     for name, q in qs.items():
         best = None
         for _ in range(REPS):
-            t = phases(searcher, q)
+            t, placement = phases(searcher, q)
             if best is None or t["total"] < best["total"]:
                 best = t
         print(
-            f"{name}: total={best['total']:.3f} "
+            f"{name}: total={best['total']:.3f} placement={placement[0]} "
             + " ".join(f"{k}={v:.3f}" for k, v in best.items() if k != "total")
+            + f"  ({placement[1]})"
         )
     spark.stop()
 
