@@ -364,13 +364,22 @@ def build_index(
     )
 
 
-def write_config(index_dir: str, cfg: EngineConfig) -> None:
+def write_config(index_dir: str, cfg: EngineConfig,
+                 sorted_docs: int | None = None) -> None:
     """Persist every result-affecting setting of ``cfg`` as
     ``engine_config.json`` — the one writer for builds and merges, so a
-    merged snapshot analyzes its next delta exactly like the base."""
+    merged snapshot analyzes its next delta exactly like the base.
+
+    ``sorted_docs`` records how many leading doc ids follow
+    ``cfg.index_sort`` (ascending doc id = the index sort order, ties
+    by repo, path): a commit appends docs numbered after the base, so
+    only the base's range stays sorted.  A build omits it: its whole
+    doc-id range is sorted."""
+    extra = {} if sorted_docs is None else {"sorted_docs": int(sorted_docs)}
     with open(os.path.join(index_dir, "engine_config.json"), "w") as f:
         json.dump(
             {
+                **extra,
                 "k1": cfg.k1, "b": cfg.b, "analyzer": cfg.analyzer,
                 "ascii_folding": cfg.ascii_folding,
                 "html_strip": cfg.html_strip,
@@ -390,9 +399,17 @@ def write_config(index_dir: str, cfg: EngineConfig) -> None:
         )
 
 
+def sorted_docs(index_dir: str) -> int | None:
+    """The leading doc-id count that follows the index sort
+    (``write_config``); None when the whole index does."""
+    with open(os.path.join(index_dir, "engine_config.json")) as f:
+        return json.load(f).get("sorted_docs")
+
+
 def load_config(index_dir: str) -> EngineConfig:
     with open(os.path.join(index_dir, "engine_config.json")) as f:
         d = json.load(f)
+    d.pop("sorted_docs", None)
     d["stopwords"] = tuple(d.get("stopwords", ()))
     d["index_sort"] = tuple(
         (f_, bool(r)) for f_, r in d.get("index_sort", ())

@@ -21,9 +21,11 @@ merge expunges them.  This mirrors that exactly:
   ranking, without adding rows to the postings scan,
 * stats/termdict are intentionally untouched (Lucene's docFreq also
   counts deleted docs until merge),
-* ``update_documents`` = add_documents + delete-by-key in the new
-  snapshot — the IndexWriter.updateDocument analog; the old snapshot
-  is left untouched.
+* ``update_documents`` is the IndexWriter.updateDocument analog: one
+  ``merge.add_documents`` commit that writes the new snapshot, carries
+  the base's deletes table (doc ids are stable across merges) and
+  commits the replaced docs as its next del generation; the old
+  snapshot is left untouched.
 
 Scale shape: deletes are a tiny table keyed by doc_id, read on the
 driver with pyarrow and grouped by ``doc_id // segment_size``; the
@@ -33,7 +35,6 @@ searcher re-reads it only when the generation counter moves.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -81,25 +82,33 @@ def load_live_docs(index_dir: str, segment_size: int) -> dict:
     return encode_docsets(ids.column("doc_id").to_numpy(), segment_size)
 
 
+def write_deletes(index_dir: str, ids) -> int:
+    """Commit a new del generation from an Arrow table of global
+    ``doc_id``s, driver-side: one parquet file, the ``_SUCCESS`` marker
+    the searcher keys "this snapshot has deletes" on, and the bumped
+    generation.  Returns the number of ids written."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    if ids.num_rows:
+        d = deletes_path(index_dir)
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(ids, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+        open(os.path.join(d, "_SUCCESS"), "w").close()
+        _bump_generation(index_dir)
+    return ids.num_rows
+
+
 def delete_documents(
     spark: SparkSession, index_dir: str, doc_ids: DataFrame
 ) -> int:
     """Mark docs deleted (by global doc_id).  Appends a new del
     generation; idempotent at read time (ids are de-duplicated when
     the mask is built).  Returns the number of ids written."""
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    ids = doc_ids.select(F.col("doc_id").cast("long")).toArrow()
-    if ids.num_rows:
-        d = deletes_path(index_dir)
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(ids, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
-        # the searcher keys "this snapshot has deletes" on the marker
-        open(os.path.join(d, "_SUCCESS"), "w").close()
-        _bump_generation(index_dir)
-    return ids.num_rows
+    return write_deletes(
+        index_dir, doc_ids.select(F.col("doc_id").cast("long")).toArrow()
+    )
 
 
 def delete_by_query(spark: SparkSession, index_dir: str, searcher, query) -> int:
@@ -115,25 +124,14 @@ def update_documents(
     new_docs: DataFrame,
     out_dir: str,
     key_cols: list[str] | None = None,
-) -> None:
-    """IndexWriter.updateDocument analog: add_documents the
-    replacements into a new snapshot ``out_dir``, then mark deleted, in
-    ``out_dir`` only, the old docs with the same (repo, path) keys.
-    ``index_dir`` is never written, so it stays the commit point it
-    was: a reader on it keeps seeing the replaced docs."""
+):
+    """IndexWriter.updateDocument analog: one ``add_documents`` commit
+    of the replacements into a new snapshot ``out_dir`` that also marks
+    deleted, in ``out_dir`` only, the old docs with the same key
+    columns (default (repo, path)).  ``index_dir`` is never written, so
+    it stays the commit point it was: a reader on it keeps seeing the
+    replaced docs.  Returns the commit's ``merge.CommitInfo``."""
     from .merge import add_documents
 
-    key_cols = key_cols or ["repo", "path"]
-    meta = spark.read.parquet(os.path.join(index_dir, "docmeta"))
-    victims = meta.join(
-        new_docs.select(*key_cols).distinct(), key_cols, "left_semi"
-    ).select("doc_id")
-    add_documents(spark, index_dir, new_docs, out_dir)
-    # the new snapshot starts from the old deletion mask (doc ids are
-    # global and stable across merges, so it transfers verbatim): a
-    # file copy of the table and its _GENERATION counter, no Spark
-    # job; the victims then commit the next generation in out_dir only
-    src = deletes_path(index_dir)
-    if os.path.exists(src):
-        shutil.copytree(src, deletes_path(out_dir), dirs_exist_ok=True)
-    delete_documents(spark, out_dir, victims)
+    return add_documents(spark, index_dir, new_docs, out_dir,
+                         delete_keys=key_cols or ["repo", "path"])

@@ -44,45 +44,48 @@ def use_jvm_tokenizer(cfg: EngineConfig) -> bool:
             and not cfg.max_doc_tokens)
 
 
+def analyze_docs(doc_ids, texts, cfg: EngineConfig):
+    """The Python chain over one batch of documents: ``doc_ids`` (an
+    Arrow int64 array) and their ``texts`` (a pandas Series) ->
+    RecordBatch(doc_id, terms[], positions[], length), one row per
+    document.  Shared by ``invert`` and the driver-placed commit
+    (operators/merge.py)."""
+    import pyarrow as pa
+
+    tb = analyze_batch(texts, cfg.analyzer, cfg.max_token_length,
+                       tuple(cfg.stopwords), cfg.ascii_folding,
+                       cfg.html_strip, tuple(cfg.index_synonyms),
+                       cfg.max_doc_tokens)
+    # synonyms are appended after the primary tokens, out of doc
+    # order: a stable sort regroups each doc's tokens
+    order = np.argsort(tb.doc_idx, kind="stable")
+    offsets = pa.array(np.concatenate(([0], np.cumsum(
+        np.bincount(tb.doc_idx, minlength=len(texts))
+    ))).astype(np.int32))
+    return pa.RecordBatch.from_arrays(
+        [
+            doc_ids,
+            pa.ListArray.from_arrays(offsets, pa.array(
+                tb.terms.to_numpy()[order], type=pa.string()
+            )),
+            pa.ListArray.from_arrays(offsets, pa.array(
+                tb.positions[order], type=pa.int32()
+            )),
+            pa.array(tb.doc_lengths, type=pa.int32()),
+        ],
+        names=["doc_id", "terms", "positions", "length"],
+    )
+
+
 def invert(
     docs: DataFrame, cfg: EngineConfig, content_col: str = "content"
 ) -> DataFrame:
     """docs(doc_id, content, ...) -> (doc_id, terms[], positions[],
     length) through the Python analysis chain, one row per document."""
-    import pyarrow as pa
-
-    analyzer = cfg.analyzer
-    max_len = cfg.max_token_length
-    stopwords = tuple(cfg.stopwords)
-    folding = cfg.ascii_folding
-    strip_html = cfg.html_strip
-    synonyms = tuple(cfg.index_synonyms)
-    max_doc = cfg.max_doc_tokens
 
     def run(batches):
         for rb in batches:
-            tb = analyze_batch(rb.column(1).to_pandas(), analyzer, max_len,
-                               stopwords, folding, strip_html, synonyms,
-                               max_doc)
-            # synonyms are appended after the primary tokens, out of doc
-            # order: a stable sort regroups each doc's tokens
-            order = np.argsort(tb.doc_idx, kind="stable")
-            offsets = pa.array(np.concatenate(([0], np.cumsum(
-                np.bincount(tb.doc_idx, minlength=rb.num_rows)
-            ))).astype(np.int32))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(0),
-                    pa.ListArray.from_arrays(offsets, pa.array(
-                        tb.terms.to_numpy()[order], type=pa.string()
-                    )),
-                    pa.ListArray.from_arrays(offsets, pa.array(
-                        tb.positions[order], type=pa.int32()
-                    )),
-                    pa.array(tb.doc_lengths, type=pa.int32()),
-                ],
-                names=["doc_id", "terms", "positions", "length"],
-            )
+            yield analyze_docs(rb.column(0), rb.column(1).to_pandas(), cfg)
 
     return docs.select("doc_id", content_col).mapInArrow(
         run, schema=INVERTED_SCHEMA
@@ -92,8 +95,15 @@ def invert(
 def invert_doc_arrays(
     docs: DataFrame, cfg: EngineConfig, content_col: str = "content"
 ) -> DataFrame:
-    """JVM-side inversion input, ONE ROW PER DOCUMENT:
-    (doc_id, terms array<string>, holes array<int>).
+    """docs(doc_id, content, ...) -> (doc_id, terms[], holes[]) through
+    the JVM chain, one row per document (``doc_array_columns``)."""
+    terms, holes = doc_array_columns(cfg, content_col)
+    return docs.select("doc_id", terms.alias("terms"), holes.alias("holes"))
+
+
+def doc_array_columns(cfg: EngineConfig, content_col: str = "content"):
+    """The JVM-side inversion as two Column expressions over
+    ``content_col``: (terms array<string>, holes array<int>).
 
     One row per document rather than per token: ~20 bytes of row
     overhead per TOKEN cheaper — at 10^8+ tokens per-token rows
@@ -154,6 +164,4 @@ def invert_doc_arrays(
             lambda v: v.isNotNull(),
         ),
     ).otherwise(F.array().cast("array<int>"))
-    return docs.select(
-        "doc_id", terms.alias("terms"), holes.alias("holes")
-    )
+    return terms, holes

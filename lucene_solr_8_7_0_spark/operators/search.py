@@ -409,7 +409,7 @@ class IndexSearcher:
                  query_cache: QueryCache | None = None):
         import pyarrow.parquet as pq
 
-        from .build import load_config, read_table
+        from .build import load_config, read_table, sorted_docs
         from .stats import read_stats_row
 
         index_dir = _local_index_dir(index_dir)
@@ -436,6 +436,9 @@ class IndexSearcher:
             int(row["sum_ttf"] or 0), self.cfg.k1, self.cfg.b,
             similarity=self.cfg.similarity,
         )
+        # leading doc ids that follow the index sort (a commit appends
+        # docs after them); None: all of them
+        self._sorted_docs = sorted_docs(index_dir)
         self.segments = read_table(spark, index_dir, "segments")
         self.termdict = read_table(spark, index_dir, "termdict")
         self.docmeta_path = os.path.join(index_dir, "docmeta")
@@ -991,10 +994,13 @@ class IndexSearcher:
         # requested order exactly (ties included — doc ids were assigned
         # by (index_sort..., repo, path)), so the first k hits in doc
         # order ARE the sorted top-k and only a leading segment prefix
-        # needs scanning.
+        # needs scanning.  Only while the index sort covers every doc:
+        # docs a commit appended are numbered after the sorted range.
         want = tuple((s.field, bool(s.reverse)) for s in sort)
         isort = tuple((f_, bool(r)) for f_, r in self.cfg.index_sort)
-        if after is None and want and want == isort[: len(want)]:
+        covered = (self._sorted_docs is None
+                   or self._sorted_docs >= self.stats.num_docs)
+        if after is None and want and want == isort[: len(want)] and covered:
             # doc-values updates can move a doc's sort value AFTER the
             # index sort assigned doc ids, so early termination is only
             # sound while no requested sort field has pending updates

@@ -198,24 +198,31 @@ def _positions_from_holes(
     return flat_raw[mask]
 
 
+def segment_arrow_schema():
+    """SEGMENT_SCHEMA as a pyarrow schema (``_SEG_COLS`` order)."""
+    import pyarrow as pa
+
+    ints = pa.list_(pa.int32())
+    return pa.schema(list(zip(_SEG_COLS, [
+        pa.int32(), pa.string(), pa.int32(), pa.int64(),
+        pa.int32(), pa.int32(),
+        pa.binary(), ints, pa.binary(), ints, pa.binary(), ints,
+        ints, ints, ints,
+    ])))
+
+
 def _rows_to_arrow(rows: list[tuple]):
     """Segment rows (tuples in _SEG_COLS order) -> pa.Table matching
     SEGMENT_SCHEMA.  One C++ conversion per column — no pandas object
     round-trip on the output side."""
     import pyarrow as pa
 
-    types = [
-        pa.int32(), pa.string(), pa.int32(), pa.int64(),
-        pa.int32(), pa.int32(),
-        pa.binary(), pa.list_(pa.int32()),
-        pa.binary(), pa.list_(pa.int32()),
-        pa.binary(), pa.list_(pa.int32()),
-        pa.list_(pa.int32()),
-        pa.list_(pa.int32()), pa.list_(pa.int32()),
-    ]
+    schema = segment_arrow_schema()
     cols = list(zip(*rows))
-    arrays = [pa.array(list(c), type=t) for c, t in zip(cols, types)]
-    return pa.Table.from_arrays(arrays, names=_SEG_COLS)
+    return pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
 
 
 def _int64(arr) -> np.ndarray:

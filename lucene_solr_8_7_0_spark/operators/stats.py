@@ -192,34 +192,59 @@ def _write_colstats(index_dir: str, fields, los, his, counts) -> None:
     }))
 
 
+def length_stats_values(lengths) -> dict:
+    """The aggregates the docmeta write observes (``num_docs``,
+    ``doc_count``, ``sum_ttf`` and the ``hb<i>`` buckets of
+    ``log_histogram_exprs``), computed in-process from a batch of
+    document lengths."""
+    import numpy as np
+
+    lengths = np.asarray(lengths, dtype=np.int64)
+    # bucket i >= 1 holds [2^(i-1), 2^i): the binary exponent frexp gives
+    bucket = np.where(lengths > 0, np.frexp(lengths.astype(np.float64))[1], 0)
+    counts = np.bincount(bucket, minlength=LOG_BUCKETS)
+    vals = {"num_docs": len(lengths), "doc_count": int((lengths > 0).sum()),
+            "sum_ttf": int(lengths.sum())}
+    vals.update({f"hb{i}": int(counts[i]) for i in range(LOG_BUCKETS)})
+    return vals
+
+
+def _histogram_frame(field: str, vals: dict):
+    """The non-empty ``hb<i>`` buckets of ``vals`` as colstats rows."""
+    import pandas as pd
+
+    rows = []
+    for i in range(LOG_BUCKETS):
+        cnt = int(vals.get(f"hb{i}") or 0)
+        if cnt:
+            rows.append((field, 0.0 if i == 0 else float(1 << (i - 1)),
+                         1.0 if i == 0 else float(1 << i), cnt))
+    return pd.DataFrame(rows, columns=["field", "lo", "hi", "count"])
+
+
 def write_stats_tables(index_dir: str, field: str, vals: dict) -> None:
     """Flush the observed aggregates as the ``stats`` (single row) and
     ``colstats`` (histogram) parquet tables, driver-side."""
-    fields, los, his, counts = [], [], [], []
-    for i in range(LOG_BUCKETS):
-        cnt = int(vals.get(f"hb{i}") or 0)
-        if cnt == 0:
-            continue
-        lo = 0.0 if i == 0 else float(1 << (i - 1))
-        hi = 1.0 if i == 0 else float(1 << i)
-        fields.append(field)
-        los.append(lo)
-        his.append(hi)
-        counts.append(cnt)
+    hist = _histogram_frame(field, vals)
     _write_stats_row(index_dir, vals)
-    _write_colstats(index_dir, fields, los, his, counts)
+    _write_colstats(index_dir, hist["field"], hist["lo"], hist["hi"],
+                    hist["count"])
 
 
-def merge_stats_tables(index_dirs: list[str], out_dir: str) -> None:
+def merge_stats_tables(index_dirs: list[str], out_dir: str,
+                       extra: dict | None = None) -> None:
     """Stats of a merge over disjoint doc-id ranges, from the inputs'
     own tables on the driver: the CollectionStatistics row is the sum
     of the inputs' rows, and the histogram the per-bucket sum of their
     ``colstats`` rows (equal ``(field, lo, hi)``).  Exact, because every
-    doc counts in exactly one input.  The merged snapshot carries
+    doc counts in exactly one input.  ``extra`` adds the observed
+    values (``length_stats_values``) of docs no input holds — a
+    driver-placed commit's delta.  The merged snapshot carries
     ``colstats`` only when every input does."""
     import pyarrow.parquet as pq
 
     rows = [read_stats_row(os.path.join(d, "stats")) for d in index_dirs]
+    rows += [extra] if extra else []
     _write_stats_row(
         out_dir, {c: sum(int(r[c] or 0) for r in rows) for c in STATS_COLS}
     )
@@ -228,8 +253,10 @@ def merge_stats_tables(index_dirs: list[str], out_dir: str) -> None:
         return
     import pandas as pd
 
+    hists = [pq.read_table(c).to_pandas() for c in cs_dirs]
+    hists += [_histogram_frame("length", extra)] if extra else []
     hist = (
-        pd.concat([pq.read_table(c).to_pandas() for c in cs_dirs])
+        pd.concat(hists)
         .groupby(["field", "lo", "hi"], as_index=False)["count"].sum()
     )
     _write_colstats(

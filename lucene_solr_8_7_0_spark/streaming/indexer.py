@@ -10,6 +10,11 @@ addDocuments + commit, producing a new immutable snapshot directory
 that searchers open independently (snapshot isolation).
 
 ``StreamingIndexer`` wraps readStream -> foreachBatch(add_documents):
+the first micro-batch builds the base snapshot, and every later one
+commits ``gen_<n+1>`` = ``gen_<n>`` + the batch (with ``gen_<n>``'s
+deletes and doc-values updates).  A small batch commits on the driver
+in one JVM-only Spark action; a large one runs the Spark chain
+(operators/merge.add_documents).
 
     indexer = StreamingIndexer(spark, base_index_dir, snapshots_dir, cfg)
     q = indexer.start(stream_df)     # stream of input_hint rows
@@ -21,8 +26,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -76,13 +79,7 @@ class StreamingIndexer:
         if cur is None:
             build_index(self.spark, batch_df, out, self.cfg, resume=False)
         else:
-            delta = tempfile.mkdtemp(prefix="stream_delta_")
-            try:
-                add_documents(
-                    self.spark, cur, batch_df, out, load_config(cur), delta_dir=delta
-                )
-            finally:
-                shutil.rmtree(delta, ignore_errors=True)
+            add_documents(self.spark, cur, batch_df, out, load_config(cur))
         self._commit(out, {"batch_id": batch_id, "gen": gen})
 
     def start(self, stream_df: DataFrame, **trigger_kwargs):

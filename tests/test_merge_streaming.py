@@ -436,3 +436,24 @@ def test_updates_keep_config_and_clean_up(spark, tmp_path, monkeypatch):
     assert s.count(Q.TermQuery("bravo1")) == 1
     assert s.count(Q.TermQuery("zqtwo")) == 0
     assert not glob.glob(str(scratch / "delta_idx_*"))
+
+
+_COMMIT_TESTS = [
+    "test_add_documents", "test_streaming_indexer", "test_update_documents",
+    "test_boundary_commit_skips_python_merge",
+    "test_updates_keep_config_and_clean_up",
+]
+
+
+@pytest.mark.parametrize("placement", ["driver", "spark"])
+@pytest.mark.parametrize("name", _COMMIT_TESTS)
+def test_commit_tests_in_each_placement(name, placement, request, monkeypatch):
+    """The commit tests above, with the commit placement rule pinned to
+    each placement (the tests themselves run whichever the rule picks)."""
+    import inspect
+
+    monkeypatch.setattr(merge_mod, "_choose_commit_placement",
+                        lambda *a: (placement, "forced"))
+    test = globals()[name]
+    test(**{p: request.getfixturevalue(p)
+            for p in inspect.signature(test).parameters})

@@ -144,3 +144,25 @@ def test_matchall_scans_one_window(engine):
     assert engine.last_sorted_probe["segments_scanned"] == 1
     v = out["nch"].to_numpy()
     assert (v[:-1] >= v[1:]).all()
+
+
+def test_committed_snapshot_equals_exhaustive(spark, engine, tmp_path):
+    """A commit numbers its docs after the base, outside the index
+    sort: on the committed snapshot the sorted search must still equal
+    the exhaustive path (here the new doc has the largest ``nch``)."""
+    from lucene_solr_8_7_0_spark.operators.merge import add_documents
+
+    new = _docs(spark).limit(1).select(
+        F.lit("newrepo").alias("repo"), F.lit("new/file.java").alias("path"),
+        "commit", "lang", F.lit("public " * 400).alias("content"),
+        F.lit(1 << 30).alias("nch"),
+    )
+    out = str(tmp_path / "committed")
+    add_documents(spark, engine.index_dir, new, out)
+    s = IndexSearcher(spark, out)
+    sort = [Q.SortField("nch", reverse=True)]
+    for q in (Q.TermQuery("public"), Q.MatchAllDocsQuery()):
+        got = s.search_sorted(q, sort, k=3).toPandas()
+        want = _brute(s, q, sort, k=3)
+        assert got["doc_id"].tolist() == want["doc_id"].tolist()
+        assert got["doc_id"].tolist()[0] == N_FILES
