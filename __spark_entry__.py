@@ -21,12 +21,15 @@ oracle_sql()  -> DuckDB-equivalent ANSI SQL for ALL 50 queries —
 
 from __future__ import annotations
 
+import functools
+import glob
 import hashlib
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+import lucene_solr_8_7_0_spark as engine_pkg
 from lucene_solr_8_7_0_spark.config import EngineConfig
 from lucene_solr_8_7_0_spark.operators import ann, dedup, textstats
 from lucene_solr_8_7_0_spark.operators.build import build_index
@@ -36,6 +39,28 @@ from lucene_solr_8_7_0_spark.plans import queries as Q
 
 TOKEN_RE_SQL = "[a-z0-9_]+"
 _SEARCHERS: dict[str, IndexSearcher] = {}
+
+
+@functools.cache
+def _engine_fingerprint() -> str:
+    """md5 of the engine package's source (every ``*.py`` under
+    ``lucene_solr_8_7_0_spark``, path and bytes), once per process."""
+    root = os.path.dirname(os.path.abspath(engine_pkg.__file__))
+    h = hashlib.md5()
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(path, root).encode())
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
+def _snapshot_key(sf_dir: str, tag: str) -> str:
+    """Key of a cached ``/tmp/lucene_ps_*`` snapshot: the data path, the
+    snapshot's tag and the engine's source, so a changed engine builds
+    its own snapshots instead of reusing an older engine's."""
+    return hashlib.md5(
+        f"{sf_dir}:{tag}:{_engine_fingerprint()}".encode()
+    ).hexdigest()[:10]
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,7 +129,7 @@ def _adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _searcher(spark: SparkSession, sf_dir: str) -> IndexSearcher:
     """Build (or resume) the engine index for this sf_dir; cached."""
     # v11: + assoc association-facet column + nullable stars column
-    key = hashlib.md5(f"{sf_dir}:v11".encode()).hexdigest()[:10]
+    key = _snapshot_key(sf_dir, "v11")
     if key in _SEARCHERS:
         return _SEARCHERS[key]
     d = f"/tmp/lucene_ps_index_{key}"
@@ -121,7 +146,7 @@ def _sorted_searcher(spark: SparkSession, sf_dir: str) -> IndexSearcher:
     sort (IndexWriterConfig.setIndexSort analog): doc ids assigned by
     (n_chars desc, repo, path), enabling early-terminated sorted top-k
     (TopFieldCollector.canEarlyTerminate)."""
-    key = hashlib.md5(f"{sf_dir}:v9sorted".encode()).hexdigest()[:10]
+    key = _snapshot_key(sf_dir, "v9sorted")
     if key in _SEARCHERS:
         return _SEARCHERS[key]
     d = f"/tmp/lucene_ps_index_{key}"
@@ -282,7 +307,7 @@ def _std_toks_sql() -> str:
 
 def _searcher_std(spark: SparkSession, sf_dir: str) -> IndexSearcher:
     """Full index build + search under the standard analyzer."""
-    key = hashlib.md5(f"{sf_dir}:std:v1".encode()).hexdigest()[:10]
+    key = _snapshot_key(sf_dir, "std:v1")
     if key in _SEARCHERS:
         return _SEARCHERS[key]
     d = f"/tmp/lucene_ps_stdidx_{key}"
@@ -460,7 +485,7 @@ def _q_merged_bool_and(spark, sf_dir):
     on the merged snapshot — must hash-match the single-build oracle."""
     from lucene_solr_8_7_0_spark.operators.merge import add_documents
 
-    key = hashlib.md5(f"{sf_dir}:merged:v1".encode()).hexdigest()[:10]
+    key = _snapshot_key(sf_dir, "merged:v1")
     d = f"/tmp/lucene_ps_merged_{key}"
     if key not in _SEARCHERS:
         cfg = EngineConfig(analyzer="simple", segment_size=256, index_positions=True)
@@ -493,7 +518,7 @@ def _q_streaming_bool_and(spark, sf_dir):
 
     from lucene_solr_8_7_0_spark.streaming.indexer import StreamingIndexer
 
-    key = hashlib.md5(f"{sf_dir}:stream:v1".encode()).hexdigest()[:10]
+    key = _snapshot_key(sf_dir, "stream:v1")
     d = f"/tmp/lucene_ps_stream_{key}"
     if key not in _SEARCHERS:
         cfg = EngineConfig(analyzer="simple", segment_size=256, index_positions=True)
@@ -545,7 +570,7 @@ def _q_deleted_match(spark, sf_dir):
     from lucene_solr_8_7_0_spark.operators import deletes as dl
 
     s0 = _searcher(spark, sf_dir)
-    key = hashlib.md5(f"{sf_dir}:deleted:v1".encode()).hexdigest()[:10]
+    key = _snapshot_key(sf_dir, "deleted:v1")
     d = f"/tmp/lucene_ps_del_{key}"
     if key not in _SEARCHERS:
         if not os.path.exists(os.path.join(d, "engine_config.json")):
@@ -830,7 +855,7 @@ def _stoplist_sql() -> str:
 def _searcher_eng(spark: SparkSession, sf_dir: str) -> IndexSearcher:
     """EnglishAnalyzer chain index (standard tokenize -> lower -> stop
     -> Porter; python tokenize backend selected automatically)."""
-    key = hashlib.md5(f"{sf_dir}:eng:v1".encode()).hexdigest()[:10]
+    key = _snapshot_key(sf_dir, "eng:v1")
     if key in _SEARCHERS:
         return _SEARCHERS[key]
     d = f"/tmp/lucene_ps_engidx_{key}"
@@ -852,7 +877,7 @@ def _searcher_eng(spark: SparkSession, sf_dir: str) -> IndexSearcher:
 def _searcher_shingle(spark: SparkSession, sf_dir: str) -> IndexSearcher:
     """2-gram shingle index (ShingleFilter outputUnigrams=false) —
     shingling runs JVM-side (zip_with over the token array)."""
-    key = hashlib.md5(f"{sf_dir}:shingle:v1".encode()).hexdigest()[:10]
+    key = _snapshot_key(sf_dir, "shingle:v1")
     if key in _SEARCHERS:
         return _SEARCHERS[key]
     d = f"/tmp/lucene_ps_shidx_{key}"
@@ -1689,7 +1714,7 @@ def _q_range_filter(spark, sf_dir):
         update_numeric_docvalue,
     )
 
-    key = hashlib.md5(f"{sf_dir}:dvupd:v1".encode()).hexdigest()[:10]
+    key = _snapshot_key(sf_dir, "dvupd:v1")
     d = f"/tmp/lucene_ps_dvupd_{key}"
     if key not in _SEARCHERS:
         cfg = EngineConfig(analyzer="simple", segment_size=256,

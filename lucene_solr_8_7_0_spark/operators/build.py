@@ -40,6 +40,7 @@ import os
 import time
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import EngineConfig
@@ -194,7 +195,12 @@ def build_index(
 
             from concurrent.futures import ThreadPoolExecutor
 
-            docs_write_fut = ThreadPoolExecutor(1).submit(_docs_write)
+            # a new Python thread does not inherit the caller's Spark
+            # local properties (job group, description): copy them, so
+            # the build's jobs stay in the caller's job group
+            docs_write_fut = ThreadPoolExecutor(1).submit(
+                inheritable_thread_target(spark)(_docs_write)
+            )
     if seg_mapping is None:
         docs_ids = spark.read.parquet(_path(index_dir, "docs"))
         seg_mapping = docs_ids.select("repo", "path", "doc_id")
@@ -341,7 +347,8 @@ def build_index(
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(len(tail_jobs)) as ex:
-            for fut in [ex.submit(j) for j in tail_jobs]:
+            for fut in [ex.submit(inheritable_thread_target(spark)(j))
+                        for j in tail_jobs]:
                 fut.result()
     else:
         for job in tail_jobs:

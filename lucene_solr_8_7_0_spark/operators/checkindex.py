@@ -7,7 +7,7 @@ data against what the postings actually contain, then cross-check the
 per-segment numbers against the segment infos).
 
 Spark-first shape: each check is a DataFrame over the index tables —
-the postings walk is a narrow mapInPandas over segment rows (perfectly
+the postings walk is a narrow mapInArrow over segment rows (perfectly
 parallel, no shuffle), the cross-table checks are joins/aggregations —
 so verifying a 100 TB index is just another Spark job.  The report is
 one row per violation; an empty report = healthy.
@@ -19,11 +19,15 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 __all__ = ["check_index", "assert_healthy"]
 
 _REPORT_SCHEMA = "check string, segment_id int, term string, detail string"
+_REPORT_ARROW = pa.schema([("check", pa.string()), ("segment_id", pa.int32()),
+                          ("term", pa.string()), ("detail", pa.string())])
 
 
 def _check_postings(segments: DataFrame) -> DataFrame:
@@ -32,37 +36,35 @@ def _check_postings(segments: DataFrame) -> DataFrame:
     strictly increasing, block_last_docs == the decoded block tails
     (the skip-data check), freqs >= 1."""
     from ..functions.codec import BLOCK_SIZE, decode_term_postings
-    from .search import rows_to_posting_map
+    from .search import posting_rows
     from .segments import SENTINEL_TERM
 
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
+            post = pa.Table.from_batches([batch])
+            post = post.filter(pc.not_equal(post["term"], SENTINEL_TERM))
             rows = []
-            post = pdf[pdf["term"] != SENTINEL_TERM]
-            for i in range(len(post)):
-                term = post["term"].iloc[i]
-                seg = int(post["segment_id"].iloc[i])
+            for seg, term, tp in zip(post["segment_id"].to_pylist(),
+                                     post["term"].to_pylist(), posting_rows(post)):
                 try:
-                    tp = rows_to_posting_map(post.iloc[[i]])[term]
                     docs, freqs, _ = decode_term_postings(tp)
                 except Exception as ex:  # decode failure IS the finding
                     rows.append(("postings_decode", seg, term, repr(ex)))
                     continue
-                if len(docs) != int(post["df"].iloc[i]):
+                if len(docs) != tp.df:
                     rows.append(
-                        ("df_mismatch", seg, term,
-                         f"df={int(post['df'].iloc[i])} decoded={len(docs)}")
+                        ("df_mismatch", seg, term, f"df={tp.df} decoded={len(docs)}")
                     )
-                if int(freqs.sum()) != int(post["ttf"].iloc[i]):
+                if int(freqs.sum()) != tp.ttf:
                     rows.append(
                         ("ttf_mismatch", seg, term,
-                         f"ttf={int(post['ttf'].iloc[i])} decoded={int(freqs.sum())}")
+                         f"ttf={tp.ttf} decoded={int(freqs.sum())}")
                     )
                 if len(docs) > 1 and not (np.diff(docs) > 0).all():
                     rows.append(("doc_order", seg, term, "doc ids not increasing"))
                 if len(freqs) and int(freqs.min()) < 1:
                     rows.append(("freq_zero", seg, term, "freq < 1"))
-                last = post["block_last_docs"].iloc[i]
+                last = tp.block_last_docs
                 if len(docs) and len(last):
                     exp = docs[
                         np.minimum(
@@ -70,12 +72,14 @@ def _check_postings(segments: DataFrame) -> DataFrame:
                             len(docs) - 1,
                         )
                     ]
-                    if not np.array_equal(np.asarray(last, dtype=np.int64), exp):
+                    if not np.array_equal(last.astype(np.int64), exp):
                         rows.append(("skip_data", seg, term,
                                      "block_last_docs != decoded tails"))
-            yield pd.DataFrame(rows, columns=["check", "segment_id", "term", "detail"])
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(_REPORT_ARROW.names, r)) for r in rows], _REPORT_ARROW
+            )
 
-    return segments.mapInPandas(run, schema=_REPORT_SCHEMA)
+    return segments.mapInArrow(run, schema=_REPORT_SCHEMA)
 
 
 def check_index(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -251,43 +255,41 @@ def _check_termvectors(tv: DataFrame, segments: DataFrame, cfg) -> DataFrame:
     comparison is a full outer join on (doc_id, term) — an audit job,
     shuffle-parallel on the join key."""
     from ..functions.codec import decode_term_postings
-    from .search import rows_to_posting_map
+    from .search import posting_rows
     from .segments import SENTINEL_TERM
 
     seg_size = cfg.segment_size
+    post_arrow = pa.schema([("doc_id", pa.int64()), ("term", pa.string()),
+                            ("p_freq", pa.int32()), ("p_pos", pa.string())])
 
     def explode_postings(batches):
-        for pdf in batches:
-            post = pdf[pdf["term"] != SENTINEL_TERM]
+        for batch in batches:
+            post = pa.Table.from_batches([batch])
+            post = post.filter(pc.not_equal(post["term"], SENTINEL_TERM))
             out = []
-            # group per segment: a batch may span segments and the
-            # posting map keys by term alone
-            for seg, grp in post.groupby("segment_id"):
-                seg = int(seg)
-                for term, tp in rows_to_posting_map(grp).items():
-                    docs, freqs, pos = decode_term_postings(
-                        tp, with_positions=True
+            for seg, term, tp in zip(post["segment_id"].to_pylist(),
+                                     post["term"].to_pylist(), posting_rows(post)):
+                docs, freqs, pos = decode_term_postings(tp, with_positions=True)
+                starts = np.concatenate(([0], np.cumsum(freqs)))
+                for j in range(len(docs)):
+                    pl = (
+                        pos[starts[j] : starts[j + 1]]
+                        if pos is not None
+                        else np.empty(0, np.int64)
                     )
-                    starts = np.concatenate(([0], np.cumsum(freqs)))
-                    for j in range(len(docs)):
-                        pl = (
-                            pos[starts[j] : starts[j + 1]]
-                            if pos is not None
-                            else np.empty(0, np.int64)
+                    out.append(
+                        (
+                            int(docs[j]) + seg * seg_size,
+                            term,
+                            int(freqs[j]),
+                            ",".join(str(int(x)) for x in pl),
                         )
-                        out.append(
-                            (
-                                int(docs[j]) + seg * seg_size,
-                                term,
-                                int(freqs[j]),
-                                ",".join(str(int(x)) for x in pl),
-                            )
-                        )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "term", "p_freq", "p_pos"]
+                    )
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(post_arrow.names, r)) for r in out], post_arrow
             )
 
-    post_rows = segments.mapInPandas(
+    post_rows = segments.mapInArrow(
         explode_postings,
         schema="doc_id bigint, term string, p_freq int, p_pos string",
     )

@@ -77,10 +77,10 @@ def postings_df(searcher, terms) -> DataFrame:
     Catalyst broadcasts it below the threshold and degrades to a
     shuffle join past it, so NO term list ever reaches the driver)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from ..functions.codec import decode_term_postings
-    from .search import rows_to_posting_map
+    from .search import posting_rows
     from .segments import SENTINEL_TERM
 
     seg_size = searcher.cfg.segment_size
@@ -97,25 +97,23 @@ def postings_df(searcher, terms) -> DataFrame:
     )
 
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
             out_term, out_doc, out_freq = [], [], []
-            for seg_id, grp in pdf.groupby("segment_id", sort=False):
-                base = int(seg_id) * seg_size
-                for term, tp in rows_to_posting_map(grp).items():
-                    docs, freqs, _ = decode_term_postings(tp)
-                    out_term.append(np.full(len(docs), term, dtype=object))
-                    out_doc.append(docs.astype(np.int64) + base)
-                    out_freq.append(freqs.astype(np.int32))
-            if not out_term:
-                yield pd.DataFrame(columns=["term", "doc_id", "freq"])
-                continue
-            yield pd.DataFrame({
-                "term": np.concatenate(out_term),
-                "doc_id": np.concatenate(out_doc),
-                "freq": np.concatenate(out_freq),
-            })
+            for seg_id, term, tp in zip(tbl["segment_id"].to_pylist(),
+                                        tbl["term"].to_pylist(), posting_rows(tbl)):
+                docs, freqs, _ = decode_term_postings(tp)
+                out_term.append(np.full(len(docs), term, dtype=object))
+                out_doc.append(docs.astype(np.int64) + seg_id * seg_size)
+                out_freq.append(freqs.astype(np.int32))
+            if out_term:
+                yield pa.RecordBatch.from_pydict({
+                    "term": pa.array(np.concatenate(out_term), pa.string()),
+                    "doc_id": np.concatenate(out_doc),
+                    "freq": np.concatenate(out_freq),
+                })
 
-    return seg.mapInPandas(run, schema="term string, doc_id bigint, freq int")
+    return seg.mapInArrow(run, schema="term string, doc_id bigint, freq int")
 
 
 def _tokens_col(cfg, content_col: str):

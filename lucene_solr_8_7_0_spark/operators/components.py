@@ -346,10 +346,10 @@ def significant_terms(
     broadcasts it when small), and one groupBy(term) yields tf.  No
     driver materialization anywhere."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from ..functions.codec import decode_term_postings
-    from .search import rows_to_posting_map
+    from .search import posting_rows
     from .segments import SENTINEL_TERM
 
     td = searcher.termdict.filter(F.length("term") >= min_term_length)
@@ -365,28 +365,21 @@ def significant_terms(
     )
 
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
             terms_out, docs_out = [], []
-            for seg_id, sub in pdf.groupby("segment_id"):
-                base = int(seg_id) * seg_size
-                for term, tp in rows_to_posting_map(sub).items():
-                    docs, _, _ = decode_term_postings(tp)
-                    terms_out.append(np.full(len(docs), term, dtype=object))
-                    docs_out.append(docs + base)
-            if not terms_out:
-                yield pd.DataFrame(
-                    {"term": pd.Series([], dtype=object),
-                     "doc_id": pd.Series([], dtype="int64")}
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(terms_out),
+            for seg_id, term, tp in zip(tbl["segment_id"].to_pylist(),
+                                        tbl["term"].to_pylist(), posting_rows(tbl)):
+                docs, _, _ = decode_term_postings(tp)
+                terms_out.append(np.full(len(docs), term, dtype=object))
+                docs_out.append(docs.astype(np.int64) + seg_id * seg_size)
+            if terms_out:
+                yield pa.RecordBatch.from_pydict({
+                    "term": pa.array(np.concatenate(terms_out), pa.string()),
                     "doc_id": np.concatenate(docs_out),
-                }
-            )
+                })
 
-    pairs = seg.mapInPandas(run, schema="term string, doc_id bigint")
+    pairs = seg.mapInArrow(run, schema="term string, doc_id bigint")
     hits = searcher.matches_df(query)
     fg = pairs.join(hits, "doc_id").groupBy("term").agg(
         F.count("*").cast("long").alias("tf")

@@ -44,42 +44,47 @@ Both write the same snapshot, table by table.
 from __future__ import annotations
 
 import os
+from collections import Counter
 from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import EngineConfig
 from ..functions.codec import decode_term_postings
 from ..functions.smallfloat import int_to_byte4_np
 from .build import read_table
-from .search import rows_to_posting_map
+from .search import posting_rows
 from .segments import (
     SEGMENT_SCHEMA,
     SENTINEL_TERM,
     _SEG_COLS,
     _encode_all_terms,
+    _rows_to_arrow,
+    segment_arrow_schema,
     sentinel_row,
 )
 
 
-def merge_segment(seg_id: int, pdf: pd.DataFrame) -> pd.DataFrame:
+def merge_segment(seg_id: int, tbl: pa.Table) -> pa.Table:
     """One segment's rows from several indexes (SEGMENT_SCHEMA columns,
-    as pandas) -> the merged segment's rows.
+    as Arrow) -> the merged segment's rows.
 
     Pass-through for single-source terms; decode + concat + re-encode
     for multi-source terms; sentinel rows combine by overlaying their
     lengths arrays (disjoint doc ownership).  Raises on a segment
     without a sentinel row and on inputs that overlap in doc ids."""
-    sents = pdf[pdf["term"] == SENTINEL_TERM]
-    if sents.empty:
+    is_sent = pc.equal(tbl["term"], SENTINEL_TERM)
+    sents = tbl.filter(is_sent)
+    if sents.num_rows == 0:
         raise ValueError(f"segment {seg_id}: merge input has no sentinel row")
-    others = pdf[pdf["term"] != SENTINEL_TERM]
+    others = tbl.filter(pc.invert(is_sent))
     # --- combine sentinel lengths/norms ---
     arrays = [
-        np.frombuffer(r.freq_blocks, dtype="<i8") for r in sents.itertuples()
+        np.frombuffer(b, dtype="<i8") for b in sents["freq_blocks"].to_pylist()
     ]
     size = max(len(a) for a in arrays)
     lengths = np.zeros(max(size, 1), dtype=np.int64)
@@ -92,14 +97,13 @@ def merge_segment(seg_id: int, pdf: pd.DataFrame) -> pd.DataFrame:
     # multi-source terms of the segment happens in ONE batched call
     # (_encode_all_terms -> encode_blocks_batched /
     # block_impacts_batched) instead of a scalar encode per term. ---
-    counts = others.groupby("term", sort=False)["df"].count()
-    singles = counts[counts == 1].index
-    out_single = others[others["term"].isin(singles)]
-    multi_terms = counts[counts > 1].index
+    terms = others["term"].to_pylist()
+    counts = Counter(terms)
+    single = pa.array([counts[t] == 1 for t in terms], pa.bool_())
+    multi = others.filter(pc.invert(single))
     rows = [sentinel_row(seg_id, lengths[:size])]
-    if len(multi_terms):
-        multi = others[others["term"].isin(multi_terms)]
-        with_pos = "pos_blocks" in multi.columns
+    if multi.num_rows:
+        tps = posting_rows(multi)
         # position availability is tracked PER TERM: terms whose every
         # source row carries positions re-encode with them,
         # position-less terms re-encode without — a mixed merge (e.g.
@@ -110,17 +114,14 @@ def merge_segment(seg_id: int, pdf: pd.DataFrame) -> pd.DataFrame:
             True: ([], [], [], [], []),   # terms, df, docs, freqs, pos
             False: ([], [], [], [], []),
         }
-        for term, grp in multi.groupby("term", sort=False):
-            has_pos = with_pos and all(
-                len(x) > 0 for x in grp["pos_block_offsets"]
-            )
-            decoded = []
-            for i in range(len(grp)):
-                tp = rows_to_posting_map(grp.iloc[[i]])[term]
-                docs, freqs, poss = decode_term_postings(
-                    tp, with_positions=has_pos
-                )
-                decoded.append((docs, freqs, poss))
+        multi_rows: dict[str, list[int]] = {}
+        for i, term in enumerate(multi["term"].to_pylist()):
+            multi_rows.setdefault(term, []).append(i)
+        for term, idx in multi_rows.items():
+            has_pos = all(len(tps[i].pos_block_offsets) > 0 for i in idx)
+            decoded = [
+                decode_term_postings(tps[i], with_positions=has_pos) for i in idx
+            ]
             decoded.sort(key=lambda d: int(d[0][0]) if len(d[0]) else -1)
             docs = np.concatenate([d[0] for d in decoded])
             if len(docs) > 1 and not (np.diff(docs) > 0).all():
@@ -153,15 +154,17 @@ def merge_segment(seg_id: int, pdf: pd.DataFrame) -> pd.DataFrame:
                     pos_flat=(np.concatenate(pos_b) if has_pos else None),
                 )
             )
-    out_multi = pd.DataFrame(rows, columns=_SEG_COLS)
-    return pd.concat([out_single[_SEG_COLS], out_multi], ignore_index=True)
+    out_single = others.filter(single).select(_SEG_COLS)
+    return pa.concat_tables([
+        out_single.cast(segment_arrow_schema()), _rows_to_arrow(rows)
+    ])
 
 
 def merge_segment_rows(seg_union: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Merge a union of segment rows from multiple indexes: one
     ``merge_segment`` call per segment group."""
-    return seg_union.groupby("segment_id").applyInPandas(
-        lambda key, pdf: merge_segment(int(key[0]), pdf), schema=SEGMENT_SCHEMA
+    return seg_union.groupby("segment_id").applyInArrow(
+        lambda key, tbl: merge_segment(key[0].as_py(), tbl), schema=SEGMENT_SCHEMA
     )
 
 
@@ -456,8 +459,6 @@ def _driver_commit(spark: SparkSession, index_dir: str, rows, out_dir: str,
     collected delta ``rows``, in-process: the same tables, table by
     table, as ``build_index`` of the delta followed by
     ``merge_indexes``.  Returns the number of docs added."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
     from . import invert
     from .stats import length_stats_values, merge_stats_tables
@@ -492,11 +493,9 @@ def _driver_segments(index_dir: str, out_dir: str, toks, base_n: int,
     is one slice), re-encode the one segment a mid-segment delta shares
     with the base, and rewrite the segments table as one file sorted by
     (segment_id, term).  Returns the delta's own segment rows."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
-    from .segments import encode_segment, segment_arrow_schema
+    from .segments import encode_segment
 
     seg_size, n = cfg.segment_size, toks.num_rows
     seg_schema = segment_arrow_schema()
@@ -517,11 +516,10 @@ def _driver_segments(index_dir: str, out_dir: str, toks, base_n: int,
         in_delta = pc.equal(delta_segs["segment_id"], shared)
         merged = merge_segment(shared, pa.concat_tables([
             base_segs.filter(in_base), delta_segs.filter(in_delta)
-        ]).to_pandas())
+        ]))
         parts = [
             base_segs.filter(pc.invert(in_base)),
-            pa.Table.from_pandas(merged, schema=seg_schema,
-                                 preserve_index=False),
+            merged,
             delta_segs.filter(pc.invert(in_delta)),
         ]
     segs = pa.concat_tables(parts).sort_by(
@@ -537,7 +535,6 @@ def _driver_docmeta(index_dir: str, out_dir: str, rows, ids, lengths,
     delta's rows aligned by name to the base's footer schema."""
     import shutil
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     base_meta = _table_files(index_dir, "docmeta")
@@ -571,8 +568,6 @@ def _driver_termdict(index_dir: str, out_dir: str, delta_segs,
                      opts: dict) -> None:
     """The base's termdict plus the delta's own segment rows, summed
     per term, sorted and range-split."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
     real = delta_segs.filter(pc.not_equal(delta_segs["term"], SENTINEL_TERM))

@@ -17,7 +17,7 @@ ties break (term asc), so the selected set is SQL-replayable.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = ["interesting_terms", "more_like_this"]
@@ -46,7 +46,7 @@ def interesting_terms(
     # a narrow map (no shuffle; term freqs live in the index).  Column
     # projection drops pos_blocks — the scan never reads positions —
     # and the whole batch converts through rows_to_posting_map ONCE
-    # (itertuples), not a pandas row-slice per term.
+    # (column-wise over the Arrow batch), not a row-slice per term.
     seg = searcher.segments.filter(
         (F.col("segment_id") == seg_id) & (F.col("term") != SENTINEL_TERM)
     ).select(
@@ -57,17 +57,20 @@ def interesting_terms(
     )
 
     def tf_of_doc(batches):
-        for pdf in batches:
+        for batch in batches:
             terms, tfs = [], []
-            for term, tp in rows_to_posting_map(pdf).items():
+            for term, tp in rows_to_posting_map(pa.Table.from_batches([batch])).items():
                 docs, freqs, _ = decode_term_postings(tp)
                 j = np.searchsorted(docs, local)
                 if j < len(docs) and docs[j] == local:
                     terms.append(term)
                     tfs.append(int(freqs[j]))
-            yield pd.DataFrame({"term": terms, "tf": tfs})
+            yield pa.RecordBatch.from_pydict({
+                "term": pa.array(terms, pa.string()),
+                "tf": pa.array(tfs, pa.int32()),
+            })
 
-    doc_tf = seg.mapInPandas(tf_of_doc, schema="term string, tf int")
+    doc_tf = seg.mapInArrow(tf_of_doc, schema="term string, tf int")
     n_docs = searcher.stats.num_docs
     joined = (
         doc_tf.filter(F.col("tf") >= min_tf)

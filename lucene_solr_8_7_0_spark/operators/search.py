@@ -11,10 +11,14 @@ IndexSearcher.java:571-668):
 2. ``score_files`` — the one kernel entry point: a ``pyarrow.dataset``
    read of the segments files with ``term IN (terms, sentinel)``
    pushed into parquet (row-group pruning = the FST term-index
-   analog), grouped by segment; each segment's sentinel row carries
-   its norms, and the numpy kernel (functions/wand) scores it under
-   the per-segment masks (live docs, point filters) — the leaf-slice
-   collection phase.  It runs in one of two placements:
+   analog).  The read stays an Arrow table: one stable sort groups it
+   by segment, one column-wise pass over the Arrow buffers builds
+   every ``TermPostings`` (posting_rows), each segment's sentinel row
+   carries its norms, and the numpy kernel (functions/wand) scores it
+   under the per-segment masks (live docs, point filters) — the
+   leaf-slice collection phase.  The result is one Arrow table
+   (``_RESULT_ARROW``); no pandas on the way.  It runs in one of two
+   placements:
 
    * driver: in-process over every segments file — no Spark job, no
      Python worker.  Top-k searches take it unless their postings
@@ -24,9 +28,11 @@ IndexSearcher.java:571-668):
      window of every segments file.  The lazy DataFrame APIs
      (matches_df, score_all_df) always take it,
 
-3. driver: heap-merge the per-segment top-k by (score desc, doc asc)
-   — TopDocs.merge (TopDocs.java:188-246), trivially cheap because
-   its input is ``num_segments × k`` rows.
+3. driver: merge the per-segment top-k by (score desc, doc asc) with
+   one numpy lexsort over the Arrow result — TopDocs.merge
+   (TopDocs.java:188-246), trivially cheap because its input is
+   ``num_segments × k`` rows.  The Spark placement collects its rows
+   with ``toArrow``, so the merge has one input type.
 
 Column pruning: queries without phrases never read ``pos_blocks`` —
 the parquet column simply isn't read (the ".pos file" stays cold).
@@ -42,12 +48,13 @@ from urllib.parse import unquote, urlparse
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import DEFAULT_TOTAL_HITS_THRESHOLD, MAX_CLAUSE_COUNT, EngineConfig  # noqa: F401
-from ..functions.codec import TermPostings
+from ..functions.codec import _EMPTY_I32, TermPostings
 from ..functions.wand import CompiledQuery, ScoringClause, score_segment
 from .deletes import DELETES_TOKEN, load_live_docs, read_generation
 from .segments import SENTINEL_TERM
@@ -79,18 +86,23 @@ _POS_COLS = ["pos_blocks", "pos_block_offsets"]
 # work, in postings: the df sum of its terms (num_docs for match-all)
 # plus, when it reads positions, _POS_WORK per position (the ttf sum).
 # A Spark stage splits that work over min(parallelism, segments) tasks
-# but costs ~140-210 ms to place; the driver runs it serially at about
-# 0.3 us per posting.  So the Spark placement is taken when the work it
-# saves, work * (1 - 1/min(parallelism, segments)), exceeds
-# _SPARK_MIN_SAVED (~190 ms of driver kernel time).  Calibrated with the
-# same kernel in both placements, bitwise-equal results, warm, Spark
-# local[2] on a 4-core host, 16 segments in 4 files, median of 5
-# (ms, driver -> spark):
-#      docs  term_hot    or_3        msm         prefix      phrase      phrase_mid
-#    20,000  28 -> 160   55 -> 165   31 -> 156   71 -> 169   117 -> 204  64 -> 174
-#   200,000  51 -> 184   213 -> 282  157 -> 272  151 -> 245  952 -> 647  430 -> 420
+# but costs ~400-500 ms to place; the driver runs it serially.  So the
+# Spark placement is taken when the work it saves,
+# work * (1 - 1/min(parallelism, segments)), exceeds _SPARK_MIN_SAVED.
+# Calibrated with the same kernel in both placements, bitwise-equal
+# results, warm, Spark local[2] on a 4-core host, 16 segments in 4
+# files, corpus_df seed 42, median of 5 (ms, driver -> spark; work in
+# thousands; phrase_i = the phrase of the i-th and (i+1)-th terms by df):
+#      docs  term_hot   or_3       msm        prefix     phrase       phrase_mid
+#    20,000  46 -> 414  86 -> 487  65 -> 439  186 -> 525 378 -> 601   47 -> 459
+#   200,000  98 -> 535  789 -> 921 276 -> 583 465 -> 673 2422 -> 2324 174 -> 706
+#     work@200k  200    589        578        570        3,291        20
+#   200,000 phrase_10 509 -> 895 (work 589), phrase_6 753 -> 1026 (787),
+#           phrase_4 965 -> 1227 (984), phrase_2 1319 -> 1370 (1,411)
+# The driver wins up to ~1.4M work and loses at 3.3M: the crossover is
+# near 2M work, so ~1M saved at two tasks.
 _POS_WORK = 0.27
-_SPARK_MIN_SAVED = 600_000
+_SPARK_MIN_SAVED = 1_000_000
 
 
 @dataclass
@@ -147,30 +159,69 @@ class KernelSpec:
     after: tuple | None = None
 
 
-def rows_to_posting_map(pdf: pd.DataFrame) -> dict[str, TermPostings]:
-    out: dict[str, TermPostings] = {}
-    has_pos = "pos_blocks" in pdf.columns
-    for r in pdf.itertuples(index=False):
-        out[r.term] = TermPostings(
-            df=int(r.df),
-            ttf=int(r.ttf),
-            singleton_doc=int(r.singleton_doc),
-            singleton_freq=int(r.singleton_freq),
-            doc_blocks=bytes(r.doc_blocks),
-            doc_block_offsets=np.asarray(r.doc_block_offsets, dtype=np.int32),
-            freq_blocks=bytes(r.freq_blocks),
-            freq_block_offsets=np.asarray(r.freq_block_offsets, dtype=np.int32),
-            pos_blocks=bytes(r.pos_blocks) if has_pos else b"",
-            pos_block_offsets=(
-                np.asarray(r.pos_block_offsets, dtype=np.int32)
-                if has_pos
-                else np.empty(0, np.int32)
-            ),
-            block_last_docs=np.asarray(r.block_last_docs, dtype=np.int32),
-            impacts_flat=np.asarray(r.impacts_flat, dtype=np.int32),
-            impacts_offsets=np.asarray(r.impacts_offsets, dtype=np.int32),
-        )
+def _ints(col: pa.ChunkedArray) -> list[int]:
+    if col.null_count:
+        raise ValueError(f"{col.null_count} null values in a postings int column")
+    return col.to_numpy().tolist()
+
+
+def _binaries(col: pa.ChunkedArray) -> list[bytes]:
+    """One ``bytes`` per row, sliced from each chunk's value buffer
+    through its offsets (a null row is ``b""``)."""
+    out: list[bytes] = []
+    if col.null_count:
+        col = pc.fill_null(col, b"")
+    for arr in col.cast(pa.binary()).chunks:
+        if not len(arr):
+            continue
+        _, offs, data = arr.buffers()
+        o = np.frombuffer(offs, np.int32, len(arr) + 1, arr.offset * 4).tolist()
+        mv = memoryview(data if data is not None else b"")
+        out.extend([mv[a:b].tobytes() for a, b in zip(o, o[1:])])
     return out
+
+
+def _int32_lists(col: pa.ChunkedArray) -> list[np.ndarray]:
+    """One int32 numpy view of the list values per row, sliced through
+    each chunk's offsets (a null row is empty)."""
+    out: list[np.ndarray] = []
+    for arr in col.cast(pa.list_(pa.int32())).chunks:
+        if not len(arr):
+            continue
+        vals = arr.values.to_numpy()
+        o = arr.offsets.to_numpy().tolist()
+        views = [vals[a:b] for a, b in zip(o, o[1:])]
+        if arr.null_count:
+            valid = arr.is_valid().to_numpy(zero_copy_only=False)
+            views = [v if ok else _EMPTY_I32 for v, ok in zip(views, valid)]
+        out.extend(views)
+    return out
+
+
+def posting_rows(tbl: pa.Table) -> list[TermPostings]:
+    """Every row of a segments-table read as a ``TermPostings``, in row
+    order.  Each column converts once, column-wise over its Arrow
+    buffers (any chunking or slice offset); the position columns are
+    empty when the read left them out."""
+    n = tbl.num_rows
+    has_pos = "pos_blocks" in tbl.column_names
+    col = tbl.column
+    return list(map(TermPostings._make, zip(
+        _ints(col("df")), _ints(col("ttf")),
+        _ints(col("singleton_doc")), _ints(col("singleton_freq")),
+        _binaries(col("doc_blocks")), _int32_lists(col("doc_block_offsets")),
+        _binaries(col("freq_blocks")), _int32_lists(col("freq_block_offsets")),
+        _binaries(col("pos_blocks")) if has_pos else [b""] * n,
+        _int32_lists(col("pos_block_offsets")) if has_pos else [_EMPTY_I32] * n,
+        _int32_lists(col("block_last_docs")),
+        _int32_lists(col("impacts_flat")), _int32_lists(col("impacts_offsets")),
+    )))
+
+
+def rows_to_posting_map(tbl: pa.Table) -> dict[str, TermPostings]:
+    """``{term: TermPostings}`` of a segments-table read holding one
+    row per term (one segment's rows, say)."""
+    return dict(zip(tbl.column("term").to_pylist(), posting_rows(tbl)))
 
 
 def postings_read(spec: KernelSpec, segments: tuple | None = None
@@ -191,39 +242,47 @@ def postings_read(spec: KernelSpec, segments: tuple | None = None
     return _POSTINGS_COLS + (_POS_COLS if spec.need_pos else []), cond
 
 
-def _empty_result() -> pd.DataFrame:
-    return _RESULT_ARROW.empty_table().to_pandas()
+def _segment_postings(tbl: pa.Table, masks: list) -> list[tuple]:
+    """``(segment_id, postings map with the masks put in, norms,
+    num_docs)`` of every segment in ``tbl`` (rows of the kernel's read,
+    in any order): one stable sort groups the rows by segment, one
+    mask finds the sentinels, one column-wise pass builds every
+    ``TermPostings``."""
+    if tbl.num_rows == 0:
+        return []
+    seg = tbl.column("segment_id").to_numpy()
+    sent = pc.equal(tbl.column("term"), SENTINEL_TERM).to_numpy()
+    terms = tbl.column("term").to_pylist()
+    tps = posting_rows(tbl)
+    order = np.argsort(seg, kind="stable")
+    out = []
+    for rows in np.split(order, np.flatnonzero(np.diff(seg[order])) + 1):
+        seg_id, is_sent = int(seg[rows[0]]), sent[rows]
+        if not is_sent.any():
+            # the read always fetches the sentinel with the postings: a
+            # segment without it has rows outside the files read, or is corrupt
+            raise ValueError(
+                f"segment {seg_id}: {len(rows)} postings rows but "
+                "no sentinel row (segment split across files?)"
+            )
+        pmap = {terms[i]: tps[i] for i in rows[~is_sent].tolist()}
+        for token, docsets in masks:
+            if seg_id in docsets:
+                pmap[token] = docsets[seg_id]
+        st = tps[rows[is_sent][0]]
+        norms = np.frombuffer(st.doc_blocks, dtype=np.uint8).astype(np.int64)
+        out.append((seg_id, pmap, norms, st.df))
+    return out
 
 
-def _segment_postings(masks: list, seg_id: int,
-                      seg_pdf: pd.DataFrame) -> tuple[dict, np.ndarray, int]:
-    """(postings map with the masks put in, norms, num_docs) of one
-    segment's rows: sentinel check -> postings map -> masks."""
-    sent = seg_pdf[seg_pdf["term"] == SENTINEL_TERM]
-    if len(sent) == 0:
-        # the read always fetches the sentinel with the postings: a
-        # segment without it has rows outside the files read, or is corrupt
-        raise ValueError(
-            f"segment {seg_id}: {len(seg_pdf)} postings rows but "
-            "no sentinel row (segment split across files?)"
-        )
-    pmap = rows_to_posting_map(seg_pdf[seg_pdf["term"] != SENTINEL_TERM])
-    for token, docsets in masks:
-        if seg_id in docsets:
-            pmap[token] = docsets[seg_id]
-    norms = np.frombuffer(sent["doc_blocks"].iloc[0], dtype=np.uint8).astype(np.int64)
-    return pmap, norms, int(sent["df"].iloc[0])
-
-
-def _score_segment_rows(spec: KernelSpec, masks: list, seg_id: int,
-                        seg_pdf: pd.DataFrame) -> pd.DataFrame:
-    """One segment's kernel: _segment_postings -> score_segment.  A
-    segment without hits still reports its hit count in a
-    ``doc_id = -1`` row."""
+def _score_segment_rows(spec: KernelSpec, seg_id: int, pmap: dict,
+                        norms: np.ndarray, num_docs: int) -> tuple | None:
+    """One segment's kernel (score_segment): its result columns in
+    ``_RESULT_ARROW`` order, or None when nothing can match.  A segment
+    without hits still reports its hit count in a ``doc_id = -1`` row."""
     cq = spec.cq
-    pmap, norms, num_docs = _segment_postings(masks, seg_id, seg_pdf)
     if pmap.keys() <= {DELETES_TOKEN} and not cq.match_all:
-        return _empty_result()  # no postings, no filter docset: no match
+        return None  # no postings, no filter docset: no match
     base = seg_id * spec.segment_size
     # the paging cursor's doc id is global; segment-local arithmetic
     # keeps the (score, doc) comparison exact for every segment
@@ -235,48 +294,51 @@ def _score_segment_rows(spec: KernelSpec, masks: list, seg_id: int,
         prune=spec.score_mode == "top_scores", num_docs=num_docs,
         min_competitive=spec.min_competitive, after=after,
     )
-    hit = len(res.doc_ids) > 0
-    return pd.DataFrame({
-        "segment_id": seg_id,
-        "doc_id": res.doc_ids + base if hit else [-1],
-        "score": res.scores if hit else [np.float32(0)],
-        "hits": int(res.hits),
-        "hits_exact": bool(res.hits_exact),
-    })
+    docs = res.doc_ids.astype(np.int64) + base
+    scores = np.asarray(res.scores, np.float32)
+    if not len(docs):
+        docs, scores = np.full(1, -1, np.int64), np.zeros(1, np.float32)
+    n = len(docs)
+    return (np.full(n, seg_id, np.int32), docs, scores,
+            np.full(n, res.hits, np.int64), np.full(n, res.hits_exact, np.bool_))
 
 
 def score_files(spec: KernelSpec, masks: list, files: list[str],
                 segments: tuple | None = None,
-                timings: dict | None = None) -> pd.DataFrame:
+                timings: dict | None = None) -> pa.Table:
     """THE segment kernel entry point, for both placements: read the
     query's postings and sentinel rows of ``files`` within the
-    ``segments`` window (postings_read), group them by segment and score
-    each (_score_segment_rows) under ``masks`` —
-    ``[(token, {segment_id: TermPostings})]``.  Returns RESULT_SCHEMA
-    rows.  ``timings`` (optional) accumulates the read and
-    decode+kernel seconds."""
+    ``segments`` window (postings_read) as one Arrow table, group them
+    by segment (_segment_postings) and score each
+    (_score_segment_rows) under ``masks`` —
+    ``[(token, {segment_id: TermPostings})]``.  Returns one
+    ``_RESULT_ARROW`` table; no pandas anywhere.  ``timings``
+    (optional) accumulates the seconds of the ``read``, the
+    ``postings`` (grouping + posting maps) and the ``kernel``
+    (score_segment)."""
     cq = spec.cq
     if not files or not (
         cq.match_all or spec.terms or spec.mt_qs
         or any(token != DELETES_TOKEN for token, _ in masks)
     ):
-        return _empty_result()
+        return _RESULT_ARROW.empty_table()
     t0 = time.perf_counter()
     cols, cond = postings_read(spec, segments)
-    rows = pads.dataset(files, format="parquet").to_table(
-        columns=cols, filter=cond
-    ).to_pandas()
+    tbl = pads.dataset(files, format="parquet").to_table(columns=cols, filter=cond)
     t1 = time.perf_counter()
-    outs = [
-        _score_segment_rows(spec, masks, int(seg_id), g)
-        for seg_id, g in rows.groupby("segment_id", sort=False)
-    ]
-    outs = [o for o in outs if len(o)]
-    out = pd.concat(outs, ignore_index=True) if outs else _empty_result()
+    segs = _segment_postings(tbl, masks)
+    t2 = time.perf_counter()
+    parts = [p for p in (_score_segment_rows(spec, *s) for s in segs)
+             if p is not None]
     if timings is not None:
-        timings["read"] = timings.get("read", 0.0) + t1 - t0
-        timings["kernel"] = timings.get("kernel", 0.0) + time.perf_counter() - t1
-    return out
+        for name, dt in (("read", t1 - t0), ("postings", t2 - t1),
+                         ("kernel", time.perf_counter() - t2)):
+            timings[name] = timings.get(name, 0.0) + dt
+    if not parts:
+        return _RESULT_ARROW.empty_table()
+    return pa.Table.from_arrays(
+        [pa.array(np.concatenate(c)) for c in zip(*parts)], schema=_RESULT_ARROW
+    )
 
 
 class QueryCache:
@@ -852,20 +914,18 @@ class IndexSearcher:
         """A top-k search, run in the chosen placement (search())."""
         p = self._prepare(query, score_mode, similarity)
         if p.cq is None:
-            return self._merge(pd.DataFrame(), k)
+            return self._merge(_RESULT_ARROW.empty_table(), k)
         spec, masks = self._kernel_inputs(p, k, score_mode, threshold, after)
         files = self._table_files("segments")
         if two_pass and score_mode == "top_scores":
             seed = score_files(spec, masks, files, segments=(0, 1))
-            seed = seed[seed["doc_id"] >= 0]
-            if len(seed) >= k:
-                spec = replace(spec, min_competitive=float(
-                    np.sort(seed["score"].to_numpy(dtype=np.float32))[-k]
-                ))
+            scores = seed["score"].to_numpy()[seed["doc_id"].to_numpy() >= 0]
+            if len(scores) >= k:
+                spec = replace(spec, min_competitive=float(np.sort(scores)[-k]))
         self._last_placement = self._choose_placement(p)
         if self._last_placement[0] == "driver":
             return self._merge(score_files(spec, masks, files), k)
-        return self._merge(self._spark_rows(spec, masks).toPandas(), k)
+        return self._merge(self._spark_rows(spec, masks).toArrow(), k)
 
     def search(
         self,
@@ -1127,14 +1187,12 @@ class IndexSearcher:
             planner.has_phrase(q), None, "complete", 0, self.cfg.segment_size,
         )
         cols, cond = postings_read(spec, (seg_id, seg_id + 1))
-        rows = self._dataset("segments").to_table(
-            columns=cols, filter=cond
-        ).to_pandas()
-        if not len(rows):  # no such segment
+        rows = self._dataset("segments").to_table(columns=cols, filter=cond)
+        if not rows.num_rows:  # no such segment
             return {"doc_id": doc_id, "matches": False, "description": str(q)}
         # point clauses: the segment's docset, as the kernel's mask
-        pmap, norms, _ = _segment_postings(
-            self._point_masks(p.point_qs), seg_id, rows
+        [(_, pmap, norms, _)] = _segment_postings(
+            rows, self._point_masks(p.point_qs)
         )
         details, total = [], 0.0
         if cq.match_all and not (cq.musts or cq.filters):
@@ -1303,15 +1361,14 @@ class IndexSearcher:
 
         rows = self._dataset("segments").to_table(
             columns=_POSTINGS_COLS, filter=pads.field("term") == term
-        ).to_pandas()
+        )
         seg_size = self.cfg.segment_size
         ids = [np.empty(0, np.int64)] + [
-            decode_term_postings(tp)[0].astype(np.int64) + int(seg) * seg_size
-            for seg, g in rows.groupby("segment_id")
-            for tp in rows_to_posting_map(g).values()
+            decode_term_postings(tp)[0].astype(np.int64) + seg * seg_size
+            for seg, tp in zip(rows["segment_id"].to_pylist(), posting_rows(rows))
         ]
         return self.spark.createDataFrame(
-            pd.DataFrame({"doc_id": np.concatenate(ids)}), schema="doc_id bigint"
+            pa.table({"doc_id": np.sort(np.concatenate(ids))}), schema="doc_id bigint"
         )
 
     def _point_masks(self, point_qs, lead=None, dv_keys=frozenset()) -> list[tuple]:
@@ -1581,29 +1638,27 @@ class IndexSearcher:
             task_masks = bc.value if bc is not None else []
             for batch in batches:
                 for i in batch.column(0).to_pylist():
-                    pdf = score_files(spec, task_masks, files, tasks[i])
-                    yield pa.RecordBatch.from_pandas(
-                        pdf, schema=_RESULT_ARROW, preserve_index=False
-                    )
+                    yield from score_files(
+                        spec, task_masks, files, tasks[i]
+                    ).to_batches()
 
         n = len(tasks)
         return self.spark.range(0, n, 1, n).mapInArrow(run, RESULT_SCHEMA)
 
-    def _merge(self, pdf: pd.DataFrame, k: int) -> TopDocs:
-        """TopDocs.merge: (score desc, doc asc) across segments."""
-        if len(pdf) == 0:
-            return TopDocs(0, "EQ", np.empty(0, np.int64), np.empty(0, np.float32))
-        hits_df = pdf.drop_duplicates("segment_id")
-        total = int(hits_df["hits"].sum())
-        relation = "EQ" if bool(hits_df["hits_exact"].all()) else "GTE"
-        pdf = pdf[pdf["doc_id"] >= 0]
-        order = np.lexsort(
-            (pdf["doc_id"].to_numpy(), -pdf["score"].to_numpy(dtype=np.float64))
-        )[:k]
-        top = pdf.iloc[order]
+    def _merge(self, res: pa.Table, k: int) -> TopDocs:
+        """TopDocs.merge over score_files' ``_RESULT_ARROW`` rows: the
+        hit counts of each segment (one per segment, on each of its
+        rows) summed, the hits ranked by (score desc, doc asc)."""
+        seg = res["segment_id"].to_numpy()
+        first = np.unique(seg, return_index=True)[1]
+        exact = res["hits_exact"].to_numpy()[first]
+        docs, scores = res["doc_id"].to_numpy(), res["score"].to_numpy()
+        hit = docs >= 0
+        docs, scores = docs[hit], scores[hit]
+        order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
         return TopDocs(
-            total,
-            relation,
-            top["doc_id"].to_numpy(dtype=np.int64),
-            top["score"].to_numpy(dtype=np.float32),
+            int(res["hits"].to_numpy()[first].sum()),
+            "EQ" if exact.all() else "GTE",
+            docs[order].astype(np.int64),
+            scores[order].astype(np.float32),
         )

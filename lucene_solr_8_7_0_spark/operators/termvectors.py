@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = ["term_vector", "build_term_vectors", "TERMVECTOR_SCHEMA"]
@@ -107,12 +108,11 @@ def term_vector(searcher, doc_id: int) -> DataFrame:
     )
 
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
             terms, freqs, poss = [], [], []
-            # one itertuples pass builds every TermPostings; the
-            # per-term work is then only the decode itself (the old
-            # per-row pandas .iloc slicing was pure overhead)
-            for term, tp in rows_to_posting_map(pdf).items():
+            # one column-wise pass builds every TermPostings; the
+            # per-term work is then only the decode itself
+            for term, tp in rows_to_posting_map(pa.Table.from_batches([batch])).items():
                 docs, fr, pos = decode_term_postings(tp, with_positions=True)
                 j = np.searchsorted(docs, local)
                 if j < len(docs) and docs[j] == local:
@@ -125,10 +125,12 @@ def term_vector(searcher, doc_id: int) -> DataFrame:
                         )
                     else:
                         poss.append([])
-            yield pd.DataFrame(
-                {"term": terms, "freq": freqs, "positions": poss}
-            )
+            yield pa.RecordBatch.from_pydict({
+                "term": pa.array(terms, pa.string()),
+                "freq": pa.array(freqs, pa.int32()),
+                "positions": pa.array(poss, pa.list_(pa.int32())),
+            })
 
-    return seg.mapInPandas(
+    return seg.mapInArrow(
         run, schema="term string, freq int, positions array<int>"
     )

@@ -284,3 +284,21 @@ def test_empty_corpus_build_and_search(spark, tmpdir_path):
     assert s.matches_df(Q.PrefixQuery("a")).count() == 0
     assert s.count(Q.MatchAllDocsQuery()) == 0
     assert s.search(Q.PhraseQuery(("a", "b")), k=3).total_hits == 0
+
+
+def test_build_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """Every job a build launches, including those of its own threads
+    (the overlapped docs write, the concurrent docmeta/termdict
+    stages), belongs to the job group the caller set."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("build_group", "build_index")
+    try:
+        build_index(spark, corpus_df(spark, 120, seed=4), str(tmp_path / "idx"),
+                    EngineConfig(segment_size=32))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(tracker.getJobIdsForGroup("build_group")) > 0
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

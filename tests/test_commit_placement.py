@@ -11,6 +11,8 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
@@ -296,9 +298,9 @@ def test_merge_segment_fails_loudly(spark, tmp_path):
     base = str(tmp_path / "base")
     build_index(spark, spark.createDataFrame(_base_rows("mid_segment")), base,
                 EngineConfig(segment_size=16))
-    rows = _table(base, "segments").cast(segment_arrow_schema()).to_pandas()
-    seg = rows[rows["segment_id"] == 1]
+    rows = _table(base, "segments").cast(segment_arrow_schema())
+    seg = rows.filter(pc.equal(rows["segment_id"], 1))
     with pytest.raises(ValueError, match="no sentinel row"):
-        merge_mod.merge_segment(1, seg[seg["term"] != SENTINEL_TERM])
+        merge_mod.merge_segment(1, seg.filter(pc.not_equal(seg["term"], SENTINEL_TERM)))
     with pytest.raises(ValueError, match="overlap in doc ids"):
-        merge_mod.merge_segment(1, pd.concat([seg, seg]))
+        merge_mod.merge_segment(1, pa.concat_tables([seg, seg]))

@@ -10,12 +10,16 @@ corpus, then breaks each headline query's wall into driver phases:
             job per uncached clause) and the live-docs mask
   place     IndexSearcher._choose_placement (printed with its reason)
   read      driver placement: the pyarrow postings read (score_files)
-  kernel    driver placement: decode + score per segment (score_files)
+  postings  driver placement: grouping by segment + posting maps
+            (score_files)
+  kernel    driver placement: score_segment per segment, decode
+            included (score_files)
   exec      spark placement: the MapInArrow job over segment windows,
             collected
   merge     driver-side TopDocs.merge
 
-read and kernel come from score_files' in-process timestamps.
+read, postings and kernel come from score_files' in-process
+timestamps.
 
 Usage: python tools/profile_query.py [n_files] [reps]
 """
@@ -56,13 +60,13 @@ def phases(searcher, query, k=10):
     placement = searcher._choose_placement(p)
     t["place"] = time.perf_counter() - t0
     if placement[0] == "driver":
-        pdf = score_files(spec, masks, searcher._table_files("segments"), timings=t)
+        res = score_files(spec, masks, searcher._table_files("segments"), timings=t)
     else:
         t0 = time.perf_counter()
-        pdf = searcher._spark_rows(spec, masks).toPandas()
+        res = searcher._spark_rows(spec, masks).toArrow()
         t["exec"] = time.perf_counter() - t0
     t0 = time.perf_counter()
-    searcher._merge(pdf, k)
+    searcher._merge(res, k)
     t["merge"] = time.perf_counter() - t0
     t["total"] = sum(t.values())
     return t, placement
