@@ -31,6 +31,15 @@ DEFAULT_TOTAL_HITS_THRESHOLD = 1000
 # (lucene/core/.../search/BooleanQuery.java:44).
 MAX_CLAUSE_COUNT = 1024
 
+# The most segments bytes on disk (the sum of an index's
+# segments/*.parquet file sizes) the driver holds in memory whole.  One
+# rule for both driver-side users: a driver commit rewrites a base of
+# at most this size in-process (operators/merge), and a searcher keeps
+# its snapshot's segments and termdict resident, term-sorted, for
+# binary-searched reads (operators/search.ResidentTables); above it,
+# both leave the work to Spark's reads of the files.
+DRIVER_MAX_SEGMENTS_BYTES = 128 << 20
+
 
 @dataclass
 class EngineConfig:

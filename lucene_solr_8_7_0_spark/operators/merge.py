@@ -53,7 +53,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import EngineConfig
+from ..config import DRIVER_MAX_SEGMENTS_BYTES, EngineConfig
 from ..functions.codec import decode_term_postings
 from ..functions.smallfloat import int_to_byte4_np
 from .build import read_table
@@ -370,10 +370,10 @@ class CommitInfo:
 # token arrays and the base's segments in memory.  A delta over the
 # cut also pays the capped collect before going to Spark (1.8 s at
 # 10,000 docs), so the cut stays where that waste is small next to the
-# Spark chain it precedes; the byte cap keeps the in-memory segments
-# rewrite within what was measured.
+# Spark chain it precedes; the byte cap (config.DRIVER_MAX_SEGMENTS_BYTES,
+# which the searcher's resident tables share) keeps the in-memory
+# segments rewrite within what was measured.
 _DRIVER_MAX_DOCS = 5_000
-_DRIVER_MAX_BASE_BYTES = 128 << 20
 
 
 def _choose_commit_placement(
@@ -387,14 +387,14 @@ def _choose_commit_placement(
         # the offsets tier (operators/termvectors) is built by its own
         # Spark stage; the driver commit does not write termvectors
         return "spark", "index_offsets: termvectors are built in Spark"
-    if base_bytes > _DRIVER_MAX_BASE_BYTES:
+    if base_bytes > DRIVER_MAX_SEGMENTS_BYTES:
         return "spark", (f"base segments {base_bytes} B > "
-                         f"{_DRIVER_MAX_BASE_BYTES} B")
+                         f"{DRIVER_MAX_SEGMENTS_BYTES} B")
     n = delta_rows()
     if n > _DRIVER_MAX_DOCS:
         return "spark", f"delta > {_DRIVER_MAX_DOCS} docs"
     return "driver", (f"delta {n} <= {_DRIVER_MAX_DOCS} docs, base "
-                      f"segments {base_bytes} <= {_DRIVER_MAX_BASE_BYTES} B")
+                      f"segments {base_bytes} <= {DRIVER_MAX_SEGMENTS_BYTES} B")
 
 
 def _table_files(index_dir: str, name: str) -> list[str]:

@@ -5,24 +5,29 @@ Execution model (mirrors IndexSearcher leaf slices,
 IndexSearcher.java:571-668):
 
 1. driver: rewrite query (plans/rewrite), fetch global term stats from
-   the termdict (a pyarrow read with row-group pruning on the sorted
-   term column), bind BM25 weights (plans/planner) — the
+   the termdict, bind BM25 weights (plans/planner) — the
    Weight-creation phase,
-2. ``score_files`` — the one kernel entry point: a ``pyarrow.dataset``
-   read of the segments files with ``term IN (terms, sentinel)``
-   pushed into parquet (row-group pruning = the FST term-index
-   analog).  The read stays an Arrow table: one stable sort groups it
-   by segment, one column-wise pass over the Arrow buffers builds
-   every ``TermPostings`` (posting_rows), each segment's sentinel row
+2. ``score_files`` — the one kernel entry point: the rows of
+   ``term IN (terms, sentinel)`` (plus the distributed unions' terms)
+   from one of the snapshot's two row sources (operators/snapshot):
+   the driver's resident term-sorted tables, read by binary search
+   (the resident FST term-index analog), or a ``pyarrow.dataset`` read
+   of the segments files with the predicate pushed into parquet.  The
+   rows stay an Arrow table: one stable sort groups them by segment,
+   one column-wise pass over the Arrow buffers builds every
+   ``TermPostings`` (posting_rows), each segment's sentinel row
    carries its norms, and the numpy kernel (functions/wand) scores it
    under the per-segment masks (live docs, point filters) — the
    leaf-slice collection phase.  The result is one Arrow table
    (``_RESULT_ARROW``); no pandas on the way.  It runs in one of two
    placements:
 
-   * driver: in-process over every segments file — no Spark job, no
-     Python worker.  Top-k searches take it unless their postings
-     volume pays for a Spark stage (``IndexSearcher._choose_placement``),
+   * driver: in-process — no Spark job, no Python worker.  Top-k
+     searches take it unless their postings volume pays for a Spark
+     stage (``IndexSearcher._choose_placement``).  It reads the
+     resident tables when the snapshot's segments bytes are at most
+     ``config.DRIVER_MAX_SEGMENTS_BYTES`` (the rule the driver commit
+     shares), else the files, as the Spark tasks do,
    * spark: a small DataFrame of segment-id windows (one task wave)
      feeds ``mapInArrow``; each task calls ``score_files`` on its
      window of every segments file.  The lazy DataFrame APIs
@@ -35,29 +40,37 @@ IndexSearcher.java:571-668):
    with ``toArrow``, so the merge has one input type.
 
 Column pruning: queries without phrases never read ``pos_blocks`` —
-the parquet column simply isn't read (the ".pos file" stays cold).
+the parquet column simply isn't read, nor taken from the resident
+table (the ".pos file" stays cold).
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import time
 from dataclasses import dataclass, replace
+from functools import cached_property
 from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..config import DEFAULT_TOTAL_HITS_THRESHOLD, MAX_CLAUSE_COUNT, EngineConfig  # noqa: F401
+from ..config import (  # noqa: F401
+    DEFAULT_TOTAL_HITS_THRESHOLD,
+    DRIVER_MAX_SEGMENTS_BYTES,
+    MAX_CLAUSE_COUNT,
+    EngineConfig,
+)
 from ..functions.codec import _EMPTY_I32, TermPostings
 from ..functions.wand import CompiledQuery, ScoringClause, score_segment
 from .deletes import DELETES_TOKEN, load_live_docs, read_generation
 from .segments import SENTINEL_TERM
+from .snapshot import FileSnapshot, ParquetTables, ResidentTables
 from ..plans import planner, rewrite as rw
 from ..plans.queries import (
     FuzzyQuery,
@@ -224,22 +237,21 @@ def rows_to_posting_map(tbl: pa.Table) -> dict[str, TermPostings]:
     return dict(zip(tbl.column("term").to_pylist(), posting_rows(tbl)))
 
 
-def postings_read(spec: KernelSpec, segments: tuple | None = None
-                  ) -> tuple[list, object]:
-    """(columns, filter) of the kernel's parquet read: the query terms'
-    postings plus every segment's sentinel (norms) row, ORed with the
-    distributed unions' term conditions, within the ``segments`` window
-    ``(lo, hi)`` (``lo <= segment_id < hi``, None = open; row groups
-    outside it are pruned by their footer statistics)."""
-    cond = pads.field("term").isin(list(spec.terms) + [SENTINEL_TERM])
-    for q in spec.mt_qs:
-        cond = cond | rw.term_read_filter(q)
-    lo, hi = segments or (None, None)
-    if lo is not None:
-        cond = cond & (pads.field("segment_id") >= lo)
-    if hi is not None:
-        cond = cond & (pads.field("segment_id") < hi)
-    return _POSTINGS_COLS + (_POS_COLS if spec.need_pos else []), cond
+def postings_read(spec: KernelSpec) -> tuple[list, tuple, list]:
+    """(terms, multi-term queries, columns) of the kernel's read: the
+    query terms' postings plus every segment's sentinel (norms) row, the
+    distributed unions' rows, and the position columns only for phrase
+    queries."""
+    return (list(spec.terms) + [SENTINEL_TERM], spec.mt_qs,
+            _POSTINGS_COLS + (_POS_COLS if spec.need_pos else []))
+
+
+def kernel_rows(spec: KernelSpec, source, segments: tuple | None = None
+                ) -> pa.Table:
+    """The kernel's read (postings_read) from ``source`` (ResidentTables
+    or ParquetTables) within the ``segments`` window ``(lo, hi)``
+    (``lo <= segment_id < hi``, None = open)."""
+    return source.segment_rows(*postings_read(spec), window=segments)
 
 
 def _segment_postings(tbl: pa.Table, masks: list) -> list[tuple]:
@@ -303,28 +315,32 @@ def _score_segment_rows(spec: KernelSpec, seg_id: int, pmap: dict,
             np.full(n, res.hits, np.int64), np.full(n, res.hits_exact, np.bool_))
 
 
-def score_files(spec: KernelSpec, masks: list, files: list[str],
+def score_files(spec: KernelSpec, masks: list, source,
                 segments: tuple | None = None,
                 timings: dict | None = None) -> pa.Table:
-    """THE segment kernel entry point, for both placements: read the
-    query's postings and sentinel rows of ``files`` within the
-    ``segments`` window (postings_read) as one Arrow table, group them
-    by segment (_segment_postings) and score each
-    (_score_segment_rows) under ``masks`` —
-    ``[(token, {segment_id: TermPostings})]``.  Returns one
-    ``_RESULT_ARROW`` table; no pandas anywhere.  ``timings``
-    (optional) accumulates the seconds of the ``read``, the
-    ``postings`` (grouping + posting maps) and the ``kernel``
-    (score_segment)."""
+    """THE segment kernel entry point, for both placements: take the
+    query's postings and sentinel rows within the ``segments`` window
+    from ``source`` (kernel_rows) as one Arrow table, group them by
+    segment (_segment_postings) and score each (_score_segment_rows)
+    under ``masks`` — ``[(token, {segment_id: TermPostings})]``.
+    ``source`` is where the rows come from: the driver's resident
+    tables (ResidentTables), or the snapshot's files (ParquetTables:
+    the Spark tasks' read, and the driver's above
+    DRIVER_MAX_SEGMENTS_BYTES); a plain list of segments files reads
+    as ParquetTables.  Returns one ``_RESULT_ARROW`` table; no pandas
+    anywhere.  ``timings`` (optional) accumulates the seconds of the
+    ``read``, the ``postings`` (grouping + posting maps) and the
+    ``kernel`` (score_segment)."""
+    if isinstance(source, (list, tuple)):
+        source = ParquetTables(FileSnapshot.of(source))
     cq = spec.cq
-    if not files or not (
+    if not (
         cq.match_all or spec.terms or spec.mt_qs
         or any(token != DELETES_TOKEN for token, _ in masks)
     ):
         return _RESULT_ARROW.empty_table()
     t0 = time.perf_counter()
-    cols, cond = postings_read(spec, segments)
-    tbl = pads.dataset(files, format="parquet").to_table(columns=cols, filter=cond)
+    tbl = kernel_rows(spec, source, segments)
     t1 = time.perf_counter()
     segs = _segment_postings(tbl, masks)
     t2 = time.perf_counter()
@@ -471,7 +487,7 @@ class IndexSearcher:
                  query_cache: QueryCache | None = None):
         import pyarrow.parquet as pq
 
-        from .build import load_config, read_table, sorted_docs
+        from .build import load_config, sorted_docs
         from .stats import read_stats_row
 
         index_dir = _local_index_dir(index_dir)
@@ -501,8 +517,11 @@ class IndexSearcher:
         # leading doc ids that follow the index sort (a commit appends
         # docs after them); None: all of them
         self._sorted_docs = sorted_docs(index_dir)
-        self.segments = read_table(spark, index_dir, "segments")
-        self.termdict = read_table(spark, index_dir, "termdict")
+        # path, size and mtime_ns of every segments and termdict file:
+        # every read of them checks it (operators/snapshot)
+        self._snapshot = FileSnapshot.record(index_dir)
+        self._resident = None  # ResidentTables, loaded by the first _tables()
+        self._resident_lock = threading.Lock()
         self.docmeta_path = os.path.join(index_dir, "docmeta")
         self._live_docs_cache = None  # (del generation, mask dict)
         # (placement, reason) of the last kernel run: "driver" | "spark"
@@ -517,15 +536,40 @@ class IndexSearcher:
             else None
         )
 
-    def _table_files(self, name: str) -> list[str]:
-        """The parquet files of one index table, sorted."""
-        import glob
+    @cached_property
+    def segments(self) -> DataFrame:
+        """The segments table as a Spark DataFrame, created on first use
+        (no py4j call at open)."""
+        from .build import read_table
 
-        return sorted(glob.glob(os.path.join(self.index_dir, name, "*.parquet")))
+        return read_table(self.spark, self.index_dir, "segments")
 
-    def _dataset(self, name: str):
-        """One index table as a pyarrow dataset (driver-side reads)."""
-        return pads.dataset(self._table_files(name), format="parquet")
+    @cached_property
+    def termdict(self) -> DataFrame:
+        """The termdict table as a Spark DataFrame, created on first use."""
+        from .build import read_table
+
+        return read_table(self.spark, self.index_dir, "termdict")
+
+    @cached_property
+    def _parallelism(self) -> int:
+        """The Spark placement's task wave, read once per searcher."""
+        return self.spark.sparkContext.defaultParallelism
+
+    def _tables(self):
+        """The driver's source of segments and termdict rows: the
+        resident tables (ResidentTables, loaded on the first call) when
+        the snapshot's segments bytes on disk are at most
+        DRIVER_MAX_SEGMENTS_BYTES — the rule under which a driver
+        commit holds a base in memory too — else the snapshot's files,
+        read as the Spark tasks read them (ParquetTables)."""
+        if self._snapshot.nbytes("segments") > DRIVER_MAX_SEGMENTS_BYTES:
+            return ParquetTables(self._snapshot)
+        if self._resident is None:
+            with self._resident_lock:
+                if self._resident is None:
+                    self._resident = ResidentTables.load(self._snapshot)
+        return self._resident
 
     # ---- term dictionary services (FST/automaton analog) ----
 
@@ -759,13 +803,13 @@ class IndexSearcher:
         None for "many", telling the rewrite to take the DISTRIBUTED
         constant-score union — the predicate then ships to the postings
         read and kernels and no term list ever reaches the driver.  A
-        pyarrow read of the termdict (rw.term_read_filter: prefixes and
-        ranges prune row groups), never a Spark job."""
-        td = self._dataset("termdict")
+        driver-side read of the termdict (_tables: a binary-searched
+        prefix or range, then rw.term_read_filter), never a Spark job."""
+        td = self._tables()
         if isinstance(q, FuzzyQuery):
             # the read keeps only the prefix and length band: the exact
             # edit-distance check bounds the scored expansion
-            rows = td.to_table(columns=["term"], filter=rw.term_read_filter(q))
+            rows = td.termdict_rows(q, ["term"])
             terms = rw.expand_terms(q, sorted(rows.column("term").to_pylist()))
             return None if len(terms) > MAX_CLAUSE_COUNT else terms
         # regexp/wildcard: the read may be a superset of the Python
@@ -773,7 +817,7 @@ class IndexSearcher:
         # match count — probe enough to make the 0/1-match unwrap
         # almost always decidable, else go distributed
         probe = 64
-        rows = td.head(probe + 1, columns=["term"], filter=rw.term_read_filter(q))
+        rows = td.termdict_rows(q, ["term"], limit=probe + 1)
         if rows.num_rows > probe:
             return None  # many -> distributed union
         # exact Python-semantics re-check (regexp dialect)
@@ -784,23 +828,13 @@ class IndexSearcher:
 
     def _term_stats(self, terms: set[str]) -> dict[str, tuple[int, int]]:
         """Global TermStatistics for a query's terms, read driver-side
-        with pyarrow (row-group pruning on the term-sorted termdict
-        files — the FST seek analog), without a Spark job on the
-        per-query critical path.  The reference likewise resolves term
-        stats in-process at Weight creation."""
+        (_tables: binary searches of the resident termdict — the FST
+        seek analog), without a Spark job on the per-query critical
+        path.  The reference likewise resolves term stats in-process at
+        Weight creation."""
         if not terms:
             return {}
-        tbl = self._dataset("termdict").to_table(
-            columns=["term", "df", "ttf"], filter=pads.field("term").isin(list(terms)),
-        )
-        return {
-            t: (int(d), int(f))
-            for t, d, f in zip(
-                tbl.column("term").to_pylist(),
-                tbl.column("df").to_pylist(),
-                tbl.column("ttf").to_pylist(),
-            )
-        }
+        return self._tables().term_stats(terms)
 
     def _dv_plan(self, cq: CompiledQuery, term_stats) -> tuple:
         """(lead, dv_keys) for the IndexOrDocValuesQuery access-path
@@ -891,9 +925,7 @@ class IndexSearcher:
         df = sum(p.term_stats.get(t, (0, 0))[0] for t in p.terms)
         ttf = sum(p.term_stats.get(t, (0, 0))[1] for t in p.terms)
         for mq in p.mt_qs:  # a distributed union reads its superset's rows
-            tbl = self._dataset("termdict").to_table(
-                columns=["df", "ttf"], filter=rw.term_read_filter(mq.orig)
-            )
+            tbl = self._tables().termdict_rows(mq.orig, ["df", "ttf"])
             df += int(tbl["df"].to_numpy().sum())
             ttf += int(tbl["ttf"].to_numpy().sum())
         if p.cq.match_all:
@@ -916,16 +948,22 @@ class IndexSearcher:
         if p.cq is None:
             return self._merge(_RESULT_ARROW.empty_table(), k)
         spec, masks = self._kernel_inputs(p, k, score_mode, threshold, after)
-        files = self._table_files("segments")
         if two_pass and score_mode == "top_scores":
-            seed = score_files(spec, masks, files, segments=(0, 1))
+            seed = self._score_driver(spec, masks, segments=(0, 1))
             scores = seed["score"].to_numpy()[seed["doc_id"].to_numpy() >= 0]
             if len(scores) >= k:
                 spec = replace(spec, min_competitive=float(np.sort(scores)[-k]))
         self._last_placement = self._choose_placement(p)
         if self._last_placement[0] == "driver":
-            return self._merge(score_files(spec, masks, files), k)
+            return self._merge(self._score_driver(spec, masks), k)
         return self._merge(self._spark_rows(spec, masks).toArrow(), k)
+
+    def _score_driver(self, spec: KernelSpec, masks: list,
+                      segments: tuple | None = None,
+                      timings: dict | None = None) -> pa.Table:
+        """The driver placement: score_files in-process over the
+        driver's row source (_tables)."""
+        return score_files(spec, masks, self._tables(), segments, timings)
 
     def search(
         self,
@@ -1186,8 +1224,7 @@ class IndexSearcher:
             cq, tuple(p.terms), tuple(mq.orig for mq in p.mt_qs),
             planner.has_phrase(q), None, "complete", 0, self.cfg.segment_size,
         )
-        cols, cond = postings_read(spec, (seg_id, seg_id + 1))
-        rows = self._dataset("segments").to_table(columns=cols, filter=cond)
+        rows = kernel_rows(spec, self._tables(), (seg_id, seg_id + 1))
         if not rows.num_rows:  # no such segment
             return {"doc_id": doc_id, "matches": False, "description": str(q)}
         # point clauses: the segment's docset, as the kernel's mask
@@ -1359,9 +1396,7 @@ class IndexSearcher:
         is the cheap side by construction)."""
         from ..functions.codec import decode_term_postings
 
-        rows = self._dataset("segments").to_table(
-            columns=_POSTINGS_COLS, filter=pads.field("term") == term
-        )
+        rows = self._tables().segment_rows([term], columns=_POSTINGS_COLS)
         seg_size = self.cfg.segment_size
         ids = [np.empty(0, np.int64)] + [
             decode_term_postings(tp)[0].astype(np.int64) + seg * seg_size
@@ -1620,7 +1655,7 @@ class IndexSearcher:
         n_segs = max(1, -(-self.stats.num_docs // self.cfg.segment_size))
         if max_segment is not None:
             n_segs = min(n_segs, max_segment)
-        n = max(1, min(n_segs, self.spark.sparkContext.defaultParallelism))
+        n = max(1, min(n_segs, self._parallelism))
         cuts = [None] + [n_segs * i // n for i in range(1, n)] + [max_segment]
         return list(zip(cuts, cuts[1:]))
 
@@ -1631,7 +1666,10 @@ class IndexSearcher:
         segments file within its window; the masks travel as one
         broadcast.  Lazy — RESULT_SCHEMA rows."""
         tasks = self._spark_tasks(max_segment)
-        files = self._table_files("segments")
+        self._snapshot.check("segments")
+        # each task checks the files against the snapshot again, when
+        # it reads them (the DataFrame is lazy)
+        files = ParquetTables(self._snapshot)
         bc = self.spark.sparkContext.broadcast(masks) if masks else None
 
         def run(batches):

@@ -1,0 +1,281 @@
+"""A searcher's snapshot of the segments and termdict tables, and the
+two sources of their rows.
+
+``FileSnapshot`` records the path, size and ``mtime_ns`` of every
+segments and termdict file when a searcher opens.  Every parquet read
+and the resident load check it: a file removed, rewritten or added
+under a live searcher raises a ``ValueError`` that names it, instead of
+answering from a mix of two snapshots.
+
+Rows come from one of two sources with one interface (``segment_rows``,
+``term_stats``, ``termdict_rows``):
+
+* ``ResidentTables``: both tables loaded once into driver memory, the
+  segments sorted by (term, segment_id) and the termdict by term.  A
+  read is a binary search (``np.searchsorted``) over the distinct terms
+  and a ``take`` of their row runs; a multi-term read narrows its
+  prefix or range to a run of terms the same way, then applies its
+  exact pyarrow filter to that run.  The analog of Lucene's terms index
+  (.tip, BlockTreeTermsWriter.java:188-205), which stays resident and
+  seeks straight to a term's postings.
+* ``ParquetTables``: a ``pyarrow.dataset`` read of the files on every
+  call, the term predicate pushed into parquet row groups.
+
+A searcher holds ``ResidentTables`` on the driver when its snapshot's
+segments bytes on disk are at most ``config.DRIVER_MAX_SEGMENTS_BYTES``;
+the Spark tasks, and the driver above that cap, read ``ParquetTables``.
+For one read both return the same rows, possibly in another order (the
+kernel groups them by segment and keys them by term).
+"""
+
+from __future__ import annotations
+
+import glob
+import os
+import sys
+from dataclasses import dataclass
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+
+from ..plans import rewrite as rw
+from .segments import segment_arrow_schema
+
+TABLES = ("segments", "termdict")
+_TERMDICT_COLS = ["term", "df", "ttf"]
+
+
+def _schema(table: str) -> pa.Schema:
+    """The table's schema, for a table without files (an empty index)."""
+    if table == "segments":
+        return segment_arrow_schema()
+    return pa.schema([("term", pa.string()), ("df", pa.int64()),
+                      ("ttf", pa.int64())])
+
+
+def _listing(table_dir: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(table_dir, "*.parquet")))
+
+
+def _stat(paths) -> tuple:
+    out = []
+    for p in paths:
+        st = os.stat(p)
+        out.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+@dataclass(frozen=True)
+class FileSnapshot:
+    """``files``: ``{table: ((path, size, mtime_ns), ...)}`` of the
+    segments and termdict files as recorded; ``dirs``: the table
+    directories those lists are the listings of (empty for a given file
+    list, which cannot tell an added file)."""
+
+    files: dict
+    dirs: dict
+
+    @classmethod
+    def record(cls, index_dir: str) -> "FileSnapshot":
+        dirs = {t: os.path.join(index_dir, t) for t in TABLES}
+        return cls({t: _stat(_listing(d)) for t, d in dirs.items()}, dirs)
+
+    @classmethod
+    def of(cls, segments: list[str]) -> "FileSnapshot":
+        """The snapshot of a given list of segments files."""
+        return cls({"segments": _stat(segments), "termdict": ()}, {})
+
+    def paths(self, table: str) -> list[str]:
+        return [p for p, _, _ in self.files[table]]
+
+    def nbytes(self, table: str) -> int:
+        return sum(size for _, size, _ in self.files[table])
+
+    def check(self, *tables: str) -> None:
+        """Raise ``ValueError`` naming the first file of ``tables``
+        (default: all) that is gone, changed or new since the record."""
+        for t in tables or TABLES:
+            for path, size, mtime in self.files[t]:
+                try:
+                    st = os.stat(path)
+                except FileNotFoundError:
+                    raise ValueError(
+                        f"{t} file {path} was removed after the searcher "
+                        "opened this snapshot; reopen the searcher") from None
+                if (st.st_size, st.st_mtime_ns) != (size, mtime):
+                    raise ValueError(
+                        f"{t} file {path} changed after the searcher opened "
+                        f"this snapshot (size {size} -> {st.st_size}, "
+                        f"mtime_ns {mtime} -> {st.st_mtime_ns}); reopen the "
+                        "searcher")
+            if t in self.dirs:
+                new = sorted(set(_listing(self.dirs[t])) - set(self.paths(t)))
+                if new:
+                    raise ValueError(
+                        f"{t} file {new[0]} was added after the searcher "
+                        "opened this snapshot; reopen the searcher")
+
+
+def rows_filter(terms, mt_qs=(), window: tuple | None = None):
+    """The pyarrow filter of a segments read: ``term`` in ``terms`` or
+    matching a multi-term query's read filter (rw.term_read_filter),
+    within the window ``(lo, hi)`` (``lo <= segment_id < hi``, None =
+    open; row groups outside it are pruned by their footer statistics)."""
+    cond = pads.field("term").isin(pa.array(list(terms), pa.string()))
+    for q in mt_qs:
+        cond = cond | rw.term_read_filter(q)
+    lo, hi = window or (None, None)
+    if lo is not None:
+        cond = cond & (pads.field("segment_id") >= lo)
+    if hi is not None:
+        cond = cond & (pads.field("segment_id") < hi)
+    return cond
+
+
+def _stats_dict(terms: list, df, ttf) -> dict[str, tuple[int, int]]:
+    return {t: (int(d), int(f)) for t, d, f in zip(terms, df, ttf)}
+
+
+class ParquetTables:
+    """The snapshot's rows read from its files with ``pyarrow.dataset``
+    on every call, after checking the files against the snapshot."""
+
+    def __init__(self, snapshot: FileSnapshot):
+        self.snapshot = snapshot
+
+    def _dataset(self, table: str):
+        self.snapshot.check(table)
+        paths = self.snapshot.paths(table)
+        if not paths:
+            return pads.dataset(_schema(table).empty_table())
+        return pads.dataset(paths, format="parquet")
+
+    def segment_rows(self, terms, mt_qs=(), columns=None,
+                     window: tuple | None = None) -> pa.Table:
+        """The segments rows of ``terms`` and of the multi-term queries
+        ``mt_qs`` within ``window`` (rows_filter), ``columns`` only."""
+        return self._dataset("segments").to_table(
+            columns=columns, filter=rows_filter(terms, mt_qs, window))
+
+    def term_stats(self, terms) -> dict[str, tuple[int, int]]:
+        """``{term: (df, ttf)}`` of the present ``terms``."""
+        tbl = self._dataset("termdict").to_table(
+            columns=_TERMDICT_COLS,
+            filter=pads.field("term").isin(pa.array(list(terms), pa.string())))
+        return _stats_dict(tbl["term"].to_pylist(), tbl["df"].to_pylist(),
+                           tbl["ttf"].to_pylist())
+
+    def termdict_rows(self, q, columns, limit: int | None = None) -> pa.Table:
+        """The termdict rows matching rw.term_read_filter(q), at most
+        ``limit`` of them."""
+        ds, cond = self._dataset("termdict"), rw.term_read_filter(q)
+        if limit is None:
+            return ds.to_table(columns=columns, filter=cond)
+        return ds.head(limit, columns=columns, filter=cond)
+
+
+def _find(keys: np.ndarray, terms: list) -> np.ndarray:
+    """The index of each of ``terms`` in the sorted ``keys`` (-1:
+    absent), by binary search."""
+    q = np.empty(len(terms), dtype=object)
+    q[:] = terms
+    if not len(keys) or not len(q):
+        return np.full(len(q), -1, np.int64)
+    i = np.minimum(np.searchsorted(keys, q), len(keys) - 1)
+    return np.where(keys[i] == q, i, -1).astype(np.int64)
+
+
+def _matching(keys: np.ndarray, key_col, q) -> np.ndarray:
+    """The indices of the sorted ``keys`` (``key_col``: the same terms
+    as Arrow) that match rw.term_read_filter(q): the binary-searched
+    run of q's prefix or range (rw.term_key_range), then the filter
+    unless the run is exact."""
+    lo, lo_inc, hi, hi_inc, exact = rw.term_key_range(q)
+    a = 0 if lo is None else int(
+        np.searchsorted(keys, lo, "left" if lo_inc else "right"))
+    b = len(keys) if hi is None else int(
+        np.searchsorted(keys, hi, "right" if hi_inc else "left"))
+    b = max(a, b)
+    if exact:
+        return np.arange(a, b)
+    run = pa.table({"term": key_col.slice(a, b - a), "i": np.arange(a, b)})
+    return run.filter(rw.term_read_filter(q))["i"].to_numpy()
+
+
+class ResidentTables:
+    """The snapshot's segments (every column) sorted by (term,
+    segment_id) and termdict (term, df, ttf) sorted by term, held in
+    memory; every read is binary searches and a ``take``."""
+
+    def __init__(self, segments: pa.Table, termdict: pa.Table):
+        self.segments, self.termdict = segments, termdict
+        terms = segments["term"]
+        n = len(terms)
+        starts = np.empty(0, np.int64)
+        if n:
+            change = pc.not_equal(terms[1:], terms[:-1]).to_numpy(
+                zero_copy_only=False)
+            starts = np.concatenate([[0], np.flatnonzero(change) + 1])
+        # one key per distinct term; its rows are runs[i]:runs[i + 1]
+        self._key_col = terms.take(starts)
+        self._keys = self._key_col.to_numpy(zero_copy_only=False)
+        self._runs = np.append(starts, n).astype(np.int64)
+        self._seg_ids = segments["segment_id"].to_numpy()
+        self._td_keys = termdict["term"].to_numpy(zero_copy_only=False)
+        self._df = termdict["df"].to_numpy()
+        self._ttf = termdict["ttf"].to_numpy()
+
+    @classmethod
+    def load(cls, snapshot: FileSnapshot) -> "ResidentTables":
+        """Read both tables of ``snapshot`` whole, checking the files
+        before and after the read."""
+        files = ParquetTables(snapshot)
+        segs = files._dataset("segments").to_table().sort_by(
+            [("term", "ascending"), ("segment_id", "ascending")])
+        td = files._dataset("termdict").to_table(columns=_TERMDICT_COLS)
+        snapshot.check()
+        return cls(segs.combine_chunks(),
+                   td.sort_by("term").combine_chunks())
+
+    @property
+    def nbytes(self) -> int:
+        """Bytes held: the Arrow tables, the key and offset arrays and
+        the Python strings the binary searches compare."""
+        strs = sum(map(sys.getsizeof, self._keys)) + sum(
+            map(sys.getsizeof, self._td_keys))
+        arrays = (self._key_col, self._keys, self._runs, self._seg_ids,
+                  self._td_keys, self._df, self._ttf)
+        return (self.segments.nbytes + self.termdict.nbytes + strs
+                + sum(a.nbytes for a in arrays))
+
+    def segment_rows(self, terms, mt_qs=(), columns=None,
+                     window: tuple | None = None) -> pa.Table:
+        """As ParquetTables.segment_rows, in (term, segment_id) order."""
+        j = _find(self._keys, list(terms))
+        j = [j[j >= 0]] + [_matching(self._keys, self._key_col, q) for q in mt_qs]
+        j = np.unique(np.concatenate(j))
+        lo, n = self._runs[j], self._runs[j + 1] - self._runs[j]
+        idx = np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum())
+        if window is not None:
+            (a, b), seg = window, self._seg_ids[idx]
+            keep = np.ones(len(idx), bool)
+            if a is not None:
+                keep &= seg >= a
+            if b is not None:
+                keep &= seg < b
+            idx = idx[keep]
+        tbl = self.segments if columns is None else self.segments.select(columns)
+        return tbl.take(idx)
+
+    def term_stats(self, terms) -> dict[str, tuple[int, int]]:
+        terms = list(terms)
+        j = _find(self._td_keys, terms)
+        hit = j >= 0
+        return _stats_dict([t for t, h in zip(terms, hit) if h],
+                           self._df[j[hit]], self._ttf[j[hit]])
+
+    def termdict_rows(self, q, columns, limit: int | None = None) -> pa.Table:
+        j = _matching(self._td_keys, self.termdict["term"], q)
+        return self.termdict.select(columns).take(j[:limit])

@@ -358,6 +358,21 @@ def term_predicate(q: Query):
     raise TypeError(type(q))
 
 
+def _wildcard_prefix(pattern: str) -> str:
+    """The literal prefix of a wildcard pattern (before any * or ?)."""
+    return pattern.split("*")[0].split("?")[0]
+
+
+def _prefix_successor(prefix: str) -> str | None:
+    """The least string above every string that starts with the
+    non-empty ``prefix`` (None when there is none)."""
+    last = ord(prefix[-1])
+    if last >= 0x10FFFF:
+        return None
+    nxt = 0xE000 if last + 1 == 0xD800 else last + 1  # skip surrogates
+    return prefix[:-1] + chr(nxt)
+
+
 def _prefix_expr(prefix: str):
     """``term`` starts with ``prefix``, as a pyarrow expression whose
     [prefix, successor) range prunes row groups by their min/max."""
@@ -365,10 +380,9 @@ def _prefix_expr(prefix: str):
         return pads.scalar(True)
     t = pads.field("term")
     cond = (t >= prefix) & pc.starts_with(t, pattern=prefix)
-    last = ord(prefix[-1])
-    if last < 0x10FFFF:
-        nxt = 0xE000 if last + 1 == 0xD800 else last + 1  # skip surrogates
-        cond = cond & (t < prefix[:-1] + chr(nxt))
+    nxt = _prefix_successor(prefix)
+    if nxt is not None:
+        cond = cond & (t < nxt)
     return cond
 
 
@@ -402,11 +416,10 @@ def term_read_filter(q: Query):
             cond = cond & (t <= q.upper if q.include_upper else t < q.upper)
         return cond
     if isinstance(q, TermInSetQuery):
-        return t.isin(list(q.terms))
+        return t.isin(pa.array(list(q.terms), pa.string()))
     if isinstance(q, WildcardQuery):
-        prefix = q.pattern.split("*")[0].split("?")[0]
         pat = _wildcard_regex(q.pattern)
-        return _prefix_expr(prefix) & _regex_expr(pat)
+        return _prefix_expr(_wildcard_prefix(q.pattern)) & _regex_expr(pat)
     if isinstance(q, FuzzyQuery):
         n = pc.utf8_length(t)
         return (
@@ -417,6 +430,30 @@ def term_read_filter(q: Query):
     if isinstance(q, RegexpQuery):
         return _regex_expr(q.pattern)
     raise TypeError(type(q))
+
+
+def term_key_range(q: Query) -> tuple:
+    """``(lower, include_lower, upper, include_upper, exact)``: a term
+    range that holds every term term_read_filter(q) matches (a None
+    bound is open), for reads that narrow a term-sorted table by binary
+    search before they apply the filter; ``exact`` when every term in
+    the range matches, so the filter can be skipped."""
+    if isinstance(q, TermRangeQuery):
+        return q.lower, q.include_lower, q.upper, q.include_upper, True
+    if isinstance(q, TermInSetQuery) and q.terms:
+        return min(q.terms), True, max(q.terms), True, False
+    prefix = ""
+    if isinstance(q, PrefixQuery):
+        prefix = q.prefix
+    elif isinstance(q, WildcardQuery):
+        prefix = _wildcard_prefix(q.pattern)
+    elif isinstance(q, FuzzyQuery):
+        prefix = q.term[: q.prefix_length]
+    exact = isinstance(q, PrefixQuery)
+    if not prefix:
+        return None, True, None, True, exact
+    nxt = _prefix_successor(prefix)
+    return prefix, True, nxt, False, exact and nxt is not None
 
 
 def expand_terms(q: Query, all_terms: list[str]) -> list[str]:

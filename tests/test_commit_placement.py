@@ -254,7 +254,7 @@ def test_placement_rule_reads_only_what_it_needs():
         return lambda: calls.append(n) or n
 
     rule, cut = merge_mod._choose_commit_placement, merge_mod._DRIVER_MAX_DOCS
-    cap = merge_mod._DRIVER_MAX_BASE_BYTES
+    cap = merge_mod.DRIVER_MAX_SEGMENTS_BYTES
     offsets = EngineConfig(index_offsets=True)
     assert rule(offsets, 0, rows(1))[0] == "spark"
     assert rule(EngineConfig(), cap + 1, rows(1))[0] == "spark"

@@ -1,8 +1,9 @@
 """Per-segment kernel masks — live docs (operators/deletes) and point-
 filter docsets — and the kernel's two placements: searches on a
 snapshot with deletes and filters answer bitwise the same on the driver
-and in Spark (one MapInArrow stage, no exchange), and see every del
-generation."""
+(from the resident tables, or from the files above the driver-bytes
+cap) and in Spark (one MapInArrow stage, no exchange), and see every
+del generation."""
 
 import shutil
 
@@ -65,7 +66,12 @@ def _queries():
         "and": Q.term_and(["public", "return"]),
         "or_msm": Q.term_or(["public", "return", "import", "static"], 2),
         "phrase": Q.PhraseQuery(("public", "return")),
+        "or": Q.term_or(["return", "static"], 1),
+        "and_or": boolean((public, must), (Q.TermQuery("return"), should),
+                          (Q.TermQuery("static"), should)),
         "prefix": Q.PrefixQuery("get"),
+        "wildcard": Q.WildcardQuery("re*n"),
+        "fuzzy": Q.FuzzyQuery("publik"),
         "must_not": boolean((Q.term_or(["public", "import"], 1), must),
                             (Q.TermQuery("return"), must_not)),
         "match_all": Q.MatchAllDocsQuery(),
@@ -101,6 +107,8 @@ def _answers(s):
             out[name, "after"] = _bits(s.search_after(q, cur, k=10))
         out[name, "two_pass"] = _bits(s.search(q, k=3, two_pass_threshold=True))
         out[name, "count"] = s.count(q)
+        for doc in first.doc_ids[:1].tolist() + [N - 1]:
+            out[name, "explain", doc] = s.explain(q, doc)
         out[name, "all"] = sorted(
             s.search(q, k=N, score_mode="complete").doc_ids.tolist()
         )
@@ -112,8 +120,10 @@ def test_driver_matches_spark_placement_bitwise(spark, del_dir, monkeypatch):
     """The one kernel, placed on the driver and in Spark, answers
     bitwise the same (ids, float32 score bits, total_hits, relation)
     with deletes and point-filter masks, for search, search_after,
-    two_pass_threshold and count; matches_df (always Spark) returns
-    the driver's exhaustive hit set."""
+    two_pass_threshold, count and explain; matches_df (always Spark)
+    returns the driver's exhaustive hit set.  On the driver, the
+    resident tables and the parquet reads above the driver-bytes cap
+    (forced to 0 here) answer bitwise the same too."""
     s = IndexSearcher(spark, del_dir, query_cache=QueryCache())
     choose, placed = s._choose_placement, []
     monkeypatch.setattr(
@@ -121,6 +131,10 @@ def test_driver_matches_spark_placement_bitwise(spark, del_dir, monkeypatch):
     )
     driver = _answers(s)
     assert {pl for pl, _ in placed} == {"driver"}
+    assert isinstance(s._tables(), srch.ResidentTables)
+    monkeypatch.setattr(srch, "DRIVER_MAX_SEGMENTS_BYTES", 0)
+    assert isinstance(s._tables(), srch.ParquetTables)
+    assert _answers(s) == driver
     monkeypatch.setattr(s, "_choose_placement", lambda p: ("spark", "forced"))
     in_spark = _answers(s)
     assert driver == in_spark
@@ -280,7 +294,7 @@ def test_kernel_rejects_segment_without_sentinel(spark, base_dir, tmp_path):
     spec, masks = s._kernel_inputs(
         s._prepare(Q.TermQuery("public")), 10, "top_scores", 1000
     )
-    rows = pads.dataset(s._table_files("segments"), format="parquet").to_table()
+    rows = pads.dataset(s._snapshot.paths("segments"), format="parquet").to_table()
     # simulate a split segment: the file that lost its sentinel row
     sent1 = pc.and_(pc.equal(rows["segment_id"], 1),
                     pc.equal(rows["term"], srch.SENTINEL_TERM))
@@ -327,8 +341,9 @@ def test_foreign_layout_keeps_placements_bitwise(spark, del_dir,
                                                  tmp_path_factory, monkeypatch):
     """One segment's rows split across two files: every Spark task
     reads its segment window from all files, so the segment is still
-    scored whole, and both placements answer bitwise like the original
-    layout."""
+    scored whole, and both placements — the driver's from the files
+    (driver-bytes cap forced to 0) and from the resident tables —
+    answer bitwise like the original layout."""
     d = str(tmp_path_factory.mktemp("liveforeign"))
     _foreign_layout(del_dir, d)
     s = IndexSearcher(spark, d, query_cache=QueryCache())
@@ -336,7 +351,12 @@ def test_foreign_layout_keeps_placements_bitwise(spark, del_dir,
     assert len(tasks) > 1 and tasks[0][0] is None and tasks[-1][1] is None
     assert all(x[1] == y[0] for x, y in zip(tasks, tasks[1:]))
     want = _answers(IndexSearcher(spark, del_dir, query_cache=QueryCache()))
+    with monkeypatch.context() as m:
+        m.setattr(srch, "DRIVER_MAX_SEGMENTS_BYTES", 0)
+        assert _answers(s) == want
+    assert s._resident is None  # nothing was loaded above the cap
     assert _answers(s) == want
+    assert isinstance(s._resident, srch.ResidentTables)
     monkeypatch.setattr(s, "_choose_placement", lambda p: ("spark", "forced"))
     assert _answers(s) == want
 

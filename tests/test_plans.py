@@ -40,10 +40,13 @@ def _explain(df) -> str:
 
 
 def _read(engine, q):
+    """(columns, parquet filter) of the kernel's read of ``q``."""
     from lucene_solr_8_7_0_spark.operators.search import postings_read
+    from lucene_solr_8_7_0_spark.operators.snapshot import rows_filter
 
     spec, _ = engine._kernel_inputs(engine._prepare(q), 10, "top_scores", 0)
-    return postings_read(spec)
+    terms, mt_qs, cols = postings_read(spec)
+    return cols, rows_filter(terms, mt_qs)
 
 
 def test_term_filter_pushed_to_parquet_scan(engine):
@@ -54,7 +57,7 @@ def test_term_filter_pushed_to_parquet_scan(engine):
     cols, cond = _read(engine, Q.term_and(["public", "return"]))
     # the IN (public, return, sentinel) predicate is the read's filter
     assert "is_in(term" in str(cond), str(cond)
-    rows = pads.dataset(engine._table_files("segments"), format="parquet").to_table(
+    rows = pads.dataset(engine._snapshot.paths("segments"), format="parquet").to_table(
         columns=["term"], filter=cond
     )
     assert set(rows.column("term").to_pylist()) == {"public", "return", SENTINEL_TERM}

@@ -164,8 +164,9 @@ def test_posting_map_null_blobs_are_empty(nopos_index):
 
 def test_score_files_returns_result_arrow_table(spark, pos_index):
     s = IndexSearcher(spark, pos_index, query_cache=QueryCache())
-    files = s._table_files("segments")
-    td = s._dataset("termdict").to_table(columns=["term", "df"])
+    files = s._snapshot.paths("segments")
+    td = pads.dataset(s._snapshot.paths("termdict"), format="parquet").to_table(
+        columns=["term", "df"])
     term = td["term"][int(np.argmax(td["df"].to_numpy()))].as_py()
     spec, masks = s._kernel_inputs(
         s._prepare(Q.TermQuery(term)), 10, "top_scores", 1000)

@@ -1,0 +1,281 @@
+"""The searcher's file snapshot and its two row sources
+(operators/snapshot): the resident term-sorted tables answer every read
+exactly like the parquet reads; a file removed, rewritten or added under
+a live searcher fails loudly; the driver-bytes rule picks the source; a
+driver-placed search makes no py4j call and builds no pyarrow dataset;
+the searcher's Spark DataFrames and parallelism are read lazily, once."""
+
+import glob
+import os
+import re
+import shutil
+
+import numpy as np
+import pyarrow as pa
+import pytest
+from pyspark import SparkContext
+from pyspark.sql import DataFrame
+
+from lucene_solr_8_7_0_spark.config import EngineConfig
+from lucene_solr_8_7_0_spark.operators import search as srch
+from lucene_solr_8_7_0_spark.operators import snapshot as snap
+from lucene_solr_8_7_0_spark.operators.build import build_index
+from lucene_solr_8_7_0_spark.operators.search import IndexSearcher, QueryCache
+from lucene_solr_8_7_0_spark.operators.segments import SENTINEL_TERM
+from lucene_solr_8_7_0_spark.plans import queries as Q
+from lucene_solr_8_7_0_spark.sources.corpus import corpus_df
+
+N = 160
+CFG = EngineConfig(segment_size=32)  # 160 docs -> 5 segments
+
+
+@pytest.fixture(scope="module")
+def index_dir(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("snapidx"))
+    build_index(spark, corpus_df(spark, N, seed=7), d, CFG)
+    return d
+
+
+@pytest.fixture()
+def copy_dir(index_dir, tmp_path):
+    d = str(tmp_path / "idx")
+    shutil.copytree(index_dir, d)
+    return d
+
+
+def _open(spark, d):
+    return IndexSearcher(spark, d, query_cache=QueryCache())
+
+
+def _bits(td):
+    return (td.doc_ids.tolist(), td.scores.view(np.uint32).tolist(),
+            td.total_hits, td.relation)
+
+
+def _sorted_rows(tbl: pa.Table) -> list:
+    return sorted(tbl.to_pylist(), key=lambda r: (r["term"], r.get("segment_id")))
+
+
+MULTI_TERM = [
+    Q.PrefixQuery("ge"), Q.PrefixQuery(""), Q.PrefixQuery("zzzz"),
+    Q.WildcardQuery("re*n"), Q.WildcardQuery("*t?c"),
+    Q.RegexpQuery("pub.*"), Q.FuzzyQuery("publik"),
+    Q.FuzzyQuery("retrun", 2, 1), Q.TermRangeQuery("pa", "pu"),
+    Q.TermRangeQuery("public", "return", False, False),
+    Q.TermRangeQuery(None, "b"), Q.TermRangeQuery("x", None),
+    Q.TermInSetQuery(("public", "static", "zz_absent")), Q.TermInSetQuery(()),
+]
+
+
+def test_resident_reads_equal_parquet_reads(spark, index_dir):
+    """Every read of the resident tables returns the rows the parquet
+    read returns: term stats, termdict probes and segments rows, with
+    multi-term unions and segment windows."""
+    s = _open(spark, index_dir)
+    files = snap.ParquetTables(s._snapshot)
+    res = snap.ResidentTables.load(s._snapshot)
+    terms = ["public", "return", "zz_absent", SENTINEL_TERM]
+    assert res.term_stats(terms) == files.term_stats(terms)
+    assert res.term_stats([]) == files.term_stats([]) == {}
+    for q in MULTI_TERM:
+        for limit in (None, 3):
+            a = res.termdict_rows(q, ["term", "df", "ttf"], limit)
+            b = files.termdict_rows(q, ["term", "df", "ttf"], limit)
+            assert a.num_rows == b.num_rows, q
+            if limit is None:
+                assert _sorted_rows(a) == _sorted_rows(b), q
+    cols = srch._POSTINGS_COLS + srch._POS_COLS
+    for mt in [()] + [(q,) for q in MULTI_TERM] + [tuple(MULTI_TERM[:4])]:
+        for window in (None, (0, 1), (2, None), (None, 3), (9, 10)):
+            a = res.segment_rows(terms, mt, cols, window)
+            b = files.segment_rows(terms, mt, cols, window)
+            assert a.schema.names == b.schema.names
+            assert _sorted_rows(a) == _sorted_rows(b), (mt, window)
+
+
+def test_driver_bytes_rule_picks_the_source(spark, index_dir, monkeypatch):
+    """The driver holds the tables exactly when the snapshot's segments
+    bytes on disk are at most DRIVER_MAX_SEGMENTS_BYTES."""
+    s = _open(spark, index_dir)
+    size = sum(os.path.getsize(f)
+               for f in glob.glob(f"{index_dir}/segments/*.parquet"))
+    assert s._snapshot.nbytes("segments") == size
+    monkeypatch.setattr(srch, "DRIVER_MAX_SEGMENTS_BYTES", size - 1)
+    assert isinstance(s._tables(), srch.ParquetTables) and s._resident is None
+    monkeypatch.setattr(srch, "DRIVER_MAX_SEGMENTS_BYTES", size)
+    assert isinstance(s._tables(), srch.ResidentTables)
+    assert s._tables() is s._resident  # loaded once
+
+
+def test_segments_file_removed_under_live_searcher(spark, copy_dir, monkeypatch):
+    """A removed segments file fails the resident load, the driver's
+    parquet reads, the Spark placement and the tasks of a lazy Spark
+    DataFrame built before the removal, each naming the file."""
+    fresh, loaded = _open(spark, copy_dir), _open(spark, copy_dir)
+    q = Q.TermQuery("public")
+    lazy = loaded.matches_df(q)  # loads the resident tables
+    gone = sorted(glob.glob(f"{copy_dir}/segments/*.parquet"))[0]
+    os.remove(gone)
+    removed = f"segments file {re.escape(gone)} was removed"
+    with pytest.raises(ValueError, match=removed):
+        fresh.search(q)
+    assert fresh._resident is None
+    with pytest.raises(Exception, match=removed):
+        lazy.count()
+    with pytest.raises(ValueError, match=removed):
+        loaded.matches_df(q)
+    monkeypatch.setattr(srch, "DRIVER_MAX_SEGMENTS_BYTES", 0)
+    for s in (fresh, loaded):
+        with pytest.raises(ValueError, match=removed):
+            s.search(q)
+
+
+def test_file_added_or_rewritten_under_live_searcher(spark, copy_dir):
+    s = _open(spark, copy_dir)
+    td = sorted(glob.glob(f"{copy_dir}/termdict/*.parquet"))
+    extra = td[0].replace(".parquet", "-copy.parquet")
+    shutil.copyfile(td[0], extra)
+    with pytest.raises(ValueError,
+                       match=f"termdict file {re.escape(extra)} was added"):
+        s.search(Q.TermQuery("public"))
+    os.remove(extra)
+    with open(td[-1], "ab") as f:
+        f.write(b"\0")
+    with pytest.raises(ValueError,
+                       match=f"termdict file {re.escape(td[-1])} changed"):
+        s.search(Q.TermQuery("public"))
+
+
+def test_index_rebuilt_in_place_while_open(spark, copy_dir):
+    """A rebuild into the searcher's directory replaces its files: the
+    open searcher raises instead of mixing snapshots, a new one reads
+    the rebuilt index."""
+    s = _open(spark, copy_dir)
+    build_index(spark, corpus_df(spark, N // 2, seed=8), copy_dir, CFG,
+                resume=False)
+    with pytest.raises(ValueError, match="file .* after the searcher opened"):
+        s.search(Q.TermQuery("public"))
+    with pytest.raises(ValueError, match="after the searcher opened"):
+        s.count(Q.MatchAllDocsQuery())
+    fresh = _open(spark, copy_dir)
+    assert fresh.count(Q.MatchAllDocsQuery()) == N // 2
+
+
+def test_resident_tables_keep_answering_their_snapshot(spark, copy_dir):
+    """Once loaded, the resident tables are the snapshot: a later file
+    change does not change a driver search's answer."""
+    s = _open(spark, copy_dir)
+    q = Q.term_or(["public", "return"], 1)
+    want = _bits(s.search(q))
+    for f in glob.glob(f"{copy_dir}/segments/*.parquet"):
+        os.remove(f)
+    assert _bits(s.search(q)) == want
+
+
+def test_empty_index_through_resident_path(spark, tmp_path):
+    docs = spark.createDataFrame(
+        [], schema="repo string, path string, commit string, lang string, "
+                   "content string")
+    d = str(tmp_path / "empty")
+    build_index(spark, docs, d, CFG, resume=False)
+    s = _open(spark, d)
+    for q in (Q.TermQuery("x"), Q.MatchAllDocsQuery(), Q.PrefixQuery("a"),
+              Q.PhraseQuery(("a", "b")), Q.FuzzyQuery("abcd")):
+        td = s.search(q, k=5)
+        assert td.total_hits == 0 and len(td.doc_ids) == 0
+        assert s._last_placement is None or s._last_placement[0] == "driver"
+    assert isinstance(s._resident, srch.ResidentTables)
+    assert s._resident.segments.num_rows == 0
+    assert s.count(Q.MatchAllDocsQuery()) == 0
+    assert s.explain(Q.TermQuery("x"), 0)["matches"] is False
+
+
+def test_open_creates_no_dataframe(spark, index_dir):
+    """The Spark DataFrames and the parallelism are created on first
+    use, once per searcher."""
+    s = _open(spark, index_dir)
+    assert not {"segments", "termdict", "_parallelism"} & set(vars(s))
+    assert isinstance(s.termdict, DataFrame) and s.termdict is s.termdict
+    assert isinstance(s.segments, DataFrame) and s.segments is s.segments
+    assert s.termdict.count() > 0
+
+
+def test_parallelism_read_once_per_searcher(spark, index_dir, monkeypatch):
+    calls = []
+    real = SparkContext.defaultParallelism
+
+    def counted(sc):
+        calls.append(1)
+        return real.fget(sc)
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(counted))
+    s = _open(spark, index_dir)
+    qs = [Q.TermQuery("public"), Q.term_and(["public", "return"]),
+          Q.PrefixQuery("ge")]
+    for q in qs:
+        s.search(q)
+        s.count(q)
+    s.matches_df(qs[0]).count()
+    assert len(calls) == 1
+
+
+def test_driver_search_makes_no_py4j_call(spark, index_dir, monkeypatch):
+    """After the resident load, driver-placed top-k searches build no
+    pyarrow dataset and send no command to the JVM."""
+    s = _open(spark, index_dir)
+    qs = [Q.TermQuery("public"), Q.term_and(["public", "return"]),
+          Q.term_or(["public", "return", "static"], 2),
+          Q.PhraseQuery(("public", "static")), Q.PrefixQuery("ge"),
+          Q.WildcardQuery("re*n"), Q.FuzzyQuery("publik")]
+    s.search(qs[0])  # the resident load, and the parallelism read
+    from py4j import protocol
+
+    client = spark.sparkContext._gateway._gateway_client
+    sent, send = [], client.send_command
+    # py4j releasing Java objects whose Python proxies were collected
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counted(command, *a, **kw):
+        if not command.startswith(release):
+            sent.append(command)
+        return send(command, *a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    monkeypatch.setattr(snap.pads, "dataset", lambda *a, **kw: 1 / 0)
+    for q in qs:
+        td = s.search(q)
+        assert s._last_placement[0] == "driver"
+        s.search(q, k=3, two_pass_threshold=True)
+        if len(td.doc_ids):
+            s.search_after(q, (float(td.scores[-1]), int(td.doc_ids[-1])))
+        s.count(q)
+    assert sent == []
+    assert spark.sparkContext.getConf() and sent  # the wrapper sees calls
+
+
+def test_resident_load_once_under_threads(spark, index_dir, monkeypatch):
+    """Concurrent first searches load the resident tables once, and all
+    answer like one search alone."""
+    import sys
+    import threading
+
+    loads, load = [], snap.ResidentTables.load
+    monkeypatch.setattr(snap.ResidentTables, "load",
+                        lambda snapshot: loads.append(1) or load(snapshot))
+    q = Q.term_or(["public", "return", "static"], 1)
+    want = _bits(_open(spark, index_dir).search(q))
+    assert len(loads) == 1
+    s, got = _open(spark, index_dir), []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=lambda: got.append(_bits(s.search(q))))
+                   for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert got == [want] * 8 and len(loads) == 2

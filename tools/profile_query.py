@@ -1,15 +1,17 @@
 """Per-phase query-latency profiler (guide §1: measure first).
 
 Builds (or resumes) a bench-identical index from the cached bench
-corpus, then breaks each headline query's wall into driver phases:
+corpus, opens a searcher, reports the driver's row source (the resident
+tables' load ms and bytes, or the parquet files above the driver-bytes
+cap), then breaks each headline query's wall into driver phases:
 
   prepare   IndexSearcher._prepare: rewrite (prefix/wildcard queries
-            probe the termdict with pyarrow), term stats, compile,
-            access plan
+            probe the termdict), term stats, compile, access plan
+  stats     the term-stats lookup inside prepare (IndexSearcher._term_stats)
   masks     IndexSearcher._kernel_inputs: point-filter docsets (a Spark
             job per uncached clause) and the live-docs mask
   place     IndexSearcher._choose_placement (printed with its reason)
-  read      driver placement: the pyarrow postings read (score_files)
+  read      driver placement: the postings lookup (score_files)
   postings  driver placement: grouping by segment + posting maps
             (score_files)
   kernel    driver placement: score_segment per segment, decode
@@ -18,10 +20,14 @@ corpus, then breaks each headline query's wall into driver phases:
             collected
   merge     driver-side TopDocs.merge
 
-read, postings and kernel come from score_files' in-process
-timestamps.
+read, postings and kernel come from score_files' in-process timestamps,
+taken through the searcher's own driver placement
+(IndexSearcher._score_driver); ``lookup`` is read + stats, the reads
+the resident tables serve.  total sums every phase but stats (already
+in prepare).
 
-Usage: python tools/profile_query.py [n_files] [reps]
+Usage: python tools/profile_query.py [n_files] [reps] [segment_size]
+  (``320 20 20`` is the perfbench query_stream shape: 16 segments)
 """
 
 import os
@@ -33,25 +39,36 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lucene_solr_8_7_0_spark.config import EngineConfig  # noqa: E402
 from lucene_solr_8_7_0_spark.operators.build import build_index  # noqa: E402
-from lucene_solr_8_7_0_spark.operators.search import (  # noqa: E402
-    IndexSearcher,
-    score_files,
-)
+from lucene_solr_8_7_0_spark.operators.search import IndexSearcher  # noqa: E402
 from lucene_solr_8_7_0_spark.plans import queries as Q  # noqa: E402
 from lucene_solr_8_7_0_spark.session import get_spark  # noqa: E402
 from lucene_solr_8_7_0_spark.sources.corpus import corpus_df  # noqa: E402
 
 N_FILES = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
 REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+SEGMENT_SIZE = int(sys.argv[3]) if len(sys.argv) > 3 else 0
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 TMP = tempfile.gettempdir()
 
 
 def phases(searcher, query, k=10):
     """({phase: seconds}, (placement, reason)) of one top-k search."""
-    t = {}
+    t = {"stats": 0.0}
+    term_stats = searcher._term_stats
+
+    def timed_stats(terms):
+        t0 = time.perf_counter()
+        try:
+            return term_stats(terms)
+        finally:
+            t["stats"] += time.perf_counter() - t0
+
+    searcher._term_stats = timed_stats
     t0 = time.perf_counter()
-    p = searcher._prepare(query)
+    try:
+        p = searcher._prepare(query)
+    finally:
+        del searcher._term_stats
     t["prepare"] = time.perf_counter() - t0
     t0 = time.perf_counter()
     spec, masks = searcher._kernel_inputs(p, k, "top_scores", 1000)
@@ -60,7 +77,7 @@ def phases(searcher, query, k=10):
     placement = searcher._choose_placement(p)
     t["place"] = time.perf_counter() - t0
     if placement[0] == "driver":
-        res = score_files(spec, masks, searcher._table_files("segments"), timings=t)
+        res = searcher._score_driver(spec, masks, timings=t)
     else:
         t0 = time.perf_counter()
         res = searcher._spark_rows(spec, masks).toArrow()
@@ -68,7 +85,8 @@ def phases(searcher, query, k=10):
     t0 = time.perf_counter()
     searcher._merge(res, k)
     t["merge"] = time.perf_counter() - t0
-    t["total"] = sum(t.values())
+    t["total"] = sum(v for k, v in t.items() if k != "stats")
+    t["lookup"] = t["stats"] + t.get("read", 0.0)
     return t, placement
 
 
@@ -82,8 +100,9 @@ def main():
             corpus_dir
         )
     docs = spark.read.parquet(corpus_dir)
-    idx_dir = os.path.join(TMP, f"prof_idx_{N_FILES}")
-    cfg = EngineConfig(segment_size=max(1024, N_FILES // (4 * CPUS)))
+    cfg = EngineConfig(
+        segment_size=SEGMENT_SIZE or max(1024, N_FILES // (4 * CPUS)))
+    idx_dir = os.path.join(TMP, f"prof_idx_{N_FILES}_{cfg.segment_size}")
     t0 = time.time()
     res = build_index(spark, docs, idx_dir, cfg, resume=True)
     print(f"build: {time.time() - t0:.2f}s (stages run={res.stages_run})")
@@ -100,6 +119,15 @@ def main():
     searcher = IndexSearcher(spark, idx_dir)
     from bench import headline_queries
     qs = headline_queries(searcher)
+    t0 = time.perf_counter()
+    source = searcher._tables()
+    load_ms = (time.perf_counter() - t0) * 1000
+    if source is searcher._resident:
+        print(f"resident tables: load {load_ms:.1f} ms, "
+              f"{source.nbytes / 1e6:.2f} MB held")
+    else:
+        print(f"driver reads the segments files "
+              f"({searcher._snapshot.nbytes('segments') / 1e6:.1f} MB on disk)")
     searcher.search(Q.TermQuery("warmup_zzz"), k=10)
     for name, q in qs.items():
         best = None
@@ -108,8 +136,10 @@ def main():
             if best is None or t["total"] < best["total"]:
                 best = t
         print(
-            f"{name}: total={best['total']:.3f} placement={placement[0]} "
-            + " ".join(f"{k}={v:.3f}" for k, v in best.items() if k != "total")
+            f"{name}: total={best['total'] * 1000:.2f}ms "
+            f"placement={placement[0]} "
+            + " ".join(f"{k}={v * 1000:.2f}" for k, v in best.items()
+                       if k != "total")
             + f"  ({placement[1]})"
         )
     spark.stop()
