@@ -72,8 +72,8 @@ class ScoringClause:
     # MultiPhraseQuery: term alternatives per phrase slot
     alts: tuple[tuple[str, ...], ...] | None = None
     # union_pred (distributed multi-term union): str -> bool predicate
-    # selecting this clause's terms among the segment's LOCAL terms;
-    # the postings read is pre-filtered by a superset pyarrow condition
+    # selecting this clause's terms among the segment's LOCAL terms
+    # (the postings read also holds the query's other terms)
     pred: object | None = None
     # span_near: require query order (SpanNearQuery.inOrder)
     in_order: bool = True
@@ -619,9 +619,8 @@ def _eval_clause(
         )
     if clause.kind == "union_pred":
         # distributed multi-term union: select this segment's matching
-        # terms by predicate (the Python check is the exact semantics;
-        # the read's pyarrow filter was a superset) and union their
-        # postings.
+        # terms by predicate (the read also holds the query's other
+        # terms) and union their postings.
         # Reserved tokens (\x00 sentinel/matchnone, \x01 point/delete
         # doc-id masks) are never expansion candidates.
         hits = [

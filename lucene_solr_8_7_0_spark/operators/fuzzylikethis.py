@@ -17,22 +17,22 @@ FuzzyLikeThisQuery.java (:188-245 addTerms, :277-331 rewrite):
   BoostQuery(TermQuery(variant), score) (:293-330) — a per-variant
   boosted disjunction, no coord.
 
-Spark-first shape: variant enumeration is ONE pushed-down termdict
-scan per input term (length band + JVM levenshtein — the same
-predicate as the engine's FuzzyQuery); everything after (boosts, the
-two ranked selections, query assembly) is driver-side arithmetic over
-<= terms x 50 rows.  Selection arithmetic runs in float64 (the
-reference uses float32; the 1e-7-relative divergence sits far below
-the engine's round(6) SQL-replay rank policy).
+Variant enumeration is ONE exact driver-side termdict read per input
+term (the searcher's ``_tables``: the engine's FuzzyQuery, no Spark
+job); everything after (boosts, the two ranked selections, query
+assembly) is driver-side arithmetic over <= terms x 50 rows, with the
+edit distance FuzzyQuery matches by (rewrite._edit_distance).
+Selection arithmetic runs in float64 (the reference uses float32; the
+1e-7-relative divergence sits far below the engine's round(6)
+SQL-replay rank policy).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from ..plans import queries as Q
+from ..plans.rewrite import _edit_distance
 
 __all__ = ["fuzzy_like_this", "fuzzy_like_this_terms"]
 
@@ -63,23 +63,17 @@ def fuzzy_like_this_terms(
     num_docs = searcher.stats.num_docs
     selected = []
     for term in tokens:
-        cond = searcher._mt_cond(
+        rows = searcher._tables().termdict_rows(
             Q.FuzzyQuery(term, max_edits=max_edits,
-                         prefix_length=prefix_length)
-        )
-        rows = (
-            searcher.termdict.filter(cond)
-            .select("term", "df").collect()
-        )
+                         prefix_length=prefix_length), ["term", "df"])
         variants = []
-        for r in rows:
-            v = r["term"]
+        for v, df in zip(rows["term"].to_pylist(), rows["df"].to_pylist()):
             if v == term:
                 boost = 1.0
             else:
                 ed = _edit_distance(v, term)
                 boost = 1.0 - ed / min(len(v), len(term))
-            variants.append((v, int(r["df"]), boost))
+            variants.append((v, df, boost))
         if not variants:
             continue
         variants.sort(key=lambda x: (-x[2], x[0]))
@@ -93,21 +87,6 @@ def fuzzy_like_this_terms(
             selected.append((term, v, d, round(boost * boost * idf, 6)))
     selected.sort(key=lambda x: (-x[3], x[1]))
     return selected[:max_num_terms]
-
-
-def _edit_distance(a: str, b: str) -> int:
-    """Plain Levenshtein (matches the JVM levenshtein() used by the
-    pushed-down candidate predicate)."""
-    if len(a) < len(b):
-        a, b = b, a
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[-1] + 1,
-                           prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
 
 
 def fuzzy_like_this(

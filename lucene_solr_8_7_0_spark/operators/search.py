@@ -72,16 +72,7 @@ from .deletes import DELETES_TOKEN, load_live_docs, read_generation
 from .segments import SENTINEL_TERM
 from .snapshot import FileSnapshot, ParquetTables, ResidentTables
 from ..plans import planner, rewrite as rw
-from ..plans.queries import (
-    FuzzyQuery,
-    PointRangeQuery,
-    PrefixQuery,
-    Query,
-    RegexpQuery,
-    TermInSetQuery,
-    TermRangeQuery,
-    WildcardQuery,
-)
+from ..plans.queries import FuzzyQuery, Query
 
 _RESULT_ARROW = pa.schema([
     ("segment_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float32()),
@@ -573,50 +564,6 @@ class IndexSearcher:
 
     # ---- term dictionary services (FST/automaton analog) ----
 
-    @staticmethod
-    def _mt_cond(q: Query):
-        """The multi-term query's match condition as a JVM Column over
-        ``term``, for the Spark termdict scans of phrase-wildcard and
-        complex-phrase expansion and fuzzylikethis; rw.term_read_filter
-        is its pyarrow twin.  For regexp this is a SUPERSET of the Python
-        semantics (Java regex dialect); the exact re-check is the
-        authority, so a superset here is always safe, a subset never is."""
-        c = F.col("term")
-        if isinstance(q, PrefixQuery):
-            return c.startswith(q.prefix)
-        if isinstance(q, TermRangeQuery):
-            cond = F.lit(True)
-            if q.lower is not None:
-                cond = cond & (c >= q.lower if q.include_lower else c > q.lower)
-            if q.upper is not None:
-                cond = cond & (c <= q.upper if q.include_upper else c < q.upper)
-            return cond
-        if isinstance(q, TermInSetQuery):
-            return c.isin(list(q.terms))
-        if isinstance(q, WildcardQuery):
-            import re as _re
-
-            # only escaped literals + .*/. survive the translation,
-            # where Java and Python regex semantics coincide; a literal
-            # prefix narrows the scan range for min/max pruning
-            prefix = q.pattern.split("*")[0].split("?")[0]
-            pat = _re.escape(q.pattern).replace(r"\*", ".*").replace(r"\?", ".")
-            cond = c.rlike(f"^(?:{pat})$")
-            return (c.startswith(prefix) & cond) if prefix else cond
-        if isinstance(q, FuzzyQuery):
-            # exact same predicate as expand_terms: shared prefix +
-            # length band + plain Levenshtein <= max_edits
-            prefix = q.term[: q.prefix_length]
-            cond = (
-                (F.length("term") >= F.lit(len(q.term) - q.max_edits))
-                & (F.length("term") <= F.lit(len(q.term) + q.max_edits))
-                & (F.levenshtein(c, F.lit(q.term)) <= q.max_edits)
-            )
-            return (c.startswith(prefix) & cond) if prefix else cond
-        if isinstance(q, RegexpQuery):
-            return c.rlike(f"^(?:{q.pattern})$")
-        raise TypeError(type(q))
-
     def _rewrite(self, query: Query) -> Query:
         """Full driver-side rewrite: reader-DEPENDENT rewrites first
         (CommonTermsQuery classifies its terms by actual docFreq —
@@ -729,11 +676,10 @@ class IndexSearcher:
         collected from the term dictionary under the shared expansion
         budget, then the phrase matches like a MultiPhraseQuery).
 
-        Each pattern slot costs ONE pushed-down termdict probe (the
-        sorted term column's min/max stats prune row groups — the FST
-        seek analog); the budget bounds what reaches the driver, so an
-        adversarial ``*`` slot collects at most
-        max_multi_term_expansions + 1 rows, never the dictionary."""
+        Each pattern slot costs one exact driver-side termdict read
+        (_tables), capped at the budget: an adversarial ``*`` slot
+        yields at most max_multi_term_expansions terms, never the
+        dictionary."""
         from ..plans import queries as Qs
 
         budget = q.max_multi_term_expansions
@@ -742,29 +688,24 @@ class IndexSearcher:
             if isinstance(slot, str):
                 slots.append((slot,))
                 continue
-            rows = (
-                self.termdict.filter(self._mt_cond(slot))
-                .select("term").sort("term").limit(budget + 1).collect()
-            )
-            # exact Python-semantics re-check (regexp dialect, fuzzy
-            # edit distance) — _mt_cond may be a superset
-            terms = rw.expand_terms(slot, sorted(r["term"] for r in rows))
-            if not terms:
+            rows = self._tables().termdict_rows(slot, ["term"], limit=budget)
+            if not rows.num_rows:
                 # an unmatchable slot kills the phrase (noMatch :200)
                 return Qs.MatchNoDocsQuery()
             # budget exhausted -> truncate in term order (the reference
             # stops expanding, trading recall, never raising :378-392)
-            slots.append(tuple(terms[:budget]))
+            slots.append(tuple(rows["term"].to_pylist()))
         return Qs.MultiPhraseQuery(tuple(slots))
 
     def _build_complex_phrase(self, q) -> Query:
         """ComplexPhraseQuery.rewrite (ComplexPhraseQueryParser.java:
         263-335): expand each slot's multi-term members against the
-        term dictionary (one pushed-down termdict probe per pattern,
-        same budget discipline as PhraseWildcardQuery) and compile to
-        SpanNearQuery(slop, in_order); a multi-term slot becomes a
-        SpanOrQuery over the union of its members' expansions, an
-        empty expansion an unmatchable phrase (:311-318)."""
+        term dictionary (one exact driver-side termdict read per
+        pattern, same budget discipline as PhraseWildcardQuery) and
+        compile to SpanNearQuery(slop, in_order); a multi-term slot
+        becomes a SpanOrQuery over the union of its members'
+        expansions, an empty expansion an unmatchable phrase
+        (:311-318)."""
         from ..plans import queries as Qs
 
         budget = q.max_multi_term_expansions
@@ -773,17 +714,11 @@ class IndexSearcher:
             terms: list[str] = []
             for a in alts:
                 if isinstance(a, str):
-                    if a not in terms:
-                        terms.append(a)
+                    terms = list(dict.fromkeys(terms + [a]))
                     continue
-                rows = (
-                    self.termdict.filter(self._mt_cond(a))
-                    .select("term").sort("term").limit(budget + 1).collect()
-                )
-                for t in rw.expand_terms(a, sorted(r["term"] for r in rows)):
-                    if t not in terms:
-                        terms.append(t)
-                terms = terms[:budget]
+                rows = self._tables().termdict_rows(a, ["term"], limit=budget)
+                terms = list(dict.fromkeys(
+                    terms + rows["term"].to_pylist()))[:budget]
             if not terms:
                 return Qs.MatchNoDocsQuery()
             clauses.append(
@@ -802,29 +737,13 @@ class IndexSearcher:
         unwrap; fuzzy's scored expansion up to maxClauseCount); returns
         None for "many", telling the rewrite to take the DISTRIBUTED
         constant-score union — the predicate then ships to the postings
-        read and kernels and no term list ever reaches the driver.  A
-        driver-side read of the termdict (_tables: a binary-searched
-        prefix or range, then rw.term_read_filter), never a Spark job."""
-        td = self._tables()
-        if isinstance(q, FuzzyQuery):
-            # the read keeps only the prefix and length band: the exact
-            # edit-distance check bounds the scored expansion
-            rows = td.termdict_rows(q, ["term"])
-            terms = rw.expand_terms(q, sorted(rows.column("term").to_pylist()))
-            return None if len(terms) > MAX_CLAUSE_COUNT else terms
-        # regexp/wildcard: the read may be a superset of the Python
-        # semantics, so seeing N rows proves nothing about the exact
-        # match count — probe enough to make the 0/1-match unwrap
-        # almost always decidable, else go distributed
-        probe = 64
-        rows = td.termdict_rows(q, ["term"], limit=probe + 1)
-        if rows.num_rows > probe:
-            return None  # many -> distributed union
-        # exact Python-semantics re-check (regexp dialect)
-        terms = rw.expand_terms(q, sorted(rows.column("term").to_pylist()))
-        if len(terms) >= 2:
-            return None  # constant-score union handles 2+ terms
-        return terms
+        read and kernels and no term list ever reaches the driver.  One
+        exact driver-side read of the termdict (_tables), never a Spark
+        job."""
+        most = MAX_CLAUSE_COUNT if isinstance(q, FuzzyQuery) else 1
+        terms = self._tables().termdict_rows(
+            q, ["term"], limit=most + 1)["term"].to_pylist()
+        return None if len(terms) > most else terms
 
     def _term_stats(self, terms: set[str]) -> dict[str, tuple[int, int]]:
         """Global TermStatistics for a query's terms, read driver-side
@@ -924,7 +843,7 @@ class IndexSearcher:
         (see _SPARK_MIN_SAVED), else "driver"."""
         df = sum(p.term_stats.get(t, (0, 0))[0] for t in p.terms)
         ttf = sum(p.term_stats.get(t, (0, 0))[1] for t in p.terms)
-        for mq in p.mt_qs:  # a distributed union reads its superset's rows
+        for mq in p.mt_qs:  # a distributed union reads its terms' rows
             tbl = self._tables().termdict_rows(mq.orig, ["df", "ttf"])
             df += int(tbl["df"].to_numpy().sum())
             ttf += int(tbl["ttf"].to_numpy().sum())

@@ -14,12 +14,17 @@ Rows come from one of two sources with one interface (``segment_rows``,
   segments sorted by (term, segment_id) and the termdict by term.  A
   read is a binary search (``np.searchsorted``) over the distinct terms
   and a ``take`` of their row runs; a multi-term read narrows its
-  prefix or range to a run of terms the same way, then applies its
-  exact pyarrow filter to that run.  The analog of Lucene's terms index
-  (.tip, BlockTreeTermsWriter.java:188-205), which stays resident and
-  seeks straight to a term's postings.
+  prefix or range to a run of terms the same way.  The analog of
+  Lucene's terms index (.tip, BlockTreeTermsWriter.java:188-205), which
+  stays resident and seeks straight to a term's postings.
 * ``ParquetTables``: a ``pyarrow.dataset`` read of the files on every
-  call, the term predicate pushed into parquet row groups.
+  call, a multi-term query's narrowing (rw.term_read_filter) pushed
+  into parquet row groups.
+
+Both sources answer a multi-term query exactly: after the narrowing,
+one step (``_exact``) applies rw.term_predicate, the engine's one match
+semantics, to the distinct terms left, unless the narrowing is already
+exact (prefixes and ranges).
 
 A searcher holds ``ResidentTables`` on the driver when its snapshot's
 segments bytes on disk are at most ``config.DRIVER_MAX_SEGMENTS_BYTES``;
@@ -120,9 +125,9 @@ class FileSnapshot:
 
 def rows_filter(terms, mt_qs=(), window: tuple | None = None):
     """The pyarrow filter of a segments read: ``term`` in ``terms`` or
-    matching a multi-term query's read filter (rw.term_read_filter),
-    within the window ``(lo, hi)`` (``lo <= segment_id < hi``, None =
-    open; row groups outside it are pruned by their footer statistics)."""
+    within a multi-term query's narrowing (rw.term_read_filter), within
+    the window ``(lo, hi)`` (``lo <= segment_id < hi``, None = open; row
+    groups outside it are pruned by their footer statistics)."""
     cond = pads.field("term").isin(pa.array(list(terms), pa.string()))
     for q in mt_qs:
         cond = cond | rw.term_read_filter(q)
@@ -132,6 +137,18 @@ def rows_filter(terms, mt_qs=(), window: tuple | None = None):
     if hi is not None:
         cond = cond & (pads.field("segment_id") < hi)
     return cond
+
+
+def _exact(tbl: pa.Table, q) -> pa.Table:
+    """The rows of ``tbl`` (a read narrowed to ``q``) whose term
+    rw.term_predicate(q) accepts.  The predicate runs once per distinct
+    term, and not at all when the narrowing is exact
+    (rw.term_key_range)."""
+    if rw.term_key_range(q)[-1]:
+        return tbl
+    pred, terms = rw.term_predicate(q), tbl["term"]
+    keep = [t for t in pc.unique(terms).to_pylist() if pred(t)]
+    return tbl.filter(pc.is_in(terms, value_set=pa.array(keep, pa.string())))
 
 
 def _stats_dict(terms: list, df, ttf) -> dict[str, tuple[int, int]]:
@@ -154,10 +171,19 @@ class ParquetTables:
 
     def segment_rows(self, terms, mt_qs=(), columns=None,
                      window: tuple | None = None) -> pa.Table:
-        """The segments rows of ``terms`` and of the multi-term queries
-        ``mt_qs`` within ``window`` (rows_filter), ``columns`` only."""
-        return self._dataset("segments").to_table(
-            columns=columns, filter=rows_filter(terms, mt_qs, window))
+        """The segments rows of ``terms`` and of the terms the multi-term
+        queries ``mt_qs`` match, within ``window`` (rows_filter),
+        ``columns`` only.  A query whose narrowing is not exact is first
+        resolved to its terms by a read of the ``term`` column alone."""
+        ds, terms = self._dataset("segments"), list(terms)
+        narrowed = [q for q in mt_qs if not rw.term_key_range(q)[-1]]
+        for q in narrowed:
+            found = ds.to_table(columns=["term"],
+                                filter=rows_filter((), [q], window))
+            terms += pc.unique(_exact(found, q)["term"]).to_pylist()
+        mt_qs = [q for q in mt_qs if q not in narrowed]
+        return ds.to_table(columns=columns,
+                           filter=rows_filter(terms, mt_qs, window))
 
     def term_stats(self, terms) -> dict[str, tuple[int, int]]:
         """``{term: (df, ttf)}`` of the present ``terms``."""
@@ -168,12 +194,12 @@ class ParquetTables:
                            tbl["ttf"].to_pylist())
 
     def termdict_rows(self, q, columns, limit: int | None = None) -> pa.Table:
-        """The termdict rows matching rw.term_read_filter(q), at most
-        ``limit`` of them."""
-        ds, cond = self._dataset("termdict"), rw.term_read_filter(q)
-        if limit is None:
-            return ds.to_table(columns=columns, filter=cond)
-        return ds.head(limit, columns=columns, filter=cond)
+        """The termdict rows of the terms ``q`` matches, in term order,
+        the first ``limit`` of them."""
+        tbl = self._dataset("termdict").to_table(
+            columns=list(dict.fromkeys(["term", *columns])),
+            filter=rw.term_read_filter(q))
+        return _exact(tbl, q).sort_by("term").select(columns)[:limit]
 
 
 def _find(keys: np.ndarray, terms: list) -> np.ndarray:
@@ -189,9 +215,9 @@ def _find(keys: np.ndarray, terms: list) -> np.ndarray:
 
 def _matching(keys: np.ndarray, key_col, q) -> np.ndarray:
     """The indices of the sorted ``keys`` (``key_col``: the same terms
-    as Arrow) that match rw.term_read_filter(q): the binary-searched
-    run of q's prefix or range (rw.term_key_range), then the filter
-    unless the run is exact."""
+    as Arrow) that ``q`` matches: the binary-searched run of q's prefix
+    or range (rw.term_key_range), then, unless the run is exact, its
+    read filter and _exact."""
     lo, lo_inc, hi, hi_inc, exact = rw.term_key_range(q)
     a = 0 if lo is None else int(
         np.searchsorted(keys, lo, "left" if lo_inc else "right"))
@@ -201,7 +227,7 @@ def _matching(keys: np.ndarray, key_col, q) -> np.ndarray:
     if exact:
         return np.arange(a, b)
     run = pa.table({"term": key_col.slice(a, b - a), "i": np.arange(a, b)})
-    return run.filter(rw.term_read_filter(q))["i"].to_numpy()
+    return _exact(run.filter(rw.term_read_filter(q)), q)["i"].to_numpy()
 
 
 class ResidentTables:

@@ -208,9 +208,9 @@ def collect_terms(q: Query) -> set[str]:
 
 def collect_multi_term_preds(q: Query) -> list[MultiTermUnionQuery]:
     """All MultiTermUnionQuery leaves, in deterministic order — the
-    searcher ORs their term filters (rewrite.term_read_filter) into the
-    kernel's postings read, so the matching rows reach the kernels
-    without a driver-side term list.  IMultiTerm interval sources
+    kernel's postings read adds the rows of the terms they match
+    (operators/snapshot: narrowed, then exact), so the matching rows
+    reach the kernels without a driver-side term list.  IMultiTerm interval sources
     contribute their inner multi-term queries the same way (their
     expansion is likewise segment-local)."""
     if isinstance(q, MultiTermUnionQuery):

@@ -618,6 +618,10 @@ class WildcardQuery(Query):
 
 @dataclass(frozen=True)
 class RegexpQuery(Query):
+    """A term matches when the whole term matches ``pattern`` in Python
+    ``re``'s dialect (``re.fullmatch``; ``\\w`` and ``\\d`` are
+    Unicode), not Lucene's RegExp syntax (RegexpQuery.java)."""
+
     pattern: str
 
 
@@ -635,7 +639,7 @@ class MultiTermUnionQuery(Query):
     MultiTermQuery.java CONSTANT_SCORE_REWRITE): instead of collecting
     the matching terms to the driver and re-emitting them as a literal
     ``IN`` list, the term predicate itself ships both to the postings
-    read (a pyarrow superset filter over the sorted term column — the
+    read (narrowed over the sorted term column, then exact — the
     automaton-intersection analog) and to the segment kernel, which
     unions the postings of every LOCAL term the predicate accepts.
     Scores are constant (the wrapper builds one bitset and scores

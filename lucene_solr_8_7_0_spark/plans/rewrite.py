@@ -322,20 +322,19 @@ def _wildcard_regex(pattern: str) -> str:
 
 def term_predicate(q: Query):
     """The multi-term query's match predicate as a picklable
-    ``str -> bool`` callable — the automaton shipped to the segment
-    kernels for the distributed constant-score union (the compiled
-    ByteRunAutomaton that MultiTermQuery hands each TermsEnum).
-    Exactly the same semantics as expand_terms."""
+    ``str -> bool`` callable: THE match semantics of every multi-term
+    query (the compiled ByteRunAutomaton that MultiTermQuery hands each
+    TermsEnum).  Term-dictionary reads apply it after their narrowing,
+    expand_terms filters with it, and the segment kernels run it for
+    the distributed constant-score union.  Regexps are Python ``re``."""
     if isinstance(q, PrefixQuery):
         p = q.prefix
         return lambda t: t.startswith(p)
-    if isinstance(q, WildcardQuery):
-        pat = _wildcard_regex(q.pattern)
-        rx = re.compile(f"^{pat}$")
-        return lambda t: rx.match(t) is not None
-    if isinstance(q, RegexpQuery):
-        rx = re.compile(f"^(?:{q.pattern})$")
-        return lambda t: rx.match(t) is not None
+    if isinstance(q, (WildcardQuery, RegexpQuery)):
+        pat = (_wildcard_regex(q.pattern) if isinstance(q, WildcardQuery)
+               else q.pattern)
+        rx = re.compile(pat)
+        return lambda t: rx.fullmatch(t) is not None
     if isinstance(q, TermRangeQuery):
         lo, hi, il, iu = q.lower, q.upper, q.include_lower, q.include_upper
 
@@ -388,7 +387,7 @@ def _prefix_expr(prefix: str):
 
 def _regex_expr(pattern: str):
     """``term`` fully matches ``pattern``, by RE2; True (no narrowing)
-    when RE2 rejects the pattern (backreferences, lookarounds)."""
+    when RE2 rejects the pattern."""
     rx = f"^(?:{pattern})$"
     try:
         pc.match_substring_regex(pa.array([""]), pattern=rx)
@@ -398,13 +397,16 @@ def _regex_expr(pattern: str):
 
 
 def term_read_filter(q: Query):
-    """The multi-term query's match condition as a pyarrow expression
-    over ``term``, for parquet reads of the termdict and segments
-    (prefixes and ranges prune row groups on the sorted term column =
-    the FST term-index analog).  A SUPERSET of term_predicate: fuzzy
-    keeps only its prefix and length band, regexp/wildcard match by RE2
-    (or not at all when RE2 rejects the pattern); expand_terms and
-    term_predicate stay the authority."""
+    """A NARROWING of the multi-term query as a pyarrow expression over
+    ``term``, for parquet reads of the termdict and segments (prefixes
+    and ranges prune row groups on the sorted term column = the FST
+    term-index analog): every term term_predicate(q) accepts passes it.
+    Prefixes, ranges and sets pass exactly those terms; fuzzy keeps its
+    prefix and length band; a wildcard its literal prefix and its RE2
+    translation, which holds only escaped literals, ``.`` and ``.*``,
+    read alike by RE2 and ``re``.  A regexp is not narrowed: RE2 reads
+    some patterns unlike ``re`` (``\\w``, ``\\d``, ``{,n}``).  The
+    reads apply term_predicate after it."""
     t = pads.field("term")
     if isinstance(q, PrefixQuery):
         return _prefix_expr(q.prefix)
@@ -428,16 +430,16 @@ def term_read_filter(q: Query):
             & (n <= len(q.term) + q.max_edits)
         )
     if isinstance(q, RegexpQuery):
-        return _regex_expr(q.pattern)
+        return pads.scalar(True)
     raise TypeError(type(q))
 
 
 def term_key_range(q: Query) -> tuple:
     """``(lower, include_lower, upper, include_upper, exact)``: a term
-    range that holds every term term_read_filter(q) matches (a None
-    bound is open), for reads that narrow a term-sorted table by binary
-    search before they apply the filter; ``exact`` when every term in
-    the range matches, so the filter can be skipped."""
+    range that holds every term term_predicate(q) accepts (a None bound
+    is open), for reads that narrow a term-sorted table by binary
+    search; ``exact`` when every term in the range matches (prefixes
+    and ranges), so the reads skip term_predicate."""
     if isinstance(q, TermRangeQuery):
         return q.lower, q.include_lower, q.upper, q.include_upper, True
     if isinstance(q, TermInSetQuery) and q.terms:
@@ -457,63 +459,41 @@ def term_key_range(q: Query) -> tuple:
 
 
 def expand_terms(q: Query, all_terms: list[str]) -> list[str]:
-    """Resolve a multi-term query against a sorted term list."""
-    if isinstance(q, PrefixQuery):
-        return [t for t in all_terms if t.startswith(q.prefix)]
-    if isinstance(q, WildcardQuery):
-        pat = _wildcard_regex(q.pattern)
-        rx = re.compile(f"^{pat}$")
-        return [t for t in all_terms if rx.match(t)]
-    if isinstance(q, RegexpQuery):
-        rx = re.compile(f"^(?:{q.pattern})$")
-        return [t for t in all_terms if rx.match(t)]
-    if isinstance(q, TermRangeQuery):
-        lo, hi = q.lower, q.upper
-        out = []
-        for t in all_terms:
-            if lo is not None and (t < lo or (t == lo and not q.include_lower)):
-                continue
-            if hi is not None and (t > hi or (t == hi and not q.include_upper)):
-                continue
-            out.append(t)
-        return out
+    """The terms of the sorted ``all_terms`` that term_predicate(q)
+    accepts; a TermInSetQuery's present terms in ``q.terms`` order."""
     if isinstance(q, TermInSetQuery):
         s = set(all_terms)
         return [t for t in q.terms if t in s]
-    if isinstance(q, FuzzyQuery):
-        return [
-            t
-            for t in all_terms
-            if t[: q.prefix_length] == q.term[: q.prefix_length]
-            and _within_edits(q.term, t, q.max_edits)
-        ]
-    raise TypeError(type(q))
+    return list(filter(term_predicate(q), all_terms))
 
 
 def _within_edits(a: str, b: str, k: int) -> bool:
-    """Banded Levenshtein <= k (FuzzyQuery's LevenshteinAutomata analog)."""
-    if abs(len(a) - len(b)) > k:
-        return False
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i] + [0] * len(b)
-        lo = max(1, i - k)
-        hi = min(len(b), i + k)
-        if lo > 1:
-            cur[lo - 1] = k + 1
-        for j in range(lo, hi + 1):
-            cur[j] = min(
-                prev[j] + 1,
-                cur[j - 1] + 1,
-                prev[j - 1] + (ca != b[j - 1]),
-            )
-        if hi < len(b):
-            for j in range(hi + 1, len(b) + 1):
-                cur[j] = k + 1
-        prev = cur
-        if min(prev) > k:
-            return False
-    return prev[len(b)] <= k
+    """Levenshtein <= k (FuzzyQuery's LevenshteinAutomata analog)."""
+    return abs(len(a) - len(b)) <= k and _edit_distance(a, b) <= k
+
+
+def _edit_distance(a: str, b: str) -> int:
+    """The Levenshtein distance of ``a`` and ``b``, by Myers'
+    bit-parallel algorithm (Hyyro 2001): the DP column over ``a`` is
+    two ints of +1/-1 vertical deltas, advanced once per char of ``b``."""
+    if not a:
+        return len(b)
+    peq: dict = {}
+    for i, c in enumerate(a):
+        peq[c] = peq.get(c, 0) | 1 << i
+    full, last = (1 << len(a)) - 1, 1 << (len(a) - 1)
+    pv, mv, dist = full, 0, len(a)
+    for c in b:
+        eq = peq.get(c, 0)
+        xv = eq | mv
+        xh = (((eq & pv) + pv) ^ pv) | eq
+        ph = mv | ~(xh | pv)
+        mh = pv & xh
+        dist += bool(ph & last) - bool(mh & last)
+        ph = ph << 1 | 1
+        pv = (mh << 1 | ~(xv | ph)) & full
+        mv = ph & xv
+    return dist
 
 
 def rewrite_multi_term(q: Query, term_lookup) -> Query:

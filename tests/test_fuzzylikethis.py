@@ -9,7 +9,6 @@ import pytest
 from lucene_solr_8_7_0_spark.config import EngineConfig
 from lucene_solr_8_7_0_spark.operators.build import build_index
 from lucene_solr_8_7_0_spark.operators.fuzzylikethis import (
-    _edit_distance,
     fuzzy_like_this,
     fuzzy_like_this_terms,
 )
@@ -24,6 +23,17 @@ def flt_idx(spark, tmp_path_factory):
     build_index(spark, corpus_df(spark, 200, seed=9), d,
                 EngineConfig(segment_size=64))
     return IndexSearcher(spark, d)
+
+
+def _edit_distance(a: str, b: str) -> int:
+    """Plain Levenshtein dynamic programme, the replay's own."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[-1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
 
 
 def _brute_selection(searcher, text, max_num_terms):

@@ -123,11 +123,43 @@ def test_too_many_clauses():
         b.build()
 
 
+def test_edit_distance_matches_plain_dp():
+    """The bit-parallel Levenshtein FuzzyQuery matches by equals the
+    plain dynamic programme, over random strings with non-ASCII and
+    astral characters and past one machine word."""
+    import random
+
+    from lucene_solr_8_7_0_spark.plans.rewrite import (
+        _edit_distance, _within_edits)
+
+    def plain(a, b):
+        prev = list(range(len(b) + 1))
+        for i, ca in enumerate(a, 1):
+            cur = [i]
+            for j, cb in enumerate(b, 1):
+                cur.append(min(prev[j] + 1, cur[-1] + 1,
+                               prev[j - 1] + (ca != cb)))
+            prev = cur
+        return prev[-1]
+
+    rng = random.Random(5)
+    for n in range(3000):
+        alphabet = "ab\u00e9\u0663\U0010ffff" if n % 2 else "abcdefgh"
+        size = 9 if n % 10 else 80
+        a, b = ("".join(rng.choice(alphabet)
+                        for _ in range(rng.randint(0, size)))
+                for _ in range(2))
+        d = plain(a, b)
+        assert _edit_distance(a, b) == d, (a, b)
+        assert _within_edits(a, b, 2) == (d <= 2), (a, b)
+
+
 def test_term_read_filter_superset_of_predicate():
     """The pyarrow read filter of every multi-term query keeps at least
     the terms its exact predicate accepts (exactly those for prefixes,
     ranges and sets), including prefixes ending next to the surrogate
-    block or at the last code point."""
+    block or at the last code point, and regexps that RE2 reads unlike
+    Python ``re`` (Unicode ``\\w`` and ``\\d``, ``{,n}``)."""
     import pyarrow as pa
 
     from lucene_solr_8_7_0_spark.plans.rewrite import expand_terms, term_read_filter
@@ -136,6 +168,7 @@ def test_term_read_filter_superset_of_predicate():
         "get", "getx", "geu", "ge", "g", "gf", "t0100", "t0999", "t1999",
         "ab", "abc", "abd", "ae", "\u00e9t\u00e9", "\u00e9tu",
         "g\ud7ffx", "g\ud7ff", "g\ue000", "a\U0010ffff", "a\U0010ffffz", "b",
+        "caf\u00e9", "cafe", "x\u0663", "x3", "a", "aa",
     })
     tbl = pa.table({"term": vocab})
     cases = [
@@ -145,6 +178,8 @@ def test_term_read_filter_superset_of_predicate():
         (Q.TermInSetQuery(("abc", "zz", "get")), True),
         (Q.WildcardQuery("g*t?"), False), (Q.WildcardQuery("*999"), False),
         (Q.RegexpQuery("t0[1]00"), False), (Q.RegexpQuery("(a)\\1b?"), False),
+        (Q.RegexpQuery(r"caf\w"), False), (Q.RegexpQuery(r"x\d"), False),
+        (Q.RegexpQuery("a{,2}"), False),
         (Q.FuzzyQuery("abd", max_edits=1), False),
         (Q.FuzzyQuery("getx", max_edits=1, prefix_length=2), False),
     ]

@@ -182,20 +182,24 @@ def test_phrase_wildcard_matches_expanded_multiphrase(engine):
 
 def test_phrase_wildcard_budget_truncates_in_term_order(engine):
     """Budget exhaustion keeps the FIRST max_multi_term_expansions
-    terms in term order and trades recall, never raising (:378-392)."""
+    matching terms in term order and trades recall, never raising
+    (:378-392); the budget counts exact matches, not the rows of the
+    read's narrowing (fuzzy's length band, a regexp's whole dictionary)."""
     from lucene_solr_8_7_0_spark.plans.rewrite import expand_terms
 
     searcher, corpus, oi = engine
     vocab = _vocab(searcher)
-    slot = Q.PrefixQuery("s")  # many expansions in this corpus
-    full = expand_terms(slot, vocab)
-    assert len(full) > 2
-    pw = Q.PhraseWildcardQuery(("public", slot), max_multi_term_expansions=2)
-    got = sorted(searcher.matches_df(pw).toPandas()["doc_id"].tolist())
-    exp = sorted(oracle_matches(
-        oi, Q.MultiPhraseQuery((("public",), tuple(full[:2])))
-    ).tolist())
-    assert got == exp
+    budget = 2
+    for slot in (Q.PrefixQuery("s"), Q.FuzzyQuery("set"),
+                 Q.RegexpQuery("s[a-z]*t")):
+        full = expand_terms(slot, vocab)
+        assert len(full) > budget, slot  # many expansions in this corpus
+        want = Q.MultiPhraseQuery((("public",), tuple(full[:budget])))
+        pw = Q.PhraseWildcardQuery(("public", slot),
+                                   max_multi_term_expansions=budget)
+        assert searcher._reader_rewrite(pw) == want, slot
+        got = sorted(searcher.matches_df(pw).toPandas()["doc_id"].tolist())
+        assert got == sorted(oracle_matches(oi, want).tolist()), slot
 
 
 def test_phrase_wildcard_unmatchable_slot(engine):

@@ -11,7 +11,9 @@ import re
 import shutil
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
@@ -59,7 +61,7 @@ def _sorted_rows(tbl: pa.Table) -> list:
 MULTI_TERM = [
     Q.PrefixQuery("ge"), Q.PrefixQuery(""), Q.PrefixQuery("zzzz"),
     Q.WildcardQuery("re*n"), Q.WildcardQuery("*t?c"),
-    Q.RegexpQuery("pub.*"), Q.FuzzyQuery("publik"),
+    Q.RegexpQuery("pub.*"), Q.RegexpQuery(r"st\w*c"), Q.FuzzyQuery("publik"),
     Q.FuzzyQuery("retrun", 2, 1), Q.TermRangeQuery("pa", "pu"),
     Q.TermRangeQuery("public", "return", False, False),
     Q.TermRangeQuery(None, "b"), Q.TermRangeQuery("x", None),
@@ -69,21 +71,25 @@ MULTI_TERM = [
 
 def test_resident_reads_equal_parquet_reads(spark, index_dir):
     """Every read of the resident tables returns the rows the parquet
-    read returns: term stats, termdict probes and segments rows, with
+    read returns: term stats, termdict probes (exactly the terms
+    expand_terms finds, in term order) and segments rows, with
     multi-term unions and segment windows."""
+    from lucene_solr_8_7_0_spark.plans.rewrite import expand_terms
+
     s = _open(spark, index_dir)
     files = snap.ParquetTables(s._snapshot)
     res = snap.ResidentTables.load(s._snapshot)
     terms = ["public", "return", "zz_absent", SENTINEL_TERM]
     assert res.term_stats(terms) == files.term_stats(terms)
     assert res.term_stats([]) == files.term_stats([]) == {}
+    vocab = sorted(res.termdict["term"].to_pylist())
     for q in MULTI_TERM:
         for limit in (None, 3):
             a = res.termdict_rows(q, ["term", "df", "ttf"], limit)
             b = files.termdict_rows(q, ["term", "df", "ttf"], limit)
-            assert a.num_rows == b.num_rows, q
-            if limit is None:
-                assert _sorted_rows(a) == _sorted_rows(b), q
+            assert a.to_pylist() == b.to_pylist(), q
+            want = sorted(expand_terms(q, vocab))[:limit]
+            assert a["term"].to_pylist() == want, q
     cols = srch._POSTINGS_COLS + srch._POS_COLS
     for mt in [()] + [(q,) for q in MULTI_TERM] + [tuple(MULTI_TERM[:4])]:
         for window in (None, (0, 1), (2, None), (None, 3), (9, 10)):
@@ -91,6 +97,53 @@ def test_resident_reads_equal_parquet_reads(spark, index_dir):
             b = files.segment_rows(terms, mt, cols, window)
             assert a.schema.names == b.schema.names
             assert _sorted_rows(a) == _sorted_rows(b), (mt, window)
+
+
+UNICODE_DOCS = [
+    "caf\u00e9 public static", "cafe public return", "cafx na\u00efve public",
+    "x\u0663 caf\u00e9 static", "x3 naive return", "caf\u00e9 caf\u00e9 void",
+]
+
+
+def test_regexp_reads_follow_python_re(spark, tmp_path):
+    """A regexp that RE2 reads unlike Python ``re`` (``\\w`` is Unicode
+    in ``re``) answers by ``re`` on an index with non-ASCII terms: both
+    row sources' termdict and segments reads equal expand_terms over the
+    vocabulary, and the search equals the oracle's."""
+    from lucene_solr_8_7_0_spark.functions.oracle import (
+        build_oracle_index, oracle_search)
+    from lucene_solr_8_7_0_spark.plans.rewrite import expand_terms, rewrite
+
+    cfg = EngineConfig(segment_size=2)
+    docs = spark.createDataFrame(
+        [("r", f"p{i}", "c", "java", text)
+         for i, text in enumerate(UNICODE_DOCS)],
+        schema="repo string, path string, commit string, lang string, "
+               "content string")
+    d = str(tmp_path / "unicode")
+    build_index(spark, docs, d, cfg, resume=False)
+    s = _open(spark, d)
+    files = snap.ParquetTables(s._snapshot)
+    res = snap.ResidentTables.load(s._snapshot)
+    vocab = sorted(res.termdict["term"].to_pylist())
+    q = Q.RegexpQuery(r"caf\w")
+    want = expand_terms(q, vocab)
+    assert want == ["cafe", "cafx", "caf\u00e9"]
+    for source in (res, files):
+        assert source.termdict_rows(q, ["term"])["term"].to_pylist() == want
+        rows = source.segment_rows([], (q,), ["segment_id", "term"])
+        assert sorted(set(rows["term"].to_pylist())) == want
+    ids = pq.read_table(f"{d}/docs", columns=["path", "doc_id"]).to_pydict()
+    doc_id = dict(zip(ids["path"], ids["doc_id"]))
+    oi = build_oracle_index(pd.DataFrame({
+        "doc_id": [doc_id[f"p{i}"] for i in range(len(UNICODE_DOCS))],
+        "content": UNICODE_DOCS}), cfg)
+    exp = oracle_search(
+        oi, rewrite(q, lambda mq: expand_terms(mq, vocab)), k=10)
+    td = s.search(q, k=10)
+    assert td.doc_ids.tolist() == exp.doc_ids.tolist()
+    np.testing.assert_array_equal(td.scores, exp.scores)
+    assert len(td.doc_ids) == 5
 
 
 def test_driver_bytes_rule_picks_the_source(spark, index_dir, monkeypatch):
@@ -221,12 +274,20 @@ def test_parallelism_read_once_per_searcher(spark, index_dir, monkeypatch):
 
 def test_driver_search_makes_no_py4j_call(spark, index_dir, monkeypatch):
     """After the resident load, driver-placed top-k searches build no
-    pyarrow dataset and send no command to the JVM."""
+    pyarrow dataset and send no command to the JVM, nor do the
+    rewrite-time term expansions of phrase-wildcard, complex-phrase and
+    fuzzy-like-this."""
+    from lucene_solr_8_7_0_spark.operators.fuzzylikethis import (
+        fuzzy_like_this_terms)
+
     s = _open(spark, index_dir)
     qs = [Q.TermQuery("public"), Q.term_and(["public", "return"]),
           Q.term_or(["public", "return", "static"], 2),
           Q.PhraseQuery(("public", "static")), Q.PrefixQuery("ge"),
-          Q.WildcardQuery("re*n"), Q.FuzzyQuery("publik")]
+          Q.WildcardQuery("re*n"), Q.FuzzyQuery("publik"),
+          Q.PhraseWildcardQuery(("public", Q.PrefixQuery("st"))),
+          Q.PhraseWildcardQuery(("public", Q.FuzzyQuery("statc"))),
+          Q.ComplexPhraseQuery((("public",), (Q.PrefixQuery("st"), "void")))]
     s.search(qs[0])  # the resident load, and the parallelism read
     from py4j import protocol
 
@@ -249,6 +310,8 @@ def test_driver_search_makes_no_py4j_call(spark, index_dir, monkeypatch):
         if len(td.doc_ids):
             s.search_after(q, (float(td.scores[-1]), int(td.doc_ids[-1])))
         s.count(q)
+    assert sent == []
+    assert fuzzy_like_this_terms(s, "publik statik")
     assert sent == []
     assert spark.sparkContext.getConf() and sent  # the wrapper sees calls
 

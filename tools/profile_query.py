@@ -3,10 +3,14 @@
 Builds (or resumes) a bench-identical index from the cached bench
 corpus, opens a searcher, reports the driver's row source (the resident
 tables' load ms and bytes, or the parquet files above the driver-bytes
-cap), then breaks each headline query's wall into driver phases:
+cap), then breaks the wall of each headline query, and of a
+phrase-wildcard, a complex-phrase and a regexp query, into driver
+phases:
 
-  prepare   IndexSearcher._prepare: rewrite (prefix/wildcard queries
-            probe the termdict), term stats, compile, access plan
+  prepare   IndexSearcher._prepare: rewrite (multi-term queries read
+            the termdict; phrase-wildcard and complex-phrase queries
+            expand their pattern slots there), term stats, compile,
+            access plan
   stats     the term-stats lookup inside prepare (IndexSearcher._term_stats)
   masks     IndexSearcher._kernel_inputs: point-filter docsets (a Spark
             job per uncached clause) and the live-docs mask
@@ -119,6 +123,11 @@ def main():
     searcher = IndexSearcher(spark, idx_dir)
     from bench import headline_queries
     qs = headline_queries(searcher)
+    qs["phrase_wildcard"] = Q.PhraseWildcardQuery(
+        ("public", Q.PrefixQuery("st")))
+    qs["complex_phrase"] = Q.ComplexPhraseQuery(
+        (("public",), (Q.PrefixQuery("st"), "void")))
+    qs["regexp"] = Q.RegexpQuery("st.*c")
     t0 = time.perf_counter()
     source = searcher._tables()
     load_ms = (time.perf_counter() - t0) * 1000
