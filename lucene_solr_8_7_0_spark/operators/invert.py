@@ -23,6 +23,8 @@ shuffle already built.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
@@ -120,27 +122,45 @@ def doc_array_columns(cfg: EngineConfig, content_col: str = "content"):
     kernel reconstructs kept positions as
     ``delete(arange(len(terms) + len(holes)), holes)``.  Every doc
     keeps its row (empty arrays), so segments see every doc without
-    marker rows."""
+    marker rows.
+
+    The pair is built once per JVM and key (``_analysis_columns``): an
+    unresolved Catalyst expression belongs to no session, and building
+    it costs about 400 py4j commands, most of a small commit's collect."""
+    from pyspark import SparkContext
+
+    return _analysis_columns(
+        SparkContext._jvm, cfg.analyzer, cfg.max_token_length,
+        tuple(cfg.stopwords), cfg.html_strip, content_col,
+    )
+
+
+@lru_cache(maxsize=16)
+def _analysis_columns(jvm, analyzer: str, max_token_length: int,
+                      stopwords: tuple, html_strip: bool, content_col: str):
+    """``doc_array_columns`` for one key: the fields of the config the
+    expression reads, and the py4j JVM view it was built through (a
+    ``JVMView`` compares by identity, so a Column of a gateway that was
+    shut down and relaunched is never reused)."""
     from ..functions.analysis import jvm_token_array
 
     toks = F.coalesce(
-        jvm_token_array(content_col, cfg.analyzer,
-                        html_strip=cfg.html_strip),
+        jvm_token_array(content_col, analyzer, html_strip=html_strip),
         F.array(),
     )
 
     def drop_pred(x):
         # length filter sees the RAW token; the stop filter sees the
         # LOWERCASED one (StandardAnalyzer chain order)
-        d = F.length(x) > cfg.max_token_length
-        if cfg.stopwords:
-            tt = F.lower(x) if cfg.analyzer == "standard" else x
-            d = d | tt.isin(*[str(w) for w in cfg.stopwords])
+        d = F.length(x) > max_token_length
+        if stopwords:
+            tt = F.lower(x) if analyzer == "standard" else x
+            d = d | tt.isin(*[str(w) for w in stopwords])
         return d
 
     term_of = (
         (lambda x: F.lower(x))
-        if cfg.analyzer == "standard"
+        if analyzer == "standard"
         else (lambda x: x)
     )
     # Fast common case: the per-token (t, p) struct zip + double filter

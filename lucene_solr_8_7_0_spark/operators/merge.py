@@ -365,6 +365,9 @@ class CommitInfo:
 #        320 (0.4)              190 -> 2,797    306 -> 2,175    666 -> 2,444
 #     20,000 (9.5)              519 -> 3,969  1,281 -> 4,160  3,692 -> 5,793
 #    200,000 (78)             1,665 -> 4,787  5,565 -> 7,384  (not run)
+# (The driver column was measured before the analysis Columns were
+# cached per JVM, operators/invert.doc_array_columns, which took 50-70
+# ms off every driver commit's collect at 320 docs.)
 # The driver won every measured cell, but its lead shrinks with the
 # delta (7.6x at 200 docs, 1.3x at 20,000) and it holds the delta's
 # token arrays and the base's segments in memory.  A delta over the
@@ -461,6 +464,7 @@ def _driver_commit(spark: SparkSession, index_dir: str, rows, out_dir: str,
     ``merge_indexes``.  Returns the number of docs added."""
 
     from . import invert
+    from .snapshot import hand_off
     from .stats import length_stats_values, merge_stats_tables
 
     opts = _parquet_options(spark)
@@ -480,10 +484,14 @@ def _driver_commit(spark: SparkSession, index_dir: str, rows, out_dir: str,
             pa.array(ids), rows["content"].to_pandas(), cfg
         )])
         lengths = toks["length"].to_numpy().astype(np.int64)
-    delta_segs = _driver_segments(index_dir, out_dir, toks, base_n, cfg, opts)
+    segs, delta_segs = _driver_segments(index_dir, out_dir, toks, base_n,
+                                        cfg, opts)
     _driver_docmeta(index_dir, out_dir, rows, ids, lengths, cfg, opts)
     merge_stats_tables([index_dir], out_dir, length_stats_values(lengths))
-    _driver_termdict(index_dir, out_dir, delta_segs, opts)
+    td = _driver_termdict(index_dir, out_dir, delta_segs, opts)
+    # the next searcher opened on out_dir builds its resident tables
+    # from these, not from the files just written (operators/snapshot)
+    hand_off(out_dir, segs, td)
     return rows.num_rows
 
 
@@ -492,7 +500,8 @@ def _driver_segments(index_dir: str, out_dir: str, toks, base_n: int,
     """Encode each delta segment (``toks`` is sorted by doc id, so each
     is one slice), re-encode the one segment a mid-segment delta shares
     with the base, and rewrite the segments table as one file sorted by
-    (segment_id, term).  Returns the delta's own segment rows."""
+    (segment_id, term).  Returns the whole table and the delta's own
+    segment rows."""
     import pyarrow.dataset as pads
 
     from .segments import encode_segment
@@ -525,8 +534,11 @@ def _driver_segments(index_dir: str, out_dir: str, toks, base_n: int,
     segs = pa.concat_tables(parts).sort_by(
         [("segment_id", "ascending"), ("term", "ascending")]
     )
-    _write_parquet([segs], os.path.join(out_dir, "segments"), opts)
-    return delta_segs
+    # min/max statistics only for the columns a read filters on:
+    # segment_id (footer ranges, segment windows) and term (term IN)
+    _write_parquet([segs], os.path.join(out_dir, "segments"),
+                   {**opts, "write_statistics": ["segment_id", "term"]})
+    return segs, delta_segs
 
 
 def _driver_docmeta(index_dir: str, out_dir: str, rows, ids, lengths,
@@ -565,9 +577,9 @@ def _driver_docmeta(index_dir: str, out_dir: str, rows, ids, lengths,
 
 
 def _driver_termdict(index_dir: str, out_dir: str, delta_segs,
-                     opts: dict) -> None:
+                     opts: dict) -> pa.Table:
     """The base's termdict plus the delta's own segment rows, summed
-    per term, sorted and range-split."""
+    per term, sorted and range-split.  Returns the whole table."""
     import pyarrow.dataset as pads
 
     real = delta_segs.filter(pc.not_equal(delta_segs["term"], SENTINEL_TERM))
@@ -588,6 +600,7 @@ def _driver_termdict(index_dir: str, out_dir: str, delta_segs,
         [td.slice(lo, hi - lo) for lo, hi in zip(cuts[:-1], cuts[1:])],
         os.path.join(out_dir, "termdict"), {**opts, "use_dictionary": False},
     )
+    return td
 
 
 def _driver_victims(index_dir: str, rows, keys: list[str]):
@@ -641,8 +654,10 @@ def add_documents(
     when this call created it, then ``merge_indexes``)."""
     from .build import load_config, sorted_docs, write_config
     from .deletes import delete_documents, write_deletes
+    from .snapshot import take_handoff
     from .stats import read_stats_row
 
+    take_handoff()  # a commit never holds an earlier commit's tables
     cfg = cfg or load_config(index_dir)
     base_n = int(read_stats_row(os.path.join(index_dir, "stats"))["num_docs"] or 0)
     base_sorted = sorted_docs(index_dir)

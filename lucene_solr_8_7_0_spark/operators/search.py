@@ -70,7 +70,9 @@ from ..functions.codec import _EMPTY_I32, TermPostings
 from ..functions.wand import CompiledQuery, ScoringClause, score_segment
 from .deletes import DELETES_TOKEN, load_live_docs, read_generation
 from .segments import SENTINEL_TERM
-from .snapshot import FileSnapshot, ParquetTables, ResidentTables
+from .snapshot import (
+    FileSnapshot, ParquetTables, ResidentTables, check_footers, take_handoff,
+)
 from ..plans import planner, rewrite as rw
 from ..plans.queries import FuzzyQuery, Query
 
@@ -512,8 +514,14 @@ class IndexSearcher:
         # every read of them checks it (operators/snapshot)
         self._snapshot = FileSnapshot.record(index_dir)
         self._resident = None  # ResidentTables, loaded by the first _tables()
+        # the tables of the commit that wrote this snapshot, when it ran
+        # on the driver just before this open (operators/snapshot)
+        self._handoff = take_handoff(index_dir, self._snapshot)
         self._resident_lock = threading.Lock()
         self.docmeta_path = os.path.join(index_dir, "docmeta")
+        # a search may answer without reading docmeta: a truncated file
+        # fails the open instead of a later sort or filter
+        check_footers(self.docmeta_path)
         self._live_docs_cache = None  # (del generation, mask dict)
         # (placement, reason) of the last kernel run: "driver" | "spark"
         self._last_placement = None
@@ -549,17 +557,25 @@ class IndexSearcher:
 
     def _tables(self):
         """The driver's source of segments and termdict rows: the
-        resident tables (ResidentTables, loaded on the first call) when
-        the snapshot's segments bytes on disk are at most
-        DRIVER_MAX_SEGMENTS_BYTES — the rule under which a driver
-        commit holds a base in memory too — else the snapshot's files,
-        read as the Spark tasks read them (ParquetTables)."""
+        resident tables (ResidentTables, built on the first call from
+        the committing writer's tables when it handed them off, else
+        loaded from the files) when the snapshot's segments bytes on
+        disk are at most DRIVER_MAX_SEGMENTS_BYTES — the rule under
+        which a driver commit holds a base in memory too — else the
+        snapshot's files, read as the Spark tasks read them
+        (ParquetTables)."""
         if self._snapshot.nbytes("segments") > DRIVER_MAX_SEGMENTS_BYTES:
+            self._handoff = None
             return ParquetTables(self._snapshot)
         if self._resident is None:
             with self._resident_lock:
                 if self._resident is None:
-                    self._resident = ResidentTables.load(self._snapshot)
+                    handoff, self._handoff = self._handoff, None
+                    if handoff is None:
+                        self._resident = ResidentTables.load(self._snapshot)
+                    else:
+                        self._snapshot.check()
+                        self._resident = ResidentTables.from_tables(*handoff)
         return self._resident
 
     # ---- term dictionary services (FST/automaton analog) ----

@@ -1,5 +1,5 @@
 """A searcher's snapshot of the segments and termdict tables, and the
-two sources of their rows.
+sources of their rows.
 
 ``FileSnapshot`` records the path, size and ``mtime_ns`` of every
 segments and termdict file when a searcher opens.  Every parquet read
@@ -31,6 +31,16 @@ segments bytes on disk are at most ``config.DRIVER_MAX_SEGMENTS_BYTES``;
 the Spark tasks, and the driver above that cap, read ``ParquetTables``.
 For one read both return the same rows, possibly in another order (the
 kernel groups them by segment and keys them by term).
+
+The resident tables have a third source besides the files
+(``ResidentTables.load``): the commit that wrote them.  A driver-placed
+commit (operators/merge) leaves its segments and termdict tables in one
+process-wide slot (``hand_off``), and the next searcher opened in the
+process takes them (``take_handoff``) when its directory and file
+snapshot are the commit's — the reference's near-real-time reopen
+(DirectoryReader.open(IndexWriter)), which reads the segments the writer
+holds instead of their files.  The slot holds at most one commit's
+tables, until the next searcher opens or the next commit starts.
 """
 
 from __future__ import annotations
@@ -38,6 +48,7 @@ from __future__ import annotations
 import glob
 import os
 import sys
+import threading
 from dataclasses import dataclass
 
 import numpy as np
@@ -58,6 +69,18 @@ def _schema(table: str) -> pa.Schema:
         return segment_arrow_schema()
     return pa.schema([("term", pa.string()), ("df", pa.int64()),
                       ("ttf", pa.int64())])
+
+
+def _read_schema(table: str) -> pa.Schema:
+    """The schema a parquet read of the table yields (list values are
+    named ``element``): the one set of types the resident tables hold,
+    whether loaded or handed off."""
+    def read_type(t):
+        if pa.types.is_list(t):
+            return pa.list_(pa.field("element", t.value_type))
+        return t
+
+    return pa.schema([(f.name, read_type(f.type)) for f in _schema(table)])
 
 
 def _listing(table_dir: str) -> list[str]:
@@ -121,6 +144,23 @@ class FileSnapshot:
                     raise ValueError(
                         f"{t} file {new[0]} was added after the searcher "
                         "opened this snapshot; reopen the searcher")
+
+
+def check_footers(table_dir: str) -> None:
+    """Raise ``ValueError`` naming the first parquet file of
+    ``table_dir`` that does not end in a parquet footer (its last 8
+    bytes: the footer length, then ``PAR1``): a truncated or partly
+    written file."""
+    table = os.path.basename(table_dir)
+    for path in _listing(table_dir):
+        with open(path, "rb") as f:
+            size = f.seek(0, os.SEEK_END)
+            f.seek(max(size - 8, 0))
+            tail = f.read(8)
+        if (size < 12 or tail[4:] != b"PAR1"
+                or int.from_bytes(tail[:4], "little") > size - 12):
+            raise ValueError(f"{table} file {path} ends in no parquet footer "
+                             f"({size} bytes): truncated or partly written")
 
 
 def rows_filter(terms, mt_qs=(), window: tuple | None = None):
@@ -254,16 +294,31 @@ class ResidentTables:
         self._ttf = termdict["ttf"].to_numpy()
 
     @classmethod
+    def from_tables(cls, segments: pa.Table,
+                    termdict: pa.Table) -> "ResidentTables":
+        """The resident tables of a snapshot's whole segments and
+        termdict tables, in any order and chunking: sorted, combined and
+        cast to the types a file read yields (_read_schema)."""
+        def resident(tbl, table, keys):
+            schema = _read_schema(table)
+            return tbl.select(schema.names).sort_by(keys).combine_chunks(
+            ).cast(schema)
+
+        return cls(
+            resident(segments, "segments",
+                     [("term", "ascending"), ("segment_id", "ascending")]),
+            resident(termdict, "termdict", "term"),
+        )
+
+    @classmethod
     def load(cls, snapshot: FileSnapshot) -> "ResidentTables":
         """Read both tables of ``snapshot`` whole, checking the files
         before and after the read."""
         files = ParquetTables(snapshot)
-        segs = files._dataset("segments").to_table().sort_by(
-            [("term", "ascending"), ("segment_id", "ascending")])
+        segs = files._dataset("segments").to_table()
         td = files._dataset("termdict").to_table(columns=_TERMDICT_COLS)
         snapshot.check()
-        return cls(segs.combine_chunks(),
-                   td.sort_by("term").combine_chunks())
+        return cls.from_tables(segs, td)
 
     @property
     def nbytes(self) -> int:
@@ -305,3 +360,36 @@ class ResidentTables:
     def termdict_rows(self, q, columns, limit: int | None = None) -> pa.Table:
         j = _matching(self._td_keys, self.termdict["term"], q)
         return self.termdict.select(columns).take(j[:limit])
+
+
+# The last driver commit's tables, for the next searcher open:
+# (index_dir, FileSnapshot.files, segments, termdict) or None.
+_handoff = None
+_handoff_lock = threading.Lock()
+
+
+def hand_off(index_dir: str, segments: pa.Table, termdict: pa.Table) -> None:
+    """Leave the whole segments and termdict tables a commit just wrote
+    to ``index_dir`` for the next searcher open, with the file snapshot
+    they were written as."""
+    global _handoff
+    files = FileSnapshot.record(index_dir).files
+    with _handoff_lock:
+        _handoff = (index_dir, files, segments, termdict)
+
+
+def take_handoff(index_dir: str | None = None,
+                 snapshot: FileSnapshot | None = None):
+    """Empty the slot; return its (segments, termdict) when they were
+    written to ``index_dir`` as the files ``snapshot`` records, else
+    None (a searcher on another directory, or files rewritten since the
+    commit, read the files).  Without a snapshot it only empties."""
+    global _handoff
+    with _handoff_lock:
+        slot, _handoff = _handoff, None
+    if slot is None or snapshot is None:
+        return None
+    d, files, segments, termdict = slot
+    if d != index_dir or files != snapshot.files:
+        return None
+    return segments, termdict

@@ -13,6 +13,7 @@ MultiTermQuery's SCORING_BOOLEAN_REWRITE.
 from __future__ import annotations
 
 import re
+from re import _parser as re_parser
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -362,6 +363,22 @@ def _wildcard_prefix(pattern: str) -> str:
     return pattern.split("*")[0].split("?")[0]
 
 
+def _regexp_prefix(pattern: str) -> str:
+    """The literal run every full match of the Python regexp ``pattern``
+    starts with: the leading LITERAL nodes of its parse, up to the first
+    other node (a quantifier holds its literal, an alternation its
+    branches) or surrogate code point.  Empty under IGNORECASE."""
+    parsed = re_parser.parse(pattern)
+    if parsed.state.flags & re.IGNORECASE:
+        return ""
+    out = []
+    for op, av in parsed:
+        if op != re_parser.LITERAL or 0xD800 <= av < 0xE000:
+            break
+        out.append(chr(av))
+    return "".join(out)
+
+
 def _prefix_successor(prefix: str) -> str | None:
     """The least string above every string that starts with the
     non-empty ``prefix`` (None when there is none)."""
@@ -404,9 +421,10 @@ def term_read_filter(q: Query):
     Prefixes, ranges and sets pass exactly those terms; fuzzy keeps its
     prefix and length band; a wildcard its literal prefix and its RE2
     translation, which holds only escaped literals, ``.`` and ``.*``,
-    read alike by RE2 and ``re``.  A regexp is not narrowed: RE2 reads
-    some patterns unlike ``re`` (``\\w``, ``\\d``, ``{,n}``).  The
-    reads apply term_predicate after it."""
+    read alike by RE2 and ``re``.  A regexp keeps only its literal
+    prefix (_regexp_prefix): RE2 reads some patterns unlike ``re``
+    (``\\w``, ``\\d``, ``{,n}``).  The reads apply term_predicate after
+    it."""
     t = pads.field("term")
     if isinstance(q, PrefixQuery):
         return _prefix_expr(q.prefix)
@@ -430,7 +448,7 @@ def term_read_filter(q: Query):
             & (n <= len(q.term) + q.max_edits)
         )
     if isinstance(q, RegexpQuery):
-        return pads.scalar(True)
+        return _prefix_expr(_regexp_prefix(q.pattern))
     raise TypeError(type(q))
 
 
@@ -451,6 +469,8 @@ def term_key_range(q: Query) -> tuple:
         prefix = _wildcard_prefix(q.pattern)
     elif isinstance(q, FuzzyQuery):
         prefix = q.term[: q.prefix_length]
+    elif isinstance(q, RegexpQuery):
+        prefix = _regexp_prefix(q.pattern)
     exact = isinstance(q, PrefixQuery)
     if not prefix:
         return None, True, None, True, exact

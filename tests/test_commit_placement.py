@@ -304,3 +304,133 @@ def test_merge_segment_fails_loudly(spark, tmp_path):
         merge_mod.merge_segment(1, seg.filter(pc.not_equal(seg["term"], SENTINEL_TERM)))
     with pytest.raises(ValueError, match="overlap in doc ids"):
         merge_mod.merge_segment(1, pa.concat_tables([seg, seg]))
+
+
+def test_analysis_columns_built_once_per_key(spark, monkeypatch):
+    """The JVM analysis Columns are built once per key: the five config
+    fields the expression reads and the live py4j JVM view.  Equal keys
+    share the Column objects; a change to any one of them builds new
+    ones."""
+    from py4j.java_gateway import java_import
+    from pyspark import SparkContext
+
+    from lucene_solr_8_7_0_spark.operators import invert
+
+    def cols(cfg, content_col="content"):
+        return invert.doc_array_columns(cfg, content_col)
+
+    base = EngineConfig(stopwords=("the", "a"))
+    first = cols(base)
+    assert cols(EngineConfig(stopwords=("the", "a"))) is first
+    assert [c is d for c, d in zip(cols(base), first)] == [True, True]
+    variants = [
+        cols(EngineConfig(analyzer="simple", stopwords=("the", "a"))),
+        cols(EngineConfig(max_token_length=7, stopwords=("the", "a"))),
+        cols(EngineConfig(stopwords=("the",))),
+        cols(EngineConfig(html_strip=True, stopwords=("the", "a"))),
+        cols(base, "body"),
+    ]
+    # another JVM view, importing what pyspark's own view imports
+    view = spark.sparkContext._gateway.new_jvm_view()
+    for name in ("org.apache.spark.api.python.*",
+                 "org.apache.spark.sql.functions",
+                 "org.apache.spark.sql.classic.*",
+                 "org.apache.spark.sql.api.python.*"):
+        java_import(view, name)
+    monkeypatch.setattr(SparkContext, "_jvm", view)
+    variants.append(cols(base))
+    monkeypatch.undo()
+    assert cols(base) is first
+    for v in variants:
+        assert v[0] is not first[0] and v[1] is not first[1]
+    for i, v in enumerate(variants):
+        assert all(v[0] is not w[0] for w in variants[i + 1:])
+
+
+def test_driver_commit_py4j_commands(spark, tmp_path):
+    """After the first, a driver commit sends at most 110 commands to
+    the JVM (about 415 while the analysis Columns were rebuilt on every
+    commit)."""
+    from py4j import protocol
+
+    cfg = EngineConfig(segment_size=20)
+    base_pdf = _base_rows("segment_boundary")
+    base = str(tmp_path / "base")
+    build_index(spark, spark.createDataFrame(base_pdf), base, cfg)
+    delta = _delta_rows("segment_boundary", base_pdf)
+    info = dl.update_documents(spark, base, spark.createDataFrame(delta),
+                               str(tmp_path / "first"))
+    assert info.placement == "driver"
+    new_docs = spark.createDataFrame(delta)
+    client = spark.sparkContext._gateway._gateway_client
+    sent, send = [], client.send_command
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counted(command, *a, **kw):
+        if not command.startswith(release):
+            sent.append(command)
+        return send(command, *a, **kw)
+
+    client.send_command = counted
+    try:
+        info = dl.update_documents(spark, base, new_docs, str(tmp_path / "second"))
+    finally:
+        del client.send_command
+    assert info.placement == "driver"
+    assert 0 < len(sent) <= 110, len(sent)
+
+
+RESTART_SCRIPT = """
+import os, sys
+repo, tests, root = sys.argv[1:4]
+sys.path[:0] = [repo, tests]
+import test_commit_placement as t
+from lucene_solr_8_7_0_spark.session import get_spark
+
+def session():
+    return get_spark(cores=1, shuffle_partitions=2, app_name="restart")
+
+spark = session()
+spark.sparkContext.setLogLevel("ERROR")
+cfg = t.SHAPES["mid_segment"]
+base_pdf = t._base_rows("mid_segment")
+base = os.path.join(root, "base")
+t.build_index(spark, spark.createDataFrame(base_pdf), base, cfg)
+delta = t._delta_rows("mid_segment", base_pdf)
+info = t.dl.update_documents(spark, base, spark.createDataFrame(delta),
+                             os.path.join(root, "before"))
+assert info.placement == "driver", info
+spark.stop()
+spark = session()
+snaps = {}
+for placement in ("driver", "spark"):
+    t.merge_mod._choose_commit_placement = lambda *a, p=placement: (p, "forced")
+    out = os.path.join(root, placement)
+    info = t.dl.update_documents(spark, base, spark.createDataFrame(delta), out)
+    assert (info.placement, info.added, info.deleted) == (placement, 5, 3), info
+    snaps[placement] = (t._snapshot(out), t._answers(
+        t.IndexSearcher(spark, out, query_cache=t.QueryCache())))
+assert snaps["driver"] == snaps["spark"]
+spark.stop()
+print("restart ok")
+"""
+
+
+def test_driver_commit_after_session_restart(tmp_path):
+    """The analysis Columns cached in one session serve a driver commit
+    in the next (spark.stop(), then a new session), which still equals
+    the Spark placement.  Runs in its own process, whose session it may
+    stop."""
+    import subprocess
+    import sys
+
+    tests = os.path.dirname(os.path.abspath(__file__))
+    script = tmp_path / "restart.py"
+    script.write_text(RESTART_SCRIPT)
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g"}
+    done = subprocess.run(
+        [sys.executable, str(script), os.path.dirname(tests), tests,
+         str(tmp_path)],
+        capture_output=True, text=True, timeout=900, env=env)
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert "restart ok" in done.stdout

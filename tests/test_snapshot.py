@@ -342,3 +342,169 @@ def test_resident_load_once_under_threads(spark, index_dir, monkeypatch):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert got == [want] * 8 and len(loads) == 2
+
+
+@pytest.fixture()
+def committed(spark, index_dir, tmp_path):
+    """A driver-placed commit of 3 new docs onto the module's index: the
+    new snapshot's directory, with its tables handed off and no searcher
+    opened since."""
+    from lucene_solr_8_7_0_spark.operators import merge
+    from lucene_solr_8_7_0_spark.sources.corpus import generate_corpus_pdf
+
+    new = generate_corpus_pdf(np.arange(N, N + 3), N, seed=8)
+    new_docs = spark.createDataFrame(new.drop(columns=["sha256"]))
+    out = str(tmp_path / "committed")
+    info = merge.add_documents(spark, index_dir, new_docs, out)
+    assert info.placement == "driver", info
+    assert snap._handoff is not None and snap._handoff[0] == out
+    return out
+
+
+def test_commit_hands_its_tables_to_the_next_searcher(spark, committed,
+                                                      monkeypatch):
+    """The searcher opened after a driver commit builds its resident
+    tables from the commit's tables, reading no segments or termdict
+    file, and they equal (types included) a load of the files; its
+    answers equal a searcher's that read the files.  The slot is empty
+    once the searcher opens, and the searcher drops the commit's tables
+    once its resident tables are built."""
+    real = snap.ParquetTables._dataset
+
+    def no_read(*a, **kw):
+        raise AssertionError("read a parquet file")
+
+    monkeypatch.setattr(snap.ParquetTables, "_dataset", no_read)
+    s = _open(spark, committed)
+    assert snap._handoff is None and s._handoff is not None
+    qs = [Q.TermQuery("public"), Q.term_or(["public", "return"], 1),
+          Q.PrefixQuery("ge"), Q.PhraseQuery(("public", "static"))]
+    got = [_bits(s.search(q)) for q in qs]
+    assert s._handoff is None and isinstance(s._resident, srch.ResidentTables)
+    monkeypatch.setattr(snap.ParquetTables, "_dataset", real)
+    loaded = snap.ResidentTables.load(s._snapshot)
+    for table in ("segments", "termdict"):
+        a, b = getattr(s._resident, table), getattr(loaded, table)
+        assert a.schema == b.schema and a.equals(b), table
+    files = _open(spark, committed)
+    assert files._handoff is None
+    assert [_bits(files.search(q)) for q in qs] == got
+
+
+@pytest.mark.parametrize("table", ["segments", "termdict"])
+def test_file_rewritten_after_commit_is_read(spark, committed, monkeypatch,
+                                             table):
+    """A segments or termdict file rewritten between the commit and the
+    reopen fails the handoff: the searcher reads the files."""
+    f = sorted(glob.glob(f"{committed}/{table}/*.parquet"))[0]
+    size = os.path.getsize(f)
+    rows = pq.read_table(f)
+    pq.write_table(rows.slice(0, rows.num_rows - 1), f)
+    assert os.path.getsize(f) != size
+    loads, load = [], snap.ResidentTables.load
+    monkeypatch.setattr(snap.ResidentTables, "load",
+                        lambda snapshot: loads.append(1) or load(snapshot))
+    s = _open(spark, committed)
+    assert s._handoff is None and snap._handoff is None
+    res = s._tables()
+    assert loads == [1]
+    on_disk = sum(pq.read_metadata(p).num_rows
+                  for p in glob.glob(f"{committed}/{table}/*.parquet"))
+    assert getattr(res, table).num_rows == on_disk
+
+
+def test_searcher_on_another_directory_empties_the_slot(spark, committed,
+                                                        index_dir):
+    other = _open(spark, index_dir)
+    assert other._handoff is None and snap._handoff is None
+    s = _open(spark, committed)
+    assert s._handoff is None
+    s.search(Q.TermQuery("public"))
+    assert isinstance(s._resident, srch.ResidentTables)
+
+
+@pytest.mark.parametrize("table", ["segments", "termdict", "docmeta"])
+def test_truncated_file_fails_loudly(spark, committed, table):
+    """A committed snapshot's segments, termdict or docmeta file cut to
+    half its size fails CheckIndex and the searcher, each naming the
+    file; the searcher never answers.  The file is cut before the
+    reopen, so the commit's handoff cannot mask it."""
+    from lucene_solr_8_7_0_spark.operators.checkindex import assert_healthy
+
+    f = sorted(glob.glob(f"{committed}/{table}/*.parquet"))[0]
+    with open(f, "r+b") as fh:
+        fh.truncate(os.path.getsize(f) // 2)
+    with pytest.raises(Exception, match=re.escape(f)):
+        assert_healthy(spark, committed)
+    with pytest.raises(ValueError, match=re.escape(f)):
+        _open(spark, committed).search(Q.TermQuery("public"))
+
+
+REGEXP_ALPHABET = ["a", "b", "c", "é", "ï", "٣", "ß", "3"]
+REGEXP_PIECES = REGEXP_ALPHABET + [".", ".*", r"\w", r"\d", "[aé]",
+                                   "(b|c)", "b?", "c+", "a{0,2}", r"\W"]
+
+
+def _random_regexp(rng) -> str:
+    pieces = [str(rng.choice(REGEXP_ALPHABET))
+              for _ in range(int(rng.integers(0, 3)))]
+    pieces += [str(rng.choice(REGEXP_PIECES)) for _ in range(int(rng.integers(0, 4)))]
+    pattern = "".join(pieces)
+    roll = rng.random()
+    if roll < 0.1:
+        pattern = "(?i)" + pattern
+    elif roll < 0.2:
+        pattern += "|" + str(rng.choice(REGEXP_ALPHABET)) + ".*"
+    elif roll < 0.25:
+        pattern = "^" + pattern
+    return pattern
+
+
+def test_regexp_literal_prefix_narrowing(tmp_path, monkeypatch):
+    """A regexp read is narrowed to the run of its literal prefix (none
+    under IGNORECASE or a non-literal start) and stays exact: over
+    randomized patterns on a vocabulary with non-ASCII terms, both row
+    sources' termdict and segments reads equal expand_terms; and the
+    predicate runs only on the prefix's run."""
+    from lucene_solr_8_7_0_spark.operators.segments import segment_arrow_schema
+    from lucene_solr_8_7_0_spark.plans import rewrite as rw
+
+    rng = np.random.default_rng(13)
+    vocab = sorted({"".join(rng.choice(REGEXP_ALPHABET, int(rng.integers(1, 6))))
+                    for _ in range(600)})
+    n = len(vocab)
+    td = pa.table({"term": vocab, "df": np.ones(n, np.int64),
+                   "ttf": np.ones(n, np.int64)})
+    schema = segment_arrow_schema()
+    segs = pa.table({f.name: pa.nulls(n, f.type) for f in schema}).set_column(
+        1, "term", pa.array(vocab)).set_column(
+        0, "segment_id", pa.array(np.arange(n, dtype=np.int32) % 3))
+    for name, tbl in (("segments", segs), ("termdict", td)):
+        os.makedirs(tmp_path / name)
+        pq.write_table(tbl, tmp_path / name / "part-0.parquet",
+                       row_group_size=64)
+    files = snap.ParquetTables(snap.FileSnapshot.record(str(tmp_path)))
+    res = snap.ResidentTables.from_tables(segs, td)
+    checked = 0
+    for _ in range(400):
+        pattern = _random_regexp(rng)
+        try:
+            re.compile(pattern)
+        except re.error:
+            continue
+        q = Q.RegexpQuery(pattern)
+        want = rw.expand_terms(q, vocab)
+        for source in (res, files):
+            assert source.termdict_rows(q, ["term"])["term"].to_pylist() == want, pattern
+            rows = source.segment_rows([], (q,), ["segment_id", "term"])
+            assert sorted(set(rows["term"].to_pylist())) == want, pattern
+        checked += 1
+    assert checked > 300
+    assert rw.term_key_range(Q.RegexpQuery("ab.*"))[:4] == ("ab", True, "ac", False)
+    assert rw.term_key_range(Q.RegexpQuery("(?i)ab.*"))[0] is None
+    assert rw.term_key_range(Q.RegexpQuery("[ab]b.*"))[0] is None
+    seen, pred = [], rw.term_predicate
+    monkeypatch.setattr(rw, "term_predicate",
+                        lambda q: (lambda t: seen.append(t) or pred(q)(t)))
+    res.termdict_rows(Q.RegexpQuery("ab.*c"), ["term"])
+    assert seen and all(t.startswith("ab") for t in seen)

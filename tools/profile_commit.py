@@ -1,5 +1,6 @@
 """Per-layer commit profiler: the walls and Spark job counts of one
-``update_documents`` commit and the reopen after it, in each placement.
+``update_documents`` commit, the reopen after it and the first search
+of the reopened searcher, in each placement.
 
 Builds a base index of ``n_files`` generated files (the ``nrt_update``
 shape by default: 320 files, ``segment_size`` 20, 16 segments), then
@@ -20,15 +21,22 @@ commit starts from the same base.  Layers:
           build      build_index of the delta
           merge      merge_indexes
           deletes    the victims join + write (delete_documents)
-  both    reopen     IndexSearcher over the new snapshot
+  both    reopen     IndexSearcher over the new snapshot (lazy: no
+                     table is read yet)
+          first search  the first search after the reopen, a term
+                     query: it builds the searcher's resident tables,
+                     from the tables a driver commit handed off or
+                     from the files (operators/snapshot)
           other      the commit's wall minus its layers
-          total      commit + reopen
+          total      commit + reopen + first search
 
-Walls are medians over ``reps`` in ms; jobs count new Spark job ids
-seen by ``statusTracker`` (no job group is set, so jobs the build
-submits from its own threads count too).
+Walls are medians over ``reps`` in ms, without the profiler's own
+job-id reads; jobs count new Spark job ids seen by ``statusTracker``
+(no job group is set, so jobs the build submits from its own threads
+count too).
 
 Usage: python tools/profile_commit.py [n_files] [share] [reps] [segment_size]
+       python tools/profile_commit.py --help
 """
 
 import os
@@ -49,9 +57,13 @@ from lucene_solr_8_7_0_spark.operators import (  # noqa: E402
     build, deletes, docids, merge, segments, stats,
 )
 from lucene_solr_8_7_0_spark.operators.search import IndexSearcher  # noqa: E402
+from lucene_solr_8_7_0_spark.plans import queries as Q  # noqa: E402
 from lucene_solr_8_7_0_spark.session import get_spark  # noqa: E402
 from lucene_solr_8_7_0_spark.sources.corpus import generate_corpus_pdf  # noqa: E402
 
+if {"-h", "--help"} & set(sys.argv[1:]):
+    print(__doc__)
+    sys.exit(0)
 N_FILES = int(sys.argv[1]) if len(sys.argv) > 1 else 320
 SHARES = [float(x) for x in (sys.argv[2] if len(sys.argv) > 2 else "0.01").split(",")]
 REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 5
@@ -85,6 +97,18 @@ def job_ids(sc) -> set:
     return set(sc.statusTracker().getJobIdsForGroup(None))
 
 
+def probed_job_ids(sc, walls: dict) -> set:
+    """job_ids, its own wall added to ``walls["probe"]``: every wall
+    that encloses a wrapper's job-id reads is reported without them
+    (each read lists every job of the session, several ms late in a
+    run)."""
+    t0 = time.perf_counter()
+    try:
+        return job_ids(sc)
+    finally:
+        walls["probe"] += time.perf_counter() - t0
+
+
 @contextmanager
 def timed_layers(sc, walls: dict, jobs: dict, placement: str):
     """Wrap the LAYERS functions so each call adds its wall (s) and its
@@ -99,12 +123,15 @@ def timed_layers(sc, walls: dict, jobs: dict, placement: str):
         saved.append((mod, name, fn))
 
         def timed(*a, _fn=fn, _layer=layer, **k):
-            before, t0 = job_ids(sc), time.perf_counter()
+            before = probed_job_ids(sc, walls)
+            p0, t0 = walls["probe"], time.perf_counter()
             try:
                 return _fn(*a, **k)
             finally:
-                walls[_layer] = walls.get(_layer, 0.0) + time.perf_counter() - t0
-                jobs[_layer] = jobs.get(_layer, 0) + len(job_ids(sc) - before)
+                wall = time.perf_counter() - t0 - (walls["probe"] - p0)
+                walls[_layer] = walls.get(_layer, 0.0) + wall
+                jobs[_layer] = jobs.get(_layer, 0) + len(
+                    probed_job_ids(sc, walls) - before)
 
         setattr(mod, name, timed)
     try:
@@ -124,19 +151,23 @@ def one_commit(spark, base, pdf, rng, rep, out, placement,
     rows = pdf.iloc[victims].drop(columns=["sha256"]).reset_index(drop=True)
     rows["content"] = fresh["content"].to_numpy()
     new_docs = spark.createDataFrame(rows)
-    walls, jobs = {}, {}
+    walls, jobs = {"probe": 0.0}, {}
     sc = spark.sparkContext
     orig = merge._choose_commit_placement
     merge._choose_commit_placement = lambda *a: (placement, "forced")
     try:
         before = job_ids(sc)
         with timed_layers(sc, walls, jobs, placement):
-            t0 = time.perf_counter()
+            p0, t0 = walls["probe"], time.perf_counter()
             deletes.update_documents(spark, base, new_docs, out)
-            walls["commit"] = time.perf_counter() - t0
+            walls["commit"] = time.perf_counter() - t0 - (walls["probe"] - p0)
             t0 = time.perf_counter()
-            IndexSearcher(spark, out)
+            searcher = IndexSearcher(spark, out)
             walls["reopen"] = time.perf_counter() - t0
+            j0, t0 = job_ids(sc), time.perf_counter()
+            searcher.search(Q.TermQuery("public"), k=10)
+            walls["first search"] = time.perf_counter() - t0
+            jobs["first search"] = len(job_ids(sc) - j0)
         jobs["total"] = len(job_ids(sc) - before)
     finally:
         merge._choose_commit_placement = orig
@@ -144,7 +175,7 @@ def one_commit(spark, base, pdf, rng, rep, out, placement,
         walls["segments"] -= walls.get("encode", 0.0)
         walls["deletes"] = walls.get("victims", 0.0) + walls.get("deletes write", 0.0)
     walls["other"] = walls["commit"] - sum(walls.get(k, 0.0) for k in REPORT[placement])
-    walls["total"] = walls["commit"] + walls["reopen"]
+    walls["total"] = walls["commit"] + walls["reopen"] + walls["first search"]
     return walls, jobs
 
 
@@ -179,10 +210,11 @@ def main() -> None:
             print(f"\ndelta: {max(1, int(round(N_FILES * share)))} files replaced")
             for placement, runs in results.items():
                 print(f"{placement}: layer  ms (median)  jobs (median)")
-                for layer in REPORT[placement] + ["other", "reopen", "total"]:
+                for layer in REPORT[placement] + ["other", "reopen",
+                                                  "first search", "total"]:
                     ms = np.median([w.get(layer, 0.0) for w, _ in runs]) * 1000
                     nj = np.median([j.get(layer, 0) for _, j in runs])
-                    print(f"  {layer:<10} {ms:9.1f}  {nj:5.0f}")
+                    print(f"  {layer:<12} {ms:9.1f}  {nj:5.0f}")
     finally:
         spark.stop()
         shutil.rmtree(root, ignore_errors=True)
