@@ -66,15 +66,10 @@ class ScoringClause:
     const_score: float | None = None  # ConstantScoreQuery: fixed score
     slop: int = 0
     sub: "CompiledQuery | None" = None
-    # "term" | "synonym" | "multiphrase" | "union_pred"
-    # (multi-term = phrase otherwise)
+    # "term" | "synonym" | "multiphrase" (multi-term = phrase otherwise)
     kind: str = "term"
     # MultiPhraseQuery: term alternatives per phrase slot
     alts: tuple[tuple[str, ...], ...] | None = None
-    # union_pred (distributed multi-term union): str -> bool predicate
-    # selecting this clause's terms among the segment's LOCAL terms
-    # (the postings read also holds the query's other terms)
-    pred: object | None = None
     # span_near: require query order (SpanNearQuery.inOrder)
     in_order: bool = True
     # span_near: the original clause specs (str | SpanOrQuery |
@@ -617,19 +612,6 @@ def _eval_clause(
         return _synonym_docs_scores(
             [posting_map.get(t) for t in clause.terms], norms, clause
         )
-    if clause.kind == "union_pred":
-        # distributed multi-term union: select this segment's matching
-        # terms by predicate (the read also holds the query's other
-        # terms) and union their postings.
-        # Reserved tokens (\x00 sentinel/matchnone, \x01 point/delete
-        # doc-id masks) are never expansion candidates.
-        hits = [
-            posting_map[t]
-            for t in posting_map
-            if not (t.startswith("\x00") or t.startswith("\x01"))
-            and clause.pred(t)
-        ]
-        return _synonym_docs_scores(hits, norms, clause)
     if clause.kind == "multiphrase":
         return _multiphrase_docs_scores(posting_map, norms, clause)
     if clause.kind == "span_near":

@@ -8,8 +8,9 @@ IndexSearcher.java:571-668):
    the termdict, bind BM25 weights (plans/planner) — the
    Weight-creation phase,
 2. ``score_files`` — the one kernel entry point: the rows of
-   ``term IN (terms, sentinel)`` (plus the distributed unions' terms)
-   from one of the snapshot's two row sources (operators/snapshot):
+   ``term IN (terms, sentinel)`` (a multi-term query's terms were
+   listed once, by the rewrite) from one of the snapshot's two row
+   sources (operators/snapshot):
    the driver's resident term-sorted tables, read by binary search
    (the resident FST term-index analog), or a ``pyarrow.dataset`` read
    of the segments files with the predicate pushed into parquet.  The
@@ -74,7 +75,7 @@ from .snapshot import (
     FileSnapshot, ParquetTables, ResidentTables, check_footers, take_handoff,
 )
 from ..plans import planner, rewrite as rw
-from ..plans.queries import FuzzyQuery, Query
+from ..plans.queries import Query
 
 _RESULT_ARROW = pa.schema([
     ("segment_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float32()),
@@ -134,14 +135,14 @@ class TopDocs:
 class PreparedQuery:
     """A query made ready for the segment kernels (the Weight-creation
     phase): rewritten, compiled against its term stats (``cq`` is None
-    when it can match nothing), its point clauses and multi-term
-    predicates collected and the IndexOrDocValues access plan chosen."""
+    when it can match nothing), its point clauses collected and the
+    IndexOrDocValues access plan chosen.  ``terms`` are every term whose
+    postings the kernels read."""
 
     query: Query
     terms: set
     cq: CompiledQuery | None
     point_qs: set
-    mt_qs: tuple
     lead: tuple | None
     dv_keys: frozenset
     term_stats: dict
@@ -155,7 +156,6 @@ class KernelSpec:
 
     cq: CompiledQuery
     terms: tuple
-    mt_qs: tuple  # multi-term queries of distributed unions
     need_pos: bool
     k: int | None
     score_mode: str
@@ -230,12 +230,11 @@ def rows_to_posting_map(tbl: pa.Table) -> dict[str, TermPostings]:
     return dict(zip(tbl.column("term").to_pylist(), posting_rows(tbl)))
 
 
-def postings_read(spec: KernelSpec) -> tuple[list, tuple, list]:
-    """(terms, multi-term queries, columns) of the kernel's read: the
-    query terms' postings plus every segment's sentinel (norms) row, the
-    distributed unions' rows, and the position columns only for phrase
-    queries."""
-    return (list(spec.terms) + [SENTINEL_TERM], spec.mt_qs,
+def postings_read(spec: KernelSpec) -> tuple[list, list]:
+    """(terms, columns) of the kernel's read: the query terms' postings
+    plus every segment's sentinel (norms) row, and the position columns
+    only for phrase queries."""
+    return (list(spec.terms) + [SENTINEL_TERM],
             _POSTINGS_COLS + (_POS_COLS if spec.need_pos else []))
 
 
@@ -319,16 +318,13 @@ def score_files(spec: KernelSpec, masks: list, source,
     ``source`` is where the rows come from: the driver's resident
     tables (ResidentTables), or the snapshot's files (ParquetTables:
     the Spark tasks' read, and the driver's above
-    DRIVER_MAX_SEGMENTS_BYTES); a plain list of segments files reads
-    as ParquetTables.  Returns one ``_RESULT_ARROW`` table; no pandas
-    anywhere.  ``timings`` (optional) accumulates the seconds of the
+    DRIVER_MAX_SEGMENTS_BYTES).  Returns one ``_RESULT_ARROW`` table; no
+    pandas anywhere.  ``timings`` (optional) accumulates the seconds of the
     ``read``, the ``postings`` (grouping + posting maps) and the
     ``kernel`` (score_segment)."""
-    if isinstance(source, (list, tuple)):
-        source = ParquetTables(FileSnapshot.of(source))
     cq = spec.cq
     if not (
-        cq.match_all or spec.terms or spec.mt_qs
+        cq.match_all or spec.terms
         or any(token != DELETES_TOKEN for token, _ in masks)
     ):
         return _RESULT_ARROW.empty_table()
@@ -746,20 +742,14 @@ class IndexSearcher:
             tuple(clauses), slop=q.slop, in_order=q.in_order
         )
 
-    def _term_lookup(self, q: Query) -> list[str] | None:
-        """Driver-side probe of the term dictionary for a multi-term
-        query.  Returns the full matching term list only when it is
-        small enough to enumerate (0/1 matches -> MatchNoDocs/TermQuery
-        unwrap; fuzzy's scored expansion up to maxClauseCount); returns
-        None for "many", telling the rewrite to take the DISTRIBUTED
-        constant-score union — the predicate then ships to the postings
-        read and kernels and no term list ever reaches the driver.  One
+    def _term_lookup(self, q: Query) -> list[str]:
+        """The terms of the term dictionary that the multi-term query
+        ``q`` matches, in term order: the rewrite's one expansion of it
+        (rw.rewrite_multi_term), every later read takes the list.  One
         exact driver-side read of the termdict (_tables), never a Spark
         job."""
-        most = MAX_CLAUSE_COUNT if isinstance(q, FuzzyQuery) else 1
-        terms = self._tables().termdict_rows(
-            q, ["term"], limit=most + 1)["term"].to_pylist()
-        return None if len(terms) > most else terms
+        terms = self._tables().termdict_rows(q, ["term"])["term"]
+        return terms.to_numpy(zero_copy_only=False).tolist()
 
     def _term_stats(self, terms: set[str]) -> dict[str, tuple[int, int]]:
         """Global TermStatistics for a query's terms, read driver-side
@@ -815,19 +805,22 @@ class IndexSearcher:
 
     def _prepare(self, query: Query, score_mode: str = "top_scores",
                  similarity: str | None = None) -> PreparedQuery:
-        """rewrite -> term stats -> compile -> point / multi-term clauses
-        -> access plan: the driver work every search runs before its
-        kernels (``similarity`` as in search())."""
+        """rewrite -> term stats -> compile -> point clauses -> access
+        plan: the driver work every search runs before its kernels
+        (``similarity`` as in search()).  An interval multi-term source
+        adds its terms to the read (_term_lookup); each segment's kernel
+        expands it from them."""
         q = self._rewrite(query)
         terms = planner.collect_terms(q)
+        for mq in planner.collect_interval_multi_terms(q):
+            terms.update(self._term_lookup(mq))
         ts = self._term_stats(terms)
         cq = planner.compile_query(
             q, self.stats.with_similarity(similarity), ts, score_mode
         )
         lead, dv_keys = self._dv_plan(cq, ts) if cq is not None else (None, frozenset())
         return PreparedQuery(
-            q, terms, cq, planner.collect_point_queries(q),
-            tuple(planner.collect_multi_term_preds(q)), lead, dv_keys, ts,
+            q, terms, cq, planner.collect_point_queries(q), lead, dv_keys, ts,
         )
 
     def _kernel_inputs(self, p: PreparedQuery, k: int | None, score_mode: str,
@@ -847,9 +840,8 @@ class IndexSearcher:
                 ScoringClause((DELETES_TOKEN,), None, const_score=0.0)
             ])
         spec = KernelSpec(
-            cq, tuple(sorted(p.terms)), tuple(mq.orig for mq in p.mt_qs),
-            planner.has_phrase(p.query), k, score_mode, threshold,
-            self.cfg.segment_size, after=after,
+            cq, tuple(sorted(p.terms)), planner.has_phrase(p.query), k,
+            score_mode, threshold, self.cfg.segment_size, after=after,
         )
         return spec, masks
 
@@ -857,12 +849,9 @@ class IndexSearcher:
         """(placement, reason) of a top-k search: "spark" when the
         kernel work a Spark stage parallelizes away pays for placing it
         (see _SPARK_MIN_SAVED), else "driver"."""
-        df = sum(p.term_stats.get(t, (0, 0))[0] for t in p.terms)
-        ttf = sum(p.term_stats.get(t, (0, 0))[1] for t in p.terms)
-        for mq in p.mt_qs:  # a distributed union reads its terms' rows
-            tbl = self._tables().termdict_rows(mq.orig, ["df", "ttf"])
-            df += int(tbl["df"].to_numpy().sum())
-            ttf += int(tbl["ttf"].to_numpy().sum())
+        stats = p.term_stats.values()  # the present terms of p.terms
+        df = sum(d for d, _ in stats)
+        ttf = sum(f for _, f in stats)
         if p.cq.match_all:
             df += self.stats.num_docs
         if not planner.has_phrase(p.query):
@@ -884,9 +873,14 @@ class IndexSearcher:
             return self._merge(_RESULT_ARROW.empty_table(), k)
         spec, masks = self._kernel_inputs(p, k, score_mode, threshold, after)
         if two_pass and score_mode == "top_scores":
+            # the seed segment's k-th score becomes the shared floor only
+            # once its own hits reach the threshold, as Lucene shares it
+            # only after the HitsThresholdChecker trips: below that, the
+            # floor would stop the kernels counting hits
             seed = self._score_driver(spec, masks, segments=(0, 1))
             scores = seed["score"].to_numpy()[seed["doc_id"].to_numpy() >= 0]
-            if len(scores) >= k:
+            hits = int(seed["hits"].to_numpy()[:1].sum())
+            if len(scores) >= k and hits >= threshold:
                 spec = replace(spec, min_competitive=float(np.sort(scores)[-k]))
         self._last_placement = self._choose_placement(p)
         if self._last_placement[0] == "driver":
@@ -1156,8 +1150,8 @@ class IndexSearcher:
         seg_id = doc_id // self.cfg.segment_size
         local = doc_id - seg_id * self.cfg.segment_size
         spec = KernelSpec(
-            cq, tuple(p.terms), tuple(mq.orig for mq in p.mt_qs),
-            planner.has_phrase(q), None, "complete", 0, self.cfg.segment_size,
+            cq, tuple(p.terms), planner.has_phrase(q), None, "complete", 0,
+            self.cfg.segment_size,
         )
         rows = kernel_rows(spec, self._tables(), (seg_id, seg_id + 1))
         if not rows.num_rows:  # no such segment
@@ -1187,9 +1181,7 @@ class IndexSearcher:
                         freq = int(f[np.searchsorted(d, local)])
                 entry = {
                     "clause": (
-                        " ".join(c.terms) if c.terms
-                        else "(multi-term)" if c.kind == "union_pred"
-                        else "(nested)"
+                        " ".join(c.terms) if c.terms else "(nested)"
                     ),
                     "occur": kind,
                     "matches": bool(hit),

@@ -13,18 +13,21 @@ Rows come from one of two sources with one interface (``segment_rows``,
 * ``ResidentTables``: both tables loaded once into driver memory, the
   segments sorted by (term, segment_id) and the termdict by term.  A
   read is a binary search (``np.searchsorted``) over the distinct terms
-  and a ``take`` of their row runs; a multi-term read narrows its
-  prefix or range to a run of terms the same way.  The analog of
+  and a ``take`` of their row runs; a multi-term termdict read narrows
+  its prefix or range to a run of terms the same way.  The analog of
   Lucene's terms index (.tip, BlockTreeTermsWriter.java:188-205), which
   stays resident and seeks straight to a term's postings.
 * ``ParquetTables``: a ``pyarrow.dataset`` read of the files on every
   call, a multi-term query's narrowing (rw.term_read_filter) pushed
-  into parquet row groups.
+  into the termdict's parquet row groups.
 
-Both sources answer a multi-term query exactly: after the narrowing,
-one step (``_exact``) applies rw.term_predicate, the engine's one match
-semantics, to the distinct terms left, unless the narrowing is already
-exact (prefixes and ranges).
+A multi-term query reaches a source once per search: the rewrite lists
+its terms with ``termdict_rows`` (rw.rewrite_multi_term), and every
+later read, ``term_stats`` and ``segment_rows``, takes that list.  Both
+sources answer it exactly: after the narrowing, one step (``_exact``)
+applies rw.term_predicate, the engine's one match semantics, to the
+distinct terms left, unless the narrowing is already exact (prefixes
+and ranges).
 
 A searcher holds ``ResidentTables`` on the driver when its snapshot's
 segments bytes on disk are at most ``config.DRIVER_MAX_SEGMENTS_BYTES``;
@@ -99,8 +102,7 @@ def _stat(paths) -> tuple:
 class FileSnapshot:
     """``files``: ``{table: ((path, size, mtime_ns), ...)}`` of the
     segments and termdict files as recorded; ``dirs``: the table
-    directories those lists are the listings of (empty for a given file
-    list, which cannot tell an added file)."""
+    directories those lists are the listings of."""
 
     files: dict
     dirs: dict
@@ -109,11 +111,6 @@ class FileSnapshot:
     def record(cls, index_dir: str) -> "FileSnapshot":
         dirs = {t: os.path.join(index_dir, t) for t in TABLES}
         return cls({t: _stat(_listing(d)) for t, d in dirs.items()}, dirs)
-
-    @classmethod
-    def of(cls, segments: list[str]) -> "FileSnapshot":
-        """The snapshot of a given list of segments files."""
-        return cls({"segments": _stat(segments), "termdict": ()}, {})
 
     def paths(self, table: str) -> list[str]:
         return [p for p, _, _ in self.files[table]]
@@ -163,14 +160,12 @@ def check_footers(table_dir: str) -> None:
                              f"({size} bytes): truncated or partly written")
 
 
-def rows_filter(terms, mt_qs=(), window: tuple | None = None):
-    """The pyarrow filter of a segments read: ``term`` in ``terms`` or
-    within a multi-term query's narrowing (rw.term_read_filter), within
-    the window ``(lo, hi)`` (``lo <= segment_id < hi``, None = open; row
-    groups outside it are pruned by their footer statistics)."""
+def rows_filter(terms, window: tuple | None = None):
+    """The pyarrow filter of a segments read: ``term`` in ``terms``,
+    within the window ``(lo, hi)`` (``lo <= segment_id < hi``, None =
+    open; row groups outside it are pruned by their footer
+    statistics)."""
     cond = pads.field("term").isin(pa.array(list(terms), pa.string()))
-    for q in mt_qs:
-        cond = cond | rw.term_read_filter(q)
     lo, hi = window or (None, None)
     if lo is not None:
         cond = cond & (pads.field("segment_id") >= lo)
@@ -191,8 +186,8 @@ def _exact(tbl: pa.Table, q) -> pa.Table:
     return tbl.filter(pc.is_in(terms, value_set=pa.array(keep, pa.string())))
 
 
-def _stats_dict(terms: list, df, ttf) -> dict[str, tuple[int, int]]:
-    return {t: (int(d), int(f)) for t, d, f in zip(terms, df, ttf)}
+def _stats_dict(terms: list, df: list, ttf: list) -> dict[str, tuple[int, int]]:
+    return dict(zip(terms, zip(df, ttf)))
 
 
 class ParquetTables:
@@ -209,21 +204,12 @@ class ParquetTables:
             return pads.dataset(_schema(table).empty_table())
         return pads.dataset(paths, format="parquet")
 
-    def segment_rows(self, terms, mt_qs=(), columns=None,
+    def segment_rows(self, terms, columns=None,
                      window: tuple | None = None) -> pa.Table:
-        """The segments rows of ``terms`` and of the terms the multi-term
-        queries ``mt_qs`` match, within ``window`` (rows_filter),
-        ``columns`` only.  A query whose narrowing is not exact is first
-        resolved to its terms by a read of the ``term`` column alone."""
-        ds, terms = self._dataset("segments"), list(terms)
-        narrowed = [q for q in mt_qs if not rw.term_key_range(q)[-1]]
-        for q in narrowed:
-            found = ds.to_table(columns=["term"],
-                                filter=rows_filter((), [q], window))
-            terms += pc.unique(_exact(found, q)["term"]).to_pylist()
-        mt_qs = [q for q in mt_qs if q not in narrowed]
-        return ds.to_table(columns=columns,
-                           filter=rows_filter(terms, mt_qs, window))
+        """The segments rows of ``terms`` within ``window``
+        (rows_filter), ``columns`` only."""
+        return self._dataset("segments").to_table(
+            columns=columns, filter=rows_filter(terms, window))
 
     def term_stats(self, terms) -> dict[str, tuple[int, int]]:
         """``{term: (df, ttf)}`` of the present ``terms``."""
@@ -285,8 +271,7 @@ class ResidentTables:
                 zero_copy_only=False)
             starts = np.concatenate([[0], np.flatnonzero(change) + 1])
         # one key per distinct term; its rows are runs[i]:runs[i + 1]
-        self._key_col = terms.take(starts)
-        self._keys = self._key_col.to_numpy(zero_copy_only=False)
+        self._keys = terms.take(starts).to_numpy(zero_copy_only=False)
         self._runs = np.append(starts, n).astype(np.int64)
         self._seg_ids = segments["segment_id"].to_numpy()
         self._td_keys = termdict["term"].to_numpy(zero_copy_only=False)
@@ -326,17 +311,16 @@ class ResidentTables:
         the Python strings the binary searches compare."""
         strs = sum(map(sys.getsizeof, self._keys)) + sum(
             map(sys.getsizeof, self._td_keys))
-        arrays = (self._key_col, self._keys, self._runs, self._seg_ids,
+        arrays = (self._keys, self._runs, self._seg_ids,
                   self._td_keys, self._df, self._ttf)
         return (self.segments.nbytes + self.termdict.nbytes + strs
                 + sum(a.nbytes for a in arrays))
 
-    def segment_rows(self, terms, mt_qs=(), columns=None,
+    def segment_rows(self, terms, columns=None,
                      window: tuple | None = None) -> pa.Table:
         """As ParquetTables.segment_rows, in (term, segment_id) order."""
         j = _find(self._keys, list(terms))
-        j = [j[j >= 0]] + [_matching(self._keys, self._key_col, q) for q in mt_qs]
-        j = np.unique(np.concatenate(j))
+        j = np.unique(j[j >= 0])
         lo, n = self._runs[j], self._runs[j + 1] - self._runs[j]
         idx = np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum())
         if window is not None:
@@ -355,7 +339,7 @@ class ResidentTables:
         j = _find(self._td_keys, terms)
         hit = j >= 0
         return _stats_dict([t for t, h in zip(terms, hit) if h],
-                           self._df[j[hit]], self._ttf[j[hit]])
+                           self._df[j[hit]].tolist(), self._ttf[j[hit]].tolist())
 
     def termdict_rows(self, q, columns, limit: int | None = None) -> pa.Table:
         j = _matching(self._td_keys, self.termdict["term"], q)

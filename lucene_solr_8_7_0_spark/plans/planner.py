@@ -187,7 +187,7 @@ def collect_terms(q: Query) -> set[str]:
         return set(q.terms)
     if isinstance(q, SpanNotQuery):
         return {q.include, q.exclude}
-    if isinstance(q, (PhraseQuery, SynonymQuery)):
+    if isinstance(q, (PhraseQuery, SynonymQuery, MultiTermUnionQuery)):
         return set(q.terms)
     if isinstance(q, MultiPhraseQuery):
         return {t for p in q.positions for t in p}
@@ -206,23 +206,19 @@ def collect_terms(q: Query) -> set[str]:
     return set()
 
 
-def collect_multi_term_preds(q: Query) -> list[MultiTermUnionQuery]:
-    """All MultiTermUnionQuery leaves, in deterministic order — the
-    kernel's postings read adds the rows of the terms they match
-    (operators/snapshot: narrowed, then exact), so the matching rows
-    reach the kernels without a driver-side term list.  IMultiTerm interval sources
-    contribute their inner multi-term queries the same way (their
-    expansion is likewise segment-local)."""
-    if isinstance(q, MultiTermUnionQuery):
-        return [q]
+def collect_interval_multi_terms(q: Query) -> list[Query]:
+    """The multi-term queries of every IMultiTerm interval source, in
+    deterministic order: the searcher reads the postings of their
+    terms, and each segment's kernel expands them against the terms it
+    was given (resolve_multiterm)."""
     if isinstance(q, IntervalQuery):
         from ..plans.queries import IMultiTerm
 
-        out: list[MultiTermUnionQuery] = []
+        out: list[Query] = []
 
         def walk_src(s):
             if isinstance(s, IMultiTerm):
-                out.append(MultiTermUnionQuery(s.query))
+                out.append(s.query)
                 return
             if hasattr(s, "sources"):
                 for x in s.sources:
@@ -237,17 +233,13 @@ def collect_multi_term_preds(q: Query) -> list[MultiTermUnionQuery]:
         walk_src(q.source)
         return out
     if isinstance(q, DisjunctionMaxQuery):
-        out: list[MultiTermUnionQuery] = []
-        for sub in q.queries:
-            out.extend(collect_multi_term_preds(sub))
-        return out
+        return [m for sub in q.queries
+                for m in collect_interval_multi_terms(sub)]
     if isinstance(q, (BoostQuery, ConstantScoreQuery)):
-        return collect_multi_term_preds(q.query)
+        return collect_interval_multi_terms(q.query)
     if isinstance(q, BooleanQuery):
-        out = []
-        for c in q.clauses:
-            out.extend(collect_multi_term_preds(c.query))
-        return out
+        return [m for c in q.clauses
+                for m in collect_interval_multi_terms(c.query)]
     return []
 
 
@@ -367,15 +359,12 @@ def _make_clause(
             (q.token_key(),), None, const_score=(boost if scoring else 0.0)
         )
     if isinstance(q, MultiTermUnionQuery):
-        # distributed constant-score union: the kernel unions the
-        # postings of every segment-local term the predicate accepts
+        # constant-score union of the listed terms' postings
         # (MultiTermQueryConstantScoreWrapper — one bitset, scores
-        # boost); no term statistics are bound, so nothing is collected
-        from .rewrite import term_predicate
-
+        # boost): the synonym union, no term statistics bound
         return ScoringClause(
-            (), None, const_score=(boost if scoring else 0.0),
-            kind="union_pred", pred=term_predicate(q.orig),
+            q.terms, None, const_score=(boost if scoring else 0.0),
+            kind="synonym",
         )
     if isinstance(q, TermQuery):
         if constant or not scoring:

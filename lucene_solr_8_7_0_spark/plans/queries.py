@@ -412,9 +412,10 @@ class IMultiTerm:
     disjunction, capped at ``max_expansions`` PER SEGMENT (the
     reference counts per leaf and throws IllegalStateException beyond
     the cap).  ``query`` is any multi-term Query (PrefixQuery,
-    WildcardQuery, RegexpQuery, TermRangeQuery, ...) — its exact match
-    predicate expands against segment-local terms at evaluation time,
-    with the read predicate pushed down like MultiTermUnionQuery."""
+    WildcardQuery, RegexpQuery, TermRangeQuery, ...).  The searcher
+    expands it once against the term dictionary to choose the postings
+    it reads; each segment's kernel then expands it against the terms
+    read for that segment (resolve_multiterm), where the cap applies."""
 
     query: object
     max_expansions: int = 128
@@ -634,19 +635,15 @@ class FuzzyQuery(Query):
 
 @dataclass(frozen=True)
 class MultiTermUnionQuery(Query):
-    """Rewrite target for a multi-term query whose expansion stays
-    DISTRIBUTED (MultiTermQueryConstantScoreWrapper's bulk path,
-    MultiTermQuery.java CONSTANT_SCORE_REWRITE): instead of collecting
-    the matching terms to the driver and re-emitting them as a literal
-    ``IN`` list, the term predicate itself ships both to the postings
-    read (narrowed over the sorted term column, then exact — the
-    automaton-intersection analog) and to the segment kernel, which
-    unions the postings of every LOCAL term the predicate accepts.
+    """Rewrite target of a multi-term query under CONSTANT_SCORE_REWRITE
+    (MultiTermQuery.java; MultiTermQueryConstantScoreWrapper): ``terms``
+    is the query's expansion, listed once from the term dictionary in
+    term order by the rewrite, and the clause unions their postings.
     Scores are constant (the wrapper builds one bitset and scores
-    boost), so no per-term statistics are needed — nothing about the
-    expansion ever sits on the driver."""
+    boost), so no per-term statistics are bound."""
 
     orig: Query  # the wrapped Prefix/Wildcard/Regexp/Fuzzy/Range/Set query
+    terms: tuple  # its matching terms, in term order
 
     def __str__(self) -> str:
         return f"MultiTermUnion({self.orig})"

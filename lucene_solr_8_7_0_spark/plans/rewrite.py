@@ -5,9 +5,9 @@ BooleanQuery.java:235-460 plus the rewrite fixpoint in
 IndexSearcher.java:674-683.  These rewrite OUR IR on the driver (plain
 Python, above the segment kernels' postings read).
 
-Multi-term queries (prefix/wildcard/regexp/fuzzy/range/set) rewrite to
-term disjunctions by consulting the term dictionary, the analog of
-MultiTermQuery's SCORING_BOOLEAN_REWRITE.
+Multi-term queries (prefix/wildcard/regexp/fuzzy/range/set) rewrite
+against the term dictionary (rewrite_multi_term): a constant-score
+union of their listed terms, or a scored disjunction for fuzzy.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 
+from ..config import MAX_CLAUSE_COUNT
 from .queries import (
     BooleanClause,
     DisjunctionMaxQuery,
@@ -53,8 +54,8 @@ __all__ = ["rewrite", "rewrite_multi_term", "expand_terms", "term_predicate"]
 def rewrite(query: Query, term_lookup=None) -> Query:
     """Fixpoint rewrite (IndexSearcher.java:674-683).
 
-    ``term_lookup(pred) -> list[str]`` resolves multi-term queries from
-    the term dictionary; None leaves them un-rewritten.
+    ``term_lookup(q) -> list[str]`` lists a multi-term query's matching
+    terms from the term dictionary; None leaves them un-rewritten.
     """
     for _ in range(16):  # fixpoint with a safety bound
         new = _rewrite_once(query, term_lookup)
@@ -326,8 +327,8 @@ def term_predicate(q: Query):
     ``str -> bool`` callable: THE match semantics of every multi-term
     query (the compiled ByteRunAutomaton that MultiTermQuery hands each
     TermsEnum).  Term-dictionary reads apply it after their narrowing,
-    expand_terms filters with it, and the segment kernels run it for
-    the distributed constant-score union.  Regexps are Python ``re``."""
+    expand_terms filters with it, and the interval kernels run it
+    against each segment's terms.  Regexps are Python ``re``."""
     if isinstance(q, PrefixQuery):
         p = q.prefix
         return lambda t: t.startswith(p)
@@ -415,9 +416,9 @@ def _regex_expr(pattern: str):
 
 def term_read_filter(q: Query):
     """A NARROWING of the multi-term query as a pyarrow expression over
-    ``term``, for parquet reads of the termdict and segments (prefixes
-    and ranges prune row groups on the sorted term column = the FST
-    term-index analog): every term term_predicate(q) accepts passes it.
+    ``term``, for reads of the termdict (prefixes and ranges prune
+    parquet row groups on the sorted term column = the FST term-index
+    analog): every term term_predicate(q) accepts passes it.
     Prefixes, ranges and sets pass exactly those terms; fuzzy keeps its
     prefix and length band; a wildcard its literal prefix and its RE2
     translation, which holds only escaped literals, ``.`` and ``.*``,
@@ -517,38 +518,30 @@ def _edit_distance(a: str, b: str) -> int:
 
 
 def rewrite_multi_term(q: Query, term_lookup) -> Query:
-    """MultiTermQuery rewrite (MultiTermQuery.java rewrite methods):
+    """MultiTermQuery rewrite (MultiTermQuery.java rewrite methods), the
+    one place a multi-term query is expanded: ``term_lookup(q)`` lists
+    the matching terms, in term order, from the term dictionary.
 
-    * prefix/wildcard/regexp/range/set -> constant-score union over the
-      matching terms' postings — CONSTANT_SCORE_REWRITE, the
-      reference's DEFAULT for these types
+    * no term -> MatchNoDocs; one term -> TermQuery (the constant-score
+      wrapper's tiny-expansion unwrap),
+    * FuzzyQuery with at most maxClauseCount terms -> SHOULD-disjunction
+      of TermQuerys with per-term BM25 (the reference uses
+      TopTermsBlendedFreqScoringRewrite — scored term expansion; we
+      score ALL matching terms rather than the top 50),
+    * every other case -> CONSTANT_SCORE_REWRITE, the reference's
+      DEFAULT for prefix/wildcard/regexp/range/set: a constant-score
+      union over the listed terms' postings
       (MultiTermQueryConstantScoreWrapper builds one bitset, scores
-      boost, and never throws TooManyClauses).  The expansion itself
-      stays DISTRIBUTED (MultiTermUnionQuery): the driver only probes
-      the term dict for the 0-match (-> MatchNoDocs) and 1-match
-      (-> TermQuery, the wrapper's tiny-expansion unwrap) cases; with
-      2+ matches the predicate ships to the scan + kernel and no term
-      list is ever collected,
-    * FuzzyQuery -> SHOULD-disjunction of TermQuerys with per-term BM25
-      (the reference uses TopTermsBlendedFreqScoringRewrite — scored
-      term expansion; we score ALL matching terms up to maxClauseCount
-      rather than the top 50, then fall back to the distributed
-      constant-score union).
-
-    ``term_lookup(q)`` returns the matching terms when they are few
-    enough to enumerate driver-side, or None meaning "many" — take the
-    distributed union path."""
+      boost, and never throws TooManyClauses)."""
     if term_lookup is None:
         return q
     terms = term_lookup(q)
-    if terms is None:
-        return ConstantScoreQuery(MultiTermUnionQuery(q))
     if not terms:
         return MatchNoDocsQuery(f"no terms match {q}")
     if len(terms) == 1:
         return TermQuery(terms[0])
-    if not isinstance(q, FuzzyQuery):
-        return ConstantScoreQuery(MultiTermUnionQuery(q))
+    if not isinstance(q, FuzzyQuery) or len(terms) > MAX_CLAUSE_COUNT:
+        return ConstantScoreQuery(MultiTermUnionQuery(q, tuple(terms)))
     b = Builder()
     for t in terms:
         b.add(TermQuery(t), Occur.SHOULD)

@@ -5,6 +5,7 @@ snapshot with deletes and filters answer bitwise the same on the driver
 cap) and in Spark (one MapInArrow stage, no exchange), and see every
 del generation."""
 
+import os
 import shutil
 
 import numpy as np
@@ -16,6 +17,7 @@ from lucene_solr_8_7_0_spark.operators import deletes as dl
 from lucene_solr_8_7_0_spark.operators import search as srch
 from lucene_solr_8_7_0_spark.operators.build import build_index
 from lucene_solr_8_7_0_spark.operators.search import IndexSearcher, QueryCache
+from lucene_solr_8_7_0_spark.operators.snapshot import FileSnapshot, ParquetTables
 from lucene_solr_8_7_0_spark.plans import queries as Q
 from lucene_solr_8_7_0_spark.sources.corpus import corpus_df
 
@@ -298,10 +300,12 @@ def test_kernel_rejects_segment_without_sentinel(spark, base_dir, tmp_path):
     # simulate a split segment: the file that lost its sentinel row
     sent1 = pc.and_(pc.equal(rows["segment_id"], 1),
                     pc.equal(rows["term"], srch.SENTINEL_TERM))
-    f = str(tmp_path / "part-00000.parquet")
-    pq.write_table(rows.filter(pc.invert(sent1)), f)
+    os.makedirs(tmp_path / "segments")
+    pq.write_table(rows.filter(pc.invert(sent1)),
+                   tmp_path / "segments" / "part-00000.parquet")
+    source = ParquetTables(FileSnapshot.record(str(tmp_path)))
     with pytest.raises(ValueError, match="segment 1: .* no sentinel row"):
-        srch.score_files(spec, masks, [f])
+        srch.score_files(spec, masks, source)
 
 
 def _foreign_layout(src: str, dst: str) -> None:

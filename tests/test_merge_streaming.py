@@ -116,7 +116,10 @@ def test_tiered_merge_rounds_equal_full_build(spark, full_and_split):
 
 def test_two_pass_shared_threshold_identical(spark, full_and_split):
     """Cross-segment min-competitive sharing returns identical results
-    (MaxScoreAccumulator analog; strict-floor pruning is lossless)."""
+    (MaxScoreAccumulator analog; strict-floor pruning is lossless).  At
+    the default threshold, which no segment's hits reach here, the floor
+    is never shared (Lucene shares it only once the hits threshold
+    trips), so the hit count and its relation are identical too."""
     _, _, full_dir = full_and_split
     s = IndexSearcher(spark, full_dir)
     for q in [
@@ -129,6 +132,12 @@ def test_two_pass_shared_threshold_identical(spark, full_and_split):
             b = s.search(q, k=k, total_hits_threshold=1, two_pass_threshold=True)
             assert a.doc_ids.tolist() == b.doc_ids.tolist(), (str(q), k)
             np.testing.assert_array_equal(a.scores, b.scores)
+            a = s.search(q, k=k)
+            b = s.search(q, k=k, two_pass_threshold=True)
+            assert a.doc_ids.tolist() == b.doc_ids.tolist(), (str(q), k)
+            np.testing.assert_array_equal(a.scores, b.scores)
+            assert (a.total_hits, a.relation) == (b.total_hits, b.relation), (
+                str(q), k)
 
 
 def test_incremental_merge_equals_full_build(spark, full_and_split):

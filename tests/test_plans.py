@@ -45,8 +45,8 @@ def _read(engine, q):
     from lucene_solr_8_7_0_spark.operators.snapshot import rows_filter
 
     spec, _ = engine._kernel_inputs(engine._prepare(q), 10, "top_scores", 0)
-    terms, mt_qs, cols = postings_read(spec)
-    return cols, rows_filter(terms, mt_qs)
+    terms, cols = postings_read(spec)
+    return cols, rows_filter(terms)
 
 
 def test_term_filter_pushed_to_parquet_scan(engine):

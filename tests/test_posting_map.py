@@ -26,6 +26,7 @@ from lucene_solr_8_7_0_spark.functions.codec import TermPostings
 from lucene_solr_8_7_0_spark.operators import search as srch
 from lucene_solr_8_7_0_spark.operators.build import build_index
 from lucene_solr_8_7_0_spark.operators.search import IndexSearcher, QueryCache
+from lucene_solr_8_7_0_spark.operators.snapshot import ParquetTables
 from lucene_solr_8_7_0_spark.plans import queries as Q
 from lucene_solr_8_7_0_spark.sources.corpus import corpus_df
 
@@ -164,20 +165,20 @@ def test_posting_map_null_blobs_are_empty(nopos_index):
 
 def test_score_files_returns_result_arrow_table(spark, pos_index):
     s = IndexSearcher(spark, pos_index, query_cache=QueryCache())
-    files = s._snapshot.paths("segments")
+    source = ParquetTables(s._snapshot)
     td = pads.dataset(s._snapshot.paths("termdict"), format="parquet").to_table(
         columns=["term", "df"])
     term = td["term"][int(np.argmax(td["df"].to_numpy()))].as_py()
     spec, masks = s._kernel_inputs(
         s._prepare(Q.TermQuery(term)), 10, "top_scores", 1000)
     t = {}
-    hits = srch.score_files(spec, masks, files, timings=t)
+    hits = srch.score_files(spec, masks, source, timings=t)
     assert isinstance(hits, pa.Table)
     assert hits.schema.equals(srch._RESULT_ARROW)
     assert set(t) == {"read", "postings", "kernel"}
     assert hits.num_rows > 0 and (hits["doc_id"].to_numpy() >= 0).any()
     # a window past the last segment: nothing read, no hits, same schema
-    empty = srch.score_files(spec, masks, files, segments=(100, 101))
+    empty = srch.score_files(spec, masks, source, segments=(100, 101))
     assert isinstance(empty, pa.Table)
     assert empty.num_rows == 0 and empty.schema.equals(srch._RESULT_ARROW)
     assert s._merge(empty, 10).total_hits == 0

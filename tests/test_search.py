@@ -419,30 +419,28 @@ def test_multi_term_no_truncation(spark, tmp_path_factory):
     build_index(spark, docs, d, EngineConfig(segment_size=64))
     s = IndexSearcher(spark, d)
     # wildcard: t19?? -> exactly terms t1900..t1999 (100 terms), all in
-    # doc 6 — matched DISTRIBUTED (the driver probe returns None for
-    # "many"; the predicate ships to the scan + kernel)
-    assert s._term_lookup(Q.WildcardQuery("t19??")) is None
+    # doc 6, listed in term order by the one term-dictionary read
+    assert s._term_lookup(Q.WildcardQuery("t19??")) == vocab[1900:2000]
     td = s.search(Q.WildcardQuery("t19??"), k=5)
     assert td.total_hits == 1  # doc 6 holds t1800..t2099
-    # leading wildcard (no prefix pushdown) still exact and distributed
-    assert s._term_lookup(Q.WildcardQuery("*999")) is None
+    # leading wildcard (no prefix pushdown) still exact
+    assert s._term_lookup(Q.WildcardQuery("*999")) == ["t0999", "t1999", "t2999"]
     assert set(
         r.doc_id for r in
         s.matches_df(Q.WildcardQuery("*999")).collect()
     ) == {3, 6, 9}  # docs holding t0999 / t1999 / t2999
     # 1-match regexp unwraps to a TermQuery driver-side
     assert s._term_lookup(Q.RegexpQuery("t0[1]00")) == ["t0100"]
-    assert s._term_lookup(Q.RegexpQuery("t0[01]00")) is None
+    assert s._term_lookup(Q.RegexpQuery("t0[01]00")) == ["t0000", "t0100"]
     # fuzzy keeps the SCORED expansion: distance <= 1 from t1500
     got = s._term_lookup(Q.FuzzyQuery("t1500", max_edits=1))
     assert "t1500" in got and "t1501" in got and "t2500" in got
     from lucene_solr_8_7_0_spark.plans.rewrite import _within_edits
     assert got == sorted(t for t in vocab if _within_edits("t1500", t, 1))
     # true match count > MAX_CLAUSE_COUNT -> the rewrite is the
-    # distributed constant-score union (CONSTANT_SCORE_REWRITE,
-    # Lucene's default for multi-term queries — never TooManyClauses):
-    # every doc matches with score == 1.0, and NOTHING about the
-    # 3000-term expansion is ever enumerated on the driver
+    # constant-score union (CONSTANT_SCORE_REWRITE, Lucene's default
+    # for multi-term queries — never TooManyClauses) over the whole
+    # 3000-term expansion: every doc matches with score == 1.0
     assert len(vocab) > MAX_CLAUSE_COUNT
     from lucene_solr_8_7_0_spark.plans.queries import (
         ConstantScoreQuery,
@@ -453,14 +451,64 @@ def test_multi_term_no_truncation(spark, tmp_path_factory):
     rw_q = rewrite(Q.WildcardQuery("t*"), s._term_lookup)
     assert isinstance(rw_q, ConstantScoreQuery)
     assert isinstance(rw_q.query, MultiTermUnionQuery)
+    assert rw_q.query.terms == tuple(vocab)
     td = s.search(Q.WildcardQuery("t*"), k=20)
     assert td.total_hits == 10
     assert set(td.scores.tolist()) == {1.0}
-    # the kernel predicate is the exact (Python-dialect) authority:
-    # a Java-regex construct matching a superset JVM-side must not
-    # leak non-matching terms into the union
+    # the term-dictionary expansion (Python-dialect term_predicate) is
+    # the exact authority: a construct matching a superset elsewhere
+    # must not leak non-matching terms into the union
     n = s.matches_df(Q.RegexpQuery("t14[0-9]0")).count()
     assert n == 1  # t1400..t1490 all live in doc 4
+
+
+def test_multi_term_expanded_once_per_search(engine, monkeypatch):
+    """A driver search expands each multi-term leaf once, in one
+    term-dictionary read (snapshot._matching): the rewrite lists a
+    prefix's or wildcard's terms and no later step runs the match
+    predicate again; an interval multi-term source is read once too
+    (its per-segment expansion runs in the kernel)."""
+    from lucene_solr_8_7_0_spark.operators import snapshot as snap
+    from lucene_solr_8_7_0_spark.plans import rewrite as rw
+    from lucene_solr_8_7_0_spark.plans.queries import (
+        IMultiTerm, IOrdered, ITerm)
+
+    searcher, oi = engine
+    calls = {"matching": 0, "pred_after_rewrite": 0}
+    rewritten = [False]
+    matching, pred, rewrite_ = snap._matching, rw.term_predicate, searcher._rewrite
+
+    def counted_matching(*a):
+        calls["matching"] += 1
+        return matching(*a)
+
+    def counted_pred(q):
+        calls["pred_after_rewrite"] += rewritten[0]
+        return pred(q)
+
+    def marked_rewrite(q):
+        out = rewrite_(q)
+        rewritten[0] = True
+        return out
+
+    monkeypatch.setattr(snap, "_matching", counted_matching)
+    monkeypatch.setattr(rw, "term_predicate", counted_pred)
+    monkeypatch.setattr(searcher, "_rewrite", marked_rewrite)
+    interval = Q.IntervalQuery(
+        IOrdered((ITerm("public"), IMultiTerm(Q.PrefixQuery("st")))))
+    for q, leaves, pred_free in [
+        (Q.PrefixQuery("st"), 1, True),
+        (Q.WildcardQuery("*ic"), 1, True),
+        (interval, 1, False),
+    ]:
+        calls.update(matching=0, pred_after_rewrite=0)
+        rewritten[0] = False
+        td = searcher.search(q, k=10)
+        assert searcher._last_placement[0] == "driver", str(q)
+        assert td.total_hits > 0, str(q)
+        assert calls["matching"] == leaves, (str(q), calls)
+        if pred_free:
+            assert calls["pred_after_rewrite"] == 0, (str(q), calls)
 
 
 def test_facets(engine):

@@ -92,9 +92,12 @@ def test_resident_reads_equal_parquet_reads(spark, index_dir):
             assert a["term"].to_pylist() == want, q
     cols = srch._POSTINGS_COLS + srch._POS_COLS
     for mt in [()] + [(q,) for q in MULTI_TERM] + [tuple(MULTI_TERM[:4])]:
+        # a multi-term query reaches segment_rows as its listed terms
+        read = terms + [t for q in mt
+                        for t in res.termdict_rows(q, ["term"])["term"].to_pylist()]
         for window in (None, (0, 1), (2, None), (None, 3), (9, 10)):
-            a = res.segment_rows(terms, mt, cols, window)
-            b = files.segment_rows(terms, mt, cols, window)
+            a = res.segment_rows(read, cols, window)
+            b = files.segment_rows(read, cols, window)
             assert a.schema.names == b.schema.names
             assert _sorted_rows(a) == _sorted_rows(b), (mt, window)
 
@@ -130,8 +133,9 @@ def test_regexp_reads_follow_python_re(spark, tmp_path):
     want = expand_terms(q, vocab)
     assert want == ["cafe", "cafx", "caf\u00e9"]
     for source in (res, files):
-        assert source.termdict_rows(q, ["term"])["term"].to_pylist() == want
-        rows = source.segment_rows([], (q,), ["segment_id", "term"])
+        listed = source.termdict_rows(q, ["term"])["term"].to_pylist()
+        assert listed == want
+        rows = source.segment_rows(listed, ["segment_id", "term"])
         assert sorted(set(rows["term"].to_pylist())) == want
     ids = pq.read_table(f"{d}/docs", columns=["path", "doc_id"]).to_pydict()
     doc_id = dict(zip(ids["path"], ids["doc_id"]))
@@ -495,8 +499,9 @@ def test_regexp_literal_prefix_narrowing(tmp_path, monkeypatch):
         q = Q.RegexpQuery(pattern)
         want = rw.expand_terms(q, vocab)
         for source in (res, files):
-            assert source.termdict_rows(q, ["term"])["term"].to_pylist() == want, pattern
-            rows = source.segment_rows([], (q,), ["segment_id", "term"])
+            listed = source.termdict_rows(q, ["term"])["term"].to_pylist()
+            assert listed == want, pattern
+            rows = source.segment_rows(listed, ["segment_id", "term"])
             assert sorted(set(rows["term"].to_pylist())) == want, pattern
         checked += 1
     assert checked > 300
