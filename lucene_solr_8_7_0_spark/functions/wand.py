@@ -66,7 +66,9 @@ class ScoringClause:
     const_score: float | None = None  # ConstantScoreQuery: fixed score
     slop: int = 0
     sub: "CompiledQuery | None" = None
-    # "term" | "synonym" | "multiphrase" (multi-term = phrase otherwise)
+    # "term" | "synonym" | "multiterm" (a multi-term query's constant-
+    # score union, evaluated as the synonym union) | "multiphrase"
+    # (multi-term = phrase otherwise)
     kind: str = "term"
     # MultiPhraseQuery: term alternatives per phrase slot
     alts: tuple[tuple[str, ...], ...] | None = None
@@ -98,7 +100,8 @@ class ScoringClause:
     def is_phrase(self) -> bool:
         return (
             self.kind == "multiphrase"
-            or (len(self.terms) > 1 and self.kind != "synonym")
+            or (len(self.terms) > 1
+                and self.kind not in ("synonym", "multiterm"))
         )
 
 
@@ -608,7 +611,7 @@ def _eval_clause(
 ) -> tuple[np.ndarray, np.ndarray]:
     if clause.kind == "intervals":
         return _intervals_docs_scores(posting_map, norms, clause)
-    if clause.kind == "synonym":
+    if clause.kind in ("synonym", "multiterm"):
         return _synonym_docs_scores(
             [posting_map.get(t) for t in clause.terms], norms, clause
         )

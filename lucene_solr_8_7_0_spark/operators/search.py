@@ -11,11 +11,12 @@ IndexSearcher.java:571-668):
    ``term IN (terms, sentinel)`` (a multi-term query's terms were
    listed once, by the rewrite) from one of the snapshot's two row
    sources (operators/snapshot):
-   the driver's resident term-sorted tables, read by binary search
-   (the resident FST term-index analog), or a ``pyarrow.dataset`` read
-   of the segments files with the predicate pushed into parquet.  The
-   rows stay an Arrow table: one stable sort groups them by segment,
-   one column-wise pass over the Arrow buffers builds every
+   the driver's resident term-sorted tables, read by hash lookup of
+   each term (the resident FST term-index analog), or a
+   ``pyarrow.dataset`` read of the segments files with the predicate
+   pushed into parquet.  The rows stay an Arrow table: one stable
+   sort groups them by segment, one column-wise pass over the Arrow
+   buffers builds every
    ``TermPostings`` (posting_rows), each segment's sentinel row
    carries its norms, and the numpy kernel (functions/wand) scores it
    under the per-segment masks (live docs, point filters) — the
@@ -753,8 +754,8 @@ class IndexSearcher:
 
     def _term_stats(self, terms: set[str]) -> dict[str, tuple[int, int]]:
         """Global TermStatistics for a query's terms, read driver-side
-        (_tables: binary searches of the resident termdict — the FST
-        seek analog), without a Spark job on the per-query critical
+        (_tables: lookups in the resident termdict — the FST seek
+        analog), without a Spark job on the per-query critical
         path.  The reference likewise resolves term stats in-process at
         Weight creation."""
         if not terms:
@@ -1174,14 +1175,22 @@ class IndexSearcher:
                 idx = np.searchsorted(docs, local)
                 hit = idx < len(docs) and docs[idx] == local
                 freq = None
-                if hit and not c.is_phrase and c.sub is None and c.terms:
-                    tp = pmap.get(c.terms[0])
-                    if tp is not None:
-                        d, f, _ = decode_term_postings(tp)
-                        freq = int(f[np.searchsorted(d, local)])
+                if (hit and c.sub is None and c.kind in ("term", "synonym")
+                        and not c.is_phrase):
+                    # a synonym's freq sums its terms' (SynonymQuery
+                    # freq); a constant-score union reports none
+                    freq = 0
+                    for t in c.terms:
+                        tp = pmap.get(t)
+                        if tp is not None:
+                            d, f, _ = decode_term_postings(tp)
+                            i = np.searchsorted(d, local)
+                            if i < len(d) and d[i] == local:
+                                freq += int(f[i])
                 entry = {
                     "clause": (
-                        " ".join(c.terms) if c.terms else "(nested)"
+                        "(multi-term)" if c.kind == "multiterm"
+                        else " ".join(c.terms) if c.terms else "(nested)"
                     ),
                     "occur": kind,
                     "matches": bool(hit),

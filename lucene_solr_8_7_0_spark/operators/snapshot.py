@@ -11,10 +11,11 @@ Rows come from one of two sources with one interface (``segment_rows``,
 ``term_stats``, ``termdict_rows``):
 
 * ``ResidentTables``: both tables loaded once into driver memory, the
-  segments sorted by (term, segment_id) and the termdict by term.  A
-  read is a binary search (``np.searchsorted``) over the distinct terms
-  and a ``take`` of their row runs; a multi-term termdict read narrows
-  its prefix or range to a run of terms the same way.  The analog of
+  segments sorted by (term, segment_id) and the termdict by term, and
+  one key index over the terms of both.  A term list's read is a hash
+  lookup of each term in it and a ``take`` of their row runs; a
+  multi-term termdict read narrows its prefix or range to a run of the
+  sorted keys by binary search (``np.searchsorted``).  The analog of
   Lucene's terms index (.tip, BlockTreeTermsWriter.java:188-205), which
   stays resident and seeks straight to a term's postings.
 * ``ParquetTables``: a ``pyarrow.dataset`` read of the files on every
@@ -53,6 +54,7 @@ import os
 import sys
 import threading
 from dataclasses import dataclass
+from itertools import repeat
 
 import numpy as np
 import pyarrow as pa
@@ -228,17 +230,6 @@ class ParquetTables:
         return _exact(tbl, q).sort_by("term").select(columns)[:limit]
 
 
-def _find(keys: np.ndarray, terms: list) -> np.ndarray:
-    """The index of each of ``terms`` in the sorted ``keys`` (-1:
-    absent), by binary search."""
-    q = np.empty(len(terms), dtype=object)
-    q[:] = terms
-    if not len(keys) or not len(q):
-        return np.full(len(q), -1, np.int64)
-    i = np.minimum(np.searchsorted(keys, q), len(keys) - 1)
-    return np.where(keys[i] == q, i, -1).astype(np.int64)
-
-
 def _matching(keys: np.ndarray, key_col, q) -> np.ndarray:
     """The indices of the sorted ``keys`` (``key_col``: the same terms
     as Arrow) that ``q`` matches: the binary-searched run of q's prefix
@@ -259,22 +250,41 @@ def _matching(keys: np.ndarray, key_col, q) -> np.ndarray:
 class ResidentTables:
     """The snapshot's segments (every column) sorted by (term,
     segment_id) and termdict (term, df, ttf) sorted by term, held in
-    memory; every read is binary searches and a ``take``."""
+    memory.  One key index serves both: the sorted terms of either
+    table, each with its run of segments rows and its termdict row.  A
+    term list is looked up in it by hash (``_find``), a multi-term
+    query's run by binary search (``_matching``); a read then ``take``s
+    the rows."""
 
     def __init__(self, segments: pa.Table, termdict: pa.Table):
         self.segments, self.termdict = segments, termdict
-        terms = segments["term"]
+        terms, td_terms = segments["term"], termdict["term"]
         n = len(terms)
         starts = np.empty(0, np.int64)
         if n:
             change = pc.not_equal(terms[1:], terms[:-1]).to_numpy(
                 zero_copy_only=False)
             starts = np.concatenate([[0], np.flatnonzero(change) + 1])
-        # one key per distinct term; its rows are runs[i]:runs[i + 1]
-        self._keys = terms.take(starts).to_numpy(zero_copy_only=False)
-        self._runs = np.append(starts, n).astype(np.int64)
+        seg_keys = terms.take(starts)
+        keys = pc.unique(pa.chunked_array(
+            seg_keys.chunks + td_terms.chunks, pa.string()))
+        self._key_col = keys.take(pc.array_sort_indices(keys))
+        self._keys = self._key_col.to_numpy(zero_copy_only=False)
+        self._pos = dict(zip(self._keys.tolist(), range(len(self._keys))))
+
+        def index_in(values) -> np.ndarray:
+            return pc.fill_null(pc.index_in(self._key_col, value_set=values),
+                                -1).to_numpy().astype(np.int64)
+
+        # key i's segments rows are lo[i]:hi[i] (empty when it has none),
+        # its termdict row td[i] (-1: none); one trailing slot, index
+        # -1, answers a term of neither table
+        run = index_in(seg_keys)
+        ends = np.append(starts, n).astype(np.int64)
+        self._lo = np.append(np.where(run >= 0, ends[run], 0), 0)
+        self._hi = np.append(np.where(run >= 0, ends[run + 1], 0), 0)
+        self._td = np.append(index_in(td_terms), -1)
         self._seg_ids = segments["segment_id"].to_numpy()
-        self._td_keys = termdict["term"].to_numpy(zero_copy_only=False)
         self._df = termdict["df"].to_numpy()
         self._ttf = termdict["ttf"].to_numpy()
 
@@ -307,21 +317,25 @@ class ResidentTables:
 
     @property
     def nbytes(self) -> int:
-        """Bytes held: the Arrow tables, the key and offset arrays and
-        the Python strings the binary searches compare."""
-        strs = sum(map(sys.getsizeof, self._keys)) + sum(
-            map(sys.getsizeof, self._td_keys))
-        arrays = (self._keys, self._runs, self._seg_ids,
-                  self._td_keys, self._df, self._ttf)
-        return (self.segments.nbytes + self.termdict.nbytes + strs
-                + sum(a.nbytes for a in arrays))
+        """Bytes held: the Arrow tables, the key index (its arrays, its
+        hash table and the Python strings both compare)."""
+        arrays = (self._key_col, self._keys, self._lo, self._hi, self._td,
+                  self._seg_ids, self._df, self._ttf)
+        return (self.segments.nbytes + self.termdict.nbytes
+                + sum(map(sys.getsizeof, self._keys))
+                + sys.getsizeof(self._pos) + sum(a.nbytes for a in arrays))
+
+    def _find(self, terms: list) -> np.ndarray:
+        """The key index of each of ``terms`` (-1, the trailing slot:
+        absent)."""
+        return np.fromiter(map(self._pos.get, terms, repeat(-1)), np.int64,
+                           len(terms))
 
     def segment_rows(self, terms, columns=None,
                      window: tuple | None = None) -> pa.Table:
         """As ParquetTables.segment_rows, in (term, segment_id) order."""
-        j = _find(self._keys, list(terms))
-        j = np.unique(j[j >= 0])
-        lo, n = self._runs[j], self._runs[j + 1] - self._runs[j]
+        j = np.unique(self._find(list(terms)))
+        lo, n = self._lo[j], self._hi[j] - self._lo[j]
         idx = np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum())
         if window is not None:
             (a, b), seg = window, self._seg_ids[idx]
@@ -336,14 +350,15 @@ class ResidentTables:
 
     def term_stats(self, terms) -> dict[str, tuple[int, int]]:
         terms = list(terms)
-        j = _find(self._td_keys, terms)
-        hit = j >= 0
+        row = self._td[self._find(terms)]
+        hit = row >= 0
         return _stats_dict([t for t, h in zip(terms, hit) if h],
-                           self._df[j[hit]].tolist(), self._ttf[j[hit]].tolist())
+                           self._df[row[hit]].tolist(),
+                           self._ttf[row[hit]].tolist())
 
     def termdict_rows(self, q, columns, limit: int | None = None) -> pa.Table:
-        j = _matching(self._td_keys, self.termdict["term"], q)
-        return self.termdict.select(columns).take(j[:limit])
+        row = self._td[_matching(self._keys, self._key_col, q)]
+        return self.termdict.select(columns).take(row[row >= 0][:limit])
 
 
 # The last driver commit's tables, for the next searcher open:

@@ -364,7 +364,7 @@ def _make_clause(
         # boost): the synonym union, no term statistics bound
         return ScoringClause(
             q.terms, None, const_score=(boost if scoring else 0.0),
-            kind="synonym",
+            kind="multiterm",
         )
     if isinstance(q, TermQuery):
         if constant or not scoring:

@@ -233,6 +233,42 @@ def test_explain(engine):
         assert np.float32(ex_s["score"]) == td_s.scores[0], sim
 
 
+def test_explain_multi_term_and_synonym(engine):
+    """explain labels a multi-term query's constant-score union
+    "(multi-term)" with no freq on every hit, also on hits without the
+    expansion's first term; a SynonymQuery's freq is the sum of its
+    terms' freqs in the doc (SynonymQuery freq)."""
+    searcher, _ = engine
+
+    def hits(q):
+        td = searcher.search(q, k=N_FILES, score_mode="complete")
+        return dict(zip(td.doc_ids.tolist(), td.scores.tolist()))
+
+    q = Q.PrefixQuery("st")
+    terms = searcher._rewrite(q).query.terms
+    first = hits(Q.TermQuery(terms[0]))
+    found = hits(q)
+    assert len(terms) > 2 and set(found) - set(first)
+    for doc, score in found.items():
+        ex = searcher.explain(q, doc)
+        assert ex["matches"] and np.float32(ex["score"]) == np.float32(score)
+        assert [(d["clause"], d["freq"]) for d in ex["details"]] == [
+            ("(multi-term)", None)], doc
+    a, b = terms[0], terms[1]
+    only_b = sorted(set(hits(Q.TermQuery(b))) - set(first))
+    both = sorted(set(hits(Q.TermQuery(b))) & set(first))
+    assert only_b and both
+
+    def freq(q, doc):
+        [d] = searcher.explain(q, doc)["details"]
+        return d["freq"]
+
+    syn = Q.SynonymQuery((a, b))
+    for doc in only_b[:3] + both[:3]:
+        assert freq(syn, doc) == (
+            (freq(Q.TermQuery(a), doc) or 0) + freq(Q.TermQuery(b), doc))
+
+
 def test_synonym_and_dismax(engine):
     searcher, oi = engine
     # synonym: blended stats, summed freqs
